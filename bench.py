@@ -486,9 +486,10 @@ def main() -> None:
         make_pbf.ensure_fixture(
             pbf_nodes, pbf_ways, max(pbf_ways // 100, 1), fixture)
         # count parity checked once, untimed; the timed figure is ONE
-        # pass (nodes.count() — the decode produces every entity row
-        # before the etype filter, so one count = one full-file decode,
-        # matching how the engine consumes it: decode once, persist)
+        # pass (nodes.count() — the three frames share one lazily
+        # checkpointed decode that produces every entity row before the
+        # etype filter, so the first count = the one full-file decode
+        # the engine pays; later actions read the checkpointed blocks)
         n, w, r = pbf_mod.read_pbf(spark, fixture)
         counts = (n.count(), w.count(), r.count())
         assert counts[0] == pbf_nodes and counts[1] == pbf_ways

@@ -12,8 +12,12 @@ Scale shape (the reference's 3-pass semi-join reduction, re-expressed):
     tag predicate to the scan;
   * the LevelDB caches disappear: the node-coordinate lookup IS the shuffle
     hash join in denorm.denormalize_ways (broadcast/salted when appropriate);
+  * the reference's three file passes become one decode: pbf.read_pbf
+    shares a single lazily checkpointed decode across the nodes, ways and
+    relations frames, so every plan built here reads the decoded blocks
+    instead of re-decoding the file;
   * per-stage reuse: formatted ways feed relations, merges and output —
-    persist() once instead of the reference's three file re-decodes.
+    persisted once (`persist=True`) instead of recomputed per consumer.
 """
 
 from __future__ import annotations

@@ -428,9 +428,10 @@ def hilbert_range_filter(
 ) -> DataFrame:
     """Bbox filter over a Hilbert-keyed layout: pushed OR-of-BETWEENs on
     a STORED key column (PushedFilters / row-group pruning), or — without
-    one — the key is appended via the hilbert_df Column chain and probed
-    with a literal ranges array + exists() (constant key references, the
-    zorder_range_filter codegen lesson), plus the exact bbox residual."""
+    one — the key is computed per row by the Arrow kernel (`hilbert_udf`)
+    into a temporary column that the same OR-of-BETWEENs reads and that is
+    dropped afterwards; either way the exact bbox residual keeps the result
+    independent of `max_ranges` coarsening."""
     ranges = hilbert_ranges(lat0, lat1, lon0, lon1, res, max_ranges)
     if not ranges:
         return df.filter(F.lit(False))

@@ -18,6 +18,16 @@ Distributed shape (the part that must survive 100 TB):
     decompressible by design (the format exists for exactly this), so a
     planet file parallelizes across executors without any coordination;
     many files parallelize the same way with a path column.
+  * the decode runs once per ``read_pbf`` call: its output is a lazy
+    ``localCheckpoint`` that the nodes, ways and relations frames split by
+    entity type. The first action materializes the decoded blocks, every
+    later plan reads them instead of re-running the Python decode, and the
+    ContextCleaner frees them when the frames are released. ``persist()``
+    would share the decode too, but its CacheManager entry lives until an
+    explicit ``unpersist()``, so every call in a long-lived session would
+    leak one. The price of either is the blocks' executor storage, and
+    for the checkpoint also lineage: a block lost with its executor is
+    not recomputed, the job that needs it fails.
   * decoded entities cross Arrow as flat scalar/list columns (tag keys and
     values as separate string arrays, members as three parallel arrays);
     maps and structs are assembled JVM-side (map_from_arrays / arrays_zip)
@@ -510,7 +520,8 @@ def read_pbf(
 
     The driver reads only blob framing (blob_index); the entity decode runs
     in executors via mapInPandas over the (offset, length) index — one open
-    + seek per task, `blobs_per_task` blobs each.
+    + seek per task, `blobs_per_task` blobs each — once per call: the three
+    frames split one lazily checkpointed decode by entity type.
 
     The default sizes tasks for ~8 waves of the cluster: mapInPandas
     carries ~10 ms of per-task overhead (scheduling + worker round-trip +
@@ -615,7 +626,11 @@ def read_pbf(
                                     [x[5] for x in r], dtype=object),
                             }, columns=cols)
 
-    union = index_df.mapInPandas(_decode, _UNION_SCHEMA)
+    # one decode shared by the three frames and every plan built on them
+    # (module docstring, "Distributed shape")
+    union = index_df.mapInPandas(_decode, _UNION_SCHEMA).localCheckpoint(
+        eager=False
+    )
     tags = F.map_from_arrays("tag_keys", "tag_vals").alias("tags")
     nodes = union.filter(F.col("etype") == "node").select("id", "lat", "lon", tags)
     ways = union.filter(F.col("etype") == "way").select("id", tags, "refs")

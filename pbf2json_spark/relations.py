@@ -138,18 +138,20 @@ def resolve_relations(
             F.filter("members", lambda m: m["mtype"] == F.lit("relation"))
         ).alias("m"),
     ).select("id", F.col("m.ref").alias("sub"))
-    # BOTH collects are bounded by the relation→relation edge count, never
-    # the relation table: edges themselves, plus the edge-endpoint ids that
-    # actually exist as relations (semi-join before collecting — a sub ref
-    # to a missing relation resolves to 'skip' and carries no constraint).
+    # ONE collect, bounded by the relation→relation edge count, never the
+    # relation table: each distinct edge carries a flag saying whether its
+    # endpoint exists as a relation (a sub ref to a missing relation
+    # resolves to 'skip' and carries no constraint). Both sides are
+    # de-duplicated, so repeated relation ids cannot repeat an edge.
     # Source ids are relation ids by construction. The earlier full
     # relations.select("id").collect() was a needless driver-OOM risk at
     # planet scale (~12M relations); membership only matters for endpoints.
-    edges = [(r["id"], r["sub"]) for r in rel_edges_df.collect()]
-    subs_present = relations.join(
-        rel_edges_df.select(F.col("sub").alias("id")).distinct(), "id", "left_semi"
-    ).select("id")
-    rel_ids = {a for a, _ in edges} | {r["id"] for r in subs_present.collect()}
+    sub_is_rel = relations.select(
+        F.col("id").alias("sub"), F.lit(True).alias("sub_is_rel")
+    ).distinct()
+    rows = rel_edges_df.distinct().join(sub_is_rel, "sub", "left").collect()
+    edges = [(r["id"], r["sub"]) for r in rows]
+    rel_ids = {a for a, _ in edges} | {r["sub"] for r in rows if r["sub_is_rel"]}
     levels = _strata(rel_ids, edges)
     n_levels = (max(levels.values()) + 1) if levels else 1
     if n_levels > max_levels:

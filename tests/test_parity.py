@@ -2,7 +2,15 @@
 own fixtures and compare byte-for-byte (row counts, tags, 6-dp centroids and
 geometry — BASELINE.json correctness contract).
 
-Queries follow test/end-to-end.js:48-56 (the '+' AND grammar)."""
+Queries follow test/end-to-end.js:48-56 (the '+' AND grammar).
+
+The goldens are read from the reference checkout's fixture directory
+(``fixtures.FIXTURE_DIR``). Where it is not mounted the test skips rather
+than fail: no golden records are fabricated, and the expected counts below
+stay as they are so the check runs wherever the reference is present.
+Without it, the paper's denorm/centroid contract is covered by
+tests/test_pbf_e2e.py, tests/test_denorm.py and the DuckDB oracles of the
+``way_denorm_bbox`` / ``relation_bbox`` queries (``__spark_entry__``)."""
 
 from __future__ import annotations
 
@@ -19,6 +27,10 @@ CASES = [
 ]
 
 
+@pytest.mark.skipif(
+    not fixtures.FIXTURE_DIR.exists(),
+    reason=f"reference goldens not mounted: {fixtures.FIXTURE_DIR} is missing",
+)
 @pytest.mark.parametrize("name,q,total,n_ways,n_nodes", CASES)
 def test_golden_parity(spark, name, q, total, n_ways, n_nodes):
     golden = fixtures.load_fixture(name)

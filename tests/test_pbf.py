@@ -213,3 +213,35 @@ def test_decode_block_columns_matches_tuples():
             assert lat == float(cols["node_lat"][i])
             assert tk == cols["node_tk"][i] and tv == cols["node_tv"][i]
         assert rows["ways"] == cols["ways"]
+
+
+def _runs_decode(df) -> bool:
+    """True when the decode's MapInPandas appears anywhere in the executed
+    plan of ``df``: the adaptive plan prints its final and initial trees,
+    and a persisted frame prints the plan it caches."""
+    return "MapInPandas" in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_read_pbf_decodes_once_per_call(spark, tmp_path):
+    """The three frames share one lazily checkpointed decode: after the
+    first action, no plan built on them runs the Python decode again —
+    not the engine's output, and not a second query on the same engine."""
+    nodes, ways, rels = _fixture()
+    nodes[0] = (*nodes[0][:3], {"amenity": "toilets"})
+    ways[0] = (ways[0][0], {**ways[0][1], "amenity": "toilets"}, ways[0][2])
+    path = str(tmp_path / "once.osm.pbf")
+    pbf.write_pbf(path, nodes, ways, rels, entities_per_blob=7)
+
+    ndf, wdf, rdf = pbf.read_pbf(spark, path, blobs_per_task=2)
+    for df, n in ((ndf, len(nodes)), (wdf, len(ways)), (rdf, len(rels))):
+        assert df.count() == n
+        assert df.count() == n
+
+    eng = Engine.from_pbf(spark, path)
+    out = eng.query("amenity~toilets", with_dictionary=False).combined()
+    assert {(r["type"], r["id"]) for r in out.collect()} == {
+        ("node", nodes[0][0]), ("way", ways[0][0])}
+    assert not _runs_decode(out)
+    out2 = eng.query("name~node 2", with_dictionary=False).combined()
+    assert [r["id"] for r in out2.collect()] == [nodes[2][0]]
+    assert not _runs_decode(out2)
