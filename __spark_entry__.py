@@ -1083,16 +1083,6 @@ def _q_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textops.chunk_documents(d, 32, 8)
 
 
-def _q_geohash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standard base-32 geohash at precision 7 (cells.geohash_col) — the
-    interchange tile key; exact-rounded quantize + bit gather, so DuckDB
-    computes the identical string."""
-    pts = _points_customer(spark, sf_dir)
-    return pts.select(
-        "cid", cells.geohash_col(F.col("lat"), F.col("lon"), 7).alias("gh")
-    )
-
-
 def _q_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full tile pyramid levels 3..6 (spatial.tile_pyramid): aggregate once
     at the finest level, prefix-rollup the aggregated tiles — two
@@ -7790,42 +7780,6 @@ def _q_geohash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _geohash_sql(precision: int = 8) -> str:
-    from pbf2json_spark.cells import _MASKS
-
-    def spread(e: str) -> str:
-        for shift, mask in _MASKS:
-            e = f"(({e} | ({e} << {shift})) & {mask})"
-        return e
-
-    total = 5 * precision
-    lon_bits = (total + 1) // 2
-    lat_bits = total // 2
-    X = (
-        f"CAST(least({(1 << lon_bits) - 1}, greatest(0, "
-        f"floor((lon + 180.0) / 360.0 * {float(1 << lon_bits)}))) AS BIGINT)"
-    )
-    Y = (
-        f"CAST(least({(1 << lat_bits) - 1}, greatest(0, "
-        f"floor((lat + 90.0) / 180.0 * {float(1 << lat_bits)}))) AS BIGINT)"
-    )
-    chars = " || ".join(
-        f"substr('0123456789bcdefghjkmnpqrstuvwxyz', "
-        f"CAST((code >> {5 * (precision - 1 - i)}) & 31 AS INT) + 1, 1)"
-        for i in range(precision)
-    )
-    if total % 2 == 0:
-        code = f"({spread('gy')} | ({spread('gx')} << 1))"
-    else:
-        code = f"({spread('gx')} | ({spread('gy')} << 1))"
-    return (
-        f"WITH pts AS ({_PTS_SQL}), "
-        f"xy AS (SELECT cid, {X} AS gx, {Y} AS gy FROM pts), "
-        f"m AS (SELECT cid, {code} AS code FROM xy) "
-        f"SELECT cid, {chars} AS gh FROM m"
-    )
-
-
 # ---- wave 37: exact DBSCAN, distributed BPE training ----
 
 
@@ -9468,7 +9422,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bpe_merges": _q_bpe_train,
         # wave 38
         "polygon_nesting": _q_nesting,
-        "geohash_assign": _q_geohash,
         # wave 39
         "hausdorff_traj": _q_hausdorff,
         "corpus_split": _q_split,
@@ -9720,7 +9673,7 @@ def _geohash_sql(precision: int) -> str:
     lonbits = (nbits + 1) // 2
     latbits = nbits // 2
     nlon, nlat = 1 << lonbits, 1 << latbits
-    from pbf2json_spark.cells import _GEOHASH_B32
+    from pbf2json_spark.cells import GEOHASH_ALPHABET
 
     def bit(i: int) -> str:
         if i % 2 == 0:
@@ -9728,7 +9681,7 @@ def _geohash_sql(precision: int) -> str:
         return f"((yq >> {latbits - 1 - i // 2}) & 1)"
 
     chars = " || ".join(
-        "substr('" + _GEOHASH_B32 + "', CAST(("
+        "substr('" + GEOHASH_ALPHABET + "', CAST(("
         + " + ".join(f"({bit(5 * j + b)} << {4 - b})" for b in range(5))
         + ") AS INT) + 1, 1)"
         for j in range(precision)
@@ -10468,7 +10421,7 @@ def oracle_sql() -> dict[str, str]:
         "poly_metrics": _poly_metrics_sql(),
         "contamination": _CONTAM_SQL,
         "chunk_docs": _chunk_sql(32, 8),
-        "geohash_assign": _geohash_sql(7),
+        "geohash_assign": _geohash_sql(8),
         "tile_pyramid": _tile_pyramid_sql(6, 3),
         "compact_cover": _compact_cover_sql(6, 3),
         # brute-force cross join + row_number argmin over the IDENTICAL
@@ -10777,7 +10730,6 @@ def oracle_sql() -> dict[str, str]:
     sqls["dbscan_clusters"] = _dbscan_sql(6.0, 5)
     # wave-38 oracles
     sqls["polygon_nesting"] = _NESTING_SQL
-    sqls["geohash_assign"] = _geohash_sql(8)
     # wave-39 oracles
     sqls["hausdorff_traj"] = _hausdorff_sql()
     sqls["corpus_split"] = _split_sql()

@@ -90,14 +90,6 @@ def from_xy(x: np.ndarray, y: np.ndarray, res: int) -> np.ndarray:
     return ((np.uint64(res) << np.uint64(_RES_SHIFT)) | m).astype(np.int64)
 
 
-def cell_center(cells: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    res, x, y = decode(cells)
-    n = (1 << res).astype(np.float64)
-    lon = (x + 0.5) / n * 360.0 - 180.0
-    lat = (y + 0.5) / n * 180.0 - 90.0
-    return lat, lon
-
-
 def cell_bounds(cells: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """(lat_min, lon_min, lat_max, lon_max) per cell."""
     res, x, y = decode(cells)
@@ -105,12 +97,6 @@ def cell_bounds(cells: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, 
     lon_min = x / n * 360.0 - 180.0
     lat_min = y / n * 180.0 - 90.0
     return lat_min, lon_min, lat_min + 180.0 / n, lon_min + 360.0 / n
-
-
-def cell_polygon(cell: int) -> list[tuple[float, float]]:
-    """Closed ring (lat, lon) of one cell — raster→vector reconstruction."""
-    lat0, lon0, lat1, lon1 = (float(v[0]) for v in cell_bounds(np.array([cell])))
-    return [(lat0, lon0), (lat0, lon1), (lat1, lon1), (lat1, lon0), (lat0, lon0)]
 
 
 def parent(cells: np.ndarray, parent_res: int) -> np.ndarray:
@@ -262,60 +248,10 @@ def cell_parent_col(cell: Column, cell_res: int, parent_res: int) -> Column:
     return F.lit(parent_res << _RES_SHIFT).bitwiseOR(shifted).cast("long")
 
 
-_GEOHASH_B32 = "0123456789bcdefghjkmnpqrstuvwxyz"
-
-
-def geohash_col(lat: Column, lon: Column, precision: int) -> Column:
-    """Standard geohash string (Niemeyer base-32) of `precision` chars —
-    the third tile-key flavor next to the int64 Morton cell and the
-    quadkey: the industry-interchange encoding (Elasticsearch, Redis,
-    PostGIS all speak it), with the same prefix property (a geohash is a
-    prefix of every finer geohash of the same point).
-
-    5*precision bits, even global bit positions (msb-first) from
-    longitude, odd from latitude — the classic bisection encoding, but
-    computed as one quantize + bit-gather instead of a per-bit loop:
-    lon_q = floor((lon+180)/360 * 2^ceil(5p/2)) IS the sequence of
-    bisection decisions, so the whole encode is exact-rounded IEEE
-    multiply + floor + integer bit ops. Pure Column (WholeStageCodegen,
-    no UDF); any engine with the same doubles computes the identical
-    string, which is what makes the DuckDB oracle value-exact.
-
-    precision <= 12 (the standard maximum: 60 bits fit a long).
-    """
-    if not 1 <= precision <= 12:
-        raise ValueError("precision must be in [1, 12]")
-    nbits = 5 * precision
-    lonbits = (nbits + 1) // 2
-    latbits = nbits // 2
-    nlon, nlat = 1 << lonbits, 1 << latbits
-    lon_q = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(nlon)))
-    lat_q = F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(nlat)))
-    lon_q = F.greatest(F.lit(0), F.least(F.lit(nlon - 1), lon_q)).cast("long")
-    lat_q = F.greatest(F.lit(0), F.least(F.lit(nlat - 1), lat_q)).cast("long")
-
-    def bit(i: int) -> Column:
-        # global bit i (0 = most significant of the 5p-bit code)
-        if i % 2 == 0:
-            return F.shiftrightunsigned(lon_q, lonbits - 1 - i // 2).bitwiseAND(
-                F.lit(1)
-            )
-        return F.shiftrightunsigned(lat_q, latbits - 1 - i // 2).bitwiseAND(F.lit(1))
-
-    alphabet = F.array(*[F.lit(c) for c in _GEOHASH_B32])
-    chars = []
-    for j in range(precision):
-        v: Column = F.lit(0)
-        for b in range(5):
-            v = v + F.shiftleft(bit(5 * j + b), 4 - b)
-        chars.append(F.element_at(alphabet, (v + 1).cast("int")))
-    return F.concat(*chars)
-
-
 def geohash_bounds(gh: str) -> tuple[float, float, float, float]:
     """(lat_min, lat_max, lon_min, lon_max) of a geohash cell — driver-side
     helper (tests, prefix-range pruning)."""
-    if not gh or any(c not in _GEOHASH_B32 for c in gh):
+    if not gh or any(c not in GEOHASH_ALPHABET for c in gh):
         raise ValueError(f"invalid geohash {gh!r}")
     nbits = 5 * len(gh)
     lonbits = (nbits + 1) // 2
@@ -323,7 +259,7 @@ def geohash_bounds(gh: str) -> tuple[float, float, float, float]:
     lon_q = lat_q = 0
     i = 0
     for ch in gh:
-        v = _GEOHASH_B32.index(ch)
+        v = GEOHASH_ALPHABET.index(ch)
         for b in range(4, -1, -1):
             if i % 2 == 0:
                 lon_q = (lon_q << 1) | ((v >> b) & 1)

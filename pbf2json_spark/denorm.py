@@ -13,10 +13,9 @@ Centroids are computed by ONE Arrow-batched pandas UDF over the ordered
 per-way coordinate arrays (batch-vectorized numpy, no per-row Python).
 
 Scale notes (100 TB design point):
-  * the refs⋈nodes join is the big shuffle; `nodes_hint='broadcast'` pins a
-    broadcast hash join when the (filtered) node side fits, otherwise AQE
-    handles skew-join splitting (session default). A `salt` option shards
-    hot node ids for pathological skew.
+  * the refs⋈nodes join is the big shuffle, planned with no hints: AQE
+    turns it into a broadcast join at runtime when the node side is small
+    and splits skewed partitions otherwise (session.get_spark defaults).
   * only (id, lat, lon) + the 5 entrance-relevant tag values cross the
     shuffle — never the full tag map.
 """
@@ -96,8 +95,6 @@ def _node_side_cols(entrance_cols: bool = True) -> list:
 def denormalize_ways(
     ways: DataFrame,
     nodes: DataFrame,
-    nodes_hint: str | None = None,
-    salt: int | None = None,
     entrance_cols: bool = True,
 ) -> DataFrame:
     """All-or-nothing denorm join. Input: prepared ways/nodes. Output one row
@@ -119,21 +116,7 @@ def denormalize_ways(
     node_side = nodes.select(
         F.col("id").alias("ref"), *_node_side_cols(entrance_cols)
     )
-    if nodes_hint == "broadcast":
-        node_side = F.broadcast(node_side)
-
-    if salt:
-        # shard hot node ids: replicate the node side `salt`× and scatter the
-        # probe side — trades memory for even task sizes on pathological skew
-        wn = wn.withColumn("_salt", (F.rand(seed=7) * salt).cast("int"))
-        node_side = node_side.crossJoin(
-            F.broadcast(
-                ways.sparkSession.range(salt).select(F.col("id").cast("int").alias("_salt"))
-            )
-        )
-        joined = wn.join(node_side, ["ref", "_salt"]).drop("_salt")
-    else:
-        joined = wn.join(node_side, "ref")
+    joined = wn.join(node_side, "ref")
 
     pt_fields = ["pos", "ref", "lat", "lon"]
     if entrance_cols:
@@ -347,14 +330,11 @@ def derived_entrances(denorm: DataFrame, nodes: DataFrame) -> DataFrame:
 def format_ways(
     ways: DataFrame,
     nodes: DataFrame,
-    nodes_hint: str | None = None,
     with_entrances: bool = True,
 ) -> DataFrame:
     """Full formatWay (pbf2json.go:797-853): denorm + bbox + entrance-priority
     centroid + _centroidType injection. Inputs must be prepared (trimmed)."""
-    d = denormalize_ways(
-        ways, nodes, nodes_hint=nodes_hint, entrance_cols=with_entrances
-    )
+    d = denormalize_ways(ways, nodes, entrance_cols=with_entrances)
     return format_from_denorm(d, with_entrances=with_entrances)
 
 

@@ -11,7 +11,8 @@ Scale shape (the reference's 3-pass semi-join reduction, re-expressed):
     frames + left_semi joins — Catalyst then prunes columns and pushes the
     tag predicate to the scan;
   * the LevelDB caches disappear: the node-coordinate lookup IS the shuffle
-    hash join in denorm.denormalize_ways (broadcast/salted when appropriate);
+    hash join in denorm.denormalize_ways (AQE broadcasts or skew-splits it
+    at runtime);
   * the reference's three file passes become one decode: pbf.read_pbf
     shares a single lazily checkpointed decode across the nodes, ways and
     relations frames, so every plan built here reads the decoded blocks
@@ -90,7 +91,6 @@ class Engine:
         ways: DataFrame,
         relations: DataFrame | None = None,
         names: tuple[str, ...] = ("name",),
-        nodes_hint: str | None = None,
         persist: bool = True,
         highways: tuple[str, ...] | None = None,
     ) -> None:
@@ -107,7 +107,6 @@ class Engine:
             else None
         )
         self.names = names
-        self.nodes_hint = nodes_hint
         self.persist = persist
         self.highways = highways
 
@@ -129,13 +128,10 @@ class Engine:
         with_dictionary: bool = True,
         with_entrances: bool = True,
         with_counters: bool = False,
-        broadcast_dictionaries: bool | None = None,
     ) -> QueryResult:
-        """Run one tag-DSL query. `broadcast_dictionaries` gates the
-        broadcast hints on the dictionary-shaped build sides (translation
-        geometry, merged-seed ids): None (default) = no hint, AQE decides
-        at runtime — planet-scale safe; True = force (small-region
-        deployments); False = never."""
+        """Run one tag-DSL query. The dictionary-shaped build sides
+        (translation geometry, merged-seed ids) carry no broadcast hint:
+        AQE sizes them at runtime, which stays safe at planet scale."""
         query = dsl.parse(tags_dsl)
         pred = lambda df: dsl.compile_query(query, F.col("tags"))  # noqa: E731
 
@@ -171,7 +167,7 @@ class Engine:
             needed_way_ids = needed_way_ids.unionByName(rel_way_refs)
         ways_needed = self.ways.join(needed_way_ids.distinct(), "id", "left_semi")
 
-        d = denorm.denormalize_ways(ways_needed, self.nodes, nodes_hint=self.nodes_hint)
+        d = denorm.denormalize_ways(ways_needed, self.nodes)
         if self.persist:
             d = d.persist()
         fmt_ways = denorm.format_from_denorm(d, with_entrances=with_entrances)
@@ -212,27 +208,20 @@ class Engine:
             transl_geo,
             self.names,
             with_counters=with_counters,
-            broadcast_transl=broadcast_dictionaries,
         )
 
         out_ways = fmt_ways_out.join(matched_ways.select("id"), "id", "left_semi")
-        out_ways = self._suppress(
-            out_ways, query, merged_streets, merged_water, broadcast_dictionaries
-        )
+        out_ways = self._suppress(out_ways, query, merged_streets, merged_water)
         out_ways = enrich.translate_address(
-            out_ways, transl_geo, self.names, with_counters=with_counters,
-            broadcast_transl=broadcast_dictionaries,
+            out_ways, transl_geo, self.names, with_counters=with_counters
         )
 
         out_rels = None
         if fmt_rels is not None and matched_rels is not None:
             out_rels = fmt_rels.join(matched_rels.select("id"), "id", "left_semi")
-            out_rels = self._suppress(
-                out_rels, query, merged_streets, merged_water, broadcast_dictionaries
-            )
+            out_rels = self._suppress(out_rels, query, merged_streets, merged_water)
             out_rels = enrich.translate_address(
-                out_rels, transl_geo, self.names, with_counters=with_counters,
-                broadcast_transl=broadcast_dictionaries,
+                out_rels, transl_geo, self.names, with_counters=with_counters
             )
 
         out_entrances = None
@@ -243,7 +232,6 @@ class Engine:
                 self.names,
                 loc=("lat", "lon"),
                 with_counters=with_counters,
-                broadcast_transl=broadcast_dictionaries,
             )
 
         counters = None
@@ -333,7 +321,6 @@ class Engine:
         query: dsl.Query,
         merged_streets: DataFrame | None,
         merged_water: DataFrame | None,
-        broadcast_dictionaries: bool | None = None,
     ) -> DataFrame:
         """outputValidEntries per-row-class suppression (go:498-534): merged
         seeds skipped, then xwayOnly residual-interest check (which also
@@ -343,11 +330,7 @@ class Engine:
             if merged is not None:
                 seeds = merged.select("id", "type", F.lit(True).alias("_is_seed"))
                 rows = (
-                    rows.join(
-                        enrich.maybe_broadcast(seeds, broadcast_dictionaries),
-                        ["id", "type"],
-                        "left",
-                    )
+                    rows.join(seeds, ["id", "type"], "left")
                     .filter(
                         ~(
                             F.map_contains_key("tags", F.lit(key))

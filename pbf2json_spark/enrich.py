@@ -7,7 +7,8 @@ Reference: toDictionary (pbf2json.go:1072-1132), translateAddress
 Spark shapes:
   * the name dictionaries are DataFrames joined by name — broadcast-sized in
     practice (named highways with translations are a sliver of the data);
-  * translateAddress = broadcast join on street name + bbox ε-containment
+  * translateAddress = join on street name (unhinted; AQE broadcasts the
+    dictionary side at runtime when it is small) + bbox ε-containment
     range predicate + an ordered first-wins tag-fold done entirely with
     higher-order map/array functions (JVM-side, no UDF);
   * mergeSegments = groupBy(name).applyInPandas replicating the reference's
@@ -47,21 +48,6 @@ AMENITY_NAMES: dict[str, dict[str, str]] = {
     "police": {"fi": "Poliisiasema", "en": "Police station", "sv": "Polisstation"},
     "townhall": {"fi": "Kaupungintalo", "en": "Town hall", "sv": "Stadshus"},
 }
-
-
-# --- broadcast gating ------------------------------------------------------------
-
-
-def maybe_broadcast(df: DataFrame, mode: bool | None) -> DataFrame:
-    """Size-aware broadcast gate for dictionary-shaped build sides.
-
-    True  → force the broadcast hint (caller KNOWS the side is small);
-    False/None → no hint: the static planner sizes it against
-    autoBroadcastJoinThreshold and AQE converts to a broadcast join at
-    runtime when the materialized side turns out small. At planet scale an
-    unconditional hint on an unbounded side (every named way/relation) is
-    a driver-OOM landmine; the adaptive path is the 100 TB-safe default."""
-    return F.broadcast(df) if mode else df
 
 
 # --- dictionary build (A6) -----------------------------------------------------
@@ -222,20 +208,17 @@ def translate_address(
     loc: tuple[str, str] | None = None,
     key: str = "id",
     with_counters: bool = False,
-    broadcast_transl: bool | None = None,
 ) -> DataFrame:
     """Apply amenity-name injection + street-name translations to output rows
     (translateAddress, pbf2json.go:1134-1215). `rows` must have `tags`, a
     unique `key` column, and a location; `loc` names the (lat, lon) columns —
     default uses centroid.lat/centroid.lon if present, else lat/lon.
 
-    `broadcast_transl` gates the broadcast of the translation-geometry
-    build side (see maybe_broadcast): default None lets AQE size it at
-    runtime — transl_geo is every named way/relation with alt names, which
-    is dictionary-sized for one region but unbounded at planet scale, so
-    an unconditional hint is not 100 TB-safe. Pass True when the caller
-    knows the dictionary is small. The static amenity dictionary (8 rows,
-    go:78-90) stays unconditionally broadcast.
+    The translation-geometry build side carries no broadcast hint: AQE
+    sizes it at runtime — transl_geo is every named way/relation with alt
+    names, which is dictionary-sized for one region but unbounded at planet
+    scale, so an unconditional hint is not 100 TB-safe. The static amenity
+    dictionary (8 rows, go:78-90) stays unconditionally broadcast.
 
     with_counters adds the reference's counters (pbf2json.go:125-127,
     1155, 1193-1207) as per-row columns `_n_amenity`, `_n_trans`,
@@ -315,10 +298,7 @@ def translate_address(
     )
 
     cands = (
-        addressed.join(
-            maybe_broadcast(transl_geo, broadcast_transl),
-            addressed["_street"] == transl_geo["transl_name"],
-        )
+        addressed.join(transl_geo, addressed["_street"] == transl_geo["transl_name"])
         .filter(inside)
         .select("_rk", "_street", "_hnum", "is_way", "id", "wr_tags")
     )

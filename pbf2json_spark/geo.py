@@ -163,15 +163,6 @@ def points_in_ring(
     return (hits.sum(axis=0) % 2).astype(bool)
 
 
-def ring_bbox(ring_lat: np.ndarray, ring_lon: np.ndarray) -> tuple[float, float, float, float]:
-    return (
-        float(ring_lat.min()),
-        float(ring_lon.min()),
-        float(ring_lat.max()),
-        float(ring_lon.max()),
-    )
-
-
 # --- ring metrics (pure Column — JVM codegen, no Python) -----------------------
 
 

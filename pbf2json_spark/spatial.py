@@ -7,8 +7,7 @@ into proper scale-out operators: a cell equi-join is the prefilter (hash
 -partitionable, AQE-skew-splittable); cover cells provably interior to the
 polygon accept their points outright (the exact verify cost scales with
 boundary length, not area); boundary candidates get an exact even-odd ray
-cast that runs as a pure Column expression inside codegen by default (an
-Arrow-batched numpy twin is kept for parity and very large rings).
+cast that runs as a pure Column expression inside codegen.
 
 Polygon sets come from the same tag-DSL selection the reference uses
 (`leisure~dog_park`-style queries over closed ways — north_star)."""
@@ -27,21 +26,6 @@ from pyspark.sql.window import Window
 from pbf2json_spark import cells, geo
 
 _LOG = logging.getLogger(__name__)
-
-# --- polygons from ways ----------------------------------------------------------
-
-
-def polygons_from_ways(fmt_ways: DataFrame) -> DataFrame:
-    """Closed formatted ways (first==last, >3 pts incl. closing) → polygon set
-    (polygon_id, tags, ring). The ring keeps the duplicated closing point."""
-    ring = F.col("pts")
-    closed = (F.size(ring) > 3) & (
-        F.element_at(ring, 1) == F.element_at(ring, F.size(ring))
-    )
-    return fmt_ways.filter(closed).select(
-        F.col("id").alias("polygon_id"), "tags", ring.alias("ring")
-    )
-
 
 # --- bbox cell cover ----------------------------------------------------------------
 
@@ -148,36 +132,7 @@ def _polygon_cells(polygons: DataFrame, res: int) -> DataFrame:
     )
 
 
-# --- exact point-in-ring verify (Arrow batches, grouped by polygon) ---------------
-
-
-_VERIFY_SCHEMA = T.BooleanType()
-
-_RING_TYPE = "array<struct<lat:double,lon:double>>"
-
-
-@F.pandas_udf(_VERIFY_SCHEMA)
-def _pip_verify_udf(
-    plat: pd.Series, plon: pd.Series, pid: pd.Series,
-    ring_lat: pd.Series, ring_lon: pd.Series,
-) -> pd.Series:
-    """Batch verify: group candidate rows by polygon id inside the Arrow
-    batch, run the vectorized ray-cast once per polygon. NULL rings
-    (interior-cell candidates, accepted upstream by an IS NULL test)
-    return False here."""
-    out = np.zeros(len(plat), dtype=bool)
-    plat_np = plat.to_numpy(dtype=np.float64)
-    plon_np = plon.to_numpy(dtype=np.float64)
-    # a pid can appear with BOTH null (interior) and real rings in one
-    # batch — group only the non-null rows, so an interior row can never
-    # shadow a boundary row's ring
-    nn = np.nonzero(~ring_lat.isna().to_numpy())[0]
-    for p, idx in pd.Series(nn).groupby(pid.to_numpy()[nn]).groups.items():
-        ii = nn[np.asarray(idx)]
-        rl = np.asarray(ring_lat.iloc[ii[0]], dtype=np.float64)
-        ro = np.asarray(ring_lon.iloc[ii[0]], dtype=np.float64)
-        out[ii] = geo.points_in_ring(plat_np[ii], plon_np[ii], rl, ro)
-    return pd.Series(out)
+# --- exact point-in-ring verify ---------------------------------------------------
 
 
 def _pip_verify_col(plat: Column, plon: Column, ring: Column) -> Column:
@@ -215,47 +170,34 @@ def _pip_verify_col(plat: Column, plon: Column, ring: Column) -> Column:
     return F.size(F.filter(edges, crossed)) % 2 == 1
 
 
+# levels the auto-selected PIP cover resolution is sharpened by: finer cover
+# cells mean more of the polygon INTERIOR is covered by provably-full cells
+# whose points skip the exact verify (classified once per polygon in the
+# metadata-scale cover pass), so the verify cost scales with the boundary
+# length, not the polygon area. Cover size grows ~4x per level.
+PIP_REFINE = 2
+
+
 def point_in_polygon_join(
     points: DataFrame,
     polygons: DataFrame,
     res: int | None = None,
     lat_col: str = "lat",
     lon_col: str = "lon",
-    broadcast_polygons: bool = True,
-    salt: int | None = None,
-    verify: str = "column",
-    refine: int = 2,
 ) -> DataFrame:
     """points ⋈ polygons with cell prefilter + exact ray-cast verify.
 
     Returns the point rows + polygon_id (+ polygon tags if present). A point
-    inside k polygons yields k rows. Scale: the equi-join on `cell` carries
-    the shuffle; polygons are broadcast by default (OSM-derived polygon sets
-    are small next to a pages table). For huge polygon sets disable the
-    broadcast and let AQE pick the strategy.
+    inside k polygons yields k rows. Scale: the equi-join on `cell` is a
+    broadcast hash join — the polygon-cover side (OSM-derived polygon sets
+    are small next to a pages table) is shipped to every task, so the point
+    side never shuffles and hot cells (cities concentrate most pages in a
+    handful of cell ids) cannot skew it. The exact ray cast runs as a pure
+    Column expression inside codegen: the only Python in the join is the
+    per-polygon cover pass.
 
-    `salt=S` shards hot cells (cities concentrate most pages in a handful of
-    cell ids): the point side scatters each row into one of S sub-keys by a
-    hash of its coordinates, the (small) polygon-cell side is replicated ×S
-    — task sizes even out at the cost of S× the build side. Only relevant
-    when the join is NOT broadcast (a broadcast join has no shuffle to
-    skew); ignored otherwise.
-
-    `verify`: 'column' (default) runs the exact ray cast as a pure Column
-    expression inside codegen — zero Python in the whole join; 'arrow'
-    uses the batched pandas-UDF kernel (geo.points_in_ring). Both are
-    bit-identical; 'arrow' exists as the parity twin and for rings large
-    enough that a vectorized numpy edge loop beats codegen'd array HOFs.
-
-    `refine` sharpens the auto-selected cover resolution by that many
-    levels: finer cover cells mean more of the polygon INTERIOR is covered
-    by provably-full cells whose points skip the exact verify entirely
-    (the classification happens once per polygon in the metadata-scale
-    cover pass) — the verify cost then scales with the boundary length,
-    not the polygon area. Cover size grows ~4× per level; irrelevant when
-    `res` is given explicitly."""
-    if verify not in ("column", "arrow"):
-        raise ValueError(f"unknown verify mode {verify!r}")
+    `res=None` picks the cover resolution from the polygon extents
+    (pick_polygon_res) sharpened by PIP_REFINE levels."""
     if res is None:
         # the auto-res stats pass scans the polygon frame once; memoize it
         # on the frame object so N joins against the same polygons pay one
@@ -265,7 +207,7 @@ def point_in_polygon_join(
         if auto is None:
             auto = pick_polygon_res(polygons)
             polygons._pbf2json_auto_res = auto
-        res = min(auto + refine, cells.MAX_RES)
+        res = min(auto + PIP_REFINE, cells.MAX_RES)
     pc = _polygon_cells(polygons, res)
     # one pass over the points (the big side is scanned exactly once), but
     # interior (full) cells join with a NULL ring: candidate rows for the
@@ -273,72 +215,22 @@ def point_in_polygon_join(
     # copies were the join stage's allocation bottleneck at high
     # parallelism) and skip the verify on an IS NULL test; only
     # boundary-cell candidates carry the ring into the exact ray cast.
-    build = pc.select(
+    build = F.broadcast(pc.select(
         "polygon_id",
         F.when(~F.col("_full"), F.col("ring")).alias("ring"),
         "cell",
-    )
+    ))
     pts = points.withColumn("_cell", cells.cell_col(F.col(lat_col), F.col(lon_col), res))
-
-    if broadcast_polygons:
-        build = F.broadcast(build)
-        cand = pts.join(build, pts["_cell"] == build["cell"], "inner")
-    elif salt:
-        spark = points.sparkSession
-        salts = F.broadcast(
-            spark.range(salt).select(F.col("id").cast("int").alias("_salt"))
-        )
-        b = build.crossJoin(salts)
-        pts = pts.withColumn(
-            "_salt",
-            F.pmod(
-                F.xxhash64(F.col(lat_col), F.col(lon_col)), F.lit(salt)
-            ).cast("int"),
-        )
-        cand = pts.join(
-            b, (pts["_cell"] == b["cell"]) & (pts["_salt"] == b["_salt"]), "inner"
-        ).drop("_salt")
-    else:
-        cand = pts.join(build, pts["_cell"] == build["cell"], "inner")
-
-    interior = F.col("ring").isNull()
-    if verify == "column":
-        # Or short-circuits in codegen: interior rows never touch the cast
-        verified = cand.filter(
-            interior | _pip_verify_col(F.col(lat_col), F.col(lon_col), F.col("ring"))
-        )
-    else:  # arrow twin: the UDF is null-ring-safe (returns False there)
-        verified = cand.filter(
-            interior
-            | _pip_verify_udf(
-                F.col(lat_col),
-                F.col(lon_col),
-                F.col("polygon_id"),
-                F.transform("ring", lambda p: p["lat"]),
-                F.transform("ring", lambda p: p["lon"]),
-            )
-        )
+    cand = pts.join(build, pts["_cell"] == build["cell"], "inner")
+    # Or short-circuits in codegen: interior rows never touch the cast
+    verified = cand.filter(
+        F.col("ring").isNull()
+        | _pip_verify_col(F.col(lat_col), F.col(lon_col), F.col("ring"))
+    )
     return verified.drop("_cell", "cell", "ring")
 
 
 # --- kNN via cell-neighborhood expansion -------------------------------------------
-
-
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def _disk_udf(cell: pd.Series, k: pd.Series) -> pd.Series:
-    """numpy twin of cells.disk_col, kept for cross-checking the Column
-    path in tests (knn_join itself is UDF-free: the disk expansion runs as
-    sequence×transform×flatten inside codegen). Rows sharing a radius are
-    batched into one vectorized cells.disk call."""
-    c = cell.to_numpy(dtype=np.int64)
-    kk = k.to_numpy(dtype=np.int64)
-    out: list = [None] * len(c)
-    for r in np.unique(kk):
-        idx = np.nonzero(kk == r)[0]
-        disks = cells.disk(c[idx], int(r))
-        for j, i in enumerate(idx):
-            out[i] = disks[j].tolist()
-    return pd.Series(out)
 
 
 def knn_join(

@@ -239,19 +239,41 @@ def test_pip_auto_res_stats_scan_memoized(pip_setup, monkeypatch):
     # shared fixture's frame may already carry it from an earlier test
     polys = polys.select("*")
     a = spatial.point_in_polygon_join(pts, polys).collect()
-    b = spatial.point_in_polygon_join(pts, polys, refine=1).collect()
+    b = spatial.point_in_polygon_join(pts, polys).collect()
     assert calls["n"] == 1
     assert {(r["point_id"], r["polygon_id"]) for r in a} == {
         (r["point_id"], r["polygon_id"]) for r in b
     }
 
 
-def test_pip_join_salted_matches_broadcast(pip_setup):
+def _plan_nodes(node):
+    """Every node of an executed physical plan, descending through the AQE
+    wrapper (its final plan) and query stages (their plans)."""
+    yield node
+    kind = node.getClass().getSimpleName()
+    if kind == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(node.executedPlan())
+    elif kind.endswith("QueryStageExec"):
+        yield from _plan_nodes(node.plan())
+    else:
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from _plan_nodes(kids.apply(i))
+
+
+def test_pip_default_plan_properties(pip_setup):
+    """The default PIP plan: the polygon-cover side is the build side of a
+    broadcast hash join, the per-polygon cover pass is the plan's only
+    Arrow crossing (the point side never enters Python) and there is no
+    row-at-a-time Python."""
     pts, polys, lats, lons = pip_setup
-    base = spatial.point_in_polygon_join(pts, polys, res=6)
-    salted = spatial.point_in_polygon_join(
-        pts, polys, res=6, broadcast_polygons=False, salt=4
-    )
-    b = {(r["point_id"], r["polygon_id"]) for r in base.collect()}
-    s = {(r["point_id"], r["polygon_id"]) for r in salted.collect()}
-    assert b == s and len(b) > 0
+    hits = spatial.point_in_polygon_join(pts, polys)
+    hits.collect()  # AQE finalizes the plan on execution
+    nodes = list(_plan_nodes(hits._jdf.queryExecution().executedPlan()))
+    names = [n.nodeName() for n in nodes]
+    assert "BatchEvalPython" not in names
+    (join,) = [n for n in nodes if n.nodeName() == "BroadcastHashJoin"]
+    build = join.right() if join.buildSide().toString() == "BuildRight" else join.left()
+    build_arrow = [n for n in _plan_nodes(build) if n.nodeName() == "ArrowEvalPython"]
+    assert len(build_arrow) == 1 and "_cover_udf" in build_arrow[0].toString()
+    assert names.count("ArrowEvalPython") == 1

@@ -108,15 +108,6 @@ def main() -> int:
             ("whole-stage codegen", "codegen id" in p, ""),
         ],
     ))
-    hits_a = spatial.point_in_polygon_join(pts, polys, verify="arrow")
-    p = plan_text(hits_a)
-    sections.append((
-        "point-in-polygon join (arrow verify twin)", p,
-        [
-            ("vectorized Python (Arrow) only", "ArrowEvalPython" in p, ""),
-            ("no row-at-a-time Python", "BatchEvalPython" not in p, ""),
-        ],
-    ))
 
     # 4. pages pipeline: geocode regex + cell bit math fully JVM; tile agg
     # with partial aggregation
