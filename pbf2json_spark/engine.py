@@ -143,21 +143,20 @@ class Engine:
             else None
         )
 
-        # dictionary classification is tag-level (toDictionary, go:1072-1132)
-        dict_ways = enrich.dictionary_names(self.ways, self.names, self.highways)
-        dict_rels = (
-            enrich.dictionary_names(self.relations, self.names, self.highways)
-            if self.relations is not None
-            else None
-        )
-
         # "needed" way ids = query-matched ∪ relation-referenced ∪ dictionary
         # (createCache gate `valid || wayRef || dictionaryWays`, go:449)
         needed_way_ids = matched_ways.select("id")
+        dict_all = None
         if with_dictionary:
+            # dictionary classification is tag-level (toDictionary, go:1072-1132)
+            dict_all = enrich.dictionary_names(self.ways, self.names, self.highways)
             needed_way_ids = needed_way_ids.unionByName(
-                dict_ways.filter("is_dict").select("id")
+                dict_all.filter("is_dict").select("id")
             )
+            if self.relations is not None:
+                dict_all = dict_all.unionByName(
+                    enrich.dictionary_names(self.relations, self.names, self.highways)
+                )
         if self.relations is not None:
             rel_way_refs = self.relations.select(
                 F.explode(
@@ -187,9 +186,6 @@ class Engine:
         merged_streets = merged_water = None
         transl_geo = None
         if with_dictionary:
-            dict_all = (
-                dict_ways.unionByName(dict_rels) if dict_rels is not None else dict_ways
-            )
             transl_geo = enrich.translation_geometry(fmt_ways_out, fmt_rels, dict_all)
             merged_streets = enrich.merge_segments(
                 dict_all, fmt_ways_out, fmt_rels, "street_name"

@@ -157,15 +157,20 @@ def reduce_or(cols: list[Column]) -> Column:
 # --- translateAddress (J6 + J7) -------------------------------------------------
 
 
-def _amenity_df(spark) -> DataFrame:
-    rows = []
-    for amenity, names in AMENITY_NAMES.items():
-        adds = {}
-        for lang, name in names.items():
-            key = "alt_name" if lang == "fi" else f"name:{lang}"
-            adds[key] = name
-        rows.append((amenity, adds))
-    return spark.createDataFrame(rows, "amenity string, adds map<string,string>")
+# amenity tag key per language (fi → alt_name, go:1147-1151), in the entry
+# order the additions take in the output tag map
+_AMENITY_KEYS = (("sv", "name:sv"), ("fi", "alt_name"), ("en", "name:en"))
+
+
+def _amenity_adds(amenity: Column) -> Column:
+    """The additions map for an amenity value, NULL for a NULL or unknown
+    one: a lookup in AMENITY_NAMES as one literal map<string, map>, the
+    reference's in-memory Go map (go:78-90) — no join, no extra pass."""
+    entries = []
+    for a, langs in AMENITY_NAMES.items():
+        adds = [c for lang, key in _AMENITY_KEYS for c in (F.lit(key), F.lit(langs[lang]))]
+        entries += [F.lit(a), F.create_map(*adds)]
+    return F.element_at(F.create_map(*entries), amenity)
 
 
 def _first_wins_concat(acc: Column, adds: Column) -> Column:
@@ -218,7 +223,8 @@ def translate_address(
     sizes it at runtime — transl_geo is every named way/relation with alt
     names, which is dictionary-sized for one region but unbounded at planet
     scale, so an unconditional hint is not 100 TB-safe. The static amenity
-    dictionary (8 rows, go:78-90) stays unconditionally broadcast.
+    dictionary (8 entries, go:78-90) is a literal map looked up per row:
+    with transl_geo None the plan has no join at all.
 
     with_counters adds the reference's counters (pbf2json.go:125-127,
     1155, 1193-1207) as per-row columns `_n_amenity`, `_n_trans`,
@@ -226,7 +232,6 @@ def translate_address(
     the two mechanisms write disjoint key spaces (name:*/alt_name vs
     addr:street:*), so the before/after tag-map diff reproduces them
     exactly."""
-    spark = rows.sparkSession
     if with_counters:
         rows = rows.withColumn("_tags_pre", F.col("tags"))
     if loc is None:
@@ -235,19 +240,12 @@ def translate_address(
 
     # J7: amenity static dictionary, first-wins into unused slots; applies to
     # every row with an amenity tag (go:1143-1159 precede the address check)
-    out = (
-        rows.join(
-            F.broadcast(_amenity_df(spark)),
-            F.element_at(rows["tags"], F.lit("amenity")) == F.col("amenity"),
-            "left",
-        )
-        .withColumn(
-            "tags",
-            F.when(
-                F.col("adds").isNotNull(), _first_wins_concat(F.col("tags"), F.col("adds"))
-            ).otherwise(F.col("tags")),
-        )
-        .drop("amenity", "adds")
+    adds = _amenity_adds(F.element_at(F.col("tags"), F.lit("amenity")))
+    out = rows.withColumn(
+        "tags",
+        F.when(adds.isNotNull(), _first_wins_concat(F.col("tags"), adds)).otherwise(
+            F.col("tags")
+        ),
     )
 
     def _add_counters(df: DataFrame) -> DataFrame:

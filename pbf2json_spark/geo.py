@@ -102,22 +102,50 @@ def _line_interp(
     d = np.zeros(npts)
     d[:-1] = np.hypot(np.diff(lats), np.diff(lons))
     d[last_idx] = 0.0  # seams between groups carry no length
-    gcum = np.cumsum(d)
+    cum = _group_cumsum(d, offsets, counts)
 
-    base = gcum[offsets] - d[offsets]  # cumulative length before each group
-    total = gcum[last_idx] - base
-    target = base + total / 2.0
-    # first global segment index j with gcum[j] > target (strict '>' like Go)
-    j = np.searchsorted(gcum, target, side="right")
+    total = cum[last_idx]
+    target = total / 2.0
+    # first segment index j of each group with cum[j] > target (strict '>'
+    # like Go): cum is non-decreasing inside a group, so the points at or
+    # below the target are a prefix of it
+    below = cum <= np.repeat(target, counts)
+    j = offsets + np.add.reduceat(below.astype(np.int64), offsets)
 
-    ok = (j <= last_idx - 1) & (j >= offsets) & (total > 0)
+    ok = (j <= last_idx - 1) & (total > 0)
     j_safe = np.clip(j, 0, max(npts - 2, 0))
-    seg_start = gcum[j_safe] - d[j_safe]
+    seg_start = cum[j_safe] - d[j_safe]
     with np.errstate(divide="ignore", invalid="ignore"):
         frac = np.where(d[j_safe] > 0, (target - seg_start) / d[j_safe], 0.0)
     out_lat = lats[j_safe] + frac * (lats[j_safe + 1] - lats[j_safe])
     out_lon = lons[j_safe] + frac * (lons[j_safe + 1] - lons[j_safe])
     return out_lat, out_lon, ok
+
+
+def _group_cumsum(
+    d: np.ndarray, offsets: np.ndarray, counts: np.ndarray
+) -> np.ndarray:
+    """Running sum of `d` restarted at every group, added in path order from
+    the group's own first element — the same float additions as summing the
+    group alone, so a result never depends on the other groups in the batch
+    (a global cumsum minus a per-group base rounds differently). Vectorized
+    over groups, one step per point position: groups sorted by length
+    descending make the groups still running at position p a prefix; the
+    longest group finishes in one cumsum once it runs alone."""
+    cum = d.copy()
+    order = np.argsort(-counts, kind="stable")
+    starts = offsets[order]
+    by_len = counts[order]
+    # running[p] = number of groups with more than p points
+    running = np.searchsorted(-by_len, -np.arange(by_len[0]), side="left")
+    for p in range(1, int(by_len[0])):
+        if running[p] == 1:
+            s = starts[0]
+            cum[s + p - 1 : s + by_len[0]] = np.cumsum(cum[s + p - 1 : s + by_len[0]])
+            break
+        at = starts[: running[p]] + p
+        cum[at] += cum[at - 1]
+    return cum
 
 
 # --- distance ----------------------------------------------------------------

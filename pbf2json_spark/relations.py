@@ -92,23 +92,29 @@ def _strata(rel_ids: set[int], edges: list[tuple[int, int]]) -> dict[int, int]:
                 p, _ = work[-1]
                 low[p] = min(low[p], low[v])
 
-    # longest-path level over the condensed DAG (memoized DFS)
+    # longest-path level over the condensed DAG: iterative post-order DFS
+    # (like the Tarjan pass, so chain depth is bounded by memory, not by
+    # Python's recursion limit — resolve_relations' max_levels guard decides)
+    down = {
+        v: [w for w in ws if w in rel_ids and scc_of.get(w) != scc_of.get(v)]
+        for v, ws in out.items()
+    }
     level: dict[int, int] = {}
-
-    def lvl(v: int) -> int:
-        if v in level:
-            return level[v]
-        level[v] = 0  # placeholder guards residual cycles defensively
-        best = 0
-        for w in out.get(v, ()):
-            if w in rel_ids and scc_of.get(w) != scc_of.get(v):
-                best = max(best, lvl(w) + 1)
-        level[v] = best
-        return best
-
-    for v in out:
-        lvl(v)
-    return {v: k for v, k in level.items() if k >= 0}
+    for root in out:
+        if root in level:
+            continue
+        level[root] = 0  # placeholder guards residual cycles defensively
+        work = [(root, iter(down[root]))]
+        while work:
+            v, children = work[-1]
+            w = next((w for w in children if w not in level), None)
+            if w is not None:
+                level[w] = 0
+                work.append((w, iter(down.get(w, ()))))
+                continue
+            work.pop()
+            level[v] = max((level[w] + 1 for w in down.get(v, ())), default=0)
+    return level
 
 
 def _entrance_etype(tags: Column) -> Column:

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from pbf2json_spark import enrich
 from pbf2json_spark.engine import Engine
 from pbf2json_spark.model import NODES_SCHEMA, RELATIONS_SCHEMA, WAYS_SCHEMA
 
@@ -58,6 +59,49 @@ def test_amenity_does_not_overwrite_existing(spark):
     t = res.nodes.collect()[0]["tags"]
     assert t["name:en"] == "My Hospital"
     assert t["name:sv"] == "Sjukhus"
+
+
+def test_amenity_lookup_plan_has_no_join(spark):
+    """The static amenity dictionary is a literal map lookup: without a
+    translation side, translate_address's plan has no join and no
+    broadcast, and a NULL or unknown amenity (or NULL tags) adds nothing."""
+    rows = spark.createDataFrame(
+        [
+            (1, 60.0, 24.0, {"amenity": "townhall", "name:sv": "Mitt"}),
+            (2, 60.0, 24.0, {"amenity": "cafe"}),
+            (3, 60.0, 24.0, {"name": "X"}),
+            (4, 60.0, 24.0, None),
+        ],
+        "id long, lat double, lon double, tags map<string,string>",
+    )
+    out = enrich.translate_address(rows, None, with_counters=True)
+    got = {r["id"]: r for r in out.collect()}
+    assert got[1]["tags"] == {
+        "amenity": "townhall", "name:sv": "Mitt",
+        "name:en": "Town hall", "alt_name": "Kaupungintalo",
+    }
+    assert got[1]["_n_amenity"] == 2
+    assert got[2]["tags"] == {"amenity": "cafe"} and got[2]["_n_amenity"] == 0
+    assert got[3]["tags"] == {"name": "X"} and got[3]["_n_amenity"] == 0
+    assert got[4]["tags"] is None
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "BroadcastExchange" not in plan
+
+
+def test_dictionary_free_query_builds_no_dictionary(spark, monkeypatch):
+    def fail(*_a, **_k):
+        raise AssertionError("dictionary_names called by a dictionary-free query")
+
+    eng = build_engine(
+        spark,
+        [(1, 60.0, 24.0, {"amenity": "library"}), (2, 60.1, 24.1, {})],
+        [],
+        [(500, {"type": "route"}, [(2, "node")])],
+    )
+    monkeypatch.setattr(enrich, "dictionary_names", fail)
+    res = eng.query("amenity", with_dictionary=False)
+    assert res.merged_streets is None and res.merged_waterways is None
+    assert [r["id"] for r in res.combined().collect()] == [1]
 
 
 def test_street_translation_copied_into_addr(spark):

@@ -58,10 +58,10 @@ def batch(ways):
     return geo.centroids(lats, lons, counts)
 
 
-def test_centroids_match_scalar_reference():
-    rng = np.random.default_rng(7)
+def random_ways(n_ways, seed=7):
+    rng = np.random.default_rng(seed)
     ways = []
-    for _ in range(300):
+    for _ in range(n_ways):
         n = rng.integers(1, 40)
         pts = [
             (float(49 + rng.normal(0, 0.05)), float(-123 + rng.normal(0, 0.05)))
@@ -70,6 +70,11 @@ def test_centroids_match_scalar_reference():
         if n > 2 and rng.random() < 0.6:
             pts[-1] = pts[0]  # close the ring
         ways.append(pts)
+    return ways
+
+
+def test_centroids_match_scalar_reference():
+    ways = random_ways(300)
     # degenerate shapes
     ways.append([(49.0, -123.0)])  # single point
     ways.append([(49.0, -123.0), (49.0, -123.0)])  # zero-length open path
@@ -81,6 +86,19 @@ def test_centroids_match_scalar_reference():
         exp_lat, exp_lon = scalar_centroid(w)
         assert got_lat[i] == pytest.approx(exp_lat, abs=1e-9), (i, w)
         assert got_lon[i] == pytest.approx(exp_lon, abs=1e-9), (i, w)
+
+
+def test_centroid_independent_of_batch():
+    """A way's centroid is the same bits alone and inside any Arrow batch:
+    each open path's length is summed from its own start, not read off a
+    running sum over the whole batch."""
+    ways = random_ways(2000)
+    # one path longer than every other: it finishes its sum alone
+    ways.append([(49 + 0.001 * i, -123 + 0.002 * (i % 7)) for i in range(120)])
+    got_lat, got_lon = batch(ways)
+    for i, w in enumerate(ways):
+        lat, lon = batch([w])
+        assert (lat[0], lon[0]) == (got_lat[i], got_lon[i]), (i, w)
 
 
 def test_haversine_known_distance():

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from pbf2json_spark import pbf
@@ -245,3 +246,65 @@ def test_read_pbf_decodes_once_per_call(spark, tmp_path):
     out2 = eng.query("name~node 2", with_dictionary=False).combined()
     assert [r["id"] for r in out2.collect()] == [nodes[2][0]]
     assert not _runs_decode(out2)
+
+
+def test_read_pbf_call_launches_no_job(spark, tmp_path):
+    """Decode tasks are assigned on the driver: calling read_pbf runs no
+    Spark job (no range-bound sampling for the blob index). The first
+    action on a frame runs the decode, which the same counter sees."""
+    nodes, ways, rels = _fixture()
+    path = str(tmp_path / "nojob.osm.pbf")
+    pbf.write_pbf(path, nodes, ways, rels, entities_per_blob=7)
+    sc = spark.sparkContext
+    group = "test_read_pbf_call_launches_no_job"
+    sc.setJobGroup(group, group)
+    try:
+        ndf, _wdf, _rdf = pbf.read_pbf(spark, path, blobs_per_task=2)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert ndf.count() == len(nodes)
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_read_pbf_tasks_are_contiguous_balanced_blob_runs(spark, tmp_path):
+    """Each decode partition holds a contiguous run of blobs, the runs
+    follow file order, and their sizes differ by at most one blob."""
+    per_blob = 5
+    nodes, ways, rels = _fixture()  # 50 nodes, 12 ways, 4 relations
+    path = str(tmp_path / "slices.osm.pbf")
+    n_blobs = pbf.write_pbf(path, nodes, ways, rels, entities_per_blob=per_blob)
+    blob_of = {}
+    for first, ents in ((0, nodes), (10, ways), (13, rels)):
+        for i, e in enumerate(ents):
+            blob_of[e[0]] = first + i // per_blob
+    assert n_blobs == 14 and max(blob_of.values()) == n_blobs - 1
+
+    ndf, wdf, rdf = pbf.read_pbf(spark, path, blobs_per_task=4)
+    pid = F.spark_partition_id().alias("pid")
+    rows = (
+        ndf.select(pid, "id")
+        .unionByName(wdf.select(pid, "id"))
+        .unionByName(rdf.select(pid, "id"))
+        .collect()
+    )
+    assert len(rows) == len(blob_of)
+    runs: dict[int, set[int]] = {}
+    for r in rows:
+        runs.setdefault(r["pid"], set()).add(blob_of[r["id"]])
+    assert sorted(runs) == list(range(4))  # ceil(14 / 4) tasks
+    order = [sorted(runs[p]) for p in sorted(runs)]
+    for run in order:
+        assert run == list(range(run[0], run[-1] + 1))
+    assert [b for run in order for b in run] == list(range(n_blobs))
+    sizes = [len(run) for run in order]
+    assert max(sizes) - min(sizes) <= 1
+
+
+@pytest.mark.parametrize("bad", [0, -1])
+def test_read_pbf_rejects_blobs_per_task_below_one(spark, tmp_path, bad):
+    path = str(tmp_path / "bad.osm.pbf")
+    pbf.write_pbf(path, *_fixture()[:2])
+    with pytest.raises(ValueError, match="blobs_per_task must be >= 1"):
+        pbf.read_pbf(spark, path, blobs_per_task=bad)

@@ -184,3 +184,19 @@ def test_relation_address_mismatch_rejects_entrance(spark):
     )
     r = got[500]
     assert r["tags"]["_centroidType"] == "average"
+
+
+def test_strata_deep_chain_is_not_recursive():
+    """The level pass is iterative: a chain far deeper than Python's
+    recursion limit gets its longest-path levels, so resolve_relations'
+    max_levels guard (not a RecursionError) decides what is too deep."""
+    n = 3000
+    levels = relations._strata(set(range(n)), [(i, i + 1) for i in range(n - 1)])
+    assert [levels[i] for i in range(n)] == list(range(n - 1, -1, -1))
+
+
+def test_nesting_deeper_than_max_levels_raises(spark):
+    chain = [(600 + i, {}, [(601 + i, "relation"), (1, "node")]) for i in range(99)]
+    chain.append((699, {}, [(1, "node")]))
+    with pytest.raises(ValueError, match="nesting depth 100 exceeds 64"):
+        run(spark, NODES, [], chain)
