@@ -464,41 +464,3 @@ def geohash_decode_col(gh: Column, precision: int) -> Column:
         ((lon0 + lon1) / 2.0).alias("lon"),
     )
 
-
-def geohash_neighbors(gh: str, precision: int | None = None) -> list[str]:
-    """The 8 neighbors of a geohash cell (driver-side helper for query
-    expansion — the geohash analogue of disk/ring generation): decode to
-    (X, Y), offset, re-encode. Longitude wraps, latitude clamps."""
-    p = precision or len(gh)
-    total = 5 * p
-    lon_bits = (total + 1) // 2
-    lat_bits = total // 2
-    code = 0
-    for ch in gh:
-        code = (code << 5) | GEOHASH_ALPHABET.index(ch)
-    if total % 2 == 0:
-        xc, yc = code >> 1, code
-    else:
-        xc, yc = code, code >> 1
-    X = int(_compact(np.array([xc], dtype=np.uint64))[0])
-    Y = int(_compact(np.array([yc], dtype=np.uint64))[0])
-    nx, ny = 1 << lon_bits, 1 << lat_bits
-    out = []
-    for dy in (-1, 0, 1):
-        for dx in (-1, 0, 1):
-            if dx == 0 and dy == 0:
-                continue
-            yy = Y + dy
-            if yy < 0 or yy >= ny:
-                continue  # latitude clamps — no wrap over the poles
-            xx = (X + dx) % nx  # longitude wraps
-            sx = _spread(np.array([xx], dtype=np.uint64))[0]
-            sy = _spread(np.array([yy], dtype=np.uint64))[0]
-            c = int((sx << np.uint64(1)) | sy) if total % 2 == 0 else int(
-                sx | (sy << np.uint64(1))
-            )
-            s = ""
-            for i in range(p):
-                s += GEOHASH_ALPHABET[(c >> (5 * (p - 1 - i))) & 31]
-            out.append(s)
-    return out

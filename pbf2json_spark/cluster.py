@@ -118,37 +118,6 @@ def kmeans_assign(
     )
 
 
-def cluster_stats(
-    assigned: DataFrame,
-    centroids: "np.ndarray | list",
-    vec_col: str = "embedding",
-    cluster_col: str = "cluster",
-) -> DataFrame:
-    """Per-cluster size and mean cosine to the centroid (cohesion — the
-    cosine analogue of inertia). One map-side-combinable groupBy; the
-    per-row cosine is computed in the same Arrow batch pass as assignment
-    would be. Output: (cluster, n:long, mean_cos:double)."""
-    cents_t = _norm_rows(np.asarray(centroids, dtype=np.float64)).T.copy()
-
-    @F.pandas_udf("double")
-    def cos_to(vec: pd.Series, cl: pd.Series) -> pd.Series:
-        mat = _norm_rows(np.asarray(vec.tolist(), dtype=np.float64))
-        sims = mat @ cents_t
-        return pd.Series(sims[np.arange(len(sims)), cl.to_numpy()])
-
-    return (
-        assigned.withColumn(
-            "_cos",
-            cos_to(F.col(vec_col).cast("array<double>"), F.col(cluster_col)),
-        )
-        .groupBy(cluster_col)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.avg("_cos").alias("mean_cos"),
-        )
-    )
-
-
 def adjusted_rand(
     df: DataFrame,
     label_a: str,

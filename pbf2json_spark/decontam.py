@@ -1,4 +1,4 @@
-"""Train/test decontamination: find (and drop) training documents that
+"""Train/test decontamination: find training documents that
 share word n-grams with a benchmark/eval set — the GPT-3/PaLM-style
 "13-gram overlap" contamination check, the one corpus-level hygiene pass
 every LLM training-data pipeline runs before export.
@@ -16,14 +16,6 @@ Shapes at 100 TB:
     (train_id, bench_id, partial_count) aggregation, map-side combinable
     and bounded by the number of CONTAMINATED grams, a vanishing fraction
     of the corpus.
-  * `hash_grams=True` replaces the gram string with xxhash64(gram) on both
-    sides before the join — 8-byte probe keys instead of ~100-byte strings
-    (a 13-gram of average words). A 64-bit collision can only ADD a
-    spurious candidate gram hit (never lose one), which matters only at
-    min_hits thresholds near the collision rate (~n_train_grams *
-    n_bench_grams / 2^64 expected extra hits — harmless at any real
-    setting); the default keeps exact strings so the DuckDB oracle is
-    value-exact.
   * Grams are DISTINCT per document before joining (contamination is
     membership, not multiplicity), which also bounds the per-doc fan-out.
 """
@@ -36,18 +28,13 @@ from pyspark.sql import functions as F
 from pbf2json_spark.corpus import _words, ngrams_col
 
 
-def _doc_grams(
-    df: DataFrame, id_col: str, text_col: str, n: int, hash_grams: bool
-) -> DataFrame:
+def _doc_grams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(id, gram) with grams DISTINCT per document; docs shorter than n
     words contribute nothing."""
-    out = df.select(
+    return df.select(
         F.col(id_col).alias("_id"),
         F.explode(F.array_distinct(ngrams_col(_words(text_col), n))).alias("gram"),
     )
-    if hash_grams:
-        out = out.select("_id", F.xxhash64("gram").alias("gram"))
-    return out
 
 
 def contamination_pairs(
@@ -57,8 +44,6 @@ def contamination_pairs(
     train_id: str = "doc_id",
     bench_id: str = "doc_id",
     text_col: str = "text",
-    broadcast_bench: bool = True,
-    hash_grams: bool = False,
 ) -> DataFrame:
     """All (train_id, bench_id, n_shared) pairs where a training document
     shares >=1 distinct word n-gram with a benchmark document, with the
@@ -68,41 +53,13 @@ def contamination_pairs(
     combinable groupBy of the (rare) hits — see the module docstring for
     why this never shuffles training text.
     """
-    tg = _doc_grams(train, train_id, text_col, n, hash_grams)
-    bg = _doc_grams(bench, bench_id, text_col, n, hash_grams).withColumnRenamed(
-        "_id", "_bid"
+    tg = _doc_grams(train, train_id, text_col, n)
+    bg = F.broadcast(
+        _doc_grams(bench, bench_id, text_col, n).withColumnRenamed("_id", "_bid")
     )
-    if broadcast_bench:
-        bg = F.broadcast(bg)
     return (
         tg.join(bg, "gram")
         .groupBy(F.col("_id").alias("train_id"), F.col("_bid").alias("bench_id"))
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
 
-
-def decontaminate(
-    train: DataFrame,
-    bench: DataFrame,
-    n: int = 13,
-    min_hits: int = 1,
-    train_id: str = "doc_id",
-    bench_id: str = "doc_id",
-    text_col: str = "text",
-    broadcast_bench: bool = True,
-    hash_grams: bool = False,
-) -> DataFrame:
-    """Training rows with NO benchmark document sharing >= min_hits
-    distinct n-grams (the keep-set; a left_anti on the contaminated ids).
-
-    min_hits > 1 tolerates boilerplate n-grams that appear everywhere —
-    the usual knob when n is small; at the standard n=13 a single hit is
-    already damning.
-    """
-    pairs = contamination_pairs(
-        train, bench, n, train_id, bench_id, text_col, broadcast_bench, hash_grams
-    )
-    bad = pairs.filter(F.col("n_shared") >= min_hits).select("train_id").distinct()
-    return train.join(
-        bad, train[train_id] == bad["train_id"], "left_anti"
-    )

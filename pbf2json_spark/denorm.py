@@ -62,18 +62,14 @@ def promote_ref_to_unit(tags: Column) -> Column:
     return F.when(promote, patched).otherwise(tags)
 
 
-def prepare_nodes(nodes: DataFrame, promote: bool = True) -> DataFrame:
+def prepare_nodes(nodes: DataFrame) -> DataFrame:
     """Trim tags (P5) and apply the ref→addr:unit promotion (P8)."""
-    t = trim_tags(F.col("tags"))
-    if promote:
-        t = promote_ref_to_unit(t)
+    t = promote_ref_to_unit(trim_tags(F.col("tags")))
     return nodes.select("id", "lat", "lon", t.alias("tags"))
 
 
-def prepare_ways(ways: DataFrame, promote: bool = True) -> DataFrame:
-    t = trim_tags(F.col("tags"))
-    if promote:
-        t = promote_ref_to_unit(t)
+def prepare_ways(ways: DataFrame) -> DataFrame:
+    t = promote_ref_to_unit(trim_tags(F.col("tags")))
     return ways.select("id", t.alias("tags"), "refs")
 
 

@@ -18,7 +18,7 @@ Scale shape (the reference's 3-pass semi-join reduction, re-expressed):
     relations frames, so every plan built here reads the decoded blocks
     instead of re-decoding the file;
   * per-stage reuse: formatted ways feed relations, merges and output —
-    persisted once (`persist=True`) instead of recomputed per consumer.
+    always persisted once instead of recomputed per consumer.
 """
 
 from __future__ import annotations
@@ -91,7 +91,6 @@ class Engine:
         ways: DataFrame,
         relations: DataFrame | None = None,
         names: tuple[str, ...] = ("name",),
-        persist: bool = True,
         highways: tuple[str, ...] | None = None,
     ) -> None:
         """`highways` = the reference's documented `-highways` allowlist
@@ -107,7 +106,6 @@ class Engine:
             else None
         )
         self.names = names
-        self.persist = persist
         self.highways = highways
 
     @classmethod
@@ -166,21 +164,17 @@ class Engine:
             needed_way_ids = needed_way_ids.unionByName(rel_way_refs)
         ways_needed = self.ways.join(needed_way_ids.distinct(), "id", "left_semi")
 
-        d = denorm.denormalize_ways(ways_needed, self.nodes)
-        if self.persist:
-            d = d.persist()
-        fmt_ways = denorm.format_from_denorm(d, with_entrances=with_entrances)
-        if self.persist:
-            fmt_ways = fmt_ways.persist()
+        d = denorm.denormalize_ways(ways_needed, self.nodes).persist()
+        fmt_ways = denorm.format_from_denorm(
+            d, with_entrances=with_entrances
+        ).persist()
         fmt_ways_out = fmt_ways.drop("pts")
 
         fmt_rels = None
         if self.relations is not None:
             fmt_rels = rel_mod.resolve_relations(
                 self.relations, fmt_ways_out, self.nodes
-            )
-            if self.persist:
-                fmt_rels = fmt_rels.persist()
+            ).persist()
 
         # dictionaries joined to formatted geometry
         merged_streets = merged_water = None
@@ -189,13 +183,10 @@ class Engine:
             transl_geo = enrich.translation_geometry(fmt_ways_out, fmt_rels, dict_all)
             merged_streets = enrich.merge_segments(
                 dict_all, fmt_ways_out, fmt_rels, "street_name"
-            )
+            ).persist()
             merged_water = enrich.merge_segments(
                 dict_all, fmt_ways_out, fmt_rels, "water_name"
-            )
-            if self.persist:
-                merged_streets = merged_streets.persist()
-                merged_water = merged_water.persist()
+            ).persist()
 
         out_nodes = enrich.translate_address(
             matched_nodes.select(

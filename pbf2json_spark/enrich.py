@@ -379,6 +379,10 @@ def xway_suppress(rows: DataFrame, query: dsl.Query, key: str) -> DataFrame:
 
 # --- mergeSegments (J8) -----------------------------------------------------------
 
+# rows in one name group above which merge_segments leaves the reference's
+# O(n²) greedy scan for the near-linear union-find (_merge_one_name_cc)
+MERGE_GREEDY_LIMIT = 20_000
+
 _MERGE_SCHEMA = T.StructType(
     [
         T.StructField("id", T.LongType()),
@@ -468,7 +472,7 @@ def _merge_one_name_cc(pdf: pd.DataFrame, slack: float = STREET_HIT_DISTANCE) ->
     NEVER split; boxes closer than ~2 cell widths may be over-merged, and
     greedy's growing-bbox absorption can differ near component boundaries —
     a deterministic CC-superset divergence, documented per SURVEY §7 (the
-    greedy path below `greedy_limit` is untouched and byte-exact).
+    greedy path up to MERGE_GREEDY_LIMIT is untouched and byte-exact).
     Seed / absorbed-tag / merged_ids ordering is (is_way, id) — the
     reference's scan order."""
     import numpy as np
@@ -553,7 +557,6 @@ def merge_segments(
     fmt_ways: DataFrame,
     fmt_rels: DataFrame | None,
     name_col: str,
-    greedy_limit: int = 20_000,
 ) -> DataFrame:
     """Group same-named segments (streets: name_col='street_name'; waterways:
     'water_name') and merge per name. Only entities that were actually
@@ -563,7 +566,7 @@ def merge_segments(
     the main output (mergedStreets holds seeds only, pbf2json.go:1240); the
     absorbed members still print individually when query-valid.
 
-    Name groups larger than `greedy_limit` rows take the near-linear
+    Name groups larger than MERGE_GREEDY_LIMIT rows take the near-linear
     union-find path (_merge_one_name_cc) instead of the reference's O(n²)
     greedy scan — the hot-name straggler guard for planet-scale inputs."""
     named = dict_df.filter(F.col(name_col).isNotNull()).select(
@@ -582,7 +585,7 @@ def merge_segments(
     rows = named.join(sides, "id")
 
     def dispatch(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > greedy_limit:
+        if len(pdf) > MERGE_GREEDY_LIMIT:
             return _merge_one_name_cc(pdf)
         return _merge_one_name(pdf)
 

@@ -180,36 +180,6 @@ def hilbert_udf(res: int):
     return _h
 
 
-def hilbert_layout(
-    df: DataFrame,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    n_files: int | None = None,
-    res: int = 16,
-) -> DataFrame:
-    """zorder_layout with the Hilbert key instead of Morton: same grid
-    quantization as cells.cell_col (x from lon, y from lat at `res` bits),
-    range-partition + sort by Hilbert distance. Contiguous key ranges are
-    CONNECTED regions, so per-file bboxes are at least as tight as
-    Z-order's at equal file count. Key computed by the Arrow numpy kernel
-    (hilbert_udf) — one batch crossing amortized into the write."""
-    kd = "__hkey"
-    if kd in df.columns:
-        raise ValueError(f"input frame already has a {kd!r} column")
-    two = F.lit(1 << res).cast("double")
-    gx = F.least(
-        F.lit((1 << res) - 1),
-        F.greatest(F.lit(0), F.floor((F.col(lon_col) + 180.0) / 360.0 * two)),
-    ).cast("long")
-    gy = F.least(
-        F.lit((1 << res) - 1),
-        F.greatest(F.lit(0), F.floor((F.col(lat_col) + 90.0) / 180.0 * two)),
-    ).cast("long")
-    out = df.withColumn(kd, hilbert_udf(res)(gx, gy))
-    n = n_files or df.sparkSession.sparkContext.defaultParallelism
-    return out.repartitionByRange(n, kd).sortWithinPartitions(kd).drop(kd)
-
-
 # --- Z-order range planning ---------------------------------------------------
 #
 # Laying data out by Morton code (zorder_layout) only pays off if QUERIES

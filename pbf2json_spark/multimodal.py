@@ -145,68 +145,6 @@ def decode_features(media: DataFrame) -> DataFrame:
     return media.mapInPandas(run, _DECODED_SCHEMA)
 
 
-_RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("blob", T.BinaryType()),
-    ]
-)
-
-
-def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Real image resize: PNG decode → nearest-neighbor sample → PNG
-    re-encode, per Arrow batch."""
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-                img = codecs.decode_png(bytes(blob))
-                h, w = img.shape[:2]
-                yi = (np.arange(out_h) * h // out_h).clip(0, h - 1)
-                xi = (np.arange(out_w) * w // out_w).clip(0, w - 1)
-                resized = img[np.ix_(yi, xi)]
-                out.append(
-                    {"media_id": int(mid), "blob": codecs.encode_png(resized)}
-                )
-            yield pd.DataFrame(out, columns=["media_id", "blob"])
-
-    return media.filter(F.col("kind") == "image").mapInPandas(run, _RESIZE_SCHEMA)
-
-
-_FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_no", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),
-    ]
-)
-
-
-def sample_frames(media: DataFrame, every: int = 4) -> DataFrame:
-    """Frame-sample 'video' blobs (FAKE container: payload = h frames of w
-    bytes), emitting every `every`-th frame — one row per frame, the
-    fan-out shape a real video pipeline has."""
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-                _, w, h, payload = _parse_fake(bytes(blob))
-                frames = payload[: w * h].reshape(h, w)
-                for fi in range(0, h, every):
-                    out.append(
-                        {
-                            "media_id": int(mid),
-                            "frame_no": fi,
-                            "frame": frames[fi].tobytes(),
-                        }
-                    )
-            yield pd.DataFrame(out, columns=["media_id", "frame_no", "frame"])
-
-    return media.filter(F.col("kind") == "video").mapInPandas(run, _FRAMES_SCHEMA)
-
-
 _DHASH_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -262,66 +200,6 @@ def image_dhash(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(run, _DHASH_SCHEMA)
-
-
-def dhash_pairs(
-    hashes: DataFrame,
-    max_hamming: int = 4,
-    id_col: str = "media_id",
-    hash_col: str = "dhash",
-) -> DataFrame:
-    """Image near-dup pairs from dHashes: pigeonhole banding (split the
-    64 bits into max_hamming+1 bands — two hashes within `max_hamming`
-    bits MUST agree exactly on at least one band, so band equi-joins
-    have recall 1.0, same argument as simhash_pairs), then exact
-    bit_count(XOR) verify — no false positives.
-
-    Shape at 10^10 images: (id, band, band_bits) triples only in the
-    candidate self-join; the 8-byte hashes join back per DEDUPED pair
-    for the verify. Never all-pairs.
-
-    Output: (a, b, hamming) with a < b, hamming ≤ max_hamming.
-    """
-    bands = max_hamming + 1
-    width = 64 // bands
-    h = hashes.select(F.col(id_col).alias("_id"),
-                      F.col(hash_col).cast("long").alias("_h"))
-    parts = []
-    for i in range(bands):
-        lo = i * width
-        # last band absorbs the remainder bits
-        take = 64 - lo if i == bands - 1 else width
-        parts.append(
-            F.struct(
-                F.lit(i).alias("band"),
-                F.shiftrightunsigned("_h", lo).bitwiseAND(
-                    F.lit(-1 if take >= 64 else (1 << take) - 1).cast("long")
-                ).alias("key"),
-            )
-        )
-    banded = h.select(
-        "_id", F.explode(F.array(*parts)).alias("_b")
-    ).select("_id", F.col("_b.band").alias("_band"),
-             F.col("_b.key").alias("_key"))
-    cand = (
-        banded.select(F.col("_id").alias("a"), "_band", "_key")
-        .join(banded.select(F.col("_id").alias("b"), "_band", "_key"),
-              ["_band", "_key"])
-        .filter(F.col("a") < F.col("b"))
-        .dropDuplicates(["a", "b"])
-    )
-    ha = h.select(F.col("_id").alias("a"), F.col("_h").alias("_ha"))
-    hb = h.select(F.col("_id").alias("b"), F.col("_h").alias("_hb"))
-    return (
-        cand.join(ha, "a")
-        .join(hb, "b")
-        .select(
-            "a", "b",
-            F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb")))
-            .cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
 
 
 _AUDIO_SCHEMA = T.StructType(

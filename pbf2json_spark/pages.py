@@ -151,25 +151,6 @@ def extract_text(
     return pages.withColumn(out_col, s)
 
 
-@F.pandas_udf(T.StringType())
-def _extract_text_udf(html: pd.Series) -> pd.Series:
-    s = html.apply(lambda b: b.decode("utf-8") if b is not None else None)
-    s = s.str.replace(_SCRIPT_RE, "", regex=True)
-    s = s.str.replace(_STYLE_RE, "", regex=True)
-    s = s.str.replace(_TAG_RE, "", regex=True)
-    for ent, ch in _ENTITIES:
-        s = s.str.replace(ent, ch, regex=False)
-    return s
-
-
-def extract_text_arrow(
-    pages: DataFrame, html_col: str = "html", out_col: str = "text_extracted"
-) -> DataFrame:
-    """Arrow-batched pandas-UDF twin of `extract_text` (input_hint mandates
-    the vectorized-UDF surface); tests assert both agree byte-for-byte."""
-    return pages.withColumn(out_col, _extract_text_udf(F.col(html_col)))
-
-
 # --- geocode -------------------------------------------------------------------
 
 

@@ -11,12 +11,7 @@ cost is bounded by the largest GROUP (a site's page count), not the
 corpus. The groupBy(collect_list + slice) alternative is strictly worse:
 it buffers every group's full row set inside one aggregation buffer
 before truncating — the same OOM shape inverted_index's max_df exists to
-avoid. For degenerate hot groups (one host = 10^9 pages), pre-thin with a
-salted first pass: rank within (group, salt) and keep k per split, so no
-single reducer ever holds a whole hot group and the final exchange
-carries at most k * salt rows per group — still exact after the final
-rank, since the true top-k of a group is contained in the union of its
-salted top-k sets.
+avoid.
 """
 
 from __future__ import annotations
@@ -31,44 +26,20 @@ def top_k_per_group(
     group_cols: list[str],
     order_by: list[Column],
     k: int,
-    pre_thin_salt: int = 0,
 ) -> DataFrame:
     """Keep the k first rows of each group under `order_by` (pass
     deterministic tie-breakers — e.g. the row id — or ranks are
     partition-order dependent).
-
-    pre_thin_salt > 0 enables the hot-group guard: a first ranking pass
-    over (group, salt) splits every group across `salt` reducers — the
-    full input still shuffles once, but no single reducer ever holds a
-    whole hot group — and keeps k rows per (group, salt), so the FINAL
-    exchange carries at most k * salt rows per group. Exactness is
-    preserved (superset property: a group's true top-k rows are each
-    top-k within their salt split). The salt is the row sequence number
-    (monotonically_increasing_id % salt), which spreads rows even when
-    the input arrives in a single partition; the salt values themselves
-    are partitioning-dependent, but ANY assignment is correct — the
-    final exact rank is what callers observe.
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    reserved = {"rank_in_group", "_rk", "_r0", "_salt"}
+    reserved = {"rank_in_group", "_rk"}
     clash = reserved & set(df.columns)
     if clash:
         raise ValueError(f"input columns clash with outputs: {sorted(clash)}")
-    src = df
-    if pre_thin_salt > 0:
-        salted = Window.partitionBy(*group_cols, "_salt").orderBy(*order_by)
-        src = (
-            df.withColumn(
-                "_salt", F.monotonically_increasing_id() % pre_thin_salt
-            )
-            .withColumn("_r0", F.row_number().over(salted))
-            .filter(F.col("_r0") <= k)
-            .drop("_r0", "_salt")
-        )
     w = Window.partitionBy(*group_cols).orderBy(*order_by)
     return (
-        src.withColumn("_rk", F.row_number().over(w))
+        df.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= k)
         .withColumnRenamed("_rk", "rank_in_group")
     )

@@ -167,7 +167,6 @@ def kmv_build(
     group_cols: list[str] | None = None,
     k: int = 64,
     seed: int = 0,
-    pre_thin_salt: int = 0,
 ) -> DataFrame:
     """Build the per-group KMV sketch: the k smallest distinct key hashes.
 
@@ -182,9 +181,7 @@ def kmv_build(
         *[F.col(c) for c in gs], kmv_hash(F.col(key_col), seed).alias("h")
     ).distinct()
     if gs:
-        return top_k_per_group(
-            base, gs, [F.col("h").asc()], k, pre_thin_salt=pre_thin_salt
-        )
+        return top_k_per_group(base, gs, [F.col("h").asc()], k)
     # global sketch: TakeOrdered (k rows through the final merge, no
     # global sort materialized)
     out = base.orderBy("h").limit(k)

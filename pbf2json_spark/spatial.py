@@ -967,6 +967,11 @@ def simplify_polylines(
     return df.withColumn(line_col, simp(F.col(line_col)))
 
 
+# dense-cell count up to which hotspot_clusters finds components with a
+# driver union-find; above it, distributed pointer doubling
+HOTSPOT_DRIVER_CC_MAX = 1 << 20
+
+
 def hotspot_clusters(
     points: DataFrame,
     res: int,
@@ -974,7 +979,6 @@ def hotspot_clusters(
     lat_col: str = "lat",
     lon_col: str = "lon",
     max_iters: int = 20,
-    driver_cc_max: int = 1 << 20,
 ) -> DataFrame:
     """Grid-density clustering (DBSCAN-lite hotspot detection): cells at
     `res` holding >= min_pts points are DENSE; dense cells touching
@@ -996,7 +1000,7 @@ def hotspot_clusters(
     that is thousands, a size where a dozen pointer-doubling rounds (~40
     small Spark jobs of pure orchestration) lose outright to one
     bounded collect + driver union-find + broadcast join-back (measured
-    5.5 s → ~1.8 s on the sf0.1 gate). Above ``driver_cc_max`` dense
+    5.5 s → ~1.8 s on the sf0.1 gate). Above ``HOTSPOT_DRIVER_CC_MAX`` dense
     cells (res ≳ 11) it switches to graph.connected_components — pointer
     doubling, O(log diameter) rounds. Both paths emit the identical
     deterministic component-minimum representative.
@@ -1039,7 +1043,7 @@ def hotspot_clusters(
         .select(F.col("key").alias("a"), F.col("nkey").alias("b"))
     )
     n_dense = dk.count()
-    if n_dense <= driver_cc_max:
+    if n_dense <= HOTSPOT_DRIVER_CC_MAX:
         # bounded-by-grid metadata-scale graph: union-find on the driver
         # (same boundedness argument as the relation→relation edge
         # collect, relations.py), then ONE broadcast join back

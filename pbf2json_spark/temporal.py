@@ -16,31 +16,7 @@ import functools
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
-
-
-def _bucket_col(c: Column, dtype: T.DataType, width: int) -> Column:
-    """Monotonic bucket id for the hot-key pre-split.
-
-    TIMESTAMP buckets on true epoch seconds (unix_seconds — tz-independent
-    and monotonic in the instant; LOCAL wall-clock parts would go backwards
-    across a DST fall-back and break the bucket-ordering proof). NTZ has no
-    instant, so it buckets on its wall-clock fields tz-free (NTZ wall-clock
-    IS its total order). Numeric `on` buckets directly in its own units.
-    Sub-second truncation keeps monotonicity in every case."""
-    if isinstance(dtype, T.TimestampType):
-        return F.floor(F.unix_seconds(c) / F.lit(width))
-    if isinstance(dtype, T.TimestampNTZType):
-        secs = (
-            F.datediff(c.cast("date"), F.lit("1970-01-01").cast("date")).cast("long")
-            * 86400
-            + F.hour(c).cast("long") * 3600
-            + F.minute(c).cast("long") * 60
-            + F.second(c).cast("long")
-        )
-        return F.floor(secs / F.lit(width))
-    return F.floor(c / F.lit(width))
 
 
 def asof_join(
@@ -49,44 +25,34 @@ def asof_join(
     on: str = "ts",
     by: str = "key",
     tolerance=None,
-    bucket: int | None = None,
 ) -> DataFrame:
     """Backward as-of join: for every left row, attach the LATEST right row
     with the same `by` key and right.ts <= left.ts (ties on ts: right rows
     sort before left rows, so an exactly-simultaneous right row matches).
     Right payload columns come back NULL when no earlier right row exists
-    (left-outer semantics). `tolerance` (a Column/literal in the same units
-    as `on`, e.g. F.expr("INTERVAL 1 HOUR")) voids matches older than
-    left.ts - tolerance.
+    (left-outer semantics). A NULL key or NULL `on` matches nothing, as in
+    SQL's ASOF LEFT JOIN: right rows with either are dropped before the
+    union, and a left row with either keeps NULL payload. `tolerance` (a
+    Column/literal in the same units as `on`, e.g. F.expr("INTERVAL 1
+    HOUR")) voids matches older than left.ts - tolerance.
 
     Shape — the distributed merge-as-of, NOT a range join: union both
     sides tagged, ONE shuffle on `by`, per-key sort by (ts, side), then a
     running `last(right_payload, ignorenulls)` carries each right row
     forward to the left rows it serves. Cost is sort+scan per key —
     shuffle volume is |left| + |right| rows of payload width, zero
-    replication (a range-bucketed join would replicate per bucket).
-
-    Hot keys: by default a single degenerate `by` key serializes into one
-    task (the per-key sort). `bucket` is the escape hatch — give it a
-    bucket width (seconds for timestamp `on`, plain `on`-units for numeric)
-    and the plan partitions by (key, time-bucket) instead: each bucket is
-    seeded with the key's latest right row from any EARLIER bucket (one
-    metadata-scale row per (key, bucket), carried by a window over bucket
-    summaries — never a replication of data rows), so results are identical
-    to the default plan while a 100M-row key spreads over
-    time-range/bucket tasks. The default plan is unchanged when bucket is
-    None.
+    replication (a range-bucketed join would replicate per bucket). The
+    per-key sort runs in one task, so a single hot `by` key bounds the
+    stage's wall time.
 
     Determinism: right rows should be unique per (by, on) — when several
     right rows share a timestamp, which one wins depends on sort-tie order.
     Pre-aggregate the right side (as the driver query does) if duplicates
-    are possible. (With `bucket`, a same-(by, on) duplicate straddling a
-    boundary seed is resolved by max-struct — still deterministic only
-    when rows are unique per (by, on).)
+    are possible.
     """
     r_payload = [c for c in right.columns if c not in (on, by)]
     l_cols = left.columns
-    rt = right.select(
+    rt = right.filter(F.col(by).isNotNull() & F.col(on).isNotNull()).select(
         F.col(by),
         F.col(on),
         F.lit(0).alias("_side"),
@@ -101,60 +67,12 @@ def asof_join(
     )
     rt = rt.withColumn("_lv", F.lit(None).cast(lt.schema["_lv"].dataType))
 
-    if bucket is None:
-        u = lt.unionByName(rt)
-        w = (
-            Window.partitionBy(by)
-            .orderBy(F.col(on).asc(), F.col("_side").asc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-    else:
-        bkt = _bucket_col(F.col(on), lt.schema[on].dataType, bucket)
-        lt = lt.withColumn("_bkt", bkt)
-        rt = rt.withColumn("_bkt", bkt)
-        # one summary row per (key, bucket) with the bucket's latest right
-        # row; bucket monotonicity (ts1 < ts2 ⇒ bkt1 <= bkt2, and every
-        # right row in an earlier bucket precedes every left row of a later
-        # one) makes the carried tail a valid seed for the whole bucket
-        # max_by orders on `on` alone: the payload struct may carry
-        # non-orderable types (maps) that F.max over a struct would reject
-        tails = rt.groupBy(by, "_bkt").agg(
-            F.max_by(
-                F.struct(F.col(on).alias(on), F.col("_rv").alias("_rv")),
-                F.col(on),
-            ).alias("_t")
-        )
-        bkts = (
-            lt.select(by, "_bkt")
-            .unionByName(rt.select(by, "_bkt"))
-            .distinct()
-        )
-        w_seed = (
-            Window.partitionBy(by)
-            .orderBy("_bkt")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        seeds = (
-            bkts.join(tails, [by, "_bkt"], "left")
-            .withColumn("_seed", F.last("_t", ignorenulls=True).over(w_seed))
-            .filter(F.col("_seed").isNotNull())
-            .select(
-                F.col(by),
-                F.col("_seed")[on].alias(on),
-                # _side=-1: the seed sorts before any real row at the same
-                # ts, so a real right duplicate of its own seed wins
-                F.lit(-1).alias("_side"),
-                F.col("_seed._rv").alias("_rv"),
-                F.lit(None).cast(lt.schema["_lv"].dataType).alias("_lv"),
-                F.col("_bkt"),
-            )
-        )
-        u = lt.unionByName(rt).unionByName(seeds)
-        w = (
-            Window.partitionBy(by, "_bkt")
-            .orderBy(F.col(on).asc(), F.col("_side").asc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
+    u = lt.unionByName(rt)
+    w = (
+        Window.partitionBy(by)
+        .orderBy(F.col(on).asc(), F.col("_side").asc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
     carried = u.withColumn("_match", F.last("_rv", ignorenulls=True).over(w))
     out = carried.filter(F.col("_side") == 1)
     match = F.col("_match")

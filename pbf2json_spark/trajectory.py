@@ -504,98 +504,6 @@ def cell_jaccard(
     )
 
 
-def cell_minhash_pairs(
-    df: DataFrame,
-    res: int,
-    user_col: str = "user_id",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    num_perm: int = 32,
-    bands: int = 16,
-    threshold_e6: int = 300_000,
-) -> DataFrame:
-    """LSH scale path for cell_jaccard: banded minhash over each user's
-    visited-cell SET finds candidate pairs without the per-cell self-join
-    — the variant to reach for when a dense city grid makes every cell a
-    hub and max_df thinning would discard the very cells that carry the
-    signal. Candidates are verified with the EXACT integer cell Jaccard
-    (no false positives; recall is the standard LSH S-curve at
-    num_perm/bands rows per band — measured against cell_jaccard in the
-    test suite).
-
-    Shape at 10^12 pings: the distinct (user, cell) exchange, ONE
-    groupBy collecting each user's cell array (bounded by 4^res, and in
-    practice by the user's radius — NOT corpus-scale), a bands-way
-    banded self-equi-join carrying only (user, band, bucket) triples,
-    and a verify join fetching the two cell arrays per deduped candidate
-    pair. The all-pairs blowup never happens; hub cells cost nothing
-    because cells are never join keys.
-
-    Output: (user_a, user_b, n_a, n_b, inter, jaccard_e6) with
-    jaccard_e6 ≥ threshold_e6 — same schema as cell_jaccard.
-    """
-    from pbf2json_spark import cells as _cells
-    from pbf2json_spark.dedup import minhash_signature
-
-    if num_perm % bands:
-        raise ValueError("bands must divide num_perm")
-    rpb = num_perm // bands
-    x, y = _cells.xy_cols(F.col(lat_col), F.col(lon_col), res)
-    n = 1 << res
-    pts = df.select(
-        F.col(user_col).alias("u"),
-        (x * n + y).cast("long").alias("_c"),
-    ).distinct()
-    sets = pts.groupBy("u").agg(
-        F.sort_array(F.collect_set("_c")).alias("_cs")
-    )
-    sig = sets.select(
-        "u",
-        minhash_signature(
-            F.transform(F.col("_cs"), lambda c: c.cast("string")), num_perm
-        ).alias("_sig"),
-    )
-    banded = sig.select(
-        "u",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.xxhash64(F.concat_ws(",", *[
-                    F.element_at("_sig", bi * rpb + j + 1)
-                    for j in range(rpb)
-                ])).alias("bkey"),
-            )
-            for bi in range(bands)
-        ])).alias("_b"),
-    ).select("u", F.col("_b.band").alias("_band"),
-             F.col("_b.bkey").alias("_bkey"))
-    cand = (
-        banded.select(F.col("u").alias("user_a"), "_band", "_bkey")
-        .join(banded.select(F.col("u").alias("user_b"), "_band", "_bkey"),
-              ["_band", "_bkey"])
-        .filter(F.col("user_a") < F.col("user_b"))
-        .dropDuplicates(["user_a", "user_b"])
-    )
-    sa = sets.select(F.col("u").alias("user_a"), F.col("_cs").alias("_csa"))
-    sb = sets.select(F.col("u").alias("user_b"), F.col("_cs").alias("_csb"))
-    return (
-        cand.join(sa, "user_a")
-        .join(sb, "user_b")
-        .select(
-            "user_a", "user_b",
-            F.size("_csa").cast("long").alias("n_a"),
-            F.size("_csb").cast("long").alias("n_b"),
-            F.size(F.array_intersect("_csa", "_csb")).cast("long")
-            .alias("inter"),
-        )
-        .withColumn(
-            "jaccard_e6",
-            F.expr("inter * 1000000 div (n_a + n_b - inter)"),
-        )
-        .filter(F.col("jaccard_e6") >= threshold_e6)
-    )
-
-
 def gravity_flows(
     flows: DataFrame,
     from_x: str = "from_x",

@@ -322,7 +322,6 @@ def crawl_schedule(
     host_col: str = "host",
     url_col: str = "url",
     priority_col: str = "priority",
-    pre_thin_salt: int = 0,
 ) -> DataFrame:
     """Politeness-aware fetch scheduling over a crawl frontier: each host
     gets at most `per_host_budget` URLs this cycle, picked by priority,
@@ -335,11 +334,9 @@ def crawl_schedule(
     across partitionings and engines (url is the total-order tie-break).
 
     Shape at 10^12 candidate URLs: the budget cap runs FIRST through
-    ranking.top_k_per_group (one hash exchange on host; with
-    `pre_thin_salt` > 0 a salted exact pre-thin bounds the reducer that
-    would otherwise hold a 10^9-URL hot host), so the final rank window
-    sees at most `per_host_budget` rows per host. Nothing downstream of
-    the cap carries the losers.
+    ranking.top_k_per_group (one hash exchange on host), so the final
+    rank window sees at most `per_host_budget` rows per host. Nothing
+    downstream of the cap carries the losers.
 
     Output: (url, host, priority, slot, fetch_offset_ms).
     """
@@ -356,7 +353,6 @@ def crawl_schedule(
         ["host"],
         [F.col("priority").desc(), F.col("url").asc()],
         per_host_budget,
-        pre_thin_salt=pre_thin_salt,
     )
     return capped.select(
         "url",
@@ -873,28 +869,6 @@ def idn_decode(df: DataFrame, host_col: str = "host") -> DataFrame:
         "*", "_idn.host_unicode", "_idn.is_idn", "_idn.decode_ok",
         "_idn.mixed_script",
     ).drop("_idn")
-
-
-def ip_to_long(ip: Column) -> Column:
-    """Dotted-quad IPv4 string → uint32-as-int64 — pure Column regexp +
-    integer arithmetic (scan-stage; malformed inputs → NULL via the
-    regexp miss)."""
-    o = [
-        F.nullif(
-            F.regexp_extract(
-                ip, r"^(\d{1,3})\.(\d{1,3})\.(\d{1,3})\.(\d{1,3})$", i
-            ),
-            F.lit(""),
-        ).cast("long")
-        for i in (1, 2, 3, 4)
-    ]
-    valid = (
-        o[0].isNotNull()
-        & (o[0] <= 255) & (o[1] <= 255) & (o[2] <= 255) & (o[3] <= 255)
-    )
-    return F.when(
-        valid, o[0] * 16777216 + o[1] * 65536 + o[2] * 256 + o[3]
-    )
 
 
 def cidr_lookup(

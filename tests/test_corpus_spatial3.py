@@ -35,24 +35,6 @@ def test_contamination_pairs_counts_distinct_shared_grams(spark):
     assert got == {(1, 10): 3, (3, 10): 1, (4, 10): 1}
 
 
-def test_decontaminate_keeps_clean_and_respects_min_hits(spark):
-    train = _docs(spark, [(1, "a b c d e"), (2, "x y z"), (3, "c d e f")])
-    bench = _docs(spark, [(10, "a b c d e")])
-    kept = decontam.decontaminate(train, bench, n=3)
-    assert sorted(r.doc_id for r in kept.collect()) == [2]
-    # min_hits=3 tolerates docs sharing fewer than 3 grams
-    kept2 = decontam.decontaminate(train, bench, n=3, min_hits=3)
-    assert sorted(r.doc_id for r in kept2.collect()) == [2, 3]
-
-
-def test_contamination_hash_grams_same_pairs(spark):
-    train = _docs(spark, [(i, f"w{i} common phrase here w{i+1}") for i in range(20)])
-    bench = _docs(spark, [(100, "common phrase here indeed")])
-    exact = decontam.contamination_pairs(train, bench, n=3)
-    hashed = decontam.contamination_pairs(train, bench, n=3, hash_grams=True)
-    assert sorted(map(tuple, exact.collect())) == sorted(map(tuple, hashed.collect()))
-
-
 # --- chunking -----------------------------------------------------------------------
 
 

@@ -242,8 +242,6 @@ def test_textops_langid_quality_tokens(spark):
 
 
 def test_multimodal_plumbing(spark):
-    from pbf2json_spark import codecs
-
     media = multimodal.generate_media(spark, 30).cache()
     assert media.count() == 30
     feats = multimodal.decode_features(media)
@@ -264,18 +262,6 @@ def test_multimodal_plumbing(spark):
     assert {k: (v["width"], v["mean_value"]) for k, v in rows.items()} == {
         k: (v["width"], v["mean_value"]) for k, v in again.items()
     }
-
-    # resize emits REAL PNGs at the target geometry
-    resized = multimodal.resize_images(media, 8, 8)
-    for r in resized.collect():
-        img = codecs.decode_png(bytes(r["blob"]))
-        assert img.shape[:2] == (8, 8)
-
-    frames = multimodal.sample_frames(media, every=2)
-    f = frames.collect()
-    assert len(f) > 0
-    kinds = {r["media_id"] % 3 for r in f}
-    assert kinds == {2}  # only 'video' rows fan out
 
     # unknown containers surface per-row errors (no silent garbage)
     bad = spark.createDataFrame(

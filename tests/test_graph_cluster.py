@@ -175,7 +175,7 @@ def test_focal_sum_k2_window(spark):
     assert len(got) == 25 and all(r.n_focal == 1 for r in got)
 
 
-def test_hotspot_cc_paths_equivalent(spark):
+def test_hotspot_cc_paths_equivalent(spark, monkeypatch):
     """Round 4: the scale-adaptive component step — driver union-find for
     grid-bounded dense-cell graphs vs pointer-doubling above the
     threshold — must emit IDENTICAL component-minimum representatives."""
@@ -191,10 +191,9 @@ def test_hotspot_cc_paths_equivalent(spark):
         (r.cx, r.cy): (r.n_points, r.cluster_id)
         for r in spatial.hotspot_clusters(df, res=7, min_pts=4).collect()
     }
+    monkeypatch.setattr(spatial, "HOTSPOT_DRIVER_CC_MAX", 0)
     dist = {
         (r.cx, r.cy): (r.n_points, r.cluster_id)
-        for r in spatial.hotspot_clusters(
-            df, res=7, min_pts=4, driver_cc_max=0
-        ).collect()
+        for r in spatial.hotspot_clusters(df, res=7, min_pts=4).collect()
     }
     assert drv == dist and len(drv) > 5

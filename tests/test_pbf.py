@@ -142,7 +142,7 @@ def test_engine_from_pbf_end_to_end(spark, tmp_path):
     path = str(tmp_path / "e.osm.pbf")
     pbf.write_pbf(path, nodes, ways, [(20, {"type": "route"}, [(10, "way", "")])])
 
-    eng = Engine.from_pbf(spark, path, persist=False)
+    eng = Engine.from_pbf(spark, path)
     res = eng.query("amenity~cafe", with_dictionary=False, with_entrances=False)
     got = res.nodes.collect()
     assert [r["id"] for r in got] == [1]

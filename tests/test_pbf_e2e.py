@@ -48,8 +48,8 @@ def test_from_pbf_matches_frame_built_engine(spark, tmp_path):
     # multiple OSMData blobs → the decode actually fans out over tasks
     assert sum(1 for t, _, _ in pbf.blob_index(path) if t == "OSMData") > 2
 
-    eng_file = Engine.from_pbf(spark, path, persist=False)
-    eng_frame = Engine(*_entity_frames(spark), persist=False)
+    eng_file = Engine.from_pbf(spark, path)
+    eng_frame = Engine(*_entity_frames(spark))
 
     res_f = eng_file.query("amenity~toilets", with_dictionary=False)
     res_m = eng_frame.query("amenity~toilets", with_dictionary=False)

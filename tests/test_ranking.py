@@ -1,4 +1,5 @@
-"""top_k_per_group vs brute force, salted pre-thin exactness, validation."""
+"""top_k_per_group vs brute force (spread, hot-group and single-partition
+inputs), validation."""
 
 from __future__ import annotations
 
@@ -26,18 +27,24 @@ def _brute(rows, k):
     return want
 
 
-@pytest.mark.parametrize("salt", [0, 4])
-def test_topk_per_group_matches_bruteforce(spark, salt):
-    rows = _rows()
-    df = spark.createDataFrame(rows, "id long, g string, score long").repartition(8)
-    got = {
+def _topk(df, k):
+    return {
         r["id"]: (r["g"], r["score"], r["rank_in_group"])
         for r in ranking.top_k_per_group(
-            df, ["g"], [F.col("score").desc(), F.col("id").asc()], 5,
-            pre_thin_salt=salt,
+            df, ["g"], [F.col("score").desc(), F.col("id").asc()], k
         ).collect()
     }
-    assert got == _brute(rows, 5), salt
+
+
+@pytest.mark.parametrize("n_hot", [0, 4])
+def test_topk_per_group_matches_bruteforce(spark, n_hot):
+    # n_hot extra groups of 1000 rows each dwarf the 7 regular ones
+    rows = _rows() + [
+        (1000 + i, f"hot{i % n_hot}", (i * 37) % 101)
+        for i in range(1000 * n_hot)
+    ]
+    df = spark.createDataFrame(rows, "id long, g string, score long").repartition(8)
+    assert _topk(df, 5) == _brute(rows, 5), n_hot
 
 
 def test_topk_validation(spark):
@@ -46,19 +53,10 @@ def test_topk_validation(spark):
         ranking.top_k_per_group(df, ["g"], [F.col("score")], 0)
 
 
-def test_topk_salted_single_partition_input(spark):
-    # the salt must spread rows even when the input arrives in ONE
-    # partition (sequence-number salt, not spark_partition_id)
+def test_topk_single_partition_input(spark):
     rows = _rows(n=300, seed=5)
     df = spark.createDataFrame(rows, "id long, g string, score long").coalesce(1)
-    got = {
-        r["id"]: (r["g"], r["score"], r["rank_in_group"])
-        for r in ranking.top_k_per_group(
-            df, ["g"], [F.col("score").desc(), F.col("id").asc()], 4,
-            pre_thin_salt=3,
-        ).collect()
-    }
-    assert got == _brute(rows, 4)
+    assert _topk(df, 4) == _brute(rows, 4)
 
 
 def test_topk_rejects_clashing_columns(spark):

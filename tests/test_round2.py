@@ -254,10 +254,12 @@ def _mk_merge_frames(spark, n, name="Main Street"):
     return dict_df, fmt
 
 
-def test_merge_cc_guard_matches_greedy_on_clustered_layout(spark):
+def test_merge_cc_guard_matches_greedy_on_clustered_layout(spark, monkeypatch):
     dict_df, fmt = _mk_merge_frames(spark, 64)
-    greedy = enrich.merge_segments(dict_df, fmt, None, "street_name", greedy_limit=10**9)
-    cc = enrich.merge_segments(dict_df, fmt, None, "street_name", greedy_limit=1)
+    # 64 rows: greedy under the shipped limit, union-find when it is 1
+    greedy = enrich.merge_segments(dict_df, fmt, None, "street_name")
+    monkeypatch.setattr(enrich, "MERGE_GREEDY_LIMIT", 1)
+    cc = enrich.merge_segments(dict_df, fmt, None, "street_name")
 
     def canon(df):
         return sorted(
@@ -273,10 +275,33 @@ def test_merge_cc_guard_matches_greedy_on_clustered_layout(spark):
     assert canon(greedy) == canon(cc)
 
 
+def test_merge_greedy_limit_is_read_at_call_time(spark, monkeypatch):
+    """Two boxes 0.0115° apart, just over STREET_HIT_DISTANCE: the greedy
+    scan keeps them apart, the union-find grid over-merges them (they
+    share a cell), so the row count shows which path the workers ran."""
+    rows = [
+        (i, "way", {"name": "Main"}, {"lat": 0.0005, "lon": lon + 0.0005},
+         {"lat": 0.0, "lon": lon}, {"lat": 0.001, "lon": lon + 0.001})
+        for i, lon in ((1, 0.0), (2, 0.0125))
+    ]
+    fmt = spark.createDataFrame(
+        rows,
+        "id long, type string, tags map<string,string>,"
+        " centroid struct<lat:double,lon:double>,"
+        " bbox_min struct<lat:double,lon:double>, bbox_max struct<lat:double,lon:double>",
+    )
+    dict_df = fmt.select("id", F.lit("Main").alias("street_name"))
+    assert enrich.merge_segments(dict_df, fmt, None, "street_name").count() == 2
+    monkeypatch.setattr(enrich, "MERGE_GREEDY_LIMIT", 1)
+    cc = enrich.merge_segments(dict_df, fmt, None, "street_name")
+    monkeypatch.undo()
+    assert cc.count() == 1  # the limit at call time, not at execution
+
+
 def test_merge_cc_guard_handles_50k_hot_name_fast(spark):
     dict_df, fmt = _mk_merge_frames(spark, 50_000)
     t0 = time.time()
-    out = enrich.merge_segments(dict_df, fmt, None, "street_name", greedy_limit=20_000)
+    out = enrich.merge_segments(dict_df, fmt, None, "street_name")
     n = out.count()
     wall = time.time() - t0
     assert n == 50_000 / 4  # one merged row per 4-segment cluster

@@ -45,11 +45,9 @@ def test_asof_join_matches_bruteforce(spark):
             assert got[eid] == (best if best else (None, None)), (eid, tol)
 
 
-def test_asof_join_bucketed_matches_default(spark):
-    """The hot-key escape hatch (bucket=) returns exactly the default
-    plan's rows — incl. a degenerate key carrying most of the data, empty
-    buckets between sparse right rows, tolerance voiding, and seeds
-    crossing many bucket boundaries."""
+def test_asof_join_hot_key_matches_bruteforce(spark):
+    """A degenerate key carrying most of the data, sparse right rows with
+    long gaps between them, and tolerance voiding."""
     rng = random.Random(7)
     # one hot key with 5000 left rows over a wide ts range + 2 normal keys
     L = [(i, "hot", rng.randrange(0, 100_000)) for i in range(5000)]
@@ -61,56 +59,40 @@ def test_asof_join_bucketed_matches_default(spark):
     ldf = spark.createDataFrame(L, "eid long, key string, ts long")
     rdf = spark.createDataFrame(R, "key string, ts long, v double")
     for tol in (None, 1000):
-        tol_col = None if tol is None else F.lit(tol)
-        base = {
-            r["eid"]: (r["ts_matched"], r["v_matched"])
-            for r in temporal.asof_join(ldf, rdf, tolerance=tol_col).collect()
-        }
-        bucketed = {
+        got = {
             r["eid"]: (r["ts_matched"], r["v_matched"])
             for r in temporal.asof_join(
-                ldf, rdf, tolerance=tol_col, bucket=5000
+                ldf, rdf, tolerance=None if tol is None else F.lit(tol)
             ).collect()
         }
-        assert bucketed == base, tol
-    # spot-check against brute force too (sampled: brute is O(|L|*|R|))
-    want = _brute_asof(L[:200], R)
-    got = {
-        r["eid"]: (r["ts_matched"], r["v_matched"])
-        for r in temporal.asof_join(ldf, rdf, bucket=5000).collect()
-    }
-    for eid, best in want.items():
-        assert got[eid] == (best if best else (None, None)), eid
+        want = _brute_asof(L, R, tol)
+        assert got == {e: b if b else (None, None) for e, b in want.items()}, tol
 
 
-def test_asof_join_bucketed_timestamp(spark):
-    """bucket= over a timestamp `on` column (tz-free wall-clock seconds)."""
+def test_asof_join_timestamp_on(spark):
+    """A TIMESTAMP `on` column, with and without an interval tolerance."""
     import datetime as dt
 
     t0 = dt.datetime(2024, 1, 1)
-    ldf = spark.createDataFrame(
-        [(i, "k", t0 + dt.timedelta(minutes=i * 7)) for i in range(50)],
-        "eid long, key string, ts timestamp",
-    )
-    rdf = spark.createDataFrame(
-        [("k", t0 + dt.timedelta(minutes=j * 31), float(j)) for j in range(8)],
-        "key string, ts timestamp, v double",
-    )
-    base = {r["eid"]: r["v_matched"] for r in temporal.asof_join(ldf, rdf).collect()}
-    for width in (60, 3600, 86400):
+    L = [(i, "k", t0 + dt.timedelta(minutes=i * 7)) for i in range(50)]
+    R = [("k", t0 + dt.timedelta(minutes=j * 31), float(j)) for j in range(8)]
+    ldf = spark.createDataFrame(L, "eid long, key string, ts timestamp")
+    rdf = spark.createDataFrame(R, "key string, ts timestamp, v double")
+    for tol in (None, dt.timedelta(minutes=20)):
         got = {
             r["eid"]: r["v_matched"]
-            for r in temporal.asof_join(ldf, rdf, bucket=width).collect()
+            for r in temporal.asof_join(
+                ldf, rdf,
+                tolerance=None if tol is None else F.expr("INTERVAL 20 MINUTES"),
+            ).collect()
         }
-        assert got == base, width
+        want = _brute_asof(L, R, tol)
+        assert got == {e: b[1] if b else None for e, b in want.items()}, tol
 
 
-def test_asof_join_bucketed_dst_and_map_payload(spark):
-    """Two regressions from review: (a) TIMESTAMP buckets must use epoch
-    seconds, not local wall-clock parts — a DST fall-back makes wall-clock
-    non-monotonic in the instant and silently loses matches; (b) the
-    bucket-seed aggregate must order on `on` alone so map-typed right
-    payloads (non-orderable) still work."""
+def test_asof_join_dst_and_map_payload(spark):
+    """A match across a DST fall-back (wall clock goes backwards between
+    the right and the left instant), with a map-typed right payload."""
     import datetime as dt
 
     tz = spark.conf.get("spark.sql.session.timeZone")
@@ -132,12 +114,27 @@ def test_asof_join_bucketed_dst_and_map_payload(spark):
             ],
             "key string, ts timestamp, attrs map<string,string>",
         )
-        base = temporal.asof_join(ldf, rdf).collect()
-        got = temporal.asof_join(ldf, rdf, bucket=1800).collect()
-        assert base[0]["attrs_matched"] == {"v": "match"}
+        got = temporal.asof_join(ldf, rdf).collect()
         assert got[0]["attrs_matched"] == {"v": "match"}
     finally:
         spark.conf.set("spark.sql.session.timeZone", tz)
+
+
+def test_asof_join_null_key_or_on_matches_nothing(spark):
+    """SQL ASOF LEFT JOIN semantics: a NULL key never equals another NULL
+    key, and a right row with a NULL `on` precedes no left row. Both left
+    rows survive with NULL payload."""
+    ldf = spark.createDataFrame(
+        [(1, None, 10), (4, "b", 10)], "eid long, key string, ts long"
+    )
+    rdf = spark.createDataFrame(
+        [(None, 5, 100.0), ("b", None, 300.0)], "key string, ts long, v double"
+    )
+    got = {
+        r["eid"]: (r["ts_matched"], r["v_matched"])
+        for r in temporal.asof_join(ldf, rdf).collect()
+    }
+    assert got == {1: (None, None), 4: (None, None)}
 
 
 def test_asof_join_inclusive_and_outer(spark):

@@ -1,12 +1,11 @@
-"""Wave-17 operators: histogram quantiles, concentration indices,
-trajectory minhash-LSH pairs."""
+"""Wave-17 operators: histogram quantiles, concentration indices."""
 
 from __future__ import annotations
 
 import random
 from collections import Counter
 
-from pbf2json_spark import stats, trajectory
+from pbf2json_spark import stats
 
 
 # --- hist_quantiles ----------------------------------------------------------
@@ -87,45 +86,3 @@ def test_concentration_vs_brute_random(spark):
         assert got[g]["top_share_e6"] == max(c.values()) * 1_000_000 // tot
         assert got[g]["hhi_e8"] == \
             sum(v * v for v in c.values()) * 100_000_000 // (tot * tot)
-
-
-# --- cell_minhash_pairs ------------------------------------------------------
-
-
-def test_cell_minhash_recall_vs_exact(spark):
-    # clusters of users sharing most cells + singletons: LSH at 2 rows
-    # per band must recover every high-jaccard pair, verify kills FPs
-    rng = random.Random(107)
-    rows = []
-    for cluster in range(4):
-        base = [(rng.uniform(-60, 60), rng.uniform(-60, 60))
-                for _ in range(12)]
-        for m in range(3):
-            u = cluster * 10 + m
-            pts = base + [(rng.uniform(-60, 60), rng.uniform(-60, 60))]
-            rows += [(u, lat, lon) for lat, lon in pts]
-    for u in range(100, 105):  # noise users, disjoint areas
-        rows += [(u, rng.uniform(70, 80), rng.uniform(100, 110))
-                 for _ in range(5)]
-    df = spark.createDataFrame(rows, "user_id long, lat double, lon double")
-    exact = {(r["user_a"], r["user_b"]): r["jaccard_e6"]
-             for r in trajectory.cell_jaccard(df, 6).collect()
-             if r["jaccard_e6"] >= 600_000}
-    got = {(r["user_a"], r["user_b"]): r["jaccard_e6"]
-           for r in trajectory.cell_minhash_pairs(
-               df, 6, num_perm=32, bands=16,
-               threshold_e6=600_000).collect()}
-    # verify step = exact jaccard -> values match exactly where found
-    for k, v in got.items():
-        assert exact[k] == v
-    # high-sim recall at 2 rows/band: every cluster pair found
-    assert set(exact) == set(got)
-
-
-def test_cell_minhash_threshold_filters(spark):
-    rows = [(1, 10.0, 10.0), (1, 20.0, 20.0),
-            (2, 10.0, 10.0), (2, 50.0, 50.0)]
-    df = spark.createDataFrame(rows, "user_id long, lat double, lon double")
-    got = trajectory.cell_minhash_pairs(
-        df, 5, num_perm=32, bands=32, threshold_e6=900_000).collect()
-    assert got == []  # jaccard 1/3 < 0.9 — verify rejects the candidate

@@ -1,4 +1,4 @@
-"""Wave-18 operators: Geary's C, modularity, image dHash near-dup."""
+"""Wave-18 operators: Geary's C, modularity, image dHash."""
 
 from __future__ import annotations
 
@@ -147,43 +147,3 @@ def test_dhash_matches_brute_and_skips_non_png(spark):
     for mid, blob in pngs.items():
         assert got[mid] == _brute_dhash(blob)
 
-
-def test_dhash_pairs_finds_noisy_copy(spark):
-    rng = np.random.default_rng(11)
-    base = rng.integers(0, 256, size=(32, 32), dtype=np.uint8)
-    # strong-gradient image so one flipped pixel moves few hash bits
-    ramp = np.tile(np.arange(0, 256, 8, dtype=np.uint8), (32, 1))
-    noisy = ramp.copy()
-    noisy[5, 7] ^= 255
-    blobs = [(0, codecs.encode_png(ramp)), (1, codecs.encode_png(noisy)),
-             (2, codecs.encode_png(base))]
-    df = spark.createDataFrame(blobs, "media_id long, blob binary")
-    hashes = multimodal.image_dhash(df)
-    got = {(r["a"], r["b"]): r["hamming"]
-           for r in multimodal.dhash_pairs(hashes, max_hamming=8).collect()}
-    assert (0, 1) in got and got[(0, 1)] <= 8
-    assert (0, 2) not in got and (1, 2) not in got
-
-
-def test_dhash_pairs_recall_exhaustive_small(spark):
-    # verify banding finds EVERY pair within the bound (recall 1.0)
-    rng = np.random.default_rng(13)
-    imgs = []
-    base = np.tile(np.arange(0, 256, 8, dtype=np.uint8), (16, 1))
-    for i in range(8):
-        im = base.copy()
-        im[i % 16, (3 * i) % 32] ^= 128
-        imgs.append((i, codecs.encode_png(im)))
-    df = spark.createDataFrame(imgs, "media_id long, blob binary")
-    hashes = {r["media_id"]: r["dhash"]
-              for r in multimodal.image_dhash(df).collect()}
-    want = set()
-    for a in range(8):
-        for b in range(a + 1, 8):
-            ham = bin((hashes[a] ^ hashes[b]) & ((1 << 64) - 1)).count("1")
-            if ham <= 6:
-                want.add((a, b))
-    got = {(r["a"], r["b"])
-           for r in multimodal.dhash_pairs(
-               multimodal.image_dhash(df), max_hamming=6).collect()}
-    assert got == want

@@ -1,13 +1,12 @@
 """Wave-34: 2-D Pareto skyline (window formulation vs brute dominance)
 and Hilbert curve encoding (bijectivity, the unit-step locality law,
-numpy/Column agreement, layout bbox tightness)."""
+numpy/Column agreement)."""
 
 from __future__ import annotations
 
 import random
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from pbf2json_spark import layout, stats
 
@@ -140,36 +139,3 @@ def test_hilbert_column_and_udf_match_numpy(spark):
     }
     assert udf == exp
 
-
-def test_hilbert_layout_tightens_bboxes(spark, tmp_path):
-    import pyarrow.parquet as pq
-
-    n = 20_000
-    df = spark.range(n).select(
-        ((F.col("id") * 2654435761 % 1800000) / 10000.0 - 90.0).alias("lat"),
-        ((F.col("id") * 40503 % 3600000) / 10000.0 - 180.0).alias("lon"),
-    )
-    base = str(tmp_path / "plain")
-    hil = str(tmp_path / "hilbert")
-    df.repartition(8).write.parquet(base)
-    layout.hilbert_layout(df, n_files=8).write.parquet(hil)
-
-    def mean_area(path):
-        import glob
-
-        areas = []
-        for f in glob.glob(f"{path}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            la0 = min(md.row_group(i).column(0).statistics.min for i in range(md.num_row_groups))
-            la1 = max(md.row_group(i).column(0).statistics.max for i in range(md.num_row_groups))
-            lo0 = min(md.row_group(i).column(1).statistics.min for i in range(md.num_row_groups))
-            lo1 = max(md.row_group(i).column(1).statistics.max for i in range(md.num_row_groups))
-            areas.append((la1 - la0) * (lo1 - lo0))
-        return sum(areas) / len(areas)
-
-    plain, tight = mean_area(base), mean_area(hil)
-    assert tight * 4 < plain, (tight, plain)
-    # multiset equality: the re-layout loses and invents nothing
-    a = spark.read.parquet(base).groupBy("lat", "lon").count()
-    b = spark.read.parquet(hil).groupBy("lat", "lon").count()
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()

@@ -293,7 +293,7 @@ def test_kmeans_fit_partition_invariant(spark):
     assert np.array_equal(c1, c2)
 
 
-def test_kmeans_assign_and_stats(spark):
+def test_kmeans_assign(spark):
     # two obvious clusters on axes; assignment must be exact
     rows = [(i, [1.0, 0.01 * i]) for i in range(10)] + [
         (100 + i, [0.01 * i, 1.0]) for i in range(10)
@@ -304,10 +304,6 @@ def test_kmeans_assign_and_stats(spark):
     got = {r["vec_id"]: r["cluster"] for r in out.collect()}
     for i in range(10):
         assert got[i] == 0 and got[100 + i] == 1
-    stats = {r["cluster"]: (r["n"], r["mean_cos"]) for r in
-             cluster.cluster_stats(out, cents).collect()}
-    assert stats[0][0] == 10 and stats[1][0] == 10
-    assert stats[0][1] > 0.99 and stats[1][1] > 0.99
 
 
 def test_kmeans_fit_too_few_rows_raises(spark):
@@ -405,14 +401,12 @@ def test_kmv_estimator_accuracy_and_merge(spark):
     assert a == b
 
 
-def test_kmv_partition_invariant_and_salted(spark):
+def test_kmv_partition_invariant(spark):
     from pbf2json_spark import sketch
 
     rows = [(i * 13 % 997, "g1" if i % 2 else "g2") for i in range(3000)]
     df = spark.createDataFrame(rows, "k long, g string")
     base = sketch.kmv_build(df.repartition(1), "k", ["g"], k=32)
-    alt = sketch.kmv_build(
-        df.repartition(11), "k", ["g"], k=32, pre_thin_salt=4
-    )
+    alt = sketch.kmv_build(df.repartition(11), "k", ["g"], k=32)
     key = lambda d: sorted((r["g"], r["h"]) for r in d.collect())
     assert key(base) == key(alt)

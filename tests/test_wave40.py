@@ -1,4 +1,4 @@
-"""Wave-40: geohash decode/neighbors (round trips, adjacency) and MMR
+"""Wave-40: geohash decode (round trips) and MMR
 diverse selection (vs brute greedy; the diversity law)."""
 
 from __future__ import annotations
@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from pbf2json_spark import ann, cells
 
 
-# --- geohash decode / neighbors ------------------------------------------------
+# --- geohash decode ---------------------------------------------------------
 
 
 def test_geohash_decode_round_trip(spark):
@@ -64,48 +64,6 @@ def test_geohash_decode_reencodes_to_same_hash(spark):
         "gh", cells.geohash_col(F.col("lat"), F.col("lon"), 6).alias("gh2")
     )
     assert all(r["gh"] == r["gh2"] for r in g2.collect())
-
-
-def test_geohash_neighbors_adjacency():
-    # every neighbor's decoded cell touches the center cell; 8 distinct
-    for gh in ("u4pr", "9q8y", "s000", "gbsuv"):
-        p = len(gh)
-        nbrs = cells.geohash_neighbors(gh)
-        assert len(nbrs) == 8 and len(set(nbrs)) == 8 and gh not in nbrs
-        # numpy-side check via bisection re-encode of neighbor centers
-        total = 5 * p
-        lon_bits = (total + 1) // 2
-        lat_bits = total // 2
-        code = 0
-        for ch in gh:
-            code = (code << 5) | cells.GEOHASH_ALPHABET.index(ch)
-        if total % 2 == 0:
-            xc, yc = code >> 1, code
-        else:
-            xc, yc = code, code >> 1
-        X = int(cells._compact(np.array([xc], dtype=np.uint64))[0])
-        Y = int(cells._compact(np.array([yc], dtype=np.uint64))[0])
-        seen = set()
-        for nb in nbrs:
-            c2 = 0
-            for ch in nb:
-                c2 = (c2 << 5) | cells.GEOHASH_ALPHABET.index(ch)
-            if total % 2 == 0:
-                xc2, yc2 = c2 >> 1, c2
-            else:
-                xc2, yc2 = c2, c2 >> 1
-            X2 = int(cells._compact(np.array([xc2], dtype=np.uint64))[0])
-            Y2 = int(cells._compact(np.array([yc2], dtype=np.uint64))[0])
-            dx = min(abs(X2 - X), (1 << lon_bits) - abs(X2 - X))  # lon wraps
-            assert dx <= 1 and abs(Y2 - Y) <= 1 and (dx, Y2 - Y) != (0, 0)
-            seen.add((dx, Y2 - Y))
-
-
-def test_geohash_neighbors_pole_clamp():
-    # a cell on the top row has no northern neighbors: < 8 results
-    top = cells.geohash_encode([89.99], [0.0], 2)[0]
-    nbrs = cells.geohash_neighbors(top)
-    assert 3 <= len(nbrs) < 8
 
 
 # --- MMR -----------------------------------------------------------------------

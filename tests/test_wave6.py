@@ -96,14 +96,13 @@ def test_crawl_schedule_budget_and_spacing(spark):
         assert [r["slot"] for r in ordered] == list(range(5))
 
 
-def test_crawl_schedule_salted_pre_thin_exact(spark):
+def test_crawl_schedule_partition_invariant(spark):
     f = _frontier(spark, n=300)
     base = sorted(map(tuple, weburl.crawl_schedule(
         f, per_host_budget=7, delay_ms=100).collect()))
-    salted = sorted(map(tuple, weburl.crawl_schedule(
-        f.repartition(11), per_host_budget=7, delay_ms=100,
-        pre_thin_salt=8).collect()))
-    assert base == salted
+    spread = sorted(map(tuple, weburl.crawl_schedule(
+        f.repartition(11), per_host_budget=7, delay_ms=100).collect()))
+    assert base == spread
 
 
 def test_crawl_schedule_rejects_negative_delay(spark):

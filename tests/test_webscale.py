@@ -46,12 +46,6 @@ def test_extract_text_roundtrip_byte_identical(pages_df):
         assert r["text_extracted"] == r["text"]
 
 
-def test_extract_text_jvm_matches_arrow(pages_df):
-    a = pages.extract_text(pages_df).select("url", "text_extracted").orderBy("url").collect()
-    b = pages.extract_text_arrow(pages_df).select("url", "text_extracted").orderBy("url").collect()
-    assert a == b
-
-
 def test_extract_text_strips_blocks_and_entities(spark):
     html = (
         '<html><head><style media="x">p{color:red}</style>'

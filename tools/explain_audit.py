@@ -568,12 +568,12 @@ def main() -> int:
     ))
 
     # 36. hotspot clustering — SCALE-ADAPTIVE component step, so the
-    # audit is path-aware: below driver_cc_max the dense-cell set is
+    # audit is path-aware: below HOTSPOT_DRIVER_CC_MAX the dense-cell set is
     # localCheckpointed (to count it and pick the path), which truncates
     # lineage — the cell-count partial agg RAN but the final lazy plan
     # starts at an ExistingRDD, and the property that matters there is
     # the bounded broadcast join-back.  The distributed pointer-doubling
-    # path is audited separately by forcing driver_cc_max=0.
+    # path is audited separately by forcing HOTSPOT_DRIVER_CC_MAX = 0.
     hs = extra["hotspots"](spark, sf_dir)
     p = plan_text(hs)
     driver_path = "ExistingRDD" in p
@@ -592,7 +592,7 @@ def main() -> int:
     ))
 
     # 36b. hotspot clustering, distributed-CC path forced (the shape the
-    # same call takes above driver_cc_max dense cells): cell counts
+    # same call takes above HOTSPOT_DRIVER_CC_MAX dense cells): cell counts
     # partial-agg before the checkpoint cut is visible here because the
     # pointer-doubling path never collects labels to the driver
     from pbf2json_spark import spatial as _spatial_mod
@@ -600,12 +600,16 @@ def main() -> int:
         entry_mod._lat_col(F.col("o_orderkey")).alias("lat"),
         entry_mod._lon_col(F.col("o_orderkey")).alias("lon"),
     )
-    hsd = _spatial_mod.hotspot_clusters(
-        hs_pts, res=5, min_pts=3, driver_cc_max=0
-    )
-    p = plan_text(hsd)
+    cc_max = _spatial_mod.HOTSPOT_DRIVER_CC_MAX
+    _spatial_mod.HOTSPOT_DRIVER_CC_MAX = 0
+    try:
+        p = plan_text(
+            _spatial_mod.hotspot_clusters(hs_pts, res=5, min_pts=3)
+        )
+    finally:
+        _spatial_mod.HOTSPOT_DRIVER_CC_MAX = cc_max
     sections.append((
-        "hotspot clustering, distributed CC path (driver_cc_max=0)", p,
+        "hotspot clustering, distributed CC path (HOTSPOT_DRIVER_CC_MAX=0)", p,
         [
             ("hash equi-joins only (no nested loop)",
              "NestedLoop" not in p and "CartesianProduct" not in p, ""),
