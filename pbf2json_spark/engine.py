@@ -18,12 +18,14 @@ Scale shape (the reference's 3-pass semi-join reduction, re-expressed):
     relations frames, so every plan built here reads the decoded blocks
     instead of re-decoding the file;
   * per-stage reuse: formatted ways feed relations, merges and output —
-    always persisted once instead of recomputed per consumer.
+    always persisted once instead of recomputed per consumer, and released
+    by `QueryResult.unpersist` (`stream_records` calls it when its stream
+    ends).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -46,6 +48,15 @@ class QueryResult:
     merged_waterways: DataFrame | None
     entrances: DataFrame | None  # id, type='node', lat, lon, tags, way_id
     counters: DataFrame | None = None  # amenitycount, transcount, fitranscount (A7)
+    # the intermediate frames `Engine.query` cached for these outputs
+    persisted: list[DataFrame] = field(default_factory=list, init=False, repr=False)
+
+    def unpersist(self) -> None:
+        """Release the frames the query cached. The outputs stay valid;
+        a later action recomputes what it needs."""
+        for df in self.persisted:
+            df.unpersist()
+        self.persisted.clear()
 
     def combined(self) -> DataFrame:
         """Union into one jsonNode/jsonWayRel-shaped frame (the reference's
@@ -247,7 +258,7 @@ class Engine:
                 out_entrances.drop(*CTR) if out_entrances is not None else None
             )
 
-        return QueryResult(
+        res = QueryResult(
             nodes=out_nodes,
             ways=out_ways,
             relations=out_rels,
@@ -260,6 +271,11 @@ class Engine:
             entrances=out_entrances,
             counters=counters,
         )
+        res.persisted = [
+            df for df in (d, fmt_ways, fmt_rels, merged_streets, merged_water)
+            if df is not None
+        ]
+        return res
 
     def stream_records(self, tags_dsl: str, on_error=None, **query_kw):
         """The reference's public consumption API re-expressed: index.js
@@ -275,32 +291,32 @@ class Engine:
         stderr is surfaced through `on_error(message)` (the wrapper's
         `console.error` logger), the stream is torn down, and a
         StreamError (≙ the wrapper's nonzero-exit `decoder.kill` path)
-        is raised — a failure never looks like a clean empty stream."""
+        is raised — a failure never looks like a clean empty stream.
+
+        The frames the query cached are released once the stream ends, is
+        closed or fails, so a long-lived session does not accumulate them."""
+        res = None
         try:
-            res = self.query(tags_dsl, **query_kw)
-            rows = res.combined().toLocalIterator()
-        except Exception as e:  # setup failure: bad DSL / missing columns
-            if on_error is not None:
-                on_error(str(e))
-            raise StreamError(f"pbf2json stream setup failed: {e}") from e
-        while True:
             try:
-                row = next(rows, None)
-            except Exception as e:  # mid-stream executor/plan failure
+                res = self.query(tags_dsl, **query_kw)
+                rows = res.combined().toLocalIterator()
+            except Exception as e:  # setup failure: bad DSL / missing columns
                 if on_error is not None:
                     on_error(str(e))
-                raise StreamError(f"pbf2json stream failed mid-flight: {e}") from e
-            if row is None:
-                return
-            rec = {"id": row["id"], "type": row["type"], "tags": dict(row["tags"])}
-            if row["lat"] is not None:
-                rec["lat"] = row["lat"]
-                rec["lon"] = row["lon"]
-            if row["centroid"] is not None:
-                rec["centroid"] = row["centroid"].asDict()
-                rec["bbox_min"] = row["bbox_min"].asDict()
-                rec["bbox_max"] = row["bbox_max"].asDict()
-            yield rec
+                raise StreamError(f"pbf2json stream setup failed: {e}") from e
+            while True:
+                try:
+                    row = next(rows, None)
+                except Exception as e:  # mid-stream executor/plan failure
+                    if on_error is not None:
+                        on_error(str(e))
+                    raise StreamError(f"pbf2json stream failed mid-flight: {e}") from e
+                if row is None:
+                    return
+                yield _record(row)
+        finally:
+            if res is not None:
+                res.unpersist()
 
     @staticmethod
     def _suppress(
@@ -328,3 +344,16 @@ class Engine:
                 )
             rows = enrich.xway_suppress(rows, query, key)
         return rows
+
+
+def _record(row) -> dict:
+    """One combined row as printJson emits it: nulls dropped."""
+    rec = {"id": row["id"], "type": row["type"], "tags": dict(row["tags"])}
+    if row["lat"] is not None:
+        rec["lat"] = row["lat"]
+        rec["lon"] = row["lon"]
+    if row["centroid"] is not None:
+        rec["centroid"] = row["centroid"].asDict()
+        rec["bbox_min"] = row["bbox_min"].asDict()
+        rec["bbox_max"] = row["bbox_max"].asDict()
+    return rec

@@ -7,9 +7,9 @@ no RNG state), so the same (n, seed) always yields byte-identical text per
 url — the pipeline invariant the tests assert.
 
 Geo distribution: a mixture of hot city clusters (forces cell skew — the
-salting/AQE test bed) and a uniform background; a configurable fraction of
-pages embeds machine-readable coordinates in `text` ("lat=..; lon=..") for
-the geocode step.
+AQE skew-join test bed) and a uniform background; a configurable fraction
+of pages embeds machine-readable coordinates in `text` ("lat=..; lon=..")
+for the geocode step.
 
 Geocoding (north_star: "pages are geocoded (lat/lon extracted from text)"):
   * `geocode` — pure JVM `regexp_extract`, the default hot path (stays in
@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# (name-ish seed, lat, lon, weight) — a few heavy hitters on purpose
+# (lat, lon, weight) — a few heavy hitters on purpose
 HOT_CENTERS = [
     (60.17, 24.94, 30),   # Helsinki — deliberately dominant
     (40.71, -74.01, 20),  # NYC
@@ -49,6 +49,24 @@ def _u(h: Column, salt: int, mod: int = 1_000_003) -> Column:
     return (F.pmod(F.xxhash64(h, F.lit(salt)), F.lit(mod)) / F.lit(float(mod)))
 
 
+# Integer weights summing to 100 turn each weighted pick into an index: a
+# draw x in [0, 100) lies in [acc, acc + w) exactly when floor(x) does.
+assert all(type(w) is int and w > 0 for *_, w in HOT_CENTERS + LANGS)
+assert sum(w for *_, w in HOT_CENTERS) == sum(w for _, w in LANGS) == 100
+
+
+def _pick(values: tuple, weights: tuple[int, ...], x: Column) -> Column:
+    """The value whose cumulative-weight interval holds x in [0, 100), read
+    from a 100-slot literal array holding each value `weight` times."""
+    slots = F.array(*[F.lit(v) for v, w in zip(values, weights) for _ in range(w)])
+    return F.element_at(slots, (F.floor(x) + 1).cast("int"))
+
+
+def _fixed6(x: Column) -> Column:
+    """x, already rounded to 6 places, printed as Java's "%.6f" prints it."""
+    return x.cast("decimal(9,6)").cast("string")
+
+
 def generate_pages(
     spark: SparkSession,
     n: int,
@@ -57,54 +75,55 @@ def generate_pages(
     hot_fraction: float = 0.6,
     partitions: int | None = None,
 ) -> DataFrame:
+    """`n` synthetic pages; a pure function of (n, seed, fractions).
+
+    Weighted picks read 100-slot literal tables and the text is built with
+    `concat` and casts, not `CASE` chains or `format_string`: the fused
+    Range → generate → geocode stage then keeps every generated method
+    under HotSpot's 8,000-byte JIT limit (`DontCompileHugeMethods`) and
+    runs compiled instead of in the bytecode interpreter
+    (tests/test_pages_codegen.py holds the limit and the former
+    expressions as the byte-identity oracle)."""
     df = spark.range(0, n, 1, partitions) if partitions else spark.range(n)
     rid = F.col("id")
     h = F.xxhash64(rid, F.lit(seed))
 
     # location: hot cluster vs uniform background
-    total_w = sum(w for _, _, w in HOT_CENTERS)
-    pick = _u(h, 1) * total_w
-    acc = 0.0
-    clat, clon = F.lit(None).cast("double"), F.lit(None).cast("double")
-    clat_expr = None
-    clon_expr = None
-    for lat, lon, w in HOT_CENTERS:
-        cond = (pick >= acc) & (pick < acc + w)
-        clat_expr = F.when(cond, F.lit(lat)) if clat_expr is None else clat_expr.when(cond, F.lit(lat))
-        clon_expr = F.when(cond, F.lit(lon)) if clon_expr is None else clon_expr.when(cond, F.lit(lon))
-        acc += w
+    lats, lons, weights = zip(*HOT_CENTERS)
+    pick = _u(h, 1) * 100
     is_hot = _u(h, 2) < hot_fraction
-    lat = F.when(is_hot, clat_expr + (_u(h, 3) - 0.5) * 0.2).otherwise(
+    lat = F.when(is_hot, _pick(lats, weights, pick) + (_u(h, 3) - 0.5) * 0.2).otherwise(
         _u(h, 4) * 130.0 - 60.0
     )
-    lon = F.when(is_hot, clon_expr + (_u(h, 5) - 0.5) * 0.2).otherwise(
+    lon = F.when(is_hot, _pick(lons, weights, pick) + (_u(h, 5) - 0.5) * 0.2).otherwise(
         _u(h, 6) * 360.0 - 180.0
     )
     lat = F.round(lat, 6)
     lon = F.round(lon, 6)
 
     has_geo = _u(h, 7) < geo_fraction
-    geo_snippet = F.format_string("lat=%.6f; lon=%.6f", lat, lon)
-    filler = F.format_string(
-        "Document %d discusses topic-%d in depth. ", rid, F.pmod(h, F.lit(97))
+    # concat_ws(""), not concat: like format_string it is never null even
+    # over nullable parts (pmod, casts), so url and text stay non-nullable
+    geo_snippet = F.concat_ws("", F.lit("lat="), _fixed6(lat), F.lit("; lon="), _fixed6(lon))
+    filler = F.concat_ws(
+        "",
+        F.lit("Document "), rid.cast("string"),
+        F.lit(" discusses topic-"), F.pmod(h, F.lit(97)).cast("string"),
+        F.lit(" in depth. "),
     )
     text = F.when(
         has_geo,
         F.concat(filler, F.lit("Location: "), geo_snippet, F.lit(". More text follows.")),
     ).otherwise(F.concat(filler, F.lit("No location is mentioned here.")))
 
-    lang_pick = F.pmod(F.xxhash64(rid, F.lit(seed + 1)), F.lit(100))
-    acc = 0
-    lang_expr = None
-    for code, w in LANGS:
-        cond = (lang_pick >= acc) & (lang_pick < acc + w)
-        lang_expr = (
-            F.when(cond, F.lit(code)) if lang_expr is None else lang_expr.when(cond, F.lit(code))
-        )
-        acc += w
-    lang = F.coalesce(lang_expr, F.lit("en"))
+    codes, lang_weights = zip(*LANGS)
+    lang = _pick(codes, lang_weights, F.pmod(F.xxhash64(rid, F.lit(seed + 1)), F.lit(100)))
 
-    url = F.format_string("https://host%d.example/p/%d", F.pmod(h, F.lit(1000)), rid)
+    url = F.concat_ws(
+        "",
+        F.lit("https://host"), F.pmod(h, F.lit(1000)).cast("string"),
+        F.lit(".example/p/"), rid.cast("string"),
+    )
     warc_ts = F.timestamp_seconds(F.lit(1_600_000_000) + rid % F.lit(86_400 * 365))
     html = F.encode(
         F.concat(F.lit("<html><body><p>"), text, F.lit("</p></body></html>")), "utf-8"
@@ -157,10 +176,13 @@ def extract_text(
 def geocode(pages: DataFrame, text_col: str = "text") -> DataFrame:
     """JVM-side geocode: adds nullable lat/lon extracted from the text.
 
-    Two grouped regexp_extract calls; Catalyst's common-subexpression
-    elimination shares the underlying match (verified in PLANS.md and by an
-    interleaved A/B: a hand-rolled single-regex + substring_index variant
-    measured ~3% SLOWER — the regex is not the bottleneck here)."""
+    Two grouped regexp_extract calls, and the executed plan runs both:
+    common-subexpression elimination shares each group's match only
+    between its `= ''` test and its cast (PLANS.md). An interleaved A/B
+    measured a hand-rolled single-regex + substring_index variant ~3%
+    SLOWER — the regex is not the bottleneck here. A caller's
+    `lat IS NOT NULL` filter is pushed below this projection and runs a
+    third match; over `generate_pages` it also recomputes the text."""
     t = F.col(text_col)
     lat = F.nullif(F.regexp_extract(t, GEO_RE, 1), F.lit("")).cast("double")
     lon = F.nullif(F.regexp_extract(t, GEO_RE, 2), F.lit("")).cast("double")

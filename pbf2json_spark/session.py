@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -87,3 +87,29 @@ def _local_cores(master: str | None) -> int | None:
         except ValueError:
             return None
     return None
+
+
+# HotSpot compiles no method larger than this many bytes of bytecode
+# (-XX:+DontCompileHugeMethods, on by default): such a method stays in the
+# bytecode interpreter for the life of the JVM.
+JIT_HUGE_METHOD_BYTES = 8000
+
+
+def codegen_method_bytes(df: DataFrame) -> list[int]:
+    """Largest generated method, in bytes of bytecode, of each
+    whole-stage-codegen subtree of ``df``'s physical plan. A subtree above
+    ``JIT_HUGE_METHOD_BYTES`` runs interpreted. AQE is off while the plan is
+    built (an adaptive plan shows its stages only once it has run) and
+    restored afterwards; the query is planned and compiled, not run."""
+    spark = df.sparkSession
+    key = "spark.sql.adaptive.enabled"
+    aqe = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        # a fresh Dataset, so its QueryExecution is planned with AQE off
+        plan = df.select("*")._jdf.queryExecution().executedPlan()
+        debug = spark._jvm.org.apache.spark.sql.execution.debug.package
+        subtrees = debug.codegenStringSeq(plan)
+        return [subtrees.apply(i)._3().maxMethodCodeSize() for i in range(subtrees.size())]
+    finally:
+        spark.conf.set(key, aqe)

@@ -60,6 +60,24 @@ def test_stream_happy_path_unchanged(spark):
     assert len(recs) == 1 and recs[0]["id"] == 1
 
 
+def test_stream_releases_cached_frames(spark):
+    # the frames Engine.query persists are released when a stream ends or
+    # is closed, so repeated streams do not grow the session's cache
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    eng = build_engine(
+        spark,
+        [(1, 60.0, 24.0, {"amenity": "pub"})] + grid_nodes(10),
+        [(500, {"amenity": "pub", "name": "Katu"}, [10, 11, 12])],
+        [(900, {"type": "multipolygon", "name": "Alue"}, [(500, "way")])],
+    )
+    before = cache.numCachedEntries()
+    assert len(list(eng.stream_records("amenity~pub"))) == 2
+    gen = eng.stream_records("amenity~pub")
+    next(gen)
+    gen.close()
+    assert cache.numCachedEntries() <= before
+
+
 # --- the documented -highways behavior (go:1076-1081) --------------------------
 
 
