@@ -1666,10 +1666,7 @@ def _q_bbox_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_windowed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time tumbling-window aggregation (the batch twin of
-    streaming.streaming_tile_counts' groupBy(window, key) shape — Spark
-    guarantees a streaming query is the incrementalized batch query, so
-    this is the oracle-checkable face of the windowed streaming operator).
+    """Event-time tumbling-window aggregation per (window, key).
 
     Round-4 rewrite (driver-red in r2 AND r3): the bucket is now pure
     int64 arithmetic on ``_epoch_secs_col`` — ``F.window`` + date-part
@@ -3363,8 +3360,6 @@ def _geolift_sql() -> str:
 
 # wave 12 — shingle containment pairs, inter-arrival periodicity,
 # co-citation similarity, URL template mining, cell-transition graph.
-# (streaming_sessions is streaming-only: pytest batch-equivalence in
-# tests/test_wave12.py, no SQL oracle by design.)
 
 _CONTAIN_N = 5
 _CONTAIN_THR = 600_000
@@ -3703,8 +3698,7 @@ def _thin_sql() -> str:
 
 
 # wave 14 — largest-remainder crawl-budget apportionment, grid-cover
-# dilation. (streaming_attribution is streaming-only: stream-stream
-# interval join, pytest batch-equivalence in tests/test_wave14.py.)
+# dilation.
 
 _BUDGET_TOTAL = 997  # prime: remainders nonzero at every sf, bonus path always live
 
@@ -4322,9 +4316,6 @@ _VOCAB_SQL = (
 
 
 # wave 20 — n-gram novelty, pagination detection, Ripley-K pair counts.
-# (multimodal.audio_features is binary-decode: brute-force pytest
-# coverage in tests/test_wave20.py, no SQL oracle by design — same
-# policy as the PNG/WAV codec layer.)
 
 def _q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc bigram novelty (corpus.ngram_novelty): share of the doc's
@@ -5268,7 +5259,7 @@ def _q_temp_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TEMP_MIX_SQL = (
     "WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS ng "
-    "FROM documents GROUP BY source), "
+    "FROM documents WHERE source IS NOT NULL GROUP BY source), "
     "m AS (SELECT min(ng) AS nmin FROM c), "
     "t AS (SELECT source, CAST(floor(sqrt(CAST(nmin AS DOUBLE) / "
     "CAST(ng AS DOUBLE)) * 4294967296.0e0) AS BIGINT) AS thr FROM c, m) "

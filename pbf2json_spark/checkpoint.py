@@ -38,8 +38,6 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-METRIC_COLS = ["partition_id", "rows", "bytes_est", "wall_ms"]
-
 
 class CheckpointManager:
     """Stage-level snapshot/resume for a named pipeline."""

@@ -1,19 +1,15 @@
-"""Z-order (Morton) data layout for spatial file pruning.
+"""Z-order (Morton) and Hilbert keys for spatial file pruning.
 
 At 10^12 rows the cheapest predicate is the one that never reads the file:
 parquet keeps per-file (and per-row-group) min/max statistics, and a scan
-with `lat BETWEEN … AND lon BETWEEN …` skips every file whose stats
-exclude the range — IF the writer placed spatially-near rows in the same
-files. A random or ingest-order layout gives every file near-global
-min/max (nothing prunes); range-partitioning + sorting by the Morton code
-of (lat, lon) gives each file a tight bounding box.
+skips every file whose stats exclude the range — IF the writer placed
+spatially-near rows in the same files. A writer that range-partitions and
+sorts by a space-filling-curve key of (lat, lon) gives each file a tight
+bounding box; this module computes those keys and rewrites a bbox
+predicate as ranges of them, so the pruning happens on the key column.
 
-This is the same bit interleave the cell index uses (cells._spread_col),
-applied as a WRITE-TIME layout rather than a query-time key — the
-DataFrame-level equivalent of Delta/Iceberg's Z-ORDER clustering.
-
-tests/test_layout.py quantifies it: per-file bbox areas from the parquet
-footers are orders of magnitude tighter than the unsorted layout's.
+The Morton key is the same bit interleave the cell index uses
+(cells._spread_col).
 """
 
 from __future__ import annotations
@@ -28,27 +24,6 @@ def zorder_col(lat: Column, lon: Column, res: int = 16) -> Column:
     """Morton interleave of the (lat, lon) grid coordinates at `res` bits
     per axis — pure Column bit math, no Python."""
     return cells.cell_col(lat, lon, res)
-
-
-def zorder_layout(
-    df: DataFrame,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    n_files: int | None = None,
-    res: int = 16,
-) -> DataFrame:
-    """Re-layout a frame so spatially-near rows land in the same output
-    files: range-partition by the Morton code (equal-size partitions via
-    sampled range bounds, so a hot city does not create a giant file) and
-    sort within each partition. Write the result with any sink; parquet
-    min/max stats then prune untouched regions at scan time.
-    """
-    tmp = "__zorder_key"
-    if tmp in df.columns:
-        raise ValueError(f"input frame already has a {tmp!r} column")
-    out = df.withColumn(tmp, zorder_col(F.col(lat_col), F.col(lon_col), res))
-    n = n_files or df.sparkSession.sparkContext.defaultParallelism
-    return out.repartitionByRange(n, tmp).sortWithinPartitions(tmp).drop(tmp)
 
 
 # --- Hilbert curve ------------------------------------------------------------
@@ -182,7 +157,7 @@ def hilbert_udf(res: int):
 
 # --- Z-order range planning ---------------------------------------------------
 #
-# Laying data out by Morton code (zorder_layout) only pays off if QUERIES
+# Laying data out by Morton code only pays off if QUERIES
 # can be expressed as ranges of that code: a bbox predicate on raw lat/lon
 # prunes nothing on a file sorted by the interleaved key (each file's
 # lat/lon min/max stay near-global in one axis), but the SAME bbox
@@ -269,7 +244,7 @@ def zorder_range_filter(
     """Bbox filter as pushed-down Z-key ranges + exact residual.
 
     With `key_col` naming a STORED Morton-key column (written by a
-    zorder_layout + `withColumn(key, zorder_col(...))` sink), the
+    `withColumn(key, zorder_col(...))` sink sorted on that key), the
     OR-of-BETWEENs reaches the parquet scan as PushedFilters and prunes
     row groups by the key's min/max stats — the read-side payoff of the
     write-side layout. Without it the ranges are computed on the fly

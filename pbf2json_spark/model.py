@@ -1,8 +1,7 @@
 """Schemas for the engine's tables.
 
 Mirrors the reference's data model (pbf2json.go:26-76: Point, jsonNode,
-jsonWayRel, osmpbf entity structs) as columnar Spark schemas, plus the
-north-star web-scale `pages` table shape (BASELINE.json input_hint).
+osmpbf entity structs) as columnar Spark schemas.
 """
 
 from __future__ import annotations
@@ -51,37 +50,5 @@ POINT = T.StructType(
     [
         T.StructField("lat", T.DoubleType(), True),
         T.StructField("lon", T.DoubleType(), True),
-    ]
-)
-
-# Output envelope of the denormalizer (reference jsonWayRel, pbf2json.go:64-71)
-WAYREL_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("type", T.StringType(), False),
-        T.StructField("tags", TAGS, True),
-        T.StructField("centroid", POINT, True),
-        T.StructField("bbox_min", POINT, True),
-        T.StructField("bbox_max", POINT, True),
-    ]
-)
-
-# --- North-star web-scale tables (BASELINE.json input_hint) ------------------
-
-PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), False),
-        T.StructField("html", T.BinaryType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-    ]
-)
-
-POLYGONS_SCHEMA = T.StructType(
-    [
-        T.StructField("polygon_id", T.LongType(), False),
-        T.StructField("tags", TAGS, True),
-        T.StructField("ring", T.ArrayType(POINT), False),  # closed: first==last
     ]
 )

@@ -302,8 +302,8 @@ def decode_block_columns(data: bytes) -> dict:
 
     Returns {"node_id": int64[], "node_lat": f64[], "node_lon": f64[],
     "node_tk": object[], "node_tv": object[], "ways": [...], "relations":
-    [...]} — ways/relations as the same tuples decode_primitive_block
-    always produced."""
+    [...]} — ways as (id, tag_keys, tag_vals, refs) tuples, relations as
+    (id, tag_keys, tag_vals, member_ids, member_types, roles) tuples."""
     block = _collect(data)
     strings = [
         v.decode("utf-8") for _, v in _collect(block[1][0][1]).get(1, [])
@@ -487,21 +487,6 @@ def decode_block_columns(data: bytes) -> dict:
         "ways": ways,
         "relations": rels,
     }
-
-
-def decode_primitive_block(data: bytes) -> dict[str, list]:
-    """One PrimitiveBlock → dict of entity row lists (plain Python values;
-    tags as parallel key/value lists, members as three parallel lists).
-    Row-tuple view over decode_block_columns — one decoder, two shapes."""
-    c = decode_block_columns(data)
-    nodes = [
-        (int(i), float(la), float(lo), tk, tv)
-        for i, la, lo, tk, tv in zip(
-            c["node_id"], c["node_lat"], c["node_lon"],
-            c["node_tk"], c["node_tv"],
-        )
-    ]
-    return {"nodes": nodes, "ways": c["ways"], "relations": c["relations"]}
 
 
 # ---------------------------------------------------------------------------

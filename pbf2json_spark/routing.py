@@ -112,19 +112,3 @@ WITH RECURSIVE walk(node, dist, hops) AS (
 )
 SELECT node, min(dist) AS dist FROM walk GROUP BY node
 """
-
-
-def reachability(
-    edges: DataFrame,
-    sources: DataFrame,
-    n_rounds: int,
-    src: str = "src",
-    dst: str = "dst",
-    node: str = "node",
-) -> DataFrame:
-    """BFS hop count from the nearest source: shortest_paths with unit
-    weights. Output (node, hops:long)."""
-    e = edges.select(src, dst).withColumn("_one", F.lit(1).cast("long"))
-    return shortest_paths(
-        e, sources, n_rounds, src=src, dst=dst, weight="_one", node=node
-    ).withColumnRenamed("dist", "hops")

@@ -13,7 +13,7 @@ md5 is available and identical in Spark and DuckDB, so the driver oracle
 re-derives the exact sample membership (no float comparison anywhere —
 the threshold compare is integer).
 
-No shuffle: both operators are pure Column filters; stratified thresholds
+No shuffle: stratified_sample is a pure Column filter whose thresholds
 compile to a CASE over the stratum column.
 """
 
@@ -30,15 +30,6 @@ def _u32(key: Column, seed: int) -> Column:
     md5(key || ':' || seed), portable across engines."""
     s = F.concat(key.cast("string"), F.lit(f":{seed}"))
     return F.conv(F.substring(F.md5(s.cast("binary")), 1, 8), 16, 10).cast("long")
-
-
-def sample_exact(
-    df: DataFrame, fraction: float, id_col: str = "doc_id", seed: int = 0
-) -> DataFrame:
-    """Keep ~fraction of rows, deterministically by row id (Bernoulli with
-    a hash in place of an RNG)."""
-    thr = int(fraction * _U32_SPAN)
-    return df.filter(_u32(F.col(id_col), seed) < F.lit(thr))
 
 
 def stratified_sample(
@@ -82,7 +73,7 @@ def resample_mixture(
     E[copies] = w exactly, per-row multiplicity is a pure function of the
     row (reproducible across re-runs/partitionings/engines), and w < 1 is
     plain deterministic downsampling (same membership rule as
-    sample_exact). Strata not listed get `default_weight`.
+    stratified_sample). Strata not listed get `default_weight`.
 
     Output: the input columns + ``copy`` (0-based repeat index — so
     downstream shuffles can spread copies and an exact de-resample is
@@ -193,8 +184,8 @@ def spatial_thin(
     partitions on the cell key: ONE shuffle of (id, cell, u32) slim
     rows, dense-cell tasks bounded by the cell's row count (salt-free;
     a 10^8-row megacity cell is the worst single task and still
-    sort-bounded; pre-filter with sample_exact when cells exceed task
-    memory).
+    sort-bounded; pre-filter with stratified_sample when cells exceed
+    task memory).
 
     Output: input columns + (cell, thin_rank), thin_rank in 1..k.
     """
@@ -521,12 +512,16 @@ def temperature_downsample(
     one scalar min, one BROADCAST join of the |groups| thresholds back,
     and a scan-level u32-hash filter — no data-sized shuffle anywhere.
 
-    Output: the kept rows of `df` (all original columns).
+    Output: the kept rows of `df` (all original columns). Rows whose
+    group is NULL belong to no group: they are dropped and do not count
+    toward n_min.
     """
     if alpha_q not in (1, 2, 3):
         raise ValueError("alpha_q in {1, 2, 3} (alpha = alpha_q/4)")
     g = F.col(group_col)
-    counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("_ng"))
+    counts = (
+        df.filter(g.isNotNull()).groupBy(group_col).agg(F.count(F.lit(1)).alias("_ng"))
+    )
     nmin = counts.agg(F.min("_ng").alias("_nmin"))
     r = F.col("_nmin").cast("double") / F.col("_ng").cast("double")
     e = 4 - alpha_q  # p = r^(e/4)

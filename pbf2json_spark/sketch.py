@@ -1,11 +1,10 @@
-"""Count-min sketch: a fixed-size, mergeable frequency summary for
-streaming/batch heavy-hitter estimation at corpus scale.
+"""Count-min sketch: a fixed-size frequency summary for heavy-hitter
+estimation at corpus scale.
 
 Why a sketch when `groupBy(key).count()` is exact: at 10^12 rows the exact
 count table is itself data-sized (one row per distinct key — for tokens,
-billions), while a CMS is O(depth x width) REGARDLESS of cardinality, can
-be unioned across dumps/partitions by plain cell-wise addition, and
-answers point queries with a one-sided error bound (estimate >= truth;
+billions), while a CMS is O(depth x width) REGARDLESS of cardinality,
+combines across partitions by plain cell-wise addition, and answers point queries with a one-sided error bound (estimate >= truth;
 overcount <= 2N/width with probability 1 - 2^-depth). It is the standard
 building block for "is this n-gram frequent enough to matter" pre-filters
 in dedup/quality pipelines where the exact vocabulary table would dwarf
@@ -22,8 +21,6 @@ Shapes at 10^12 rows:
     ONE map-side-combinable groupBy on (row, bucket): the exchange carries
     at most depth x width partial cells PER MAP TASK, not the token
     volume. Output <= depth x width rows — metadata-scale.
-  * cms_merge — union + the same groupBy: sketches from independent dumps
-    combine without touching either dump again.
   * cms_estimate — the queried keys join the sketch on (row, bucket)
     (broadcast: the sketch is tiny by construction) and take min over the
     depth rows. Keys the sketch never saw estimate 0 via the left join's
@@ -79,16 +76,6 @@ def cms_build(
         .groupBy(F.col("rb.row").alias("row"), F.col("rb.bucket").alias("bucket"))
         .agg(F.sum("_w").alias("cnt"))
     )
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Cell-wise sum of sketches built with the SAME (depth, width)."""
-    if not sketches:
-        raise ValueError("need at least one sketch")
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("row", "bucket").agg(F.sum("cnt").alias("cnt"))
 
 
 def cms_estimate(
@@ -191,36 +178,10 @@ def kmv_build(
     return out.withColumn("rank_in_group", F.row_number().over(w))
 
 
-def kmv_merge(
-    sketches: list[DataFrame],
-    group_cols: list[str] | None = None,
-    k: int = 64,
-) -> DataFrame:
-    """Union sketches from independent dumps and re-thin to the k smallest
-    per group — associative/commutative, never touches the source data."""
-    if not sketches:
-        raise ValueError("need at least one sketch")
-    u = sketches[0].select(*(group_cols or []), "h")
-    for s in sketches[1:]:
-        u = u.unionByName(s.select(*(group_cols or []), "h"))
-    from .ranking import top_k_per_group
-
-    base = u.distinct()
-    gs = list(group_cols or [])
-    if gs:
-        return top_k_per_group(base, gs, [F.col("h").asc()], k)
-    out = base.orderBy("h").limit(k)
-    from pyspark.sql.window import Window
-
-    return out.withColumn(
-        "rank_in_group", F.row_number().over(Window.orderBy("h"))
-    )
-
-
 def kmv_estimate(
     sketch: DataFrame, k: int, group_cols: list[str] | None = None
 ) -> DataFrame:
-    """Per-group distinct estimate from a kmv_build/kmv_merge sketch.
+    """Per-group distinct estimate from a kmv_build sketch.
 
     Output: group_cols + (n_hashes:long, kth_hash:long, est_distinct:
     double). n_hashes < k → the sketch saw every distinct key and the
@@ -277,9 +238,8 @@ def bloom_build(
     maybe-present minority pays the exact anti-join. False-positive rate
     ≈ (1 - e^(-k·n/m))^k; false negatives impossible (probe law tested).
 
-    Merging dumps = UNION ALL + the same bit_or groupBy — the sketch is
-    a monoid, like cms_merge/kmv_merge. Only occupied words are stored
-    (missing word ⟺ all-zero), so a sparse filter stays small.
+    Only occupied words are stored (missing word ⟺ all-zero), so a
+    sparse filter stays small.
 
     Output: group_cols + (word_idx long, word long).
     """
@@ -377,13 +337,12 @@ def hll_build(
     seed: int = 0,
 ) -> DataFrame:
     """Per-group HyperLogLog sketch as (reg_idx, r) rows — r = max rank
-    seen in that register. THE mergeable distinct-count summary at
+    seen in that register. The fixed-size distinct-count summary at
     10^12 rows: where kmv_build keeps k raw hashes (estimate error
-    ~1/sqrt(k), merge must re-thin), HLL is a FIXED 2^p-register array
-    with error 1.04/sqrt(2^p) (p=8 → 6.5% from 256 registers) whose
-    merge is a plain element-wise max — associative, commutative,
-    idempotent, so dumps/partitions/days combine in any order without
-    touching source data (the property unions-of-unions pipelines need).
+    ~1/sqrt(k)), HLL is a FIXED 2^p-register array with error
+    1.04/sqrt(2^p) (p=8 → 6.5% from 256 registers) whose partial
+    registers combine by a plain element-wise max — associative,
+    commutative, idempotent, so partitions combine in any order.
 
     One map-side-combinable groupBy on (group, reg_idx): the exchange
     carries at most 2^p partial registers per map task, never the key
@@ -404,23 +363,11 @@ def hll_build(
     )
 
 
-def hll_merge(sketches: list[DataFrame], group_cols: list[str] | None = None) -> DataFrame:
-    """Union register tables from independent dumps and take the
-    element-wise max — the HLL monoid; never touches source data."""
-    if not sketches:
-        raise ValueError("need at least one sketch")
-    gs = list(group_cols or [])
-    u = sketches[0].select(*gs, "reg_idx", "r")
-    for s in sketches[1:]:
-        u = u.unionByName(s.select(*gs, "reg_idx", "r"))
-    return u.groupBy(*gs, "reg_idx").agg(F.max("r").alias("r"))
-
-
 def hll_estimate(
     sketch: DataFrame, p: int, group_cols: list[str] | None = None
 ) -> DataFrame:
-    """Per-group distinct estimate from an hll_build/hll_merge register
-    table. The raw-estimate float path is ONE division: the harmonic sum
+    """Per-group distinct estimate from an hll_build register table.
+    The raw-estimate float path is ONE division: the harmonic sum
     Z = Σ 2^-r is kept as an EXACT integer by scaling with 2^(q+1)
     (ranks are ≤ q+1, so every term 2^(q+1-r) is integral; absent
     registers contribute the full 2^(q+1)); Σ fits int64 for p ≥ 4.

@@ -232,6 +232,10 @@ def point_in_polygon_join(
 
 # --- kNN via cell-neighborhood expansion -------------------------------------------
 
+# largest confirm radius, in cells, that knn_join searches; a query that
+# needs more returns best-effort neighbors and is counted in a WARNING
+KNN_MAX_CONFIRM_RADIUS = 256
+
 
 def knn_join(
     points: DataFrame,
@@ -242,8 +246,6 @@ def knn_join(
     point_id: str = "point_id",
     query_id: str = "query_id",
     metric: str = "haversine",
-    max_confirm_radius: int = 256,
-    strict: bool = False,
 ) -> DataFrame:
     """k nearest points for each query row (both frames carry lat/lon).
 
@@ -274,11 +276,11 @@ def knn_join(
     Returns (query_id, point_id, dist_m, rank).
 
     Exactness: exact AS LONG AS no query's confirm radius exceeds
-    `max_confirm_radius` cells (the cap bounds the explode size; a capped
-    query returns best-effort neighbors from the capped disk). Whenever the
-    cap can bind (cap < 2^res) the function counts capped queries up front:
-    strict=True raises with the count; the default logs a WARNING with the
-    count — never a silent truncation.
+    `KNN_MAX_CONFIRM_RADIUS` cells (the cap bounds the explode size; a
+    capped query returns best-effort neighbors from the capped disk).
+    Whenever the cap can bind (cap < 2^res) the function counts capped
+    queries up front and logs a WARNING with the count — never a silent
+    truncation.
 
     metric='sq_deg' (squared degree-space distance) makes the result fully
     exact AND bit-reproducible across engines (only IEEE sub/mul/add);
@@ -402,7 +404,7 @@ def knn_join(
         deg = F.col("_dk") / F.lit(np.pi * geo.EARTH_RADIUS_M / 180.0)
     else:
         deg = F.sqrt(F.col("_dk"))
-    cap = min(1 << res, max_confirm_radius)
+    cap = min(1 << res, KNN_MAX_CONFIRM_RADIUS)
     need_r = (F.ceil(deg / F.lit(lat_extent)) + F.lit(1)).cast("int")
     # under-k queries (incl. zero-candidate ones, _m null after the left
     # join) must search the full cap disk: their d_m bound proves nothing
@@ -412,22 +414,16 @@ def knn_join(
     confirm_q = qframe.join(kth, query_id, "left")
     if cap < (1 << res):
         # the cap can bind → count the queries it truncates (a narrow job
-        # over the checkpointed stats frame, metadata-scale). strict raises;
-        # the default surfaces the count instead of silently degrading.
+        # over the checkpointed stats frame, metadata-scale) and surfaces
+        # it instead of silently degrading.
         n_capped = confirm_q.filter(under_k | (need_r > F.lit(cap))).count()
-        if n_capped and strict:
-            raise ValueError(
-                f"{n_capped} queries need a confirm radius above "
-                f"max_confirm_radius={max_confirm_radius}; raise the cap or "
-                "lower `res` for exact results"
-            )
         if n_capped:
             _LOG.warning(
-                "knn_join: %d queries hit max_confirm_radius=%d — their "
+                "knn_join: %d queries hit KNN_MAX_CONFIRM_RADIUS=%d — their "
                 "results are best-effort from the capped disk, not exact "
-                "(raise the cap or lower `res`)",
+                "(lower `res` for exact results)",
                 n_capped,
-                max_confirm_radius,
+                cap,
             )
     final_cand = (
         confirm_q.withColumn(
@@ -464,9 +460,6 @@ def _haversine_col(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Co
     dl = F.radians(lon2) - F.radians(lon1)
     a = F.pow(F.sin(dp / 2), 2) + F.cos(p1) * F.cos(p2) * F.pow(F.sin(dl / 2), 2)
     return F.lit(2.0 * geo.EARTH_RADIUS_M) * F.asin(F.sqrt(F.least(a, F.lit(1.0))))
-
-
-haversine_col = _haversine_col
 
 
 # --- tile aggregation (raster↔vector) -----------------------------------------------

@@ -968,7 +968,7 @@ def burstiness(
     for clockwork periodicity (bots, cron crawlers), ≈ 0 for Poisson
     arrivals (organic traffic), → +1 for heavy-tailed bursts (flash
     crowds, retry storms). The behavioral-fingerprint complement of
-    rate_anomaly's level shifts.
+    per-key rate level shifts.
 
     Gaps come from ONE lag window per key ordered by (ts, tiebreak) —
     the tiebreak column makes equal timestamps a total order, so the

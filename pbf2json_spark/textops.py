@@ -8,7 +8,6 @@ it value-for-value."""
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -203,39 +202,6 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
             "fp_hex_norm", F.substring(F.md5(norm.cast("binary")), 1, 16)
         )
     )
-
-
-def normalize_text_udf():
-    """Arrow-batched Unicode NFC + casefold + whitespace-collapse kernel —
-    the canonicalization step every multilingual curation pipeline runs
-    before fingerprint-based dedup ("café" composed vs decomposed, fullwidth
-    digits, case variants must collapse to one fingerprint).
-
-    NFC has no Spark built-in, so this is a deliberate pandas UDF
-    (vectorized batch in, batch out — never per-row Python); stdlib
-    unicodedata implements the same Unicode normalization DuckDB's
-    nfc_normalize does, which is what keeps a cross-engine oracle possible
-    for non-ASCII corpora. Cost model at 100 TB: one Arrow crossing over
-    the text column only — project other columns around it, never through
-    it."""
-    import unicodedata
-
-    @F.pandas_udf("string")
-    def _norm(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda t: None
-            if t is None
-            else " ".join(unicodedata.normalize("NFC", t).casefold().split())
-        )
-
-    return _norm
-
-
-def normalize_text(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Adds `text_norm` (NFC + casefold + collapsed whitespace). Compose
-    with fingerprint()/exact_dedup on the normalized column to merge
-    surface-form duplicates exact byte dedup misses."""
-    return df.withColumn("text_norm", normalize_text_udf()(F.col(text_col)))
 
 
 # PII scrubbing patterns: RE2- AND Java-compatible by construction (no

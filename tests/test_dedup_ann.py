@@ -315,27 +315,6 @@ def test_jaccard_prefix_filter_exactness(spark):
     assert pf == base and len(base) > 0
 
 
-def test_normalize_text_nfc_casefold(spark):
-    import unicodedata
-
-    from pbf2json_spark import textops
-
-    rows = [
-        (1, "Café  MENU"),          # decomposed e + acute, double space
-        (2, "café menu"),            # precomposed — must collapse to same
-        (3, "STRASSE ß"),            # casefold: ß -> ss
-        (4, ""),
-        (5, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["doc_id"]: r["text_norm"] for r in textops.normalize_text(df).collect()}
-    assert got[1] == got[2] == "café menu"
-    assert unicodedata.is_normalized("NFC", got[1])
-    assert got[3] == "strasse ss"
-    assert got[4] == ""
-    assert got[5] is None
-
-
 def test_redact_pii(spark):
     from pbf2json_spark import textops
 

@@ -187,8 +187,8 @@ def test_varints_np_matches_scalar():
 
 
 def test_decode_block_columns_matches_tuples():
-    """Columnar decode and the legacy tuple view agree (same decoder, two
-    shapes), including untagged-majority DenseNodes and tag terminators."""
+    """Columnar decode returns the written nodes and ways, including
+    untagged-majority DenseNodes and tag terminators."""
     nodes = [
         (i + 1, 50.0 + i * 0.01, 7.0 + i * 0.02,
          {"k": f"v{i}", "x": "y"} if i % 7 == 0 else {})
@@ -198,6 +198,7 @@ def test_decode_block_columns_matches_tuples():
             for w in range(40)]
     path = "/tmp/pbf_cols_test.osm.pbf"
     pbf.write_pbf(path, nodes, ways, [])
+    got_nodes, got_ways = [], []
     for btype, off, ln in pbf.blob_index(path):
         if btype != "OSMData":
             continue
@@ -205,15 +206,17 @@ def test_decode_block_columns_matches_tuples():
             f.seek(off)
             payload = pbf._blob_payload(f.read(ln))
         cols = pbf.decode_block_columns(payload)
-        rows = pbf.decode_primitive_block(payload)
-        assert len(rows["nodes"]) == cols["node_id"].size
-        for (nid, lat, lon, tk, tv), i in zip(
-            rows["nodes"], range(cols["node_id"].size)
-        ):
-            assert nid == int(cols["node_id"][i])
-            assert lat == float(cols["node_lat"][i])
-            assert tk == cols["node_tk"][i] and tv == cols["node_tv"][i]
-        assert rows["ways"] == cols["ways"]
+        got_nodes += zip(
+            cols["node_id"].tolist(), cols["node_lat"].tolist(),
+            cols["node_lon"].tolist(), cols["node_tk"], cols["node_tv"],
+        )
+        got_ways += cols["ways"]
+    assert len(got_nodes) == len(nodes)
+    for (nid, lat, lon, tk, tv), (wid, wlat, wlon, tags) in zip(got_nodes, nodes):
+        assert nid == wid
+        assert abs(lat - wlat) < 1e-7 and abs(lon - wlon) < 1e-7
+        assert dict(zip(tk, tv)) == tags
+    assert [(wid, dict(zip(tk, tv)), refs) for wid, tk, tv, refs in got_ways] == ways
 
 
 def _runs_decode(df) -> bool:

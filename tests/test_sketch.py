@@ -1,5 +1,5 @@
 """Count-min sketch vs an exact Python reimplementation: identical cells,
-one-sided estimates, merge = rebuild."""
+one-sided estimates."""
 
 from __future__ import annotations
 
@@ -57,26 +57,6 @@ def test_cms_estimates_one_sided_and_exact_without_collision(spark):
     assert e >= 0
 
 
-def test_cms_merge_equals_rebuild(spark):
-    depth, width = 3, 32
-    a, b = KEYS[: len(KEYS) // 2], KEYS[len(KEYS) // 2 :]
-    da = spark.createDataFrame([(k,) for k in a], "k string")
-    db = spark.createDataFrame([(k,) for k in b], "k string")
-    dall = spark.createDataFrame([(k,) for k in KEYS], "k string")
-    merged = {
-        (r["row"], r["bucket"]): r["cnt"]
-        for r in sketch.cms_merge(
-            sketch.cms_build(da, "k", depth, width),
-            sketch.cms_build(db, "k", depth, width),
-        ).collect()
-    }
-    rebuilt = {
-        (r["row"], r["bucket"]): r["cnt"]
-        for r in sketch.cms_build(dall, "k", depth, width).collect()
-    }
-    assert merged == rebuilt
-
-
 def test_cms_weighted_and_validation(spark):
     df = spark.createDataFrame([("a", 3), ("a", 2), ("b", 1)], "k string, w long")
     s = {
@@ -86,5 +66,3 @@ def test_cms_weighted_and_validation(spark):
     assert s[(0, _bucket("a", 0, 16))] >= 5
     with pytest.raises(ValueError):
         sketch.cms_build(df, "k", 0, 16)
-    with pytest.raises(ValueError):
-        sketch.cms_merge()

@@ -201,13 +201,11 @@ def test_sessionize_matches_lag_reconstruction(spark):
     assert sw == rec
 
 
-def test_sessionize_streaming_matches_batch(spark, tmp_path):
+def test_sessionize_streaming_matches_batch(spark, tmp_path, run_stream_to_memory):
     """sessionize is the same plan batch and streaming: a watermarked
     readStream through session_window (complete mode) must produce exactly
     the batch rows — the operator the north-star needs for live session
     stats over an unbounded event stream."""
-    from pbf2json_spark.streaming import run_stream_to_memory
-
     rows = [
         (f"u{i % 4}", 1_700_000_000 + (i * 137) % 20_000) for i in range(200)
     ]
@@ -227,7 +225,7 @@ def test_sessionize_streaming_matches_batch(spark, tmp_path):
     sessions = temporal.sessionize(
         stream.withWatermark("ts", "1 hour"), gap="7 minutes"
     )
-    q = run_stream_to_memory(sessions, "sess_stream_eq", output_mode="complete")
+    q = run_stream_to_memory(sessions, "sess_stream_eq")
     got = {
         (r["user_id"], r["session_start"], r["session_end"]): r["n_events"]
         for r in spark.sql("select * from sess_stream_eq").collect()

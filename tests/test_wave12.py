@@ -1,16 +1,13 @@
 """Wave-12 operators: shingle containment pairs, inter-arrival
 periodicity, co-citation similarity, URL template mining,
-cell-transition graph, streaming sessionization."""
+cell-transition graph."""
 
 from __future__ import annotations
 
 import math
 import random
 
-import pytest
-from pyspark.sql import functions as F
-
-from pbf2json_spark import dedup, graph, streaming, temporal, trajectory, weburl
+from pbf2json_spark import dedup, graph, temporal, trajectory, weburl
 
 
 # --- containment_pairs -------------------------------------------------------
@@ -266,49 +263,3 @@ def test_cell_transitions_vs_brute_random(spark):
            (r["n"], r["p_e6"])
            for r in trajectory.cell_transitions(t, 4).collect()}
     assert got == _brute_ctrans(uniq, 4)
-
-
-# --- streaming_sessions ------------------------------------------------------
-
-
-@pytest.fixture()
-def event_stream_dir(spark, tmp_path):
-    p = str(tmp_path / "ev")
-    rows = []
-    # user 1: two sessions well apart; user 2: one session; all early in
-    # the day so the closing event can push the watermark past them
-    for m in (0, 1, 2, 40, 41):
-        rows.append((1, f"2026-01-01 01:{m:02d}:00"))
-    for m in (5, 6):
-        rows.append((2, f"2026-01-01 01:{m:02d}:00"))
-    rows.append((99, "2026-01-02 23:00:00"))  # watermark driver
-    df = spark.createDataFrame(rows, "user_id long, ts_s string").select(
-        "user_id", F.col("ts_s").cast("timestamp").alias("ts")
-    )
-    df.coalesce(1).write.parquet(p)
-    return p
-
-
-def test_streaming_sessions_match_batch(spark, event_stream_dir):
-    schema = spark.read.parquet(event_stream_dir).schema
-    src = (spark.readStream.schema(schema).parquet(event_stream_dir))
-    sess = streaming.streaming_sessions(src, gap="10 minutes",
-                                        watermark="1 minute")
-    q = streaming.run_stream_to_memory(sess, "sess_test")
-    assert q.lastProgress is not None
-    got = {(r["user_id"], r["session_start"], r["session_end"]): r["n_events"]
-           for r in spark.sql("select * from sess_test").collect()}
-
-    batch = (
-        spark.read.parquet(event_stream_dir)
-        .groupBy(F.session_window(F.col("ts"), "10 minutes"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select("user_id", F.col("session_window.start").alias("s"),
-                F.col("session_window.end").alias("e"), "n_events")
-    )
-    exp = {(r["user_id"], r["s"], r["e"]): r["n_events"]
-           for r in batch.collect() if r["user_id"] != 99}
-    # every finalized streaming session must equal its batch twin, and
-    # all non-watermark-tail sessions are finalized
-    assert got == exp
-    assert len(got) == 3

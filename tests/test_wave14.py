@@ -1,14 +1,11 @@
 """Wave-14 operators: largest-remainder budget apportionment, grid-cover
-dilation, stream-stream interval-join attribution."""
+dilation."""
 
 from __future__ import annotations
 
 import random
 
-import pytest
-from pyspark.sql import functions as F
-
-from pbf2json_spark import spatial, streaming, weburl
+from pbf2json_spark import spatial, weburl
 
 
 # --- apportion_budget --------------------------------------------------------
@@ -97,59 +94,3 @@ def test_dilate_idempotent_union(spark):
               for r in spatial.dilate_cover(
                   spatial.dilate_cover(c, 4, 1), 4, 1).collect()}
     assert once2 == twice1
-
-
-# --- streaming_attribution ---------------------------------------------------
-
-
-@pytest.fixture()
-def attrib_dirs(spark, tmp_path):
-    imp_p, clk_p = str(tmp_path / "imp"), str(tmp_path / "clk")
-    imps = [
-        (1, "2026-01-01 10:00:00"),
-        (1, "2026-01-01 10:30:00"),
-        (2, "2026-01-01 10:00:00"),
-    ]
-    clks = [
-        (1, "2026-01-01 10:05:00"),   # matches imp 10:00 only
-        (1, "2026-01-01 10:31:00"),   # matches imp 10:30 only
-        (2, "2026-01-01 11:00:00"),   # outside the 10-minute window
-        (9, "2026-01-02 12:00:00"),   # watermark driver, no impression
-    ]
-    spark.createDataFrame(imps, "ad_id long, ts_s string").select(
-        "ad_id", F.col("ts_s").cast("timestamp").alias("ts")
-    ).coalesce(1).write.parquet(imp_p)
-    spark.createDataFrame(clks, "ad_id long, ts_s string").select(
-        "ad_id", F.col("ts_s").cast("timestamp").alias("ts")
-    ).coalesce(1).write.parquet(clk_p)
-    return imp_p, clk_p
-
-
-def test_streaming_attribution_matches_batch(spark, attrib_dirs):
-    imp_p, clk_p = attrib_dirs
-    s_imp = spark.readStream.schema(
-        spark.read.parquet(imp_p).schema).parquet(imp_p)
-    s_clk = spark.readStream.schema(
-        spark.read.parquet(clk_p).schema).parquet(clk_p)
-    j = streaming.streaming_attribution(s_imp, s_clk, within="10 minutes",
-                                        watermark="1 minute")
-    q = streaming.run_stream_to_memory(j, "attrib_test")
-    assert q.lastProgress is not None
-    got = {(r["ad_id"], r["imp_ts"], r["click_ts"], r["lag_us"])
-           for r in spark.sql("select * from attrib_test").collect()}
-
-    bi = spark.read.parquet(imp_p).select(
-        F.col("ad_id").alias("_k"), F.col("ts").alias("imp_ts"))
-    bc = spark.read.parquet(clk_p).select(
-        F.col("ad_id").alias("_ck"), F.col("ts").alias("click_ts"))
-    exp = {
-        (r["_k"], r["imp_ts"], r["click_ts"],
-         int((r["click_ts"] - r["imp_ts"]).total_seconds() * 1_000_000))
-        for r in bi.join(
-            bc,
-            F.expr("_k = _ck AND click_ts >= imp_ts "
-                   "AND click_ts <= imp_ts + interval 10 minutes"),
-        ).collect()
-    }
-    assert got == exp
-    assert len(got) == 2  # exactly the two in-window matches

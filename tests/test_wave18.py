@@ -1,4 +1,4 @@
-"""Wave-18 operators: Geary's C, modularity, image dHash."""
+"""Wave-18 operators: Geary's C, modularity."""
 
 from __future__ import annotations
 
@@ -6,9 +6,7 @@ import math
 import random
 from collections import Counter
 
-import numpy as np
-
-from pbf2json_spark import codecs, graph, multimodal, spatial
+from pbf2json_spark import graph, spatial
 
 
 # --- geary_c -----------------------------------------------------------------
@@ -119,31 +117,3 @@ def test_modularity_vs_brute_random_lpa_labels(spark):
            for r in graph.modularity(e, lab_df).collect()}
     _, want = _brute_modularity(edges, labels)
     assert got == want
-
-
-# --- image dHash -------------------------------------------------------------
-
-
-def _brute_dhash(blob):
-    img = codecs.decode_png(blob)
-    g = img.mean(axis=2) if img.ndim == 3 else img.astype(np.float64)
-    h, w = g.shape
-    s = g[np.ix_((np.arange(8) * h) // 8, (np.arange(9) * w) // 9)]
-    bits = (s[:, 1:] > s[:, :-1]).ravel()
-    val = 0
-    for b in bits:
-        val = (val << 1) | int(b)
-    return val - (1 << 64) if val >= 1 << 63 else val
-
-
-def test_dhash_matches_brute_and_skips_non_png(spark):
-    media = multimodal.generate_media(spark, 12)
-    got = {r["media_id"]: r["dhash"]
-           for r in multimodal.image_dhash(media).collect()}
-    rows = media.collect()
-    pngs = {r["media_id"]: bytes(r["blob"]) for r in rows
-            if bytes(r["blob"])[:8] == codecs.PNG_MAGIC}
-    assert set(got) == set(pngs)            # audio/video skipped
-    for mid, blob in pngs.items():
-        assert got[mid] == _brute_dhash(blob)
-

@@ -1,5 +1,5 @@
 """Wave-20 operators: n-gram novelty, pagination detection, Ripley-K
-pair counts, audio PCM features."""
+pair counts."""
 
 from __future__ import annotations
 
@@ -7,9 +7,7 @@ import math
 import random
 from collections import Counter
 
-import numpy as np
-
-from pbf2json_spark import codecs, corpus, multimodal, spatial, weburl
+from pbf2json_spark import corpus, spatial, weburl
 
 
 def _tdiv(a: int, b: int) -> int:
@@ -141,41 +139,3 @@ def test_ripley_clustered_beats_area_growth(spark):
     for r, row in got.items():
         assert (row["n_points"], row["n_cells"], row["pairs_leq"],
                 row["k_e6"]) == brute[r]
-
-
-# --- audio_features ------------------------------------------------------------
-
-
-def _brute_audio(blob):
-    sr, ch, s = codecs.decode_wav(blob)
-    s = s.astype(np.int64)
-    nz = s[s != 0]
-    return (sr, ch, s.size, int(np.dot(s, s)),
-            int(np.count_nonzero(nz[1:] * nz[:-1] < 0)),
-            int(np.abs(s).max()) if s.size else 0)
-
-
-def test_audio_features_vs_brute_and_skips(spark):
-    media = multimodal.generate_media(spark, 15)
-    got = {r["media_id"]: (r["sample_rate"], r["n_channels"], r["n_samples"],
-                           r["energy"], r["zero_crossings"], r["peak"])
-           for r in multimodal.audio_features(media).collect()}
-    rows = media.collect()
-    wavs = {r["media_id"]: bytes(r["blob"]) for r in rows
-            if bytes(r["blob"])[:4] == b"RIFF"}
-    assert set(got) == set(wavs) and len(wavs) == 5     # ids 1,4,7,10,13
-    for mid, blob in wavs.items():
-        assert got[mid] == _brute_audio(blob)
-
-
-def test_audio_features_known_signal(spark):
-    # square wave: every adjacent nonzero pair flips sign
-    s = np.tile(np.array([1000, -1000], dtype=np.int16), 8)
-    blob = codecs.encode_wav(s, 8000)
-    df = spark.createDataFrame(
-        [(0, blob)], "media_id long, blob binary")
-    r = multimodal.audio_features(df).collect()[0]
-    assert (r["sample_rate"], r["n_channels"], r["n_samples"]) == (8000, 1, 16)
-    assert r["energy"] == 16 * 1000 * 1000
-    assert r["zero_crossings"] == 15
-    assert r["peak"] == 1000

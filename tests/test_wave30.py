@@ -1,5 +1,4 @@
-"""Wave-30: product quantization (train/encode/ADC top-k) and the
-streaming per-key rate-anomaly screen."""
+"""Wave-30: product quantization (train/encode/ADC top-k)."""
 
 from __future__ import annotations
 
@@ -7,7 +6,7 @@ import random
 
 import numpy as np
 
-from pbf2json_spark import ann, streaming
+from pbf2json_spark import ann
 
 
 def _vecs(spark, rows, dim):
@@ -79,40 +78,3 @@ def test_pq_recall_on_clustered_data(spark):
     for q, ids in approx.items():
         assert len(ids) == 10
         assert all(i % 4 == q for i in ids), (q, sorted(ids))
-
-
-# --- streaming rate anomaly --------------------------------------------------
-
-
-def test_rate_anomaly_flags_burst(spark, tmp_path):
-    p = str(tmp_path / "ra")
-    schema = "host string, url string"
-    # three calibration batches (identical per-batch counts, so batch
-    # order among them is irrelevant), then the burst batch last
-    for b in range(3):
-        rows = [("a.com", f"u{b}-{i}") for i in range(10)]
-        rows += [("b.com", f"v{b}-{i}") for i in range(10)]
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append").parquet(p)
-    burst = [("a.com", f"w{i}") for i in range(200)]
-    burst += [("b.com", f"x{i}") for i in range(10)]
-    spark.createDataFrame(burst, schema).coalesce(1).write.mode(
-        "append").parquet(p)
-
-    src = (
-        spark.readStream.schema(spark.read.parquet(p).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(p)
-    )
-    q = streaming.run_stream_to_memory(
-        streaming.rate_anomaly(src, key_col="host", min_history=3, factor=5),
-        "rate_test",
-    )
-    rows = spark.sql("select * from rate_test").collect()
-    q.stop()
-    flagged = [(r["key"], r["batch_count"]) for r in rows if r["flagged"]]
-    assert flagged == [("a.com", 200)]
-    # b.com never flags; a.com history shows 3 batches / 30 events
-    burst_row = [r for r in rows if r["flagged"]][0]
-    assert (burst_row["hist_batches"], burst_row["hist_total"]) == (3, 30)
-    assert all(not r["flagged"] for r in rows if r["key"] == "b.com")

@@ -1,5 +1,5 @@
 """Wave-41: portable HyperLogLog (registers vs python-md5 reference,
-merge monoid law, estimate accuracy, linear-counting small range) and
+estimate accuracy, linear-counting small range) and
 banded discrete Fréchet distance (vs brute full-matrix DP; identity;
 frechet <= dtw law)."""
 
@@ -39,20 +39,6 @@ def test_hll_registers_vs_python(spark):
         idx, rank = _ref_reg(k, 6)
         exp[(g, idx)] = max(exp.get((g, idx), 0), rank)
     assert got == exp
-
-
-def test_hll_merge_law(spark):
-    keys = [f"doc{i}" for i in range(500)]
-    half_a = spark.createDataFrame([(k,) for k in keys[:300]], "key string")
-    half_b = spark.createDataFrame([(k,) for k in keys[250:]], "key string")
-    whole = spark.createDataFrame([(k,) for k in keys], "key string")
-    merged = sketch.hll_merge(
-        [sketch.hll_build(half_a, "key", p=7), sketch.hll_build(half_b, "key", p=7)]
-    )
-    direct = sketch.hll_build(whole, "key", p=7)
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, direct.collect())
-    )
 
 
 def test_hll_estimate_accuracy(spark):

@@ -50,9 +50,6 @@ def test_unpacked_way_fields_decode_like_packed():
     assert wid == 77
     assert tk == ["highway", "name"] and tv == ["path", "x"]
     assert list(wrefs) == refs
-    # and the legacy row decoder agrees on the unpacked wire form
-    rows = pbf.decode_primitive_block(_block(strings, unpacked))["ways"]
-    assert rows == got_u
 
 
 def test_varints_np_ends_rejects_malformed():

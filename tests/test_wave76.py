@@ -58,6 +58,19 @@ def test_exact_set_vs_brute(spark, alpha_q):
     assert got == _brute(rows, alpha_q)
 
 
+def test_null_groups_dropped_and_not_counted(spark):
+    """NULL-group rows belong to no group: none is kept, and their count
+    (50, below every real group) must not become n_min."""
+    rows = _rows()
+    nulls = [(len(rows) + j, None) for j in range(50)]
+    df = spark.createDataFrame(rows + nulls, "doc_id long, src string")
+    got = {
+        r["doc_id"]
+        for r in sampling.temperature_downsample(df, "src", alpha_q=2).collect()
+    }
+    assert got == _brute(rows, 2)
+
+
 def test_flattening_law(spark):
     """Kept shares must flatten toward uniform as alpha drops: the
     head/tail kept-count ratio is (n_head/n_tail)^alpha, within hash

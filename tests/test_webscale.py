@@ -150,13 +150,11 @@ def test_knn_matches_bruteforce(spark):
         assert ranks == [1, 2, 3, 4, 5]
 
 
-def test_knn_confirm_cap_surfaced(spark, caplog):
-    """A query whose k-th neighbor sits beyond max_confirm_radius cells is
-    never silently truncated: strict=True raises with the capped count,
-    and the default path logs a WARNING carrying the same count."""
+def test_knn_confirm_cap_surfaced(spark, caplog, monkeypatch):
+    """A query whose k-th neighbor sits beyond KNN_MAX_CONFIRM_RADIUS cells
+    is never silently truncated: knn_join logs a WARNING carrying the
+    capped count."""
     import logging
-
-    import pytest
 
     # one query at the origin; the only points sit ~40 cells away at res=10
     # (cell extent 180/2^10 ≈ 0.176°, points at 7°) — any cap below that
@@ -166,13 +164,11 @@ def test_knn_confirm_cap_surfaced(spark, caplog):
         "point_id long, lat double, lon double",
     )
     qs = spark.createDataFrame([(0, 0.0, 0.0)], "query_id long, lat double, lon double")
-    kw = dict(k=2, res=10, max_rounds=2, max_confirm_radius=4)
-    with pytest.raises(ValueError, match="1 queries"):
-        spatial.knn_join(pts, qs, strict=True, **kw)
+    monkeypatch.setattr(spatial, "KNN_MAX_CONFIRM_RADIUS", 4)
     with caplog.at_level(logging.WARNING, logger="pbf2json_spark.spatial"):
-        spatial.knn_join(pts, qs, **kw).collect()
+        spatial.knn_join(pts, qs, k=2, res=10, max_rounds=2).collect()
     assert any(
-        "1 queries hit max_confirm_radius=4" in r.getMessage()
+        "1 queries hit KNN_MAX_CONFIRM_RADIUS=4" in r.getMessage()
         for r in caplog.records
     )
 

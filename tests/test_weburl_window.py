@@ -153,12 +153,10 @@ def test_bbox_intersect_no_duplicate_pairs(spark):
 # --- windowed events ------------------------------------------------------------
 
 
-def test_windowed_batch_matches_streaming(spark, tmp_path):
+def test_windowed_batch_matches_streaming(spark, tmp_path, run_stream_to_memory):
     """The batch F.window aggregation and the incrementalized streaming run
     of the same plan produce identical rows (Spark's core streaming
     guarantee, asserted for our window shape)."""
-    from pbf2json_spark.streaming import run_stream_to_memory
-
     rows = [
         (i, f"2024-01-01 0{i % 4}:{i % 60:02d}:00", "t" + str(i % 3)) for i in range(40)
     ]
@@ -177,7 +175,7 @@ def test_windowed_batch_matches_streaming(spark, tmp_path):
 
     batch = {(r["ws"], r["k"]): r["n"] for r in agg(spark.read.parquet(path)).collect()}
     stream = spark.readStream.schema("id long, ts timestamp_ntz, k string").parquet(path)
-    q = run_stream_to_memory(agg(stream), "win_batch_eq", output_mode="complete")
+    q = run_stream_to_memory(agg(stream), "win_batch_eq")
     got = {
         (r["ws"], r["k"]): r["n"]
         for r in spark.sql("select * from win_batch_eq").collect()
