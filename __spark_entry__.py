@@ -47,7 +47,8 @@ Operator → query map:
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -8586,79 +8587,73 @@ def _suite_part_sql(tag: str, k1, k2, metrics) -> list[str]:
     return out
 
 
-# suite name → [(tag, oracle_key, spark_callable, k1, k2, metrics)]
-# metrics: (metric_name, column, kind) with kind ∈ i|d|s|b|ts|one.
+# suite name → [(tag, query, k1, k2, metrics)]; each member runs the builder
+# QUERY_TABLE registers under ``query`` and the oracle_sql() entry of that
+# name. metrics: (metric_name, column, kind) with kind ∈ i|d|s|b|ts|one.
 def _suite_specs():
     return {
         "dsl_suite": [
-            ("orv", "dsl_or_values", _dsl_query("etype~click;view"),
+            ("orv", "dsl_or_values",
              "event_id", None, [("etype", "etype", "s")]),
-            ("andg", "dsl_and_group", _dsl_query("etype~click§big~yes"),
+            ("andg", "dsl_and_group",
              "event_id", None, [("etype", "etype", "s")]),
-            ("valre", "dsl_value_regex", _dsl_query("etype~#r"),
+            ("valre", "dsl_value_regex",
              "event_id", None, [("etype", "etype", "s")]),
-            ("keyre", "dsl_key_regex", _dsl_query("#^k~#7"),
+            ("keyre", "dsl_key_regex",
              "event_id", None, [("etype", "etype", "s")]),
-            ("multi", "dsl_multigroup", _dsl_query("etype~error,big~yes§etype~view"),
+            ("multi", "dsl_multigroup",
              "event_id", None, [("etype", "etype", "s")]),
         ],
         "geocode_suite": [
-            ("tile", "geocode_tile", _q_geocode_tile,
-             "tile", None, [("n", "n", "i")]),
-            ("arrow", "geocode_arrow", _q_geocode_arrow,
+            ("tile", "geocode_tile", "tile", None, [("n", "n", "i")]),
+            ("arrow", "geocode_arrow",
              "doc_id", None, [("lat", "lat", "d"), ("lon", "lon", "d")]),
         ],
         "tiles_suite": [
-            ("rollup", "tile_rollup", _q_tile_rollup,
-             "tile", None, [("n", "n", "i")]),
-            ("agg", "tile_aggregate", _q_tile_aggregate,
+            ("rollup", "tile_rollup", "tile", None, [("n", "n", "i")]),
+            ("agg", "tile_aggregate",
              "tile", None, [("n", "n", "i"), ("lat_min", "lat_min", "d"),
                             ("lon_max", "lon_max", "d")]),
-            ("pyramid", "tile_pyramid", _q_tile_pyramid,
+            ("pyramid", "tile_pyramid",
              "qk", None, [("level", "level", "i"), ("n", "n", "i")]),
-            ("cover", "compact_cover", _q_compact_cover,
-             "cell", None, [("res", "res", "i")]),
-            ("geohash", "geohash_assign", _q_geohash,
-             "cid", None, [("gh", "gh", "s")]),
-            ("quadkey", "quadkey_assign", _q_quadkey,
+            ("cover", "compact_cover", "cell", None, [("res", "res", "i")]),
+            ("geohash", "geohash_assign", "cid", None, [("gh", "gh", "s")]),
+            ("quadkey", "quadkey_assign",
              "cid", None, [("qk", "qk", "s"), ("qk5", "qk5", "s")]),
         ],
         "portable_hash_suite": [
-            ("minhash", "minhash_portable", _q_minhash_portable,
+            ("minhash", "minhash_portable",
              "doc_id", None, [(f"m{j}", f"m{j}", "i") for j in range(16)]),
-            ("simhash", "simhash_portable", _q_simhash_portable,
+            ("simhash", "simhash_portable",
              "a", "b", [("hamming", "hamming", "i")]),
         ],
         "search_suite": [
-            ("term", "term_search", _q_term_search,
-             "doc_id", None, [("hit", None, "one")]),
-            ("invidx", "inverted_index", _q_inverted_index,
+            ("term", "term_search", "doc_id", None, [("hit", None, "one")]),
+            ("invidx", "inverted_index",
              "token", None, [("df_count", "df_count", "i"),
                              ("postings", "postings", "s")]),
-            ("bigrams", "top_bigrams", _q_top_bigrams,
+            ("bigrams", "top_bigrams",
              "gram", None, [("occurrences", "occurrences", "i")]),
-            ("bm25", "bm25_rank", _q_bm25,
+            ("bm25", "bm25_rank",
              "doc_id", None, [("score", "score", "d"), ("dl", "dl", "i")]),
             # wave 27 folds into the same slot
-            ("rrf", "rrf_fuse", _q_rrf,
+            ("rrf", "rrf_fuse",
              "doc_id", None, [("n_rankers", "n_rankers", "i"),
                               ("rrf_e6", "rrf_e6", "i")]),
-            ("bpe", "bpe_encode", _q_bpe_encode,
-             "token", None, [("cnt", "cnt", "i")]),
-            ("kwic", "kwic_merge", _q_kwic,
+            ("bpe", "bpe_encode", "token", None, [("cnt", "cnt", "i")]),
+            ("kwic", "kwic_merge",
              "doc_id", "pos", [("context", "context", "s")]),
         ],
         "dedup_suite": [
-            ("exact", "exact_dedup", _q_exact_dedup,
+            ("exact", "exact_dedup",
              "doc_id", None, [("dup_count", "dup_count", "i")]),
-            ("incr", "incremental_dedup", _q_incremental_dedup,
-             "doc_id", None, [("fp", "fp", "s")]),
+            ("incr", "incremental_dedup", "doc_id", None, [("fp", "fp", "s")]),
         ],
         "weburl_suite": [
-            ("latest", "url_latest_dedup", _q_url_dedup,
+            ("latest", "url_latest_dedup",
              "norm_url", None, [("url", "url", "s"), ("warc_ts", "warc_ts", "i")]),
             # wave 32 folds into the same slot
-            ("risk", "url_risk", _q_url_risk,
+            ("risk", "url_risk",
              "url", None,
              [("punycode", "punycode", "b"), ("ip_host", "ip_host", "b"),
               ("many_subdomains", "many_subdomains", "b"),
@@ -8666,44 +8661,44 @@ def _suite_specs():
               ("at_sign", "at_sign", "b"), ("long_url", "long_url", "b"),
               ("double_ext", "double_ext", "b"),
               ("risk_score_e2", "risk_score_e2", "i")]),
-            ("host", "host_stats", _q_host_stats,
+            ("host", "host_stats",
              "host", None, [("captures", "captures", "i"),
                             ("distinct_urls", "distinct_urls", "i"),
                             ("last_seen", "last_seen", "i")]),
-            ("diff", "snapshot_diff", _q_snapshot_diff,
+            ("diff", "snapshot_diff",
              "key", None, [("status", "status", "s")]),
-            ("domain", "domain_stats", _q_domain_stats,
+            ("domain", "domain_stats",
              "domain", None, [("n_pages", "n_pages", "i"),
                               ("first_ts", "first_ts", "i"),
                               ("last_ts", "last_ts", "i"),
                               ("n_hosts", "n_hosts", "i")]),
-            ("scd2", "scd2_history", _q_scd2,
+            ("scd2", "scd2_history",
              "norm_url", "valid_from",
              [("fp", "fp", "s"), ("valid_to_x", "valid_to_x", "i"),
               ("is_current", "is_current", "b")]),
         ],
         "sample_rank_suite": [
-            ("strat", "stratified_sample", _q_stratified_sample,
+            ("strat", "stratified_sample",
              "doc_id", None, [("lang", "lang", "s")]),
-            ("topk", "topk_per_lang", _q_topk_group,
+            ("topk", "topk_per_lang",
              "doc_id", None, [("lang", "lang", "s"), ("n_chars", "n_chars", "i"),
                               ("rk", "rk", "i")]),
         ],
         "spatial3_suite": [
-            ("nearseg", "nearest_segment", _q_nearest_segment,
+            ("nearseg", "nearest_segment",
              "cid", "sid", [("dist2_deg", "dist2_deg", "d"),
                             ("t_along", "t_along", "d")]),
-            ("segx", "segment_intersect", _q_segment_intersect,
+            ("segx", "segment_intersect",
              "cid", "sid", [("hit", None, "one")]),
-            ("anti", "spatial_anti", _q_spatial_anti,
+            ("anti", "spatial_anti",
              "cid", None, [("lat", "lat", "d"), ("lon", "lon", "d")]),
         ],
         "trajectory_suite": [
-            ("travel", "travel_stats", _q_travel_stats,
+            ("travel", "travel_stats",
              "user_id", None, [("n_points", "n_points", "i"),
                                ("total_dist_e9", "total_dist_e9", "i"),
                                ("max_step_deg", "max_step_deg", "d")]),
-            ("stay", "stay_points", _q_stay_points,
+            ("stay", "stay_points",
              "user_id", "stay_id",
              [("n_points", "n_points", "i"), ("ts_start", "ts_start", "ts"),
               ("ts_end", "ts_end", "ts"), ("lat_min", "lat_min", "d"),
@@ -8711,347 +8706,343 @@ def _suite_specs():
               ("lon_max", "lon_max", "d")]),
             # simplify_lines (Douglas-Peucker) stays OUT: recursive
             # geometry with no SQL oracle (rows-only + brute-force pytest)
-            ("od", "od_flows", _q_od_flows,
+            ("od", "od_flows",
              ["from_x", "from_y"], ["to_x", "to_y"],
              [("n_trips", "n_trips", "i")]),
             # wave 25 folds into the same slot
-            ("headmix", "heading_mix", _q_heading_mix,
+            ("headmix", "heading_mix",
              "user_id", "heading", [("n_steps", "n_steps", "i")]),
         ],
         "graph_suite": [
-            ("pagerank", "pagerank", _q_pagerank,
+            ("pagerank", "pagerank",
              "node", None, [("rank_e9", "rank_e9", "i")]),
-            ("degree", "degree_stats", _q_degree_stats,
+            ("degree", "degree_stats",
              "node", None, [("out_deg", "out_deg", "i"),
                             ("in_deg", "in_deg", "i"),
                             ("recip_deg", "recip_deg", "i")]),
-            ("hotspot", "hotspots", _q_hotspots,
+            ("hotspot", "hotspots",
              ["cx", "cy"], None, [("n_points", "n_points", "i"),
                                   ("cluster_id", "cluster_id", "i")]),
-            ("focal", "focal_smooth", _q_focal,
+            ("focal", "focal_smooth",
              ["cx", "cy"], None, [("n_focal", "n_focal", "i")]),
             # wave 25 folds into the same slot
-            ("bfs", "bfs_hops", _q_bfs_hops,
-             "node", None, [("hop", "hop", "i")]),
+            ("bfs", "bfs_hops", "node", None, [("hop", "hop", "i")]),
             # wave 31 folds into the same slot
-            ("ppr", "ppr_rank", _q_ppr,
-             "node", None, [("rank_e9", "rank_e9", "i")]),
+            ("ppr", "ppr_rank", "node", None, [("rank_e9", "rank_e9", "i")]),
         ],
         "wave5_suite": [
-            ("wsample", "weighted_sample", _q_weighted_sample,
+            ("wsample", "weighted_sample",
              "doc_id", None, [("lang", "lang", "s"), ("w_used", "w_used", "i")]),
-            ("ffill", "resample_ffill", _q_resample_ffill,
+            ("ffill", "resample_ffill",
              "user_id", "bucket",
              [("bucket_start", "bucket_start", "i"), ("value", "value", "d"),
               ("filled", "filled", "b")]),
-            ("fence", "geofence_transitions", _q_geofence,
+            ("fence", "geofence_transitions",
              "user_id", ["fence_id", "ts_us"], [("event", "event", "s")]),
-            ("anchor", "anchor_stats", _q_anchor_stats,
+            ("anchor", "anchor_stats",
              "dst", None,
              [("n_links", "n_links", "i"), ("n_srcs", "n_srcs", "i"),
               ("top_anchor", "top_anchor", "s"),
               ("top_anchor_count", "top_anchor_count", "i")]),
-            ("lift", "token_lift", _q_token_lift,
+            ("lift", "token_lift",
              "term_a", "term_b",
              [("pair_count", "pair_count", "i"), ("df_a", "df_a", "i"),
               ("df_b", "df_b", "i"), ("lift_e6", "lift_e6", "i")]),
             # wave 6 folds into the same slot (all-integer outputs)
-            ("tri", "triangle_stats", _q_triangle_stats,
+            ("tri", "triangle_stats",
              "node", None,
              [("deg", "deg", "i"), ("n_tri", "n_tri", "i"),
               ("cc_e6", "cc_e6", "i")]),
-            ("crawl", "crawl_schedule", _q_crawl_schedule,
+            ("crawl", "crawl_schedule",
              "url", None,
              [("host", "host", "s"), ("priority", "priority", "i"),
               ("slot", "slot", "i"),
               ("fetch_offset_ms", "fetch_offset_ms", "i")]),
-            ("areal", "areal_interpolate", _q_areal,
+            ("areal", "areal_interpolate",
              "d_id", None,
              [("n_src", "n_src", "i"), ("inter_u2", "inter_u2", "i"),
               ("value_out", "value_out", "i")]),
-            ("lm", "lm_score", _q_lm_score,
+            ("lm", "lm_score",
              "doc_id", None,
              [("n_bigrams", "n_bigrams", "i"), ("n_oov", "n_oov", "i"),
               ("lm_score_e6", "lm_score_e6", "i")]),
             # wave 7 folds into the same slot
-            ("bpe", "bpe_pairs", _q_bpe_pairs,
+            ("bpe", "bpe_pairs",
              "a", "b", [("pair_count", "pair_count", "i")]),
-            ("dissolve", "dissolve_area", _q_dissolve,
+            ("dissolve", "dissolve_area",
              "g", None,
              [("n_boxes", "n_boxes", "i"), ("box_cells", "box_cells", "i"),
               ("union_cells", "union_cells", "i"),
               ("overlap_e6", "overlap_e6", "i")]),
-            ("coloc", "co_location", _q_colocate,
+            ("coloc", "co_location",
              "user_a", "user_b", [("n_meet", "n_meet", "i")]),
-            ("align", "align_translations", _q_align,
+            ("align", "align_translations",
              "host", ["path_rest", "lang_a", "lang_b"],
              [("id_a", "id_a", "i"), ("id_b", "id_b", "i")]),
             # wave 8 folds into the same slot
-            ("redirect", "redirect_resolve", _q_redirects,
+            ("redirect", "redirect_resolve",
              "node", None,
              [("terminal", "terminal", "i"), ("hops", "hops", "i"),
               ("cyclic", "cyclic", "b")]),
-            ("funnel", "funnel_steps", _q_funnel,
+            ("funnel", "funnel_steps",
              "user_id", None,
              [("t1", "t1", "i"), ("t2", "t2", "i"), ("t3", "t3", "i"),
               ("stage_reached", "stage_reached", "i")]),
-            ("ivjoin", "interval_overlap", _q_interval_overlap,
+            ("ivjoin", "interval_overlap",
              "a_id", "b_id",
              [("ov_s", "ov_s", "i"), ("ov_e", "ov_e", "i"),
               ("ov_len", "ov_len", "i")]),
-            ("rog", "radius_gyration", _q_rog,
+            ("rog", "radius_gyration",
              "user_id", None,
              [("n_points", "n_points", "i"), ("rog2_e12", "rog2_e12", "i")]),
-            ("moran", "local_moran", _q_moran,
+            ("moran", "local_moran",
              "cx", "cy",
              [("x", "x", "i"), ("k_nbrs", "k_nbrs", "i"),
               ("nbr_sum", "nbr_sum", "i"), ("lisa_e0", "lisa_e0", "i")]),
             # wave 9 folds into the same slot
-            ("hits", "hits_scores", _q_hits,
+            ("hits", "hits_scores",
              "node", None,
              [("auth_e9", "auth_e9", "i"), ("hub_e9", "hub_e9", "i")]),
-            ("decay", "decayed_counts", _q_decay,
+            ("decay", "decayed_counts",
              "key", "bucket", [("dec", "dec", "i")]),
-            ("dwell", "cell_dwell", _q_dwell,
+            ("dwell", "cell_dwell",
              "cx", "cy",
              [("dwell_us", "dwell_us", "i"),
               ("n_segments", "n_segments", "i"),
               ("n_users", "n_users", "i")]),
-            ("alignseg", "align_segments", _q_align_segments,
+            ("alignseg", "align_segments",
              ["id_a", "id_b"], "seg_idx",
              [("n_tok_a", "n_tok_a", "i"), ("n_tok_b", "n_tok_b", "i"),
               ("n_shared", "n_shared", "i")]),
             # wave 10 folds into the same slot
-            ("gmoran", "global_moran", _q_gmoran,
+            ("gmoran", "global_moran",
              "n_cells", None,
              [("s_total", "s_total", "i"), ("w_pairs", "w_pairs", "i"),
               ("var_e0", "var_e0", "i"), ("moran_e6", "moran_e6", "i")]),
-            ("robots", "robots_filter", _q_robots,
+            ("robots", "robots_filter",
              "doc_id", None,
              [("url", "url", "s"),
               ("matched_prefix", "matched_prefix", "s"),
               ("allowed", "allowed", "b")]),
-            ("ra", "link_predict", _q_link_predict,
+            ("ra", "link_predict",
              "node_a", "node_b",
              [("n_common", "n_common", "i"), ("ra_e6", "ra_e6", "i")]),
-            ("markov", "markov_transitions", _q_markov,
+            ("markov", "markov_transitions",
              "from_type", "to_type",
              [("n", "n", "i"), ("p_e6", "p_e6", "i")]),
             # wave 11 folds into the same slot
-            ("kcore", "kcore_members", _q_kcore,
+            ("kcore", "kcore_members",
              "node", None, [("core_deg", "core_deg", "i")]),
-            ("cohort", "cohort_retention", _q_cohort,
+            ("cohort", "cohort_retention",
              "cohort", "bucket_offset",
              [("n_active", "n_active", "i"),
               ("cohort_size", "cohort_size", "i"),
               ("retention_e6", "retention_e6", "i")]),
-            ("tdiv", "type_diversity", _q_type_div,
+            ("tdiv", "type_diversity",
              "user_id", None,
              [("n_events", "n_events", "i"), ("n_types", "n_types", "i"),
               ("gini_e6", "gini_e6", "i")]),
-            ("burst", "burst_detect", _q_burst,
+            ("burst", "burst_detect",
              "event_type", "bucket",
              [("n", "n", "i"), ("trail_sum", "trail_sum", "i"),
               ("burst_e6", "burst_e6", "i")]),
-            ("geolift", "term_geo_lift", _q_term_geo_lift,
+            ("geolift", "term_geo_lift",
              "cell", "term",
              [("n", "n", "i"), ("term_total", "term_total", "i"),
               ("cell_total", "cell_total", "i"), ("lift_e6", "lift_e6", "i")]),
             # wave 12 folds into the same slot
-            ("contain", "containment_pairs", _q_containment,
+            ("contain", "containment_pairs",
              "a", "b",
              [("size_a", "size_a", "i"), ("size_b", "size_b", "i"),
               ("common", "common", "i"),
               ("containment_e6", "containment_e6", "i")]),
-            ("period", "periodicity", _q_periodicity,
+            ("period", "periodicity",
              "user_id", None,
              [("n_gaps", "n_gaps", "i"), ("top_gap", "top_gap", "i"),
               ("top_n", "top_n", "i"), ("share_e6", "share_e6", "i")]),
-            ("cocite", "cocitation", _q_cocitation,
+            ("cocite", "cocitation",
              "node_a", "node_b",
              [("common", "common", "i"), ("in_a", "in_a", "i"),
               ("in_b", "in_b", "i"), ("cocite_e6", "cocite_e6", "i")]),
-            ("urltmpl", "url_templates", _q_url_templates,
+            ("urltmpl", "url_templates",
              "template", None,
              [("n_pages", "n_pages", "i"), ("n_hosts", "n_hosts", "i"),
               ("sample_min_url", "sample_min_url", "s")]),
-            ("ctrans", "cell_transitions", _q_cell_transitions,
+            ("ctrans", "cell_transitions",
              ["from_cx", "from_cy"], ["to_cx", "to_cy"],
              [("n", "n", "i"), ("p_e6", "p_e6", "i")]),
             # wave 13 folds into the same slot
-            ("trust", "trustrank", _q_trustrank,
+            ("trust", "trustrank",
              "node", None, [("trust_e9", "trust_e9", "i")]),
-            ("hostg", "host_graph", _q_host_graph,
+            ("hostg", "host_graph",
              "from_host", "to_host",
              [("n_links", "n_links", "i"),
               ("n_src_pages", "n_src_pages", "i")]),
-            ("cusum", "cusum_changepoint", _q_cusum,
+            ("cusum", "cusum_changepoint",
              "event_type", None,
              [("n_buckets", "n_buckets", "i"), ("total", "total", "i"),
               ("split_bucket", "split_bucket", "i"),
               ("d_max", "d_max", "i"), ("cusum_e6", "cusum_e6", "i")]),
-            ("thin", "spatial_thin", _q_spatial_thin,
+            ("thin", "spatial_thin",
              "doc_id", None,
              [("lat", "lat", "d"), ("lon", "lon", "d"),
               ("cell", "cell", "i"), ("thin_rank", "thin_rank", "i")]),
             # wave 14 folds into the same slot
-            ("budget", "crawl_budget", _q_crawl_budget,
+            ("budget", "crawl_budget",
              "host", None,
              [("n_pages", "n_pages", "i"), ("base_quota", "base_quota", "i"),
               ("bonus", "bonus", "i"), ("quota", "quota", "i")]),
-            ("dilate", "dilate_cover", _q_dilate_cover,
-             "cx", "cy", [("covered", None, "one")]),
+            ("dilate", "dilate_cover", "cx", "cy", [("covered", None, "one")]),
             # wave 15 folds into the same slot
-            ("idw", "idw_surface", _q_idw,
+            ("idw", "idw_surface",
              "cx", "cy",
              [("n_samples", "n_samples", "i"), ("w_sum", "w_sum", "i"),
               ("est", "est", "i")]),
-            ("mix", "script_mix", _q_script_mix,
+            ("mix", "script_mix",
              "doc_id", None,
              [("n_latin", "n_latin", "i"), ("n_digit", "n_digit", "i"),
               ("n_cyr", "n_cyr", "i"), ("n_cjk", "n_cjk", "i"),
               ("n_marks", "n_marks", "i"), ("mix_e6", "mix_e6", "i")]),
-            ("profile", "activity_profile", _q_activity_profile,
+            ("profile", "activity_profile",
              "event_type", ["dow", "hour"],
              [("n", "n", "i"), ("share_e6", "share_e6", "i")]),
             # wave 16 folds into the same slot
-            ("lpa", "lpa_communities", _q_lpa,
-             "id", None, [("label", "label", "i")]),
-            ("grad", "grid_gradient", _q_grid_gradient,
+            ("lpa", "lpa_communities", "id", None, [("label", "label", "i")]),
+            ("grad", "grid_gradient",
              "cx", "cy",
              [("n", "n", "i"), ("gx", "gx", "i"), ("gy", "gy", "i"),
               ("g2", "g2", "i")]),
-            ("tjac", "traj_jaccard", _q_traj_jaccard,
+            ("tjac", "traj_jaccard",
              "user_a", "user_b",
              [("n_a", "n_a", "i"), ("n_b", "n_b", "i"),
               ("inter", "inter", "i"), ("jaccard_e6", "jaccard_e6", "i")]),
             # wave 17 folds into the same slot
-            ("hq", "len_quantiles", _q_len_quantiles,
+            ("hq", "len_quantiles",
              "lang", "source",
              [("n_total", "n_total", "i")]
              + [(f"p{p}", f"p{p}", "i") for p in _HQ_PCTS]),
-            ("conc", "user_concentration", _q_user_concentration,
+            ("conc", "user_concentration",
              "user_id", None,
              [("n_items", "n_items", "i"), ("n_total", "n_total", "i"),
               ("top_share_e6", "top_share_e6", "i"),
               ("hhi_e8", "hhi_e8", "i")]),
             # wave 18 folds into the same slot
-            ("geary", "geary_stat", _q_geary,
+            ("geary", "geary_stat",
              "n_cells", None,
              [("s_total", "s_total", "i"), ("w_pairs", "w_pairs", "i"),
               ("geary_e6", "geary_e6", "i")]),
-            ("qmod", "lpa_modularity", _q_lpa_modularity,
+            ("qmod", "lpa_modularity",
              "label", None,
              [("n_nodes", "n_nodes", "i"), ("m_in", "m_in", "i"),
               ("d_tot", "d_tot", "i"), ("q_e9", "q_e9", "i")]),
             # wave 19 folds into the same slot
-            ("trend", "daily_trend", _q_daily_trend,
+            ("trend", "daily_trend",
              "event_type", None,
              [("n", "n", "i"), ("slope_e6", "slope_e6", "i"),
               ("intercept_e6", "intercept_e6", "i"),
               ("sr2_e6", "sr2_e6", "i")]),
-            ("assort", "assortativity", _q_assortativity,
+            ("assort", "assortativity",
              "m_edges", None,
              [("sum_deg", "sum_deg", "i"), ("sum_deg_sq", "sum_deg_sq", "i"),
               ("sum_jk2", "sum_jk2", "i"), ("r_e6", "r_e6", "i")]),
-            ("grav", "gravity_flows", _q_gravity,
+            ("grav", "gravity_flows",
              ["from_x", "from_y"], ["to_x", "to_y"],
              [("n", "n", "i"), ("d_cheb", "d_cheb", "i"),
               ("outflow", "outflow", "i"), ("inflow", "inflow", "i"),
               ("expected_e6", "expected_e6", "i"),
               ("lift_e6", "lift_e6", "i")]),
-            ("vocab", "vocab_growth", _q_vocab_growth,
+            ("vocab", "vocab_growth",
              "bucket", None,
              [("n_docs", "n_docs", "i"), ("n_tokens", "n_tokens", "i"),
               ("new_types", "new_types", "i"),
               ("cum_tokens", "cum_tokens", "i"),
               ("cum_types", "cum_types", "i")]),
             # wave 20 folds into the same slot
-            ("novel", "ngram_novelty", _q_ngram_novelty,
+            ("novel", "ngram_novelty",
              "doc_id", None,
              [("n_gram_types", "n_gram_types", "i"),
               ("novel_types", "novel_types", "i"),
               ("novelty_e6", "novelty_e6", "i")]),
-            ("pagn", "pagination_groups", _q_pagination,
+            ("pagn", "pagination_groups",
              "family", None,
              [("n_pages", "n_pages", "i"), ("min_page", "min_page", "i"),
               ("max_page", "max_page", "i"),
               ("contiguous", "contiguous", "b")]),
-            ("ripley", "ripley_pairs", _q_ripley,
+            ("ripley", "ripley_pairs",
              "r", None,
              [("n_points", "n_points", "i"), ("n_cells", "n_cells", "i"),
               ("pairs_leq", "pairs_leq", "i"), ("k_e6", "k_e6", "i")]),
             # wave 21 folds into the same slot
-            ("gistar", "gi_star", _q_gi_star,
+            ("gistar", "gi_star",
              ["cx", "cy"], None,
              [("x", "x", "i"), ("w_i", "w_i", "i"), ("t_i", "t_i", "i"),
               ("gi_sign", "gi_sign", "i"), ("gi2_e6", "gi2_e6", "i")]),
-            ("knox", "knox_pairs", _q_knox,
+            ("knox", "knox_pairs",
              "n_events", None,
              [("n_pairs", "n_pairs", "i"), ("ns_pairs", "ns_pairs", "i"),
               ("nt_pairs", "nt_pairs", "i"), ("x_pairs", "x_pairs", "i"),
               ("knox_lift_e6", "knox_lift_e6", "i")]),
-            ("editdup", "edit_near_dup", _q_edit_near_dup,
+            ("editdup", "edit_near_dup",
              "a", "b",
              [("len_a", "len_a", "i"), ("len_b", "len_b", "i"),
               ("dist", "dist", "i")]),
             # wave 22 folds into the same slot
-            ("qtree", "quadtree_bins", _q_quadtree,
+            ("qtree", "quadtree_bins",
              ["res", "cx", "cy"], None,
              [("n_points", "n_points", "i"), ("forced", "forced", "b")]),
-            ("mk", "mann_kendall", _q_mann_kendall,
+            ("mk", "mann_kendall",
              "event_type", None,
              [("n_obs", "n_obs", "i"), ("s_stat", "s_stat", "i"),
               ("var18", "var18", "i"), ("mk2_e6", "mk2_e6", "i")]),
-            ("clq", "colocation_lift", _q_colocation_lift,
+            ("clq", "colocation_lift",
              "type_a", "type_b",
              [("n_a", "n_a", "i"), ("n_b", "n_b", "i"),
               ("obs_pairs", "obs_pairs", "i"), ("clq_e6", "clq_e6", "i")]),
             # wave 23 folds into the same slot
-            ("emerge", "emerging_hotspots", _q_emerging,
+            ("emerge", "emerging_hotspots",
              ["cx", "cy"], None,
              [("n_buckets", "n_buckets", "i"), ("s_stat", "s_stat", "i"),
               ("var18", "var18", "i"), ("mk2_e6", "mk2_e6", "i")]),
             # wave 24 folds into the same slot
-            ("chi2", "lang_divergence", _q_lang_divergence,
+            ("chi2", "lang_divergence",
              "source", None,
              [("n", "n", "i"), ("n_cats", "n_cats", "i"),
               ("chi2_e6", "chi2_e6", "i")]),
-            ("benford", "benford_anomaly", _q_benford,
+            ("benford", "benford_anomaly",
              "source", None,
              [("n_numbers", "n_numbers", "i"), ("chi2_e6", "chi2_e6", "i")]),
             # wave 25 folds into the same slot
-            ("gini", "gini_len", _q_gini,
+            ("gini", "gini_len",
              "source", None,
              [("n", "n", "i"), ("sum_val", "sum_val", "i"),
               ("gini_e6", "gini_e6", "i")]),
             # wave 26 folds into the same slot
-            ("madout", "mad_outliers", _q_mad_outliers,
+            ("madout", "mad_outliers",
              "source", None,
              [("n", "n", "i"), ("median", "median", "d"),
               ("mad", "mad", "d"), ("n_outliers", "n_outliers", "i")]),
-            ("rollact", "rolling_active", _q_rolling_active,
+            ("rollact", "rolling_active",
              "day_end", None,
              [("active_users", "active_users", "i")]),
             # wave 29 folds into the same slot
-            ("ks", "ks_divergence", _q_ks_divergence,
+            ("ks", "ks_divergence",
              "source", None,
              [("n", "n", "i"), ("ks_e6", "ks_e6", "i")]),
             # wave 32 folds into the same slot
-            ("theil", "theil_sen", _q_theil_sen,
+            ("theil", "theil_sen",
              "event_type", None,
              [("n_obs", "n_obs", "i"), ("n_pairs", "n_pairs", "i"),
               ("ts_slope_e6", "ts_slope_e6", "d")]),
         ],
         "curation_suite": [
-            ("contam", "contamination", _q_contamination,
+            ("contam", "contamination",
              "train_id", "bench_id", [("n_shared", "n_shared", "i")]),
-            ("chunk", "chunk_docs", _q_chunk_docs,
+            ("chunk", "chunk_docs",
              "doc_id", "chunk_id",
              [("token_start", "token_start", "i"),
               ("token_end", "token_end", "i"),
               ("chunk_text", "chunk_text", "s")]),
-            ("linededup", "line_dedup", _q_line_dedup,
+            ("linededup", "line_dedup",
              "doc_id", None, [("text_clean", "text_clean", "s"),
                               ("n_kept", "n_kept", "i"),
                               ("n_dropped", "n_dropped", "i")]),
@@ -9062,8 +9053,9 @@ def _suite_specs():
 def _make_suite(name: str) -> Callable[[SparkSession, str], DataFrame]:
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         parts = [
-            _suite_part(fn(spark, sf_dir), tag, k1, k2, metrics)
-            for tag, _key, fn, k1, k2, metrics in _suite_specs()[name]
+            _suite_part(QUERY_INDEX[key].build(spark, sf_dir),
+                        tag, k1, k2, metrics)
+            for tag, key, k1, k2, metrics in _suite_specs()[name]
         ]
         out = parts[0]
         for p in parts[1:]:
@@ -9082,7 +9074,7 @@ def _suite_oracle_sql(sqls: dict[str, str]) -> dict[str, str]:
     out = {}
     for name, spec in _suite_specs().items():
         ctes, selects = [], []
-        for tag, key, _fn, k1, k2, metrics in spec:
+        for tag, key, k1, k2, metrics in spec:
             ctes.append(f"_s_{tag} AS ({sqls[key]})")
             selects.extend(_suite_part_sql(tag, k1, k2, metrics))
         out[name] = "WITH " + ", ".join(ctes) + " " + " UNION ALL ".join(selects)
@@ -9095,435 +9087,335 @@ def entry(spark: SparkSession) -> DataFrame:
     return _q_geocode_tile(spark, "/root/testdata/sf0.001")
 
 
+class Query(NamedTuple):
+    """One row of the query table."""
+
+    name: str
+    build: Callable[[SparkSession, str], DataFrame]
+    gate: bool = False  # in the driver's correctness gate
+    bench: bool = False  # timed by bench.py
+
+
+def index_queries(table: Iterable[Query]) -> dict[str, Query]:
+    """Name → row, in table order. A name registered twice raises: every
+    view of the table is a dict, where the second row would silently
+    replace the first."""
+    index: dict[str, Query] = {}
+    for q in table:
+        if q.name in index:
+            raise ValueError(f"query {q.name!r} is registered twice")
+        index[q.name] = q
+    return index
+
+
+# The one query table; queries(), extra_queries(), bench.BENCH_QUERIES and
+# the suites all read it. The driver compares only the first 50 entries of
+# queries(), so the gate rows come first and their order is part of the
+# contract. A gate slot goes to the row that certifies the most: a suite,
+# or a superset path (within_dist_wrap covers within_dist, ivf_full_probe
+# equals brute-force cosine_topk, textops_all folds the five scalar
+# textops). What a gate row folds or supersedes keeps its own
+# native-schema row among the extras. A rows-only row has no oracle_sql()
+# entry; its comment says why.
+QUERY_TABLE: tuple[Query, ...] = (
+    Query("dsl_suite", _make_suite("dsl_suite"), gate=True),
+    Query("dsl_xway_suppress", _q_dsl_xway, gate=True),
+    Query("way_denorm_bbox", _q_way_denorm, gate=True, bench=True),
+    Query("entrance_pick", _q_entrance_pick, gate=True),
+    Query("entrance_addr", _q_entrance_addr, gate=True),
+    Query("street_translate", _q_street_translate, gate=True),
+    Query("merge_segments", _q_merge_segments, gate=True),
+    Query("unit_promotion", _q_unit_promotion, gate=True),
+    Query("amenity_translate", _q_amenity_translate, gate=True),
+    Query("relation_bbox", _q_relation_bbox, gate=True, bench=True),
+    Query("cell_assign", _q_cell_assign, gate=True),
+    Query("tile_polygons", _q_tile_polygons, gate=True),
+    Query("semantic_dedup", _q_semantic_dedup, gate=True, bench=True),
+    Query("geocode_suite", _make_suite("geocode_suite"), gate=True),
+    Query("extract_text", _q_extract_text, gate=True),
+    Query("pip_join_rect", _q_pip, gate=True, bench=True),
+    Query("knn_grid", _q_knn, gate=True, bench=True),
+    Query("dedup_suite", _make_suite("dedup_suite"), gate=True),
+    Query("jaccard_pairs", _q_jaccard, gate=True, bench=True),
+    Query("dedup_groups", _q_dedup_groups, gate=True),
+    Query("portable_hash_suite", _make_suite("portable_hash_suite"), gate=True),
+    Query("ivf_full_probe", _q_ivf_full_probe, gate=True),
+    Query("embedding_near_dup_exact", _q_embedding_near_dup_exact, gate=True),
+    Query("weburl_suite", _make_suite("weburl_suite"), gate=True),
+    Query("repetition", _q_repetition, gate=True, bench=True),
+    Query("bbox_intersect", _q_bbox_join, gate=True, bench=True),
+    Query("windowed_events", _q_windowed_events, gate=True, bench=True),
+    Query("asof_match", _q_asof, gate=True, bench=True),
+    Query("sessionize", _q_sessionize, gate=True, bench=True),
+    Query("sample_rank_suite", _make_suite("sample_rank_suite"), gate=True),
+    Query("ts_probe", _q_ts_probe, gate=True, bench=True),
+    Query("host_median_len", _q_host_median, gate=True, bench=True),
+    Query("within_dist_wrap", _q_within_dist_wrap, gate=True, bench=True),
+    Query("textops_all", _q_textops_all, gate=True),
+    Query("pack_sequences", _q_pack_sequences, gate=True, bench=True),
+    Query("search_suite", _make_suite("search_suite"), gate=True),
+    Query("cms_tokens", _q_cms_tokens, gate=True, bench=True),
+    Query("poly_metrics", _q_poly_metrics, gate=True, bench=True),
+    Query("spatial3_suite", _make_suite("spatial3_suite"), gate=True),
+    Query("trajectory_suite", _make_suite("trajectory_suite"), gate=True),
+    Query("graph_suite", _make_suite("graph_suite"), gate=True),
+    Query("curation_suite", _make_suite("curation_suite"), gate=True),
+    Query("span_dedup", _q_span_dedup, gate=True, bench=True),
+    Query("rasterize", _q_rasterize, gate=True, bench=True),
+    Query("shortest_paths", _q_shortest_paths, gate=True, bench=True),
+    Query("kmeans_clusters", _q_kmeans, gate=True, bench=True),
+    Query("tfidf_keywords", _q_tfidf, gate=True, bench=True),
+    Query("resample_mixture", _q_resample_mixture, gate=True, bench=True),
+    Query("kmv_distinct", _q_kmv, gate=True, bench=True),
+    Query("wave5_suite", _make_suite("wave5_suite"), gate=True),
+    # ---- extras: checked by tools/check_oracle.py, not by the driver ----
+    # rows-only: binary codec output
+    Query("media_features", _q_media_features, bench=True),
+    Query("within_dist", _q_within_dist),
+    Query("tiles_suite", _make_suite("tiles_suite")),
+    Query("dsl_value_regex", _dsl_query("etype~#r"), bench=True),
+    Query("dsl_or_values", _dsl_query("etype~click;view")),
+    Query("dsl_and_group", _dsl_query("etype~click§big~yes")),
+    Query("dsl_key_regex", _dsl_query("#^k~#7")),
+    Query("dsl_multigroup", _dsl_query("etype~error,big~yes§etype~view")),
+    Query("tile_aggregate", _q_tile_aggregate, bench=True),
+    Query("tile_rollup", _q_tile_rollup),
+    Query("geocode_tile", _q_geocode_tile, bench=True),
+    Query("geocode_arrow", _q_geocode_arrow),
+    Query("minhash_portable", _q_minhash_portable),
+    Query("simhash_portable", _q_simhash_portable),
+    Query("term_search", _q_term_search),
+    Query("inverted_index", _q_inverted_index, bench=True),
+    Query("top_bigrams", _q_top_bigrams, bench=True),
+    Query("bm25_rank", _q_bm25, bench=True),
+    Query("exact_dedup", _q_exact_dedup),
+    Query("incremental_dedup", _q_incremental_dedup),
+    Query("url_latest_dedup", _q_url_dedup, bench=True),
+    Query("host_stats", _q_host_stats),
+    Query("snapshot_diff", _q_snapshot_diff, bench=True),
+    Query("scd2_history", _q_scd2, bench=True),
+    Query("quadkey_assign", _q_quadkey, bench=True),
+    Query("stratified_sample", _q_stratified_sample, bench=True),
+    Query("topk_per_lang", _q_topk_group, bench=True),
+    Query("cosine_topk", _q_cosine_topk, bench=True),
+    Query("token_count", _q_token_count),
+    Query("quality_score", _q_quality, bench=True),
+    Query("lang_detect", _q_lang, bench=True),
+    Query("fingerprint", _q_fingerprint),
+    Query("redact_pii", _q_redact, bench=True),
+    # rows-only: seeded hash; twin: minhash_portable
+    Query("minhash_pairs", _q_minhash, bench=True),
+    # rows-only: seeded hash; twin: simhash_portable
+    Query("simhash_pairs", _q_simhash, bench=True),
+    # rows-only: seeded hash; twin: cosine_topk
+    Query("lsh_cosine_topk", _q_lsh_topk, bench=True),
+    # rows-only: seeded centroids; twin: ivf_full_probe
+    Query("ivf_cosine_topk", _q_ivf_topk, bench=True),
+    # rows-only: seeded hash; twin: *_exact
+    Query("embedding_near_dup", _q_embedding_near_dup, bench=True),
+    Query("contamination", _q_contamination, bench=True),
+    Query("chunk_docs", _q_chunk_docs, bench=True),
+    Query("geohash_assign", _q_geohash, bench=True),
+    Query("tile_pyramid", _q_tile_pyramid, bench=True),
+    Query("compact_cover", _q_compact_cover, bench=True),
+    Query("nearest_segment", _q_nearest_segment, bench=True),
+    Query("travel_stats", _q_travel_stats, bench=True),
+    Query("stay_points", _q_stay_points, bench=True),
+    Query("segment_intersect", _q_segment_intersect, bench=True),
+    Query("spatial_anti", _q_spatial_anti, bench=True),
+    Query("line_dedup", _q_line_dedup, bench=True),
+    # rows-only: recursive Douglas-Peucker
+    Query("simplify_lines", _q_simplify_lines, bench=True),
+    Query("pagerank", _q_pagerank, bench=True),
+    Query("degree_stats", _q_degree_stats, bench=True),
+    Query("hotspots", _q_hotspots, bench=True),
+    Query("od_flows", _q_od_flows, bench=True),
+    Query("domain_stats", _q_domain_stats, bench=True),
+    Query("focal_smooth", _q_focal, bench=True),
+    Query("weighted_sample", _q_weighted_sample, bench=True),
+    Query("resample_ffill", _q_resample_ffill, bench=True),
+    Query("geofence_transitions", _q_geofence, bench=True),
+    Query("anchor_stats", _q_anchor_stats, bench=True),
+    Query("token_lift", _q_token_lift, bench=True),
+    Query("triangle_stats", _q_triangle_stats, bench=True),
+    Query("crawl_schedule", _q_crawl_schedule, bench=True),
+    Query("areal_interpolate", _q_areal, bench=True),
+    Query("lm_score", _q_lm_score, bench=True),
+    Query("bpe_pairs", _q_bpe_pairs, bench=True),
+    Query("dissolve_area", _q_dissolve, bench=True),
+    Query("co_location", _q_colocate, bench=True),
+    Query("align_translations", _q_align, bench=True),
+    Query("redirect_resolve", _q_redirects, bench=True),
+    Query("funnel_steps", _q_funnel, bench=True),
+    Query("interval_overlap", _q_interval_overlap, bench=True),
+    Query("radius_gyration", _q_rog, bench=True),
+    Query("local_moran", _q_moran, bench=True),
+    Query("hits_scores", _q_hits, bench=True),
+    Query("decayed_counts", _q_decay, bench=True),
+    Query("cell_dwell", _q_dwell, bench=True),
+    Query("align_segments", _q_align_segments, bench=True),
+    Query("global_moran", _q_gmoran, bench=True),
+    Query("robots_filter", _q_robots, bench=True),
+    Query("link_predict", _q_link_predict, bench=True),
+    Query("markov_transitions", _q_markov, bench=True),
+    Query("kcore_members", _q_kcore, bench=True),
+    Query("cohort_retention", _q_cohort, bench=True),
+    Query("type_diversity", _q_type_div, bench=True),
+    Query("burst_detect", _q_burst, bench=True),
+    Query("term_geo_lift", _q_term_geo_lift, bench=True),
+    Query("containment_pairs", _q_containment, bench=True),
+    Query("periodicity", _q_periodicity, bench=True),
+    Query("cocitation", _q_cocitation, bench=True),
+    Query("url_templates", _q_url_templates, bench=True),
+    Query("cell_transitions", _q_cell_transitions, bench=True),
+    Query("trustrank", _q_trustrank, bench=True),
+    Query("host_graph", _q_host_graph, bench=True),
+    Query("cusum_changepoint", _q_cusum, bench=True),
+    Query("spatial_thin", _q_spatial_thin, bench=True),
+    Query("crawl_budget", _q_crawl_budget, bench=True),
+    Query("dilate_cover", _q_dilate_cover, bench=True),
+    Query("idw_surface", _q_idw, bench=True),
+    Query("script_mix", _q_script_mix, bench=True),
+    Query("activity_profile", _q_activity_profile, bench=True),
+    Query("lpa_communities", _q_lpa, bench=True),
+    Query("grid_gradient", _q_grid_gradient, bench=True),
+    Query("traj_jaccard", _q_traj_jaccard, bench=True),
+    Query("len_quantiles", _q_len_quantiles, bench=True),
+    Query("user_concentration", _q_user_concentration, bench=True),
+    Query("geary_stat", _q_geary, bench=True),
+    Query("lpa_modularity", _q_lpa_modularity, bench=True),
+    Query("daily_trend", _q_daily_trend, bench=True),
+    Query("assortativity", _q_assortativity, bench=True),
+    Query("gravity_flows", _q_gravity, bench=True),
+    Query("vocab_growth", _q_vocab_growth, bench=True),
+    Query("ngram_novelty", _q_ngram_novelty, bench=True),
+    Query("pagination_groups", _q_pagination, bench=True),
+    Query("ripley_pairs", _q_ripley, bench=True),
+    Query("gi_star", _q_gi_star),
+    Query("knox_pairs", _q_knox),
+    Query("edit_near_dup", _q_edit_near_dup),
+    Query("quadtree_bins", _q_quadtree),
+    Query("mann_kendall", _q_mann_kendall),
+    Query("colocation_lift", _q_colocation_lift),
+    Query("emerging_hotspots", _q_emerging),
+    Query("lang_divergence", _q_lang_divergence),
+    Query("benford_anomaly", _q_benford),
+    Query("gini_len", _q_gini),
+    Query("bfs_hops", _q_bfs_hops),
+    Query("heading_mix", _q_heading_mix),
+    Query("mad_outliers", _q_mad_outliers),
+    Query("rolling_active", _q_rolling_active),
+    Query("dtw_pairs", _q_dtw_pairs),  # rows-only: iterative DP
+    Query("rrf_fuse", _q_rrf),
+    Query("bpe_encode", _q_bpe_encode),
+    Query("map_match", _q_map_match),  # rows-only: Viterbi DP
+    Query("ks_divergence", _q_ks_divergence),
+    Query("kwic_merge", _q_kwic),
+    Query("pq_topk", _q_pq_topk),  # rows-only: numpy-trained codebooks
+    Query("ppr_rank", _q_ppr),
+    Query("convex_hull", _q_convex_hull),  # rows-only: sequential hull scan
+    Query("theil_sen", _q_theil_sen),
+    Query("url_risk", _q_url_risk),
+    Query("isotonic_daily", _q_isotonic),  # rows-only: sequential PAV
+    Query("skyline_docs", _q_skyline),
+    Query("hilbert_assign", _q_hilbert),
+    Query("snm_pairs", _q_snm_pairs),
+    Query("rendezvous_shards", _q_rendezvous),
+    Query("cube_rollup", _q_cube),
+    Query("ring_validity", _q_ring_validity),
+    Query("bloom_membership", _q_bloom),
+    Query("dbscan_clusters", _q_dbscan),
+    # rows-only: sequential merge recurrence
+    Query("bpe_merges", _q_bpe_train),
+    Query("polygon_nesting", _q_nesting),
+    Query("hausdorff_traj", _q_hausdorff),
+    Query("corpus_split", _q_split),
+    Query("geohash_roundtrip", _q_geohash_decode),
+    Query("mmr_picks", _q_mmr),  # rows-only: sequential greedy
+    Query("hll_distinct", _q_hll),
+    Query("frechet_traj", _q_frechet),  # rows-only: iterative DP
+    Query("k_anon_cells", _q_k_anon),
+    Query("sq_adc_topk", _q_sq_topk),
+    Query("line_cover", _q_line_cover),
+    Query("hll_rolling_daily", _q_hll_rolling),
+    Query("trimmed_len", _q_trimmed_len),
+    Query("kcenter_picks", _q_kcenter),  # rows-only: sequential greedy
+    Query("blocklist_hits", _q_blocklist),
+    Query("idn_hosts", _q_idn_hosts),  # rows-only: IDNA tables live in Python
+    Query("neg_samples", _q_neg_samples),
+    Query("rank_eval", _q_rank_eval),
+    Query("calib_bins", _q_calib),
+    Query("pca_embed", _q_pca_embed),  # rows-only: driver-side float eigh
+    Query("dist_transform", _q_dist_transform),
+    Query("auc_lang", _q_auc),
+    Query("mutual_pairs", _q_mutual),
+    # rows-only: hash-seeded hyperplanes
+    Query("lsh_multiprobe", _q_lsh_multiprobe),
+    Query("cidr_geo", _q_cidr),
+    Query("kmv_overlap", _q_kmv_overlap),
+    Query("toponym_pick", _q_toponym),
+    Query("linkage_pairs", _q_linkage),
+    Query("bootstrap_len_ci", _q_bootstrap),
+    Query("spearman_len_sp", _q_spearman),
+    Query("cdc_chunk_spans", _q_cdc),
+    Query("ktruss_edges", _q_ktruss),
+    Query("cost_isochrone", _q_cost_dist),
+    Query("ipf_lang_source", _q_ipf),
+    Query("soundex_blocks", _q_soundex),
+    Query("mst_forest", _q_mst),  # rows-only: data-dependent contraction depth
+    Query("golden_recs", _q_golden),
+    Query("mase_event_days", _q_mase),
+    Query("qn_len_by_lang", _q_qnorm),
+    Query("term_dp", _q_term_dp),
+    Query("sde_nation", _q_sde),
+    Query("acf_event_lags", _q_acf),
+    Query("readability_docs", _q_readability),
+    Query("kappa_judges", _q_kappa),
+    Query("burstiness_types", _q_burstiness),
+    Query("mojibake_docs", _q_mojibake),
+    Query("text_tile_gaps", _q_tiles),
+    Query("neg_tempered", _q_tempered),
+    Query("hyperanf_balls", _q_hyperanf),
+    Query("dyads", _q_dyads),
+    Query("holt_event_forecast", _q_holt),
+    Query("ccf_view_click", _q_ccf),
+    Query("km_survival", _q_km),
+    Query("scan_roles", _q_scan),
+    Query("poi_matches", _q_conflate),
+    Query("addr_interp", _q_addr_interp),
+    Query("label_noise", _q_label_noise),
+    Query("bowtie_roles", _q_bowtie),
+    Query("blocking_eval", _q_blocking_eval),
+    Query("event_triples", _q_seq_triples),
+    Query("triads", _q_triads),
+    Query("homophily", _q_homophily),
+    Query("cooc_lift", _q_cooc),
+    Query("ldiv_audit", _q_ldiv),
+    Query("ari_lang_source", _q_ari),
+    Query("purity_lang", _q_purity),
+    Query("rbo_nation_ranks", _q_rbo),
+    Query("bh_screen", _q_bh),
+    Query("vocab_coverage", _q_vocab_coverage, bench=True),
+    Query("gt_unseen_mass", _q_gt_mass, bench=True),
+    Query("zrange_filter", _q_zrange_filter, bench=True),
+    Query("winnow_fps", _q_winnow, bench=True),
+    Query("hrange_filter", _q_hrange_filter, bench=True),
+    Query("temp_mix", _q_temp_mix, bench=True),
+)
+QUERY_INDEX = index_queries(QUERY_TABLE)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Exactly 50 entries — the driver's correctness gate compares the
-    FIRST 50 dict entries only (verified round 2: CORRECTNESS_r02's key
-    list was the first 50 of a 56-key dict, silently skipping the last 6).
-    Every operator family keeps at least one value-exact row here.
-
-    Round-3 restructure to fit the new families inside the window:
-    - the five scalar textops (token_count / quality_score / lang_detect /
-      fingerprint / redact_pii) fold into ONE combined query
-      ``textops_all`` — same per-doc rows, one scan, certifying all five;
-      the individual variants stay value-exact in ``extra_queries()``.
-    - ``dsl_or_values`` / ``dsl_and_group`` move out: ``dsl_multigroup``
-      exercises OR-of-groups, AND-within-group, and value sets in one
-      query, ``dsl_key_regex`` ("#^k~#7") exercises BOTH regex leaves.
-    - ``tile_aggregate`` moves out: ``tile_rollup`` is the same groupBy
-      plus per-tag rollups (strict superset of the plan shape).
-    - ``cosine_topk`` moves out: ``ivf_full_probe`` (nprobe = n_centroids)
-      is provably identical to brute-force cosine top-k through a strictly
-      more complex path, so it certifies both.
-    Rows-only candidates whose value-exact twins are already here
-    (minhash_pairs / simhash_pairs / lsh_cosine_topk / ivf_cosine_topk /
-    embedding_near_dup) stay in ``extra_queries()``.
-
-    Round-3 second restructure — SUITE folding: the ~20 wave-2/3 operator
-    families that outgrew the window now fold into tagged-union suite
-    queries (one gate slot each, see the suite block comment above
-    ``_suite_specs``), so EVERY operator family has a driver value-exact
-    row and 8 slots open for the wave-4 operators.  The folded individual
-    queries keep their native-schema value-exact entries in
-    ``extra_queries()`` / tools/check_oracle.py."""
-    return {
-        "dsl_suite": _make_suite("dsl_suite"),
-        "dsl_xway_suppress": _q_dsl_xway,
-        "way_denorm_bbox": _q_way_denorm,
-        "entrance_pick": _q_entrance_pick,
-        "entrance_addr": _q_entrance_addr,
-        "street_translate": _q_street_translate,
-        "merge_segments": _q_merge_segments,
-        "unit_promotion": _q_unit_promotion,
-        "amenity_translate": _q_amenity_translate,
-        "relation_bbox": _q_relation_bbox,
-        "cell_assign": _q_cell_assign,
-        "tile_polygons": _q_tile_polygons,
-        # round 5: tiles_suite → extras (the tiles family keeps THREE
-        # value-exact gate rows: cell_assign, tile_polygons, rasterize;
-        # tile_aggregate/tile_rollup stay value-exact in extras) — its
-        # slot goes to semantic_dedup, the newest operator (VERDICT r4
-        # task 5: the two round-4 operators deserve driver-grade rows).
-        "semantic_dedup": _q_semantic_dedup,
-        "geocode_suite": _make_suite("geocode_suite"),
-        "extract_text": _q_extract_text,
-        "pip_join_rect": _q_pip,
-        "knn_grid": _q_knn,
-        "dedup_suite": _make_suite("dedup_suite"),
-        "jaccard_pairs": _q_jaccard,
-        "dedup_groups": _q_dedup_groups,
-        "portable_hash_suite": _make_suite("portable_hash_suite"),
-        "ivf_full_probe": _q_ivf_full_probe,
-        "embedding_near_dup_exact": _q_embedding_near_dup_exact,
-        "weburl_suite": _make_suite("weburl_suite"),
-        "repetition": _q_repetition,
-        "bbox_intersect": _q_bbox_join,
-        "windowed_events": _q_windowed_events,
-        "asof_match": _q_asof,
-        "sessionize": _q_sessionize,
-        "sample_rank_suite": _make_suite("sample_rank_suite"),
-        # round 4: media_features (rows-only by design — binary codec
-        # output has no SQL mirror; certified by 29 codec pytest cases +
-        # deterministic twins) moves to extra_queries so every gate slot
-        # is value-exact-capable; its slot goes to the ts_probe harness
-        # diagnostic (VERDICT r3 task 1/4).
-        "ts_probe": _q_ts_probe,
-        "host_median_len": _q_host_median,
-        # round 5: wrap=True is a strict superset of the unwrapped path
-        # (same cell-disk prefilter + exact predicate, plus the cyclic
-        # Δlon metric over seam-straddling data), so it certifies both —
-        # the ivf_full_probe⊃cosine_topk precedent; within_dist stays
-        # value-exact in extras.
-        "within_dist_wrap": _q_within_dist_wrap,
-        "textops_all": _q_textops_all,
-        "pack_sequences": _q_pack_sequences,
-        "search_suite": _make_suite("search_suite"),
-        "cms_tokens": _q_cms_tokens,
-        "poly_metrics": _q_poly_metrics,
-        "spatial3_suite": _make_suite("spatial3_suite"),
-        "trajectory_suite": _make_suite("trajectory_suite"),
-        "graph_suite": _make_suite("graph_suite"),
-        "curation_suite": _make_suite("curation_suite"),
-        # wave 4 — 49/50 slots used
-        "span_dedup": _q_span_dedup,
-        "rasterize": _q_rasterize,
-        "shortest_paths": _q_shortest_paths,
-        "kmeans_clusters": _q_kmeans,
-        "tfidf_keywords": _q_tfidf,
-        "resample_mixture": _q_resample_mixture,
-        "kmv_distinct": _q_kmv,
-        # waves 5+6 — the final (50th) slot: one tagged-union suite covering
-        # weighted sampling, grid resample+ffill, geofence transitions,
-        # anchor-text aggregation, token co-occurrence lift, triangle
-        # counting, crawl scheduling, areal interpolation, and bigram-LM
-        # fluency scoring
-        "wave5_suite": _make_suite("wave5_suite"),
-    }
+    """The driver's correctness gate: exactly the 50 gate rows, in table
+    order. Every operator family keeps at least one value-exact row here,
+    directly or through a suite."""
+    return {q.name: q.build for q in QUERY_TABLE if q.gate}
 
 
 def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Rows-only / seeded-hash queries kept OUT of the 50-slot driver gate
-    because their value-exact twins already certify the operator there:
-    minhash_pairs→minhash_portable, simhash_pairs→simhash_portable,
-    lsh_cosine_topk→cosine_topk (recall-vs-exact pytest), ivf_cosine_topk→
-    ivf_full_probe (≡ brute force), embedding_near_dup→
-    embedding_near_dup_exact. Plus the value-regex DSL variant certified
-    through dsl_key_regex. bench.py times ALL of these (BENCH_QUERIES);
-    tools/check_oracle.py runs them too — everything with an oracle_sql
-    entry stays value-exact locally, the seeded-hash ones rows-only.
-
-    The round-3 gate restructure moved the individually-certified variants
-    here (their combined/superset twins took the gate slots):
-    dsl_or_values + dsl_and_group → dsl_multigroup; tile_aggregate →
-    tile_rollup; cosine_topk → ivf_full_probe; token_count /
-    quality_score / lang_detect / fingerprint / redact_pii →
-    textops_all.
-
-    Second restructure: everything folded into a gate suite keeps its
-    native-schema individual entry here (drivers of the suites), still
-    value-exact under tools/check_oracle.py."""
-    return {
-        # rows-only by design (binary codec output, no SQL mirror) —
-        # moved out of the gate round 4 so all 50 slots are value-exact
-        "media_features": _q_media_features,
-        # round 5: displaced FROM the gate by their superset/newer twins
-        # (within_dist_wrap certifies the unwrapped metric; the tiles
-        # family keeps cell_assign/tile_polygons/rasterize gate rows)
-        "within_dist": _q_within_dist,
-        "tiles_suite": _make_suite("tiles_suite"),
-        "dsl_value_regex": _dsl_query("etype~#r"),
-        "dsl_or_values": _dsl_query("etype~click;view"),
-        "dsl_and_group": _dsl_query("etype~click§big~yes"),
-        "dsl_key_regex": _dsl_query("#^k~#7"),
-        "dsl_multigroup": _dsl_query("etype~error,big~yes§etype~view"),
-        "tile_aggregate": _q_tile_aggregate,
-        "tile_rollup": _q_tile_rollup,
-        "geocode_tile": _q_geocode_tile,
-        "geocode_arrow": _q_geocode_arrow,
-        "minhash_portable": _q_minhash_portable,
-        "simhash_portable": _q_simhash_portable,
-        "term_search": _q_term_search,
-        "inverted_index": _q_inverted_index,
-        "top_bigrams": _q_top_bigrams,
-        "bm25_rank": _q_bm25,
-        "exact_dedup": _q_exact_dedup,
-        "incremental_dedup": _q_incremental_dedup,
-        "url_latest_dedup": _q_url_dedup,
-        "host_stats": _q_host_stats,
-        "snapshot_diff": _q_snapshot_diff,
-        "scd2_history": _q_scd2,
-        "quadkey_assign": _q_quadkey,
-        "stratified_sample": _q_stratified_sample,
-        "topk_per_lang": _q_topk_group,
-        "cosine_topk": _q_cosine_topk,
-        "token_count": _q_token_count,
-        "quality_score": _q_quality,
-        "lang_detect": _q_lang,
-        "fingerprint": _q_fingerprint,
-        "redact_pii": _q_redact,
-        "minhash_pairs": _q_minhash,
-        "simhash_pairs": _q_simhash,
-        "lsh_cosine_topk": _q_lsh_topk,
-        "ivf_cosine_topk": _q_ivf_topk,
-        "embedding_near_dup": _q_embedding_near_dup,
-        # round-3 second wave — value-exact under tools/check_oracle.py
-        # via their oracle_sql entries (the 50 gate slots are taken)
-        "contamination": _q_contamination,
-        "chunk_docs": _q_chunk_docs,
-        "geohash_assign": _q_geohash,
-        "tile_pyramid": _q_tile_pyramid,
-        "compact_cover": _q_compact_cover,
-        "nearest_segment": _q_nearest_segment,
-        "travel_stats": _q_travel_stats,
-        "stay_points": _q_stay_points,
-        "segment_intersect": _q_segment_intersect,
-        "spatial_anti": _q_spatial_anti,
-        "line_dedup": _q_line_dedup,
-        "simplify_lines": _q_simplify_lines,
-        "pagerank": _q_pagerank,
-        "degree_stats": _q_degree_stats,
-        "hotspots": _q_hotspots,
-        "od_flows": _q_od_flows,
-        "domain_stats": _q_domain_stats,
-        "focal_smooth": _q_focal,
-        # waves 5+6 — native-schema drivers of wave5_suite
-        "weighted_sample": _q_weighted_sample,
-        "resample_ffill": _q_resample_ffill,
-        "geofence_transitions": _q_geofence,
-        "anchor_stats": _q_anchor_stats,
-        "token_lift": _q_token_lift,
-        "triangle_stats": _q_triangle_stats,
-        "crawl_schedule": _q_crawl_schedule,
-        "areal_interpolate": _q_areal,
-        "lm_score": _q_lm_score,
-        # wave 7
-        "bpe_pairs": _q_bpe_pairs,
-        "dissolve_area": _q_dissolve,
-        "co_location": _q_colocate,
-        "align_translations": _q_align,
-        # wave 8
-        "redirect_resolve": _q_redirects,
-        "funnel_steps": _q_funnel,
-        "interval_overlap": _q_interval_overlap,
-        "radius_gyration": _q_rog,
-        "local_moran": _q_moran,
-        # wave 9
-        "hits_scores": _q_hits,
-        "decayed_counts": _q_decay,
-        "cell_dwell": _q_dwell,
-        "align_segments": _q_align_segments,
-        # wave 10
-        "global_moran": _q_gmoran,
-        "robots_filter": _q_robots,
-        "link_predict": _q_link_predict,
-        "markov_transitions": _q_markov,
-        # wave 11
-        "kcore_members": _q_kcore,
-        "cohort_retention": _q_cohort,
-        "type_diversity": _q_type_div,
-        "burst_detect": _q_burst,
-        "term_geo_lift": _q_term_geo_lift,
-        # wave 12
-        "containment_pairs": _q_containment,
-        "periodicity": _q_periodicity,
-        "cocitation": _q_cocitation,
-        "url_templates": _q_url_templates,
-        "cell_transitions": _q_cell_transitions,
-        # wave 13
-        "trustrank": _q_trustrank,
-        "host_graph": _q_host_graph,
-        "cusum_changepoint": _q_cusum,
-        "spatial_thin": _q_spatial_thin,
-        # wave 14
-        "crawl_budget": _q_crawl_budget,
-        "dilate_cover": _q_dilate_cover,
-        # wave 15
-        "idw_surface": _q_idw,
-        "script_mix": _q_script_mix,
-        "activity_profile": _q_activity_profile,
-        # wave 16
-        "lpa_communities": _q_lpa,
-        "grid_gradient": _q_grid_gradient,
-        "traj_jaccard": _q_traj_jaccard,
-        # wave 17
-        "len_quantiles": _q_len_quantiles,
-        "user_concentration": _q_user_concentration,
-        # wave 18
-        "geary_stat": _q_geary,
-        "lpa_modularity": _q_lpa_modularity,
-        # wave 19
-        "daily_trend": _q_daily_trend,
-        "assortativity": _q_assortativity,
-        "gravity_flows": _q_gravity,
-        "vocab_growth": _q_vocab_growth,
-        # wave 20
-        "ngram_novelty": _q_ngram_novelty,
-        "pagination_groups": _q_pagination,
-        "ripley_pairs": _q_ripley,
-        # wave 21
-        "gi_star": _q_gi_star,
-        "knox_pairs": _q_knox,
-        "edit_near_dup": _q_edit_near_dup,
-        # wave 22
-        "quadtree_bins": _q_quadtree,
-        "mann_kendall": _q_mann_kendall,
-        "colocation_lift": _q_colocation_lift,
-        # wave 23
-        "emerging_hotspots": _q_emerging,
-        # wave 24
-        "lang_divergence": _q_lang_divergence,
-        "benford_anomaly": _q_benford,
-        # wave 25
-        "gini_len": _q_gini,
-        "bfs_hops": _q_bfs_hops,
-        "heading_mix": _q_heading_mix,
-        # wave 26 (dtw_pairs: pytest-only, no SQL oracle — iterative DP)
-        "mad_outliers": _q_mad_outliers,
-        "rolling_active": _q_rolling_active,
-        "dtw_pairs": _q_dtw_pairs,
-        # wave 27
-        "rrf_fuse": _q_rrf,
-        "bpe_encode": _q_bpe_encode,
-        # wave 28 (pytest-only, no SQL oracle — Viterbi DP)
-        "map_match": _q_map_match,
-        # wave 29
-        "ks_divergence": _q_ks_divergence,
-        "kwic_merge": _q_kwic,
-        # wave 30 (rows-only by design — numpy-trained codebooks)
-        "pq_topk": _q_pq_topk,
-        # wave 31 (convex_hull: pytest-only, sequential hull scan)
-        "ppr_rank": _q_ppr,
-        "convex_hull": _q_convex_hull,
-        # wave 32
-        "theil_sen": _q_theil_sen,
-        "url_risk": _q_url_risk,
-        # wave 33 (pytest-only, sequential PAV)
-        "isotonic_daily": _q_isotonic,
-        # wave 34
-        "skyline_docs": _q_skyline,
-        "hilbert_assign": _q_hilbert,
-        # wave 35
-        "snm_pairs": _q_snm_pairs,
-        "rendezvous_shards": _q_rendezvous,
-        "cube_rollup": _q_cube,
-        # wave 36
-        "ring_validity": _q_ring_validity,
-        "bloom_membership": _q_bloom,
-        # wave 37 (bpe_train is pytest-only: sequential merge recurrence)
-        "dbscan_clusters": _q_dbscan,
-        "bpe_merges": _q_bpe_train,
-        # wave 38
-        "polygon_nesting": _q_nesting,
-        # wave 39
-        "hausdorff_traj": _q_hausdorff,
-        "corpus_split": _q_split,
-        # wave 40 (mmr_select is pytest-only: sequential greedy)
-        "geohash_roundtrip": _q_geohash_decode,
-        "mmr_picks": _q_mmr,
-        # wave 41 (frechet is pytest-only: iterative DP, the dtw precedent)
-        "hll_distinct": _q_hll,
-        "frechet_traj": _q_frechet,
-        # wave 42
-        "k_anon_cells": _q_k_anon,
-        "sq_adc_topk": _q_sq_topk,
-        # wave 43
-        "line_cover": _q_line_cover,
-        "hll_rolling_daily": _q_hll_rolling,
-        # wave 44 (kcenter is pytest-only: sequential greedy)
-        "trimmed_len": _q_trimmed_len,
-        "kcenter_picks": _q_kcenter,
-        # wave 45 (idn_hosts is pytest-only: IDNA tables live in python)
-        "blocklist_hits": _q_blocklist,
-        "idn_hosts": _q_idn_hosts,
-        # wave 46
-        "neg_samples": _q_neg_samples,
-        "rank_eval": _q_rank_eval,
-        # wave 47 (pca_embed is pytest-only: driver-side float eigh)
-        "calib_bins": _q_calib,
-        "pca_embed": _q_pca_embed,
-        # wave 48
-        "dist_transform": _q_dist_transform,
-        "auc_lang": _q_auc,
-        # wave 49 (lsh_multiprobe is rows-only: hash-seeded hyperplanes)
-        "mutual_pairs": _q_mutual,
-        "lsh_multiprobe": _q_lsh_multiprobe,
-        # wave 50
-        "cidr_geo": _q_cidr,
-        "kmv_overlap": _q_kmv_overlap,
-        # wave 51
-        "toponym_pick": _q_toponym,
-        "linkage_pairs": _q_linkage,
-        # wave 52
-        "bootstrap_len_ci": _q_bootstrap,
-        "spearman_len_sp": _q_spearman,
-        # wave 53
-        "cdc_chunk_spans": _q_cdc,
-        "ktruss_edges": _q_ktruss,
-        # wave 54
-        "cost_isochrone": _q_cost_dist,
-        "ipf_lang_source": _q_ipf,
-        # wave 55 (mst_forest is rows-only: data-dependent contraction depth)
-        "soundex_blocks": _q_soundex,
-        "mst_forest": _q_mst,
-        # wave 56
-        "golden_recs": _q_golden,
-        "mase_event_days": _q_mase,
-        # wave 57
-        "qn_len_by_lang": _q_qnorm,
-        "term_dp": _q_term_dp,
-        # wave 58
-        "sde_nation": _q_sde,
-        "acf_event_lags": _q_acf,
-        # wave 59
-        "readability_docs": _q_readability,
-        "kappa_judges": _q_kappa,
-        # wave 60
-        "burstiness_types": _q_burstiness,
-        "mojibake_docs": _q_mojibake,
-        # wave 61
-        "text_tile_gaps": _q_tiles,
-        "neg_tempered": _q_tempered,
-        # wave 62
-        "hyperanf_balls": _q_hyperanf,
-        "dyads": _q_dyads,
-        # wave 63
-        "holt_event_forecast": _q_holt,
-        "ccf_view_click": _q_ccf,
-        # wave 64
-        "km_survival": _q_km,
-        "scan_roles": _q_scan,
-        # wave 65
-        "poi_matches": _q_conflate,
-        "addr_interp": _q_addr_interp,
-        # wave 66
-        "label_noise": _q_label_noise,
-        "bowtie_roles": _q_bowtie,
-        # wave 67
-        "blocking_eval": _q_blocking_eval,
-        "event_triples": _q_seq_triples,
-        # wave 68
-        "triads": _q_triads,
-        "homophily": _q_homophily,
-        # wave 69
-        "cooc_lift": _q_cooc,
-        "ldiv_audit": _q_ldiv,
-        # wave 70
-        "ari_lang_source": _q_ari,
-        "purity_lang": _q_purity,
-        # wave 71
-        "rbo_nation_ranks": _q_rbo,
-        "bh_screen": _q_bh,
-        # wave 72 (round 5)
-        "vocab_coverage": _q_vocab_coverage,
-        "gt_unseen_mass": _q_gt_mass,
-        # wave 73 (round 5)
-        "zrange_filter": _q_zrange_filter,
-        # wave 74 (round 5)
-        "winnow_fps": _q_winnow,
-        # wave 75 (round 5)
-        "hrange_filter": _q_hrange_filter,
-        # wave 76 (round 5)
-        "temp_mix": _q_temp_mix,
-    }
+    """Every other row, in table order. tools/check_oracle.py checks each
+    against its oracle_sql() entry, or rows-only where it has none."""
+    return {q.name: q.build for q in QUERY_TABLE if not q.gate}
 
 
 def _minhash_portable_sql() -> str:

@@ -31,157 +31,8 @@ from pbf2json_spark import pages as pages_mod
 from pbf2json_spark import spatial
 from pbf2json_spark.session import get_spark
 
-BENCH_QUERIES = [
-    "way_denorm_bbox",
-    "relation_bbox",
-    "pip_join_rect",
-    "knn_grid",
-    "geocode_tile",
-    "tile_aggregate",
-    "jaccard_pairs",
-    "minhash_pairs",
-    "simhash_pairs",
-    "dsl_value_regex",
-    "lsh_cosine_topk",
-    "ivf_cosine_topk",
-    "embedding_near_dup",
-    "cosine_topk",
-    "quality_score",
-    "lang_detect",
-    "url_latest_dedup",
-    "repetition",
-    "bbox_intersect",
-    "windowed_events",
-    "asof_match",
-    "sessionize",
-    "snapshot_diff",
-    "stratified_sample",
-    "top_bigrams",
-    "inverted_index",
-    "host_median_len",
-    "media_features",
-    # round-3 additions
-    "pack_sequences",
-    "bm25_rank",
-    "scd2_history",
-    "cms_tokens",
-    "quadkey_assign",
-    "redact_pii",
-    "topk_per_lang",
-    "poly_metrics",
-    "contamination",
-    "chunk_docs",
-    "geohash_assign",
-    "tile_pyramid",
-    "compact_cover",
-    "nearest_segment",
-    "travel_stats",
-    "stay_points",
-    "segment_intersect",
-    "spatial_anti",
-    "line_dedup",
-    "simplify_lines",
-    "pagerank",
-    "degree_stats",
-    "hotspots",
-    "od_flows",
-    "domain_stats",
-    "focal_smooth",
-    # wave 4
-    "span_dedup",
-    "rasterize",
-    "shortest_paths",
-    "kmeans_clusters",
-    "tfidf_keywords",
-    "resample_mixture",
-    "kmv_distinct",
-    # wave 5
-    "weighted_sample",
-    "resample_ffill",
-    "geofence_transitions",
-    "anchor_stats",
-    "token_lift",
-    # wave 6
-    "triangle_stats",
-    "crawl_schedule",
-    "areal_interpolate",
-    "lm_score",
-    # wave 7
-    "bpe_pairs",
-    "dissolve_area",
-    "co_location",
-    "align_translations",
-    # wave 8
-    "redirect_resolve",
-    "funnel_steps",
-    "interval_overlap",
-    "radius_gyration",
-    "local_moran",
-    # wave 9
-    "hits_scores",
-    "decayed_counts",
-    "cell_dwell",
-    "align_segments",
-    # wave 10
-    "global_moran",
-    "robots_filter",
-    "link_predict",
-    "markov_transitions",
-    # wave 11
-    "kcore_members",
-    "cohort_retention",
-    "type_diversity",
-    "burst_detect",
-    "term_geo_lift",
-    # wave 12
-    "containment_pairs",
-    "periodicity",
-    "cocitation",
-    "url_templates",
-    "cell_transitions",
-    # wave 13
-    "trustrank",
-    "host_graph",
-    "cusum_changepoint",
-    "spatial_thin",
-    # wave 14
-    "crawl_budget",
-    "dilate_cover",
-    # wave 15
-    "idw_surface",
-    "script_mix",
-    "activity_profile",
-    # wave 16
-    "lpa_communities",
-    "grid_gradient",
-    "traj_jaccard",
-    # wave 17
-    "len_quantiles",
-    "user_concentration",
-    # wave 18
-    "geary_stat",
-    "lpa_modularity",
-    # wave 19
-    "daily_trend",
-    "assortativity",
-    "gravity_flows",
-    "vocab_growth",
-    # wave 20
-    "ngram_novelty",
-    "pagination_groups",
-    "ripley_pairs",
-    # round 4
-    "within_dist_wrap",
-    "ts_probe",
-    "semantic_dedup",
-    # round 5
-    "vocab_coverage",
-    "gt_unseen_mass",
-    "zrange_filter",
-    "winnow_fps",
-    "hrange_filter",
-    "temp_mix",
-]
+# the query-table rows marked bench=True, in table order
+BENCH_QUERIES = [q.name for q in entry_mod.QUERY_TABLE if q.bench]
 
 
 def _consume(df) -> int:
@@ -231,7 +82,7 @@ def build_pages_pipeline(spark: SparkSession, n_pages: int):
     # 4 waves of tasks — the balance a real input-split scan would have
     n_parts = spark.sparkContext.defaultParallelism * 4
     pg = pages_mod.generate_pages(spark, n_pages, partitions=n_parts)
-    polys = _city_polygons(spark)
+    polys = pages_mod.city_polygons(spark)
     g = pages_mod.geocode(pg).filter(F.col("lat").isNotNull())
     hits = spatial.point_in_polygon_join(g.select("url", "lat", "lon"), polys)
     return spatial.tile_aggregate(hits, 12, [F.count(F.lit(1)).alias("n")])
@@ -243,26 +94,6 @@ def run_pages(spark: SparkSession, n_pages: int) -> tuple[float, int]:
     t0 = time.time()
     rows = _consume(tiles)
     return time.time() - t0, rows
-
-
-def _city_polygons(spark: SparkSession):
-    """Rectangular polygon per hot city cluster (the dog_park-style polygon
-    set of the north star, derived from the generator's own city list)."""
-    rows = []
-    for i, (lat, lon, _w) in enumerate(pages_mod.HOT_CENTERS):
-        d = 0.15
-        ring = [
-            {"lat": lat - d, "lon": lon - d},
-            {"lat": lat - d, "lon": lon + d},
-            {"lat": lat + d, "lon": lon + d},
-            {"lat": lat + d, "lon": lon - d},
-            {"lat": lat - d, "lon": lon - d},
-        ]
-        rows.append({"polygon_id": i, "ring": ring})
-    return spark.createDataFrame(
-        rows,
-        "polygon_id long, ring array<struct<lat:double,lon:double>>",
-    )
 
 
 def _previous_round_timings() -> tuple[str, float | str | None, dict[str, float]] | None:
@@ -389,7 +220,6 @@ def main() -> None:
     spark = get_spark("pbf2json-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    queries = {**entry_mod.queries(), **entry_mod.extra_queries()}
     timings: dict[str, float] = {}
     # warm-up before anything is timed: JVM JIT, codegen, Python worker
     # pools — otherwise the first timed query pays the cold JVM
@@ -404,7 +234,7 @@ def main() -> None:
         for _ in range(2):
             _wait_idle()
             t0 = time.time()
-            _consume(queries[name](spark, sf_dir))
+            _consume(entry_mod.QUERY_INDEX[name].build(spark, sf_dir))
             sec = time.time() - t0
             best = sec if best is None or sec < best else best
         timings[name] = round(best, 3)

@@ -40,23 +40,6 @@ from pbf2json_spark import spatial
 from pbf2json_spark.checkpoint import CheckpointManager, run_stages
 
 
-def city_polygons(spark: SparkSession):
-    rows = []
-    for i, (lat, lon, _w) in enumerate(pages_mod.HOT_CENTERS):
-        d = 0.15
-        ring = [
-            {"lat": lat - d, "lon": lon - d},
-            {"lat": lat - d, "lon": lon + d},
-            {"lat": lat + d, "lon": lon + d},
-            {"lat": lat + d, "lon": lon - d},
-            {"lat": lat - d, "lon": lon - d},
-        ]
-        rows.append({"polygon_id": i, "ring": ring})
-    return spark.createDataFrame(
-        rows, "polygon_id long, ring array<struct<lat:double,lon:double>>"
-    )
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--n-pages", type=int, default=1_000_000)
@@ -75,7 +58,7 @@ def main() -> None:
     spark = SparkSession.builder.appName("pages-tiles").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     mgr = CheckpointManager(spark, args.checkpoint_root, "pages_tiles")
-    polys = city_polygons(spark)
+    polys = pages_mod.city_polygons(spark)
 
     tiles = run_stages(
         mgr,

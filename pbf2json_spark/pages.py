@@ -137,6 +137,28 @@ def generate_pages(
     )
 
 
+def city_polygons(spark: SparkSession) -> DataFrame:
+    """One 0.3°-square polygon around each HOT_CENTERS city: the polygon
+    set the generated pages are joined against."""
+    d = 0.15
+    rows = [
+        {
+            "polygon_id": i,
+            "ring": [
+                {"lat": lat - d, "lon": lon - d},
+                {"lat": lat - d, "lon": lon + d},
+                {"lat": lat + d, "lon": lon + d},
+                {"lat": lat + d, "lon": lon - d},
+                {"lat": lat - d, "lon": lon - d},
+            ],
+        }
+        for i, (lat, lon, _w) in enumerate(HOT_CENTERS)
+    ]
+    return spark.createDataFrame(
+        rows, "polygon_id long, ring array<struct<lat:double,lon:double>>"
+    )
+
+
 # --- text extraction -------------------------------------------------------------
 
 

@@ -556,7 +556,6 @@ def blocklist_screen_sql(
 # base^(window-1-j) % mod for the rolling polynomial — LITERAL constants
 # shared with the SQL oracle (base 257, mod 2^31-1, window 8)
 CDC_MOD = 2_147_483_647
-CDC_POW = [2]  # placeholder, replaced below
 
 
 def _cdc_pows(base: int, window: int, mod: int) -> list[int]:

@@ -93,10 +93,9 @@ def main() -> int:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
-    queries = {**entry_mod.queries(), **entry_mod.extra_queries()}
     oracles = entry_mod.oracle_sql()
     failed = []
-    for name, fn in queries.items():
+    for name, fn, *_ in entry_mod.QUERY_TABLE:
         if only and name not in only:
             continue
         t0 = time.time()

@@ -26,7 +26,6 @@ import __spark_entry__ as entry_mod
 from pbf2json_spark import pages as pages_mod
 from pbf2json_spark import spatial
 from pbf2json_spark.session import JIT_HUGE_METHOD_BYTES, codegen_method_bytes, get_spark
-import bench
 
 
 def plan_text(df, execute: bool = True) -> str:
@@ -58,8 +57,8 @@ def main() -> int:
     spark = get_spark("explain-audit")
     spark.sparkContext.setLogLevel("ERROR")
     sections: list[tuple[str, str, list[tuple[str, bool, str]]]] = []
-    # gate entries + locally-certified extras — the audit spans both
-    allq = {**entry_mod.queries(), **entry_mod.extra_queries()}
+    # gate rows and extras alike — the audit spans the whole query table
+    allq = {q.name: q.build for q in entry_mod.QUERY_TABLE}
 
     # 1. tag-DSL filter: predicate must reach the scan as a pushed/codegen'd
     # filter with pruned columns, no Python anywhere
@@ -1762,7 +1761,6 @@ def main() -> int:
     # BFS hop labels (wave 25): the returned frame is a union of pinned
     # per-round localCheckpoints, so audit ONE round's expansion — the
     # frontier ⋈ edges join + anti-join vs visited — unpinned.
-    from pbf2json_spark import graph as graph_mod
     edges25 = entry_mod._link_edges(spark, sf_dir).select(
         F.col("src").alias("_s"), F.col("dst").alias("_d"))
     seeds25 = spark.createDataFrame([(0,), (17,)], "node long")
