@@ -152,17 +152,22 @@ def _spread_col(c: Column) -> Column:
     return c
 
 
+def _clamp_col(v: Column, n: int) -> Column:
+    """Grid coordinate Column clamped into [0, n − 1] — clip() in xy()."""
+    return F.greatest(F.lit(0), F.least(F.lit(n - 1), v))
+
+
+def _from_xy_col(x: Column, y: Column, res: int) -> Column:
+    """Grid coordinate Columns → cell id Column. Same bit layout as from_xy()."""
+    m = _spread_col(x).bitwiseOR(F.shiftleft(_spread_col(y), 1))
+    return F.lit(res << _RES_SHIFT).bitwiseOR(m).cast("long")
+
+
 def cell_col(lat: Column, lon: Column, res: int) -> Column:
     """lat/lon Columns → cell id Column. Identical bit layout to encode()."""
     if not 0 <= res <= MAX_RES:
         raise ValueError(f"res must be in [0, {MAX_RES}]")
-    n = 1 << res
-    x = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    y = F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
-    x = F.greatest(F.lit(0), F.least(F.lit(n - 1), x)).cast("long")
-    y = F.greatest(F.lit(0), F.least(F.lit(n - 1), y)).cast("long")
-    m = _spread_col(x).bitwiseOR(F.shiftleft(_spread_col(y), 1))
-    return F.lit(res << _RES_SHIFT).bitwiseOR(m).cast("long")
+    return _from_xy_col(*xy_cols(lat, lon, res), res)
 
 
 def xy_cols(lat: Column, lon: Column, res: int) -> tuple[Column, Column]:
@@ -170,9 +175,7 @@ def xy_cols(lat: Column, lon: Column, res: int) -> tuple[Column, Column]:
     n = 1 << res
     x = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
     y = F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
-    x = F.greatest(F.lit(0), F.least(F.lit(n - 1), x)).cast("long")
-    y = F.greatest(F.lit(0), F.least(F.lit(n - 1), y)).cast("long")
-    return x, y
+    return _clamp_col(x, n).cast("long"), _clamp_col(y, n).cast("long")
 
 
 def disk_col(x: Column, y: Column, res: int, radius: Column) -> Column:
@@ -186,10 +189,7 @@ def disk_col(x: Column, y: Column, res: int, radius: Column) -> Column:
     dxs = F.sequence(-r, r)
 
     def cell_of(dx: Column, dy: Column) -> Column:
-        gx = F.pmod(x + dx, F.lit(n))
-        gy = F.greatest(F.lit(0), F.least(F.lit(n - 1), y + dy))
-        m = _spread_col(gx).bitwiseOR(F.shiftleft(_spread_col(gy), 1))
-        return F.lit(res << _RES_SHIFT).bitwiseOR(m).cast("long")
+        return _from_xy_col(F.pmod(x + dx, F.lit(n)), _clamp_col(y + dy, n), res)
 
     return F.flatten(
         F.transform(dxs, lambda dx: F.transform(F.sequence(-r, r), lambda dy: cell_of(dx, dy)))

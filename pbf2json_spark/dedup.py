@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from pbf2json_spark.graph import connected_components
+
 # --- exact ------------------------------------------------------------------------
 
 
@@ -73,6 +75,23 @@ def word_shingles(text: Column, n: int) -> Column:
 # --- exact n-gram Jaccard via inverted index ----------------------------------------
 
 
+def _rarest_first(sh: DataFrame) -> DataFrame:
+    """(_id, _ord): each document's shingles `_sh` ordered rarest first by
+    global frequency (ties by shingle) — the prefix-filter order."""
+    tok = sh.select("_id", F.explode("_sh").alias("_g"))
+    freq = tok.groupBy("_g").agg(F.count(F.lit(1)).alias("_f"))
+    return (
+        tok.join(freq, "_g")
+        .groupBy("_id")
+        .agg(
+            F.transform(
+                F.sort_array(F.collect_list(F.struct("_f", "_g"))),
+                lambda s: s["_g"],
+            ).alias("_ord")
+        )
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -117,18 +136,7 @@ def ngram_jaccard_pairs(
         )
         return pairs.select("a", "b", "jaccard")
 
-    tok = sh.select("_id", F.explode("_sh").alias("_g"))
-    freq = tok.groupBy("_g").agg(F.count(F.lit(1)).alias("_f"))
-    ordered = (
-        tok.join(freq, "_g")
-        .groupBy("_id")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("_f", "_g"))),
-                lambda s: s["_g"],
-            ).alias("_ord")
-        )
-    )
+    ordered = _rarest_first(sh)
     prefix_len = (
         F.size("_ord") - F.ceil(F.lit(float(threshold)) * F.size("_ord")) + 1
     ).cast("int")
@@ -280,35 +288,11 @@ def minhash_lsh_pairs(
     return verified.select("a", "b", "jaccard")
 
 
-def dedup_groups(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
-    """Connected components over near-dup pairs → (id, rep) where rep is the
-    component minimum: iterative label propagation (hash-join rounds,
-    converges in O(log diameter) — near-dup components are shallow)."""
-    edges = (
-        pairs.select(F.col("a").alias("x"), F.col("b").alias("y"))
-        .unionByName(pairs.select(F.col("b").alias("x"), F.col("a").alias("y")))
-        .distinct()
-    )
-    labels = edges.select("x").distinct().withColumn("rep", F.col("x"))
-    for _ in range(max_iters):
-        prop = (
-            edges.join(labels.withColumnRenamed("x", "y"), "y")
-            .groupBy("x")
-            .agg(F.min("rep").alias("nrep"))
-        )
-        new_labels = (
-            labels.join(prop, "x", "left")
-            .select("x", F.least("rep", F.coalesce("nrep", "rep")).alias("rep"))
-        )
-        changed = (
-            new_labels.join(labels.withColumnRenamed("rep", "old"), "x")
-            .filter(F.col("rep") != F.col("old"))
-            .isEmpty()
-        )
-        labels = new_labels.localCheckpoint(eager=True)
-        if changed:
-            break
-    return labels.select(F.col("x").alias("id"), "rep")
+def dedup_groups(pairs: DataFrame) -> DataFrame:
+    """Connected components over near-dup pairs (a, b) → (id, rep) where
+    rep is the component minimum: graph.connected_components (pointer
+    doubling, O(log diameter) rounds)."""
+    return connected_components(pairs)
 
 
 # --- SimHash ------------------------------------------------------------------------
@@ -442,26 +426,16 @@ def containment_pairs(
     directed (containment is not symmetric).
     """
     # sh feeds 4+ plan branches (freq, prefix index, both verify sides);
-    # persist so the shingle build and the upstream scan run ONCE, not
+    # pin it so the shingle build and the upstream scan run ONCE, not
     # once per branch (measured 6x on the bench corpus)
     sh = df.select(
         F.col(id_col).alias("_id"),
         word_shingles(F.col(text_col), n).alias("_sh"),
-    ).withColumn("_size", F.size("_sh")).filter(F.col("_size") > 0).persist()
+    ).withColumn("_size", F.size("_sh")).filter(F.col("_size") > 0)
+    sh = sh.localCheckpoint(eager=False)
 
     if prefix_filter:
-        tok = sh.select("_id", F.explode("_sh").alias("_g"))
-        freq = tok.groupBy("_g").agg(F.count(F.lit(1)).alias("_f"))
-        ordered = (
-            tok.join(freq, "_g")
-            .groupBy("_id")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("_f", "_g"))),
-                    lambda s: s["_g"],
-                ).alias("_ord")
-            )
-        )
+        ordered = _rarest_first(sh)
         pre_len = F.expr(
             f"size(_ord) - (({threshold_e6} * size(_ord) + 999999) "
             "div 1000000) + 1"
@@ -768,8 +742,6 @@ def golden_records(
 
     Output: (cluster_id = min member id, n_members, *attr_cols).
     """
-    from pbf2json_spark.graph import connected_components
-
     ids = df.select(F.col(id_col).alias("_id"))
     cc = connected_components(
         match_pairs.select(F.col(left_id).alias("a"), F.col(right_id).alias("b"))

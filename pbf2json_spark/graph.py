@@ -11,10 +11,12 @@ bit-identical in any engine, which is what makes the DuckDB oracle exact.
 Scale shapes: one iteration of pagerank_int is one hash join
 (ranks ⋈ edges on src) + one map-side-combinable sum by dst + one left
 join back to the node set — all equi-joins on the node id. Edges are the
-big side and never change: repartition them by src ONCE and persist, and
-every iteration's join reuses that layout. localCheckpoint per round cuts
-the lineage (the same discipline as dedup.dedup_groups / relations'
-fixpoint).
+big side and never change: repartition them by src ONCE and pin them with
+a lazy localCheckpoint, and every iteration's join reuses that layout.
+localCheckpoint per round cuts the lineage (the same discipline as
+connected_components / relations' fixpoint). Frames an operator reads more
+than once are pinned the same way, never with persist(): a persisted
+frame's CacheManager entry outlives the call unless someone unpersists it.
 """
 
 from __future__ import annotations
@@ -23,6 +25,78 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 1_000_000_000  # nano-ranks
+
+
+def _nodes(e: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
+    """The node set of an (a, b) edge frame: distinct a ∪ b as `node`."""
+    return (
+        e.select(F.col(a).alias("node"))
+        .unionByName(e.select(F.col(b).alias("node")))
+        .distinct()
+    )
+
+
+def _seed_flags(nodes: DataFrame, seeds: DataFrame) -> DataFrame:
+    """(node, _s) over `nodes`: _s = 1 for a node in the one-column
+    `seeds` frame (column `node`), else 0. Seeds outside the node set drop."""
+    flag = F.broadcast(seeds.distinct().withColumn("_s", F.lit(1)))
+    return nodes.join(flag, "node", "left").select(
+        "node", F.coalesce("_s", F.lit(0)).alias("_s")
+    )
+
+
+def _propagate_int(
+    e: DataFrame,
+    teleport: DataFrame,
+    n_iter: int,
+    damping_pct: int,
+    checkpoint_every: int,
+    rank_col: str,
+) -> DataFrame:
+    """The integer PageRank recurrence over edges `e` (src, dst) and the
+    teleport flags `teleport` (node, _s ∈ {0, 1}) — one node row each:
+
+        rank⁰(v)   = _s(v)·SCALE
+        rankᵏ⁺¹(v) = _s(v)·(100−d)·SCALE div 100
+                     + d · Σ_{u→v} (rankᵏ(u) div out(u)) div 100
+
+    The degree-joined edges are repartitioned by src once and, like the
+    flags, pinned with a lazy localCheckpoint: every round reuses that
+    layout, and no CacheManager entry outlives the call. Each round is one
+    hash join + one combinable sum + one left join back to the flags;
+    ranks are checkpointed every `checkpoint_every` rounds.
+
+    Output: (node, <rank_col>:long).
+    """
+    if not 0 < damping_pct < 100:
+        raise ValueError("damping_pct in (0, 100)")
+    teleport = teleport.localCheckpoint(eager=False)
+    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
+    ed = e.join(deg, "src").repartition("src").localCheckpoint(eager=False)
+    base = (100 - damping_pct) * SCALE // 100
+    ranks = teleport.select(
+        "node", (F.col("_s") * SCALE).cast("long").alias(rank_col)
+    )
+    for i in range(n_iter):
+        contrib = (
+            ed.join(ranks.withColumnRenamed("node", "src"), "src")
+            .select("dst", F.expr(f"{rank_col} div _deg").alias("_c"))
+            .groupBy("dst")
+            .agg(F.sum("_c").alias("_in"))
+        )
+        ranks = (
+            teleport.join(contrib.withColumnRenamed("dst", "node"), "node", "left")
+            .select(
+                "node",
+                (
+                    F.col("_s") * F.lit(base)
+                    + F.expr(f"{damping_pct} * coalesce(_in, 0L) div 100")
+                ).cast("long").alias(rank_col),
+            )
+        )
+        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
+            ranks = ranks.localCheckpoint()
+    return ranks
 
 
 def pagerank_int(
@@ -48,38 +122,11 @@ def pagerank_int(
 
     Output: (node, rank_e9:long).
     """
-    if not 0 < damping_pct < 100:
-        raise ValueError("damping_pct in (0, 100)")
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
+    teleport = _nodes(e).select("node", F.lit(1).alias("_s"))
+    return _propagate_int(
+        e, teleport, n_iter, damping_pct, checkpoint_every, "rank_e9"
     )
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
-    ed = e.join(deg, "src").repartition("src").persist()
-    base = (100 - damping_pct) * SCALE // 100
-    ranks = nodes.select("node", F.lit(SCALE).cast("long").alias("rank_e9"))
-    for i in range(n_iter):
-        contrib = (
-            ed.join(ranks.withColumnRenamed("node", "src"), "src")
-            .select("dst", F.expr("rank_e9 div _deg").alias("_c"))
-            .groupBy("dst")
-            .agg(F.sum("_c").alias("_in"))
-        )
-        ranks = (
-            nodes.join(contrib.withColumnRenamed("dst", "node"), "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.expr(f"{damping_pct} * coalesce(_in, 0L) div 100")
-                ).cast("long").alias("rank_e9"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-            ranks = ranks.localCheckpoint()
-    return ranks
 
 
 def degree_stats(
@@ -127,8 +174,8 @@ def connected_components(
     """Connected components with POINTER DOUBLING: each round propagates
     the min label one hop AND then shortcuts rep → rep's rep, so a
     diameter-d component converges in O(log d) rounds instead of the O(d)
-    of plain min-label propagation (dedup.dedup_groups — fine for shallow
-    near-dup clusters, ruinous for a continent-wide cell blob). Returns
+    of plain min-label propagation (ruinous for a continent-wide cell
+    blob or a long chain of near-duplicates). Returns
     (id, rep), rep = component minimum; localCheckpoint per round bounds
     lineage; stops early when a round changes nothing.
     """
@@ -319,15 +366,13 @@ def hits_int(
     Output: (node, auth_e9, hub_e9) over nodes = distinct src ∪ dst.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    e = e.persist()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
+    e = e.localCheckpoint(eager=False)
+    nodes = _nodes(e).localCheckpoint(eager=False)
 
-    def norm(scores: DataFrame, col: str) -> DataFrame:
+    def norm(raw: DataFrame, col: str) -> DataFrame:
+        scores = nodes.join(raw, "node", "left").select(
+            "node", F.coalesce(col, F.lit(0)).cast("long").alias(col)
+        )
         tot = scores.agg(
             F.count(F.lit(1)).alias("_n"), F.sum(col).alias("_t")
         )
@@ -348,24 +393,14 @@ def hits_int(
             .agg(F.sum("hub_e9").alias("auth_e9"))
             .withColumnRenamed("dst", "node")
         )
-        auth = norm(
-            nodes.join(raw_a, "node", "left").select(
-                "node", F.coalesce("auth_e9", F.lit(0)).cast("long").alias("auth_e9")
-            ),
-            "auth_e9",
-        )
+        auth = norm(raw_a, "auth_e9")
         raw_h = (
             e.join(auth.withColumnRenamed("node", "dst"), "dst")
             .groupBy("src")
             .agg(F.sum("auth_e9").alias("hub_e9"))
             .withColumnRenamed("src", "node")
         )
-        hub = norm(
-            nodes.join(raw_h, "node", "left").select(
-                "node", F.coalesce("hub_e9", F.lit(0)).cast("long").alias("hub_e9")
-            ),
-            "hub_e9",
-        )
+        hub = norm(raw_h, "hub_e9")
         if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
             auth = auth.localCheckpoint()
             hub = hub.localCheckpoint()
@@ -410,7 +445,7 @@ def resource_allocation(
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .persist()
+        .localCheckpoint(eager=False)
     )
     sym = und.unionByName(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -539,7 +574,7 @@ def cocitation(
     outdeg = e.groupBy("s").agg(F.count(F.lit(1)).alias("od"))
     guarded = e.join(
         outdeg.filter(F.col("od") <= max_out_deg).select("s"), "s", "left_semi"
-    ).persist()
+    ).localCheckpoint(eager=False)
     pairs = (
         guarded.alias("l")
         .join(guarded.alias("r"), "s")
@@ -579,59 +614,20 @@ def trustrank_int(
     self-inflate under uniform teleport score ~0 here. The standard
     web-spam demotion signal next to k-core and co-citation.
 
-    Same integer discipline as pagerank_int (every step int64
-    div/mul/sum, order-independent, engine-portable):
+    pagerank_int's kernel with the teleport flag set on the seeds only
+    (seeds are a broadcast-sized flag join):
 
         trust⁰(v)   = SCALE · [v ∈ seeds]
         trustᵏ⁺¹(v) = [v ∈ seeds]·(100−d)·SCALE div 100
                       + d · Σ_{u→v} (trustᵏ(u) div out(u)) div 100
 
-    Shape: identical to pagerank_int — the edge table is degree-joined,
-    repartitioned by src ONCE and persisted; each iteration is one hash
-    join + one combinable sum + one left join; seeds are a broadcast-
-    sized left_semi-derived flag. localCheckpoint bounds lineage.
-
     Output: (node, trust_e9:long) — 0 for pages unreachable from seeds.
     """
-    if not 0 < damping_pct < 100:
-        raise ValueError("damping_pct in (0, 100)")
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
+    teleport = _seed_flags(_nodes(e), seeds.select(F.col(seed_col).alias("node")))
+    return _propagate_int(
+        e, teleport, n_iter, damping_pct, checkpoint_every, "trust_e9"
     )
-    sd = seeds.select(F.col(seed_col).alias("node")).distinct()
-    flagged = nodes.join(
-        F.broadcast(sd.withColumn("_is_seed", F.lit(1))), "node", "left"
-    ).select("node", F.coalesce("_is_seed", F.lit(0)).alias("_is_seed"))
-    flagged = flagged.persist()
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
-    ed = e.join(deg, "src").repartition("src").persist()
-    base = (100 - damping_pct) * SCALE // 100
-    ranks = flagged.select(
-        "node", (F.col("_is_seed") * SCALE).cast("long").alias("trust_e9")
-    )
-    for i in range(n_iter):
-        contrib = (
-            ed.join(ranks.withColumnRenamed("node", "src"), "src")
-            .select("dst", F.expr("trust_e9 div _deg").alias("_c"))
-            .groupBy("dst")
-            .agg(F.sum("_c").alias("_in"))
-        )
-        ranks = (
-            flagged.join(contrib.withColumnRenamed("dst", "node"), "node", "left")
-            .select(
-                "node",
-                (
-                    F.col("_is_seed") * base
-                    + F.expr(f"{damping_pct} * coalesce(_in, 0L) div 100")
-                ).cast("long").alias("trust_e9"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-            ranks = ranks.localCheckpoint()
-    return ranks
 
 
 def host_graph(
@@ -928,8 +924,8 @@ def bfs_hops(
     frontier ⋈ edges (repartition edges by src once upstream and every
     round reuses the layout), one distinct over the candidate ids, one
     anti-join against visited — ids only, never payloads. localCheckpoint
-    per round keeps lineage O(1) per round (the dedup_groups / pagerank
-    discipline). Rounds are bounded by max_hops; the per-round count()
+    per round keeps lineage O(1) per round (the connected_components /
+    pagerank discipline). Rounds are bounded by max_hops; the per-round count()
     early-exit is one metadata-scale action on an already-computed frame.
 
     Output: (node, hop) — BIGINT node id, BIGINT min-hop ≤ max_hops.
@@ -983,55 +979,19 @@ def personalized_pagerank_int(
     and overflow conventions as pagerank_int (total mass here is
     n_seeds·SCALE, so the headroom is even larger).
 
-    Shape: identical to pagerank_int — edges repartitioned by src ONCE
-    and persisted, each round one hash join + one combinable sum + one
-    left join to the node set; localCheckpoint bounds lineage. Nodes
-    unreachable from the seeds hold rank 0 but stay in the output (the
-    node set is the graph's, not the frontier's).
+    Runs pagerank_int's kernel with the teleport flag set on the seeds
+    only. Nodes unreachable from the seeds hold rank 0 but stay in the
+    output (the node set is the graph's, not the frontier's).
 
     Output: (node, rank_e9:long).
     """
-    if not 0 < damping_pct < 100:
-        raise ValueError("damping_pct in (0, 100)")
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
+    teleport = _seed_flags(
+        _nodes(e), seeds.select(F.col("node").cast("long").alias("node"))
     )
-    sd = seeds.select(F.col("node").cast("long").alias("node")).distinct()
-    is_seed = nodes.join(sd, "node", "left_semi").select(
-        "node", F.lit(1).alias("_s")
+    return _propagate_int(
+        e, teleport, n_iter, damping_pct, checkpoint_every, "rank_e9"
     )
-    marked = nodes.join(is_seed, "node", "left").select(
-        "node", F.coalesce("_s", F.lit(0)).alias("_s")
-    ).localCheckpoint(eager=False)
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
-    ed = e.join(deg, "src").repartition("src").persist()
-    base = (100 - damping_pct) * SCALE // 100
-    ranks = marked.select(
-        "node", (F.col("_s") * SCALE).cast("long").alias("rank_e9")
-    )
-    for i in range(n_iter):
-        contrib = (
-            ed.join(ranks.withColumnRenamed("node", "src"), "src")
-            .select("dst", F.expr("rank_e9 div _deg").alias("_c"))
-            .groupBy("dst")
-            .agg(F.sum("_c").alias("_in"))
-        )
-        ranks = (
-            marked.join(contrib.withColumnRenamed("dst", "node"), "node", "left")
-            .select(
-                "node",
-                (
-                    F.col("_s") * F.lit(base)
-                    + F.expr(f"{damping_pct} * coalesce(_in, 0L) div 100")
-                ).cast("long").alias("rank_e9"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-            ranks = ranks.localCheckpoint()
-    return ranks
 
 
 def ktruss(
@@ -1163,9 +1123,7 @@ def boruvka_mst(
         .localCheckpoint(eager=True)
     )
     comp = (
-        e.select(F.col("a").alias("node"))
-        .unionByName(e.select(F.col("b").alias("node")))
-        .distinct()
+        _nodes(e, "a", "b")
         .withColumn("comp", F.col("node"))
         .localCheckpoint(eager=True)
     )
@@ -1281,11 +1239,7 @@ def hyperanf(
     from pbf2json_spark.sketch import hll_build, hll_estimate
 
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-    nodes = (
-        e.select(F.col("_s").alias("node"))
-        .unionByName(e.select(F.col("_d").alias("node")))
-        .distinct()
-    )
+    nodes = _nodes(e, "_s", "_d")
     cur = hll_build(
         nodes.withColumn("_k", F.col("node")), "_k", ["node"], p=p, seed=seed
     ).localCheckpoint(eager=True)

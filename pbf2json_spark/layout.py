@@ -14,6 +14,8 @@ The Morton key is the same bit interleave the cell index uses
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -173,6 +175,83 @@ def hilbert_udf(res: int):
 # keeping the scan's OR-of-BETWEENs bounded.
 
 
+def _grid_box(
+    lat0: float, lat1: float, lon0: float, lon1: float,
+    res: int, max_ranges: int,
+) -> tuple[int, int, int, int] | None:
+    """Inclusive grid bounds (qx0, qx1, qy0, qy1) of the bbox's cells at
+    `res` (the floor and clamp of cells.xy), or None for an empty bbox."""
+    if not 0 <= res <= cells.MAX_RES:
+        raise ValueError(f"res must be in [0, {cells.MAX_RES}]")
+    if max_ranges < 1:
+        raise ValueError("max_ranges >= 1")
+    if lat1 < lat0 or lon1 < lon0:
+        # an inverted box is empty in degrees even when both edges floor
+        # into the same grid cell
+        return None
+    n = 1 << res
+    return (
+        max(0, min(n - 1, math.floor((lon0 + 180.0) / 360.0 * n))),
+        max(0, min(n - 1, math.floor((lon1 + 180.0) / 360.0 * n))),
+        max(0, min(n - 1, math.floor((lat0 + 90.0) / 180.0 * n))),
+        max(0, min(n - 1, math.floor((lat1 + 90.0) / 180.0 * n))),
+    )
+
+
+def _coarsen(out: list[tuple[int, int]], max_ranges: int) -> list[tuple[int, int]]:
+    """Merge sorted intervals across their smallest gaps until at most
+    `max_ranges` remain — a superset, adding false positives only."""
+    while len(out) > max_ranges:
+        gi = min(range(len(out) - 1),
+                 key=lambda i: out[i + 1][0] - out[i][1])
+        out[gi:gi + 2] = [(out[gi][0], out[gi + 1][1])]
+    return out
+
+
+def _range_filter(
+    df: DataFrame,
+    ranges: list[tuple[int, int]],
+    bbox: tuple[float, float, float, float],
+    lat_col: str,
+    lon_col: str,
+    key_col: str | None,
+    temp_key: str,
+    computed_key,
+) -> DataFrame:
+    """The tail of zorder_range_filter and hilbert_range_filter: rows whose
+    key falls in one of `ranges` AND inside the exact bbox (lat0, lat1,
+    lon0, lon1). The key is the stored `key_col`, or, without one,
+    `computed_key()` in the temporary column `temp_key`, dropped after.
+
+    The plain OR-of-BETWEENs on a stored key reaches the parquet scan as
+    PushedFilters and prunes row groups by the key's min/max stats; on the
+    computed key it's the same cheap attribute comparisons. The residual
+    exact bbox predicate keeps semantics independent of `max_ranges`
+    coarsening."""
+    if not ranges:
+        return df.filter(F.lit(False))
+    drop_key = key_col is None
+    if drop_key:
+        key_col = temp_key
+        if key_col in df.columns:
+            raise ValueError(f"input frame already has a {key_col!r} column")
+        df = df.withColumn(key_col, computed_key())
+    key = F.col(key_col)
+    cond = None
+    for lo, hi in ranges:
+        c = key.between(F.lit(lo), F.lit(hi))
+        cond = c if cond is None else cond | c
+    lat0, lat1, lon0, lon1 = bbox
+    exact = (
+        (F.col(lat_col) >= F.lit(float(lat0)))
+        & (F.col(lat_col) <= F.lit(float(lat1)))
+        & (F.col(lon_col) >= F.lit(float(lon0)))
+        & (F.col(lon_col) <= F.lit(float(lon1)))
+    )
+    out = df.filter(cond & exact)
+    return out.drop(key_col) if drop_key else out
+
+
 def zorder_ranges(
     lat0: float, lat1: float, lon0: float, lon1: float,
     res: int = 16, max_ranges: int = 64,
@@ -187,22 +266,10 @@ def zorder_ranges(
     table size — the plan is then pushed down as BETWEENs on the stored
     key column.
     """
-    if not 0 <= res <= cells.MAX_RES:
-        raise ValueError(f"res must be in [0, {cells.MAX_RES}]")
-    if max_ranges < 1:
-        raise ValueError("max_ranges >= 1")
-    if lat1 < lat0 or lon1 < lon0:
-        # an inverted box is empty in degrees even when both edges floor
-        # into the same grid cell
+    box = _grid_box(lat0, lat1, lon0, lon1, res, max_ranges)
+    if box is None:
         return []
-    n = 1 << res
-    import math
-    qx0 = max(0, min(n - 1, math.floor((lon0 + 180.0) / 360.0 * n)))
-    qx1 = max(0, min(n - 1, math.floor((lon1 + 180.0) / 360.0 * n)))
-    qy0 = max(0, min(n - 1, math.floor((lat0 + 90.0) / 180.0 * n)))
-    qy1 = max(0, min(n - 1, math.floor((lat1 + 90.0) / 180.0 * n)))
-    if qx1 < qx0 or qy1 < qy0:
-        return []
+    qx0, qx1, qy0, qy1 = box
     prefix = res << cells._RES_SHIFT
     out: list[tuple[int, int]] = []
 
@@ -226,12 +293,7 @@ def zorder_ranges(
                  x + (c & 1) * h, y + (c >> 1) * h)
 
     walk(0, 0, 0, 0)
-    while len(out) > max_ranges:
-        # swallow the smallest gap (adds only false positives)
-        gi = min(range(len(out) - 1),
-                 key=lambda i: out[i + 1][0] - out[i][1])
-        out[gi:gi + 2] = [(out[gi][0], out[gi + 1][1])]
-    return [(prefix | lo, prefix | hi) for lo, hi in out]
+    return [(prefix | lo, prefix | hi) for lo, hi in _coarsen(out, max_ranges)]
 
 
 def zorder_range_filter(
@@ -254,10 +316,8 @@ def zorder_range_filter(
     coarsening.
     """
     ranges = zorder_ranges(lat0, lat1, lon0, lon1, res, max_ranges)
-    if not ranges:
-        return df.filter(F.lit(False))
-    drop_key = key_col is None
-    if drop_key:
+
+    def key() -> Column:
         # computed key: key rows with the Arrow numpy kernel. Predicate
         # pushdown would substitute an inline Column key into the filter,
         # duplicating the spread-bit ladder 2·|ranges| times in ONE
@@ -265,34 +325,19 @@ def zorder_range_filter(
         # ~64 ranges; an exists() probe avoids that but runs as an
         # interpreted HOF — measured ~6x slower than the Arrow path at
         # sf0.1). The ArrowEvalPython node is a pushdown barrier and its
-        # output a plain attribute, so the BETWEENs below stay cheap.
-        key_col = "__zr_key"
-        if key_col in df.columns:
-            raise ValueError(f"input frame already has a {key_col!r} column")
-
+        # output a plain attribute, so the BETWEENs stay cheap.
         @F.pandas_udf("long")
         def _zkey(lat: pd.Series, lon: pd.Series) -> pd.Series:
             return pd.Series(cells.encode(
                 lat.to_numpy(np.float64), lon.to_numpy(np.float64), res
             ))
 
-        df = df.withColumn(key_col, _zkey(F.col(lat_col), F.col(lon_col)))
-    # the plain OR-of-BETWEENs on a stored key reaches the parquet scan
-    # as PushedFilters and prunes row groups by the key's min/max stats;
-    # on the computed key it's the same cheap attribute comparisons
-    key = F.col(key_col)
-    cond = None
-    for lo, hi in ranges:
-        c = key.between(F.lit(lo), F.lit(hi))
-        cond = c if cond is None else cond | c
-    exact = (
-        (F.col(lat_col) >= F.lit(float(lat0)))
-        & (F.col(lat_col) <= F.lit(float(lat1)))
-        & (F.col(lon_col) >= F.lit(float(lon0)))
-        & (F.col(lon_col) <= F.lit(float(lon1)))
+        return _zkey(F.col(lat_col), F.col(lon_col))
+
+    return _range_filter(
+        df, ranges, (lat0, lat1, lon0, lon1), lat_col, lon_col,
+        key_col, "__zr_key", key,
     )
-    out = df.filter(cond & exact)
-    return out.drop(key_col) if drop_key else out
 
 
 def hilbert_ranges(
@@ -311,20 +356,11 @@ def hilbert_ranges(
     visited in curve order, so DFS emits intervals already ascending.
     Budget coarsening merges smallest gaps (false positives only).
     """
-    if not 0 <= res <= cells.MAX_RES:
-        raise ValueError(f"res must be in [0, {cells.MAX_RES}]")
-    if max_ranges < 1:
-        raise ValueError("max_ranges >= 1")
-    if lat1 < lat0 or lon1 < lon0:
+    box = _grid_box(lat0, lat1, lon0, lon1, res, max_ranges)
+    if box is None:
         return []
-    import math
+    qx0, qx1, qy0, qy1 = box
     n = 1 << res
-    qx0 = max(0, min(n - 1, math.floor((lon0 + 180.0) / 360.0 * n)))
-    qx1 = max(0, min(n - 1, math.floor((lon1 + 180.0) / 360.0 * n)))
-    qy0 = max(0, min(n - 1, math.floor((lat0 + 90.0) / 180.0 * n)))
-    qy1 = max(0, min(n - 1, math.floor((lat1 + 90.0) / 180.0 * n)))
-    if qx1 < qx0 or qy1 < qy0:
-        return []
     out: list[tuple[int, int]] = []
     d0 = 0  # DFS cursor: curve distance at the node's first cell
 
@@ -357,11 +393,7 @@ def hilbert_ranges(
     # initial orientation (xi along y-axis) matches hilbert_d exactly
     # (verified cell-by-cell against the bit walk in tests)
     walk(0, 0, 0, n, n, 0, res)
-    while len(out) > max_ranges:
-        gi = min(range(len(out) - 1),
-                 key=lambda i: out[i + 1][0] - out[i][1])
-        out[gi:gi + 2] = [(out[gi][0], out[gi + 1][1])]
-    return out
+    return _coarsen(out, max_ranges)
 
 
 def hilbert_range_filter(
@@ -378,39 +410,18 @@ def hilbert_range_filter(
     dropped afterwards; either way the exact bbox residual keeps the result
     independent of `max_ranges` coarsening."""
     ranges = hilbert_ranges(lat0, lat1, lon0, lon1, res, max_ranges)
-    if not ranges:
-        return df.filter(F.lit(False))
-    drop_key = key_col is None
-    if drop_key:
+
+    def key() -> Column:
         # compute the key with the ARROW kernel, not the hilbert_df
         # Column chain: pushing a predicate through the chain substitutes
         # each level's x/y into the next (two references per level), so
         # the optimizer's expression tree grows 2^res — Catalyst itself
         # OOMs before codegen does. The ArrowEvalPython node is a
         # pushdown barrier and its output a plain attribute.
-        key_col = "__hr_key"
-        if key_col in df.columns:
-            raise ValueError(f"input frame already has a {key_col!r} column")
-        n = 1 << res
-        gx = F.greatest(F.lit(0), F.least(
-            F.lit(n - 1),
-            F.floor((F.col(lon_col) + 180.0) / 360.0 * float(n)),
-        )).cast("long")
-        gy = F.greatest(F.lit(0), F.least(
-            F.lit(n - 1),
-            F.floor((F.col(lat_col) + 90.0) / 180.0 * float(n)),
-        )).cast("long")
-        df = df.withColumn(key_col, hilbert_udf(res)(gx, gy))
-    key = F.col(key_col)
-    cond = None
-    for lo, hi in ranges:
-        c = key.between(F.lit(lo), F.lit(hi))
-        cond = c if cond is None else cond | c
-    exact = (
-        (F.col(lat_col) >= F.lit(float(lat0)))
-        & (F.col(lat_col) <= F.lit(float(lat1)))
-        & (F.col(lon_col) >= F.lit(float(lon0)))
-        & (F.col(lon_col) <= F.lit(float(lon1)))
+        gx, gy = cells.xy_cols(F.col(lat_col), F.col(lon_col), res)
+        return hilbert_udf(res)(gx, gy)
+
+    return _range_filter(
+        df, ranges, (lat0, lat1, lon0, lon1), lat_col, lon_col,
+        key_col, "__hr_key", key,
     )
-    out = df.filter(cond & exact)
-    return out.drop(key_col) if drop_key else out

@@ -33,11 +33,6 @@ from . import cells
 E6 = 1_000_000
 
 
-def _cell_from_xy_col(x: Column, y: Column, res: int) -> Column:
-    m = cells._spread_col(x).bitwiseOR(F.shiftleft(cells._spread_col(y), 1))
-    return F.lit(res << cells._RES_SHIFT).bitwiseOR(m).cast("long")
-
-
 def _grid_u(lon: Column, res: int) -> Column:
     """Longitude → continuous grid units in [0, 2^res]."""
     return (lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(1 << res))
@@ -102,7 +97,7 @@ def rasterize_boxes(
         * F.floor(oy * E6).cast("long")
     )
     tiled = (
-        g.withColumn("tile", _cell_from_xy_col(F.col("_x"), F.col("_y"), res))
+        g.withColumn("tile", cells._from_xy_col(F.col("_x"), F.col("_y"), res))
         .withColumn("cover_e12", cover)
         .filter(F.col("cover_e12") > 0)
         .drop("_u0", "_u1", "_v0", "_v1", "_x", "_y")
@@ -264,7 +259,7 @@ def line_cells(
     )
     d = d.withColumn("_r", F.explode(F.sequence(F.least(ra, rb), F.greatest(ra, rb))))
     out = d.withColumn(
-        "cell", _cell_from_xy_col(F.col("_c").cast("long"), F.col("_r").cast("long"), res)
+        "cell", cells._from_xy_col(F.col("_c").cast("long"), F.col("_r").cast("long"), res)
     )
     return out.drop(
         "_gx0", "_gy0", "_gx1", "_gy1", "_XA", "_YA", "_YB", "_DX", "_DY",

@@ -595,6 +595,18 @@ def bbox_intersect_join(
 # --- within-distance join (geofencing) ----------------------------------------------
 
 
+def _radius_cells(radius_deg: float, res: int) -> Column:
+    """One exploded row per cell of the Chebyshev disk around a query
+    row's (lat, lon) that covers `radius_deg`: disk radius
+    ceil(radius/cell_extent)+1 at `res`, so any point within the radius
+    has its containing cell in the disk."""
+    qx, qy = cells.xy_cols(F.col("lat"), F.col("lon"), res)
+    disk_r = int(np.ceil(radius_deg / (180.0 / (1 << res)))) + 1
+    return F.explode(
+        F.array_distinct(cells.disk_col(qx, qy, res, F.lit(disk_r)))
+    )
+
+
 def within_distance_join(
     points: DataFrame,
     queries: DataFrame,
@@ -638,16 +650,11 @@ def within_distance_join(
         F.col("lon").alias("_plon"),
         cells.cell_col(F.col("lat"), F.col("lon"), res).alias("_pcell"),
     )
-    qx, qy = cells.xy_cols(F.col("lat"), F.col("lon"), res)
-    lat_extent = 180.0 / (1 << res)
-    disk_r = int(np.ceil(radius_deg / lat_extent)) + 1
     q = queries.select(
         F.col(query_id),
         F.col("lat").alias("_qlat"),
         F.col("lon").alias("_qlon"),
-        F.explode(
-            F.array_distinct(cells.disk_col(qx, qy, res, F.lit(disk_r)))
-        ).alias("_cells"),
+        _radius_cells(radius_deg, res).alias("_cells"),
     )
     dlat = F.col("_plat") - F.col("_qlat")
     dlon = F.col("_plon") - F.col("_qlon")
@@ -902,15 +909,10 @@ def spatial_anti_join(
         F.col("lon"),
         cells.cell_col(F.col("lat"), F.col("lon"), res).alias("_pcell"),
     )
-    qx, qy = cells.xy_cols(F.col("lat"), F.col("lon"), res)
-    lat_extent = 180.0 / (1 << res)
-    disk_r = int(np.ceil(radius_deg / lat_extent)) + 1
     q = queries.select(
         F.col("lat").alias("_qlat"),
         F.col("lon").alias("_qlon"),
-        F.explode(
-            F.array_distinct(cells.disk_col(qx, qy, res, F.lit(disk_r)))
-        ).alias("_cells"),
+        _radius_cells(radius_deg, res).alias("_cells"),
     )
     dlat = pts["lat"] - F.col("_qlat")
     dlon = pts["lon"] - F.col("_qlon")
@@ -1265,6 +1267,105 @@ def dissolve_area(
     )
 
 
+_QUEEN = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1) if (dx, dy) != (0, 0)]
+
+# squared Getis-Ord z-score ×1e6 from a cell's (w_i, t_i) and its slice's
+# (_n, _s, _q) — gi_star's formula, shared with emerging_hotspots
+_GI2_E6 = (
+    "CAST((CAST(_n * t_i - w_i * _s AS DECIMAL(38,0)) * "
+    "(_n * t_i - w_i * _s) * (_n - 1) * 1000000) div "
+    "greatest((CAST(_n AS DECIMAL(38,0)) * _q - "
+    "CAST(_s AS DECIMAL(38,0)) * _s) * "
+    "(_n * w_i - w_i * w_i), 1) AS BIGINT)"
+)
+
+
+def _cell_counts(
+    points: DataFrame, res: int, lat_col: str, lon_col: str, **keys: Column
+) -> DataFrame:
+    """(*keys, cx, cy, x): points per occupied grid cell at `res`, within
+    each slice of the named key Columns — ONE map-side-combinable groupBy
+    on the cell key."""
+    x, y = cells.xy_cols(F.col(lat_col), F.col(lon_col), res)
+    return (
+        points.select(
+            x.alias("cx"), y.alias("cy"), *[c.alias(k) for k, c in keys.items()]
+        )
+        .groupBy(*keys, "cx", "cy")
+        .agg(F.count(F.lit(1)).alias("x"))
+    )
+
+
+def _totals(counts: DataFrame, *keys: str) -> DataFrame:
+    """Per `keys` slice of a cell-count frame: occupied cells _n, points
+    _s = Σx and _q = Σx² (unused sums are pruned by the optimizer)."""
+    return counts.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("_n"),
+        F.sum("x").alias("_s"),
+        F.sum(F.col("x") * F.col("x")).alias("_q"),
+    )
+
+
+def _queen_sums(counts: DataFrame, *keys: str) -> DataFrame:
+    """Queen-neighbour sums over an AGGREGATED cell frame (*keys, cx, cy,
+    x), one row per occupied cell: the same rows plus k (occupied cells
+    among the 8 around, within the same `keys`), nb (their summed x) and
+    nbsq (their summed x²) — 0 for a cell with none. Sums a caller does
+    not read are pruned by the optimizer.
+
+    The 8 shifted copies of `counts` (8·N slim rows, not points) union into
+    one combinable groupBy that equi-joins back: no window, no theta join.
+    """
+    probe = None
+    for dx, dy in _QUEEN:
+        o = counts.select(
+            *keys,
+            (F.col("cx") + dx).alias("cx"),
+            (F.col("cy") + dy).alias("cy"),
+            F.col("x").alias("_nx"),
+        )
+        probe = o if probe is None else probe.unionByName(o)
+    sums = {
+        "k": F.count(F.lit(1)),
+        "nb": F.sum("_nx"),
+        "nbsq": F.sum(F.col("_nx") * F.col("_nx")),
+    }
+    on = [*keys, "cx", "cy"]
+    nbr = probe.groupBy(*on).agg(*[c.alias(f"_{n}") for n, c in sums.items()])
+    return counts.join(nbr, on, "left").select(
+        *on, "x",
+        *[F.coalesce(f"_{n}", F.lit(0)).cast("long").alias(n) for n in sums],
+    )
+
+
+def _queen_global(
+    points: DataFrame,
+    res: int,
+    lat_col: str,
+    lon_col: str,
+    num: str,
+) -> DataFrame:
+    """The one-row global sums behind global_moran and geary_c over the
+    occupied cells' queen-neighbour frame (x, k, nb, nbsq) with N = _n
+    and S = _s broadcast: (n_cells, s_total, w_pairs = Σk, _num = Σ of the
+    SQL expression `num`, _den = Σ(N·x − S)²), sums in DECIMAL(38,0)."""
+    counts = _cell_counts(points, res, lat_col, lon_col)
+    totals = _totals(counts)
+    j = _queen_sums(counts).crossJoin(F.broadcast(totals))
+    return j.agg(
+        F.max("_n").alias("n_cells"),
+        F.max("_s").alias("s_total"),
+        F.sum("k").alias("w_pairs"),
+        F.sum(F.expr(num)).alias("_num"),
+        F.sum(
+            F.expr(
+                "CAST(_n * x - _s AS DECIMAL(38,0)) * "
+                "CAST(_n * x - _s AS DECIMAL(38,0))"
+            )
+        ).alias("_den"),
+    )
+
+
 def local_moran(
     points: DataFrame,
     res: int,
@@ -1300,37 +1401,13 @@ def local_moran(
     Output: (cx, cy, x, k_nbrs, nbr_sum, lisa_e0) one row per occupied
     cell.
     """
-    x, y = cells.xy_cols(F.col(lat_col), F.col(lon_col), res)
-    counts = (
-        points.select(x.alias("cx"), y.alias("cy"))
-        .groupBy("cx", "cy")
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    totals = counts.agg(
-        F.count(F.lit(1)).alias("_n"), F.sum("x").alias("_s")
-    )
-    offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-            if not (dx == 0 and dy == 0)]
-    probe = None
-    for dx, dy in offs:
-        o = counts.select(
-            (F.col("cx") + dx).alias("cx"),
-            (F.col("cy") + dy).alias("cy"),
-            F.col("x").alias("_nx"),
-        )
-        probe = o if probe is None else probe.unionByName(o)
-    nbr = probe.groupBy("cx", "cy").agg(
-        F.count(F.lit(1)).alias("k_nbrs"), F.sum("_nx").alias("nbr_sum")
-    )
-    j = (
-        counts.join(nbr, ["cx", "cy"], "left")
-        .select(
-            "cx", "cy", "x",
-            F.coalesce("k_nbrs", F.lit(0)).cast("long").alias("k_nbrs"),
-            F.coalesce("nbr_sum", F.lit(0)).cast("long").alias("nbr_sum"),
-        )
-        .crossJoin(F.broadcast(totals))
-    )
+    counts = _cell_counts(points, res, lat_col, lon_col)
+    totals = _totals(counts)
+    j = _queen_sums(counts).select(
+        "cx", "cy", "x",
+        F.col("k").alias("k_nbrs"),
+        F.col("nb").alias("nbr_sum"),
+    ).crossJoin(F.broadcast(totals))
     return j.select(
         "cx", "cy", "x", "k_nbrs", "nbr_sum",
         F.expr(
@@ -1364,60 +1441,18 @@ def global_moran(
     Truncation toward zero matches DuckDB's `//` exactly (verified —
     both truncate, neither floors).
 
-    Shape: identical to local_moran (one combinable count over points,
-    one 8-shift neighbor agg over the AGGREGATED frame) plus one global
-    agg — the output is ONE row; nothing here scales with the point
-    count except the first groupBy.
+    Shape: local_moran's cell counts and queen-neighbour sums plus one
+    global agg (`_queen_global`, shared with geary_c) — the output is ONE
+    row; nothing here scales with the point count except the first
+    groupBy.
 
     Output 1 row: (n_cells, s_total, w_pairs, var_e0, moran_e6) where
     var_e0 = den div N² (the count variance, for context).
     """
-    x, y = cells.xy_cols(F.col(lat_col), F.col(lon_col), res)
-    counts = (
-        points.select(x.alias("cx"), y.alias("cy"))
-        .groupBy("cx", "cy")
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-            if not (dx == 0 and dy == 0)]
-    probe = None
-    for dx, dy in offs:
-        o = counts.select(
-            (F.col("cx") + dx).alias("cx"),
-            (F.col("cy") + dy).alias("cy"),
-            F.col("x").alias("_nx"),
-        )
-        probe = o if probe is None else probe.unionByName(o)
-    nbr = probe.groupBy("cx", "cy").agg(
-        F.count(F.lit(1)).alias("k_nbrs"), F.sum("_nx").alias("nbr_sum")
-    )
-    totals = counts.agg(
-        F.count(F.lit(1)).alias("_n"), F.sum("x").alias("_s")
-    )
-    j = (
-        counts.join(nbr, ["cx", "cy"], "left")
-        .select(
-            "x",
-            F.coalesce("k_nbrs", F.lit(0)).cast("long").alias("k"),
-            F.coalesce("nbr_sum", F.lit(0)).cast("long").alias("nb"),
-        )
-        .crossJoin(F.broadcast(totals))
-    )
-    agg = j.agg(
-        F.max("_n").alias("n_cells"),
-        F.max("_s").alias("s_total"),
-        F.sum("k").alias("w_pairs"),
-        F.sum(
-            F.expr(
-                "CAST(_n * x - _s AS DECIMAL(38,0)) * "
-                "CAST(_n * nb - k * _s AS DECIMAL(38,0))"
-            )
-        ).alias("_num"),
-        F.sum(
-            F.expr(
-                "CAST(_n * x - _s AS DECIMAL(38,0)) * CAST(_n * x - _s AS DECIMAL(38,0))"
-            )
-        ).alias("_den"),
+    agg = _queen_global(
+        points, res, lat_col, lon_col,
+        "CAST(_n * x - _s AS DECIMAL(38,0)) * "
+        "CAST(_n * nb - k * _s AS DECIMAL(38,0))",
     )
     return agg.select(
         "n_cells",
@@ -1633,61 +1668,14 @@ def geary_c(
     with every accumulation in DECIMAL(38,0). Truncation toward zero
     matches DuckDB's `//`.
 
-    Shape: identical to global_moran — one combinable count over the
-    points, one 8-shift scatter over the AGGREGATED cell frame (now also
-    carrying x², still ids+ints only), one global agg. Output is 1 row.
+    Shape: global_moran's kernel (`_queen_global`) with the neighbour
+    scatter also summing x². Output is 1 row.
 
     Output: (n_cells, s_total, w_pairs, geary_e6).
     """
-    x, y = cells.xy_cols(F.col(lat_col), F.col(lon_col), res)
-    counts = (
-        points.select(x.alias("cx"), y.alias("cy"))
-        .groupBy("cx", "cy")
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-            if not (dx == 0 and dy == 0)]
-    probe = None
-    for dx, dy in offs:
-        o = counts.select(
-            (F.col("cx") + dx).alias("cx"),
-            (F.col("cy") + dy).alias("cy"),
-            F.col("x").alias("_nx"),
-        )
-        probe = o if probe is None else probe.unionByName(o)
-    nbr = probe.groupBy("cx", "cy").agg(
-        F.count(F.lit(1)).alias("k_nbrs"),
-        F.sum("_nx").alias("nbr_sum"),
-        F.sum(F.col("_nx") * F.col("_nx")).alias("nbr_sq"),
-    )
-    totals = counts.agg(
-        F.count(F.lit(1)).alias("_n"), F.sum("x").alias("_s")
-    )
-    j = (
-        counts.join(nbr, ["cx", "cy"], "left")
-        .select(
-            "x",
-            F.coalesce("k_nbrs", F.lit(0)).cast("long").alias("k"),
-            F.coalesce("nbr_sum", F.lit(0)).cast("long").alias("nb"),
-            F.coalesce("nbr_sq", F.lit(0)).cast("long").alias("nbsq"),
-        )
-        .crossJoin(F.broadcast(totals))
-    )
-    agg = j.agg(
-        F.max("_n").alias("n_cells"),
-        F.max("_s").alias("s_total"),
-        F.sum("k").alias("w_pairs"),
-        F.sum(
-            F.expr(
-                "CAST(k * x * x - 2 * x * nb + nbsq AS DECIMAL(38,0))"
-            )
-        ).alias("_num"),
-        F.sum(
-            F.expr(
-                "CAST(_n * x - _s AS DECIMAL(38,0)) * "
-                "CAST(_n * x - _s AS DECIMAL(38,0))"
-            )
-        ).alias("_den"),
+    agg = _queen_global(
+        points, res, lat_col, lon_col,
+        "CAST(k * x * x - 2 * x * nb + nbsq AS DECIMAL(38,0))",
     )
     return agg.select(
         "n_cells",
@@ -1824,59 +1812,24 @@ def gi_star(
     Shape at 10^12 points: ONE map-side-combinable count collapses
     points to occupied cells; an 8-shift scatter over the AGGREGATED
     cell frame (ids+ints only) builds neighborhoods; one equi-join back;
-    the two global scalars (n, S_tot, Q) broadcast. Identical plan
-    skeleton to geary_c — per-cell output instead of one row.
+    the two global scalars (n, S_tot, Q) broadcast.
 
     Output: (cx, cy, x, w_i, t_i, gi_sign, gi2_e6), one row per occupied
     cell.
     """
-    x, y = cells.xy_cols(F.col(lat_col), F.col(lon_col), res)
-    counts = (
-        points.select(x.alias("cx"), y.alias("cy"))
-        .groupBy("cx", "cy")
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-            if not (dx == 0 and dy == 0)]
-    probe = None
-    for dx, dy in offs:
-        o = counts.select(
-            (F.col("cx") + dx).alias("cx"),
-            (F.col("cy") + dy).alias("cy"),
-            F.col("x").alias("_nx"),
-        )
-        probe = o if probe is None else probe.unionByName(o)
-    nbr = probe.groupBy("cx", "cy").agg(
-        F.count(F.lit(1)).alias("_k"),
-        F.sum("_nx").alias("_nbr"),
-    )
-    totals = counts.agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sum("x").alias("_s"),
-        F.sum(F.col("x") * F.col("x")).alias("_q"),
-    )
-    j = (
-        counts.join(nbr, ["cx", "cy"], "left")
-        .select(
-            "cx", "cy", "x",
-            (F.coalesce("_k", F.lit(0)) + 1).cast("long").alias("w_i"),
-            (F.col("x") + F.coalesce("_nbr", F.lit(0)))
-            .cast("long").alias("t_i"),
-        )
-        .crossJoin(F.broadcast(totals))
-    )
+    counts = _cell_counts(points, res, lat_col, lon_col)
+    totals = _totals(counts)
+    j = _queen_sums(counts).select(
+        "cx", "cy", "x",
+        (F.col("k") + 1).alias("w_i"),
+        (F.col("x") + F.col("nb")).alias("t_i"),
+    ).crossJoin(F.broadcast(totals))
     return j.select(
         "cx", "cy", "x", "w_i", "t_i",
         F.expr(
             "CAST(sign(_n * t_i - w_i * _s) AS BIGINT)"
         ).alias("gi_sign"),
-        F.expr(
-            "CAST((CAST(_n * t_i - w_i * _s AS DECIMAL(38,0)) * "
-            "(_n * t_i - w_i * _s) * (_n - 1) * 1000000) div "
-            "greatest((CAST(_n AS DECIMAL(38,0)) * _q - "
-            "CAST(_s AS DECIMAL(38,0)) * _s) * "
-            "(_n * w_i - w_i * w_i), 1) AS BIGINT)"
-        ).alias("gi2_e6"),
+        F.expr(_GI2_E6).alias("gi2_e6"),
     )
 
 
@@ -2231,57 +2184,25 @@ def emerging_hotspots(
 
     Output: (cx, cy, n_buckets, s_stat, var18, mk2_e6).
     """
-    x, y = cells.xy_cols(F.col(lat_col), F.col(lon_col), res)
-    g = (
-        events.select(
-            x.alias("cx"), y.alias("cy"),
-            F.expr(
-                f"(CAST({ts_col} AS BIGINT) - pmod({ts_col}, "
-                f"{int(bucket_us)})) div {int(bucket_us)}"
-            ).alias("b"),
-        )
-        .groupBy("b", "cx", "cy")
-        .agg(F.count(F.lit(1)).alias("x"))
+    bucket = F.expr(
+        f"(CAST({ts_col} AS BIGINT) - pmod({ts_col}, "
+        f"{int(bucket_us)})) div {int(bucket_us)}"
     )
+    g = _cell_counts(events, res, lat_col, lon_col, b=bucket)
     g = g.localCheckpoint(eager=False)
-    offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-            if not (dx == 0 and dy == 0)]
-    probe = None
-    for dx, dy in offs:
-        o = g.select(
-            "b",
-            (F.col("cx") + dx).alias("cx"),
-            (F.col("cy") + dy).alias("cy"),
-            F.col("x").alias("_nx"),
-        )
-        probe = o if probe is None else probe.unionByName(o)
-    nbr = probe.groupBy("b", "cx", "cy").agg(
-        F.count(F.lit(1)).alias("_k"),
-        F.sum("_nx").alias("_nbr"),
-    )
-    totals = g.groupBy("b").agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sum("x").alias("_s"),
-        F.sum(F.col("x") * F.col("x")).alias("_q"),
-    )
+    totals = _totals(g, "b")
     gi = (
-        g.join(nbr, ["b", "cx", "cy"], "left")
+        _queen_sums(g, "b")
         .select(
-            "b", "cx", "cy", "x",
-            (F.coalesce("_k", F.lit(0)) + 1).cast("long").alias("w_i"),
-            (F.col("x") + F.coalesce("_nbr", F.lit(0)))
-            .cast("long").alias("t_i"),
+            "b", "cx", "cy",
+            (F.col("k") + 1).alias("w_i"),
+            (F.col("x") + F.col("nb")).alias("t_i"),
         )
         .join(F.broadcast(totals), "b")
         .select(
             "b", "cx", "cy",
             F.expr(
-                "CAST(sign(_n * t_i - w_i * _s) AS BIGINT) * "
-                "CAST((CAST(_n * t_i - w_i * _s AS DECIMAL(38,0)) * "
-                "(_n * t_i - w_i * _s) * (_n - 1) * 1000000) div "
-                "greatest((CAST(_n AS DECIMAL(38,0)) * _q - "
-                "CAST(_s AS DECIMAL(38,0)) * _s) * "
-                "(_n * w_i - w_i * w_i), 1) AS BIGINT)"
+                f"CAST(sign(_n * t_i - w_i * _s) AS BIGINT) * {_GI2_E6}"
             ).alias("gi"),
         )
     )
@@ -2559,7 +2480,7 @@ def dbscan(
          min id; an isolated core seeds its own singleton cluster;
       4. border assignment: min core-cluster label over each non-core
          point's core neighbors — a second pass over the SAME pair
-         frame (persisted), no new join topology.
+         frame (pinned), no new join topology.
 
     Output: (point_id, is_core, role 'core'|'border'|'noise',
     cluster — long, NULL for noise).
@@ -2572,7 +2493,8 @@ def dbscan(
     pairs = within_distance_join(
         points, q, radius_deg=eps_deg, res=res,
         point_id=point_id, query_id="_qid",
-    ).select(F.col("_qid"), F.col(point_id).alias("_pid")).persist()
+    ).select(F.col("_qid"), F.col(point_id).alias("_pid"))
+    pairs = pairs.localCheckpoint(eager=False)
     counts = pairs.groupBy("_qid").agg(F.count(F.lit(1)).alias("_n"))
     core = counts.select(
         F.col("_qid").alias("_id"), (F.col("_n") >= min_pts).alias("_is_core")

@@ -888,6 +888,56 @@ def seasonal_naive_eval(
     )
 
 
+def _lagged_pearson(
+    s: DataFrame,
+    series_col: str,
+    shifts: list[tuple[int, int]],
+    var_names: tuple[str, str],
+) -> DataFrame:
+    """Per (series, lag) Pearson moments of x_t against y_{t+shift} over
+    `s` (k, d, x, y): for each (lag, shift) in `shifts`, the pairs come
+    from a GAP-CORRECT equi-join on (k, d + shift), then one combinable
+    groupBy sums (m, Σx, Σy, Σxy, Σx², Σy²) into the BIGINT numerator
+    n·Σxy − ΣxΣy and the two variance terms (named `var_names`); r is
+    the fixed cast/multiply/sqrt/divide tree, NULL when either side is
+    constant or fewer than 2 pairs matched. One tall union over lags.
+
+    Output: (series, lag, m, s_cov, <var_x>, <var_y>, r).
+    """
+    outs = []
+    for lag, shift in shifts:
+        ys = s.select("k", (F.col("d") - F.lit(shift)).alias("d"),
+                      F.col("y").alias("_y2"))
+        j = s.join(ys, ["k", "d"]).select("k", "x", F.col("_y2").alias("y2"))
+        agg = j.groupBy("k").agg(
+            F.count(F.lit(1)).alias("m"),
+            F.sum("x").alias("_sx"),
+            F.sum("y2").alias("_sy"),
+            F.sum(F.col("x") * F.col("y2")).alias("_sxy"),
+            F.sum(F.col("x") * F.col("x")).alias("_sxx"),
+            F.sum(F.col("y2") * F.col("y2")).alias("_syy"),
+        )
+        cov = F.col("m") * F.col("_sxy") - F.col("_sx") * F.col("_sy")
+        vx = F.col("m") * F.col("_sxx") - F.col("_sx") * F.col("_sx")
+        vy = F.col("m") * F.col("_syy") - F.col("_sy") * F.col("_sy")
+        r = cov.cast("double") / F.sqrt(vx.cast("double") * vy.cast("double"))
+        outs.append(
+            agg.select(
+                F.col("k").alias(series_col),
+                F.lit(lag).cast("long").alias("lag"),
+                "m",
+                cov.alias("s_cov"),
+                vx.alias(var_names[0]),
+                vy.alias(var_names[1]),
+                F.when((F.col("m") >= 2) & (vx > 0) & (vy > 0), r).alias("r"),
+            )
+        )
+    out = outs[0]
+    for o in outs[1:]:
+        out = out.unionByName(o)
+    return out
+
+
 def acf_lags(
     df: DataFrame,
     series_col: str,
@@ -916,45 +966,16 @@ def acf_lags(
 
     Output: (series, lag, m, s_cov, s_vara, s_varb, r).
     """
+    v = F.col(value_col).cast("long")
     s = df.select(
         F.col(series_col).alias("k"),
         F.col(day_col).cast("long").alias("d"),
-        F.col(value_col).cast("long").alias("v"),
+        v.alias("x"),
+        v.alias("y"),
     )
-    outs = []
-    for k_lag in lags:
-        lagged = s.select(
-            "k", (F.col("d") + F.lit(int(k_lag))).alias("d"),
-            F.col("v").alias("b"),
-        )
-        j = s.join(lagged, ["k", "d"]).select("k", F.col("v").alias("a"), "b")
-        agg = j.groupBy("k").agg(
-            F.count(F.lit(1)).alias("m"),
-            F.sum("a").alias("_sa"),
-            F.sum("b").alias("_sb"),
-            F.sum(F.col("a") * F.col("b")).alias("_sab"),
-            F.sum(F.col("a") * F.col("a")).alias("_saa"),
-            F.sum(F.col("b") * F.col("b")).alias("_sbb"),
-        )
-        cov = F.col("m") * F.col("_sab") - F.col("_sa") * F.col("_sb")
-        va = F.col("m") * F.col("_saa") - F.col("_sa") * F.col("_sa")
-        vb = F.col("m") * F.col("_sbb") - F.col("_sb") * F.col("_sb")
-        r = cov.cast("double") / F.sqrt(va.cast("double") * vb.cast("double"))
-        outs.append(
-            agg.select(
-                F.col("k").alias(series_col),
-                F.lit(int(k_lag)).cast("long").alias("lag"),
-                "m",
-                cov.alias("s_cov"),
-                va.alias("s_vara"),
-                vb.alias("s_varb"),
-                F.when((F.col("m") >= 2) & (va > 0) & (vb > 0), r).alias("r"),
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+    # lag k pairs a_t with a_{t−k}
+    shifts = [(int(k), -int(k)) for k in lags]
+    return _lagged_pearson(s, series_col, shifts, ("s_vara", "s_varb"))
 
 
 def burstiness(
@@ -1110,9 +1131,8 @@ def ccf_lags(
     or lag it — the lead-lag screen for causal ordering hypotheses
     (news volume vs search volume, crawl rate vs error rate).
 
-    r(lag) correlates x_t with y_{t+lag}; pairs come from a GAP-CORRECT
-    equi-join on (key, day + lag) — the acf_lags discipline — with the
-    identical BIGINT Pearson moment surface and fixed-tree r.
+    r(lag) correlates x_t with y_{t+lag}: acf_lags' gap-correct lagged
+    Pearson kernel over two series instead of one.
 
     Output: (series, lag, m, s_cov, s_varx, s_vary, r) — one row per
     key per lag.
@@ -1123,38 +1143,8 @@ def ccf_lags(
         F.col(x_col).cast("long").alias("x"),
         F.col(y_col).cast("long").alias("y"),
     )
-    outs = []
-    for lag in range(-max_lag, max_lag + 1):
-        ys = s.select("k", (F.col("d") - F.lit(lag)).alias("d"),
-                      F.col("y").alias("_y2"))
-        j = s.join(ys, ["k", "d"]).select("k", "x", F.col("_y2").alias("y2"))
-        agg = j.groupBy("k").agg(
-            F.count(F.lit(1)).alias("m"),
-            F.sum("x").alias("_sx"),
-            F.sum("y2").alias("_sy"),
-            F.sum(F.col("x") * F.col("y2")).alias("_sxy"),
-            F.sum(F.col("x") * F.col("x")).alias("_sxx"),
-            F.sum(F.col("y2") * F.col("y2")).alias("_syy"),
-        )
-        cov = F.col("m") * F.col("_sxy") - F.col("_sx") * F.col("_sy")
-        vx = F.col("m") * F.col("_sxx") - F.col("_sx") * F.col("_sx")
-        vy = F.col("m") * F.col("_syy") - F.col("_sy") * F.col("_sy")
-        r = cov.cast("double") / F.sqrt(vx.cast("double") * vy.cast("double"))
-        outs.append(
-            agg.select(
-                F.col("k").alias(series_col),
-                F.lit(lag).cast("long").alias("lag"),
-                "m",
-                cov.alias("s_cov"),
-                vx.alias("s_varx"),
-                vy.alias("s_vary"),
-                F.when((F.col("m") >= 2) & (vx > 0) & (vy > 0), r).alias("r"),
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+    shifts = [(lag, lag) for lag in range(-max_lag, max_lag + 1)]
+    return _lagged_pearson(s, series_col, shifts, ("s_varx", "s_vary"))
 
 
 def seq_triples(

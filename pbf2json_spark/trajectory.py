@@ -18,6 +18,8 @@ any per-user sessionization; no self-joins, no explode.
 
 from __future__ import annotations
 
+import operator
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
@@ -631,6 +633,105 @@ def heading_mix(
     )
 
 
+def _banded_pairs(
+    df: DataFrame,
+    res: int,
+    combine,
+    out_col: str,
+    user_col: str,
+    ts_col: str,
+    lat_col: str,
+    lon_col: str,
+    max_len: int,
+    band: int,
+    min_inter: int,
+    max_df: int | None,
+) -> DataFrame:
+    """The banded sequence-alignment DP behind dtw_pairs and frechet_pairs:
+    per-user cell sequences, cell_jaccard candidate pairs, and per pair the
+    Sakoe-Chiba recurrence cur[c] = combine(cost(r, c), min(prev[c],
+    prev[c-1], cur[c-1])) over integer Chebyshev cell cost, emitted as
+    `out_col` (-1 when the band cannot align the lengths)."""
+    from pyspark.sql.functions import pandas_udf
+
+    from pbf2json_spark import cells as _cells
+
+    x, y = _cells.xy_cols(F.col(lat_col), F.col(lon_col), res)
+    w = Window.partitionBy("_u").orderBy("_ts")
+    seqd = df.select(
+        F.col(user_col).alias("_u"), F.col(ts_col).alias("_ts"),
+        x.alias("_x"), y.alias("_y"),
+    ).select(
+        "_u", "_ts", "_x", "_y",
+        F.lag("_x").over(w).alias("_px"), F.lag("_y").over(w).alias("_py"),
+    ).filter(
+        F.col("_px").isNull()
+        | (F.col("_x") != F.col("_px")) | (F.col("_y") != F.col("_py"))
+    )
+    seqs = seqd.groupBy("_u").agg(
+        F.slice(
+            F.array_sort(F.collect_list(F.struct("_ts", "_x", "_y"))),
+            1, max_len,
+        ).alias("_seq")
+    ).select(
+        "_u",
+        F.col("_seq._x").alias("_xs"), F.col("_seq._y").alias("_ys"),
+    )
+    pairs = cell_jaccard(
+        df, res, user_col=user_col, lat_col=lat_col, lon_col=lon_col,
+        min_inter=min_inter, max_df=max_df,
+    ).select("user_a", "user_b")
+
+    @pandas_udf("long")
+    def _align(xa: pd.Series, ya: pd.Series, xb: pd.Series, yb: pd.Series
+               ) -> pd.Series:
+        out = np.empty(len(xa), dtype=np.int64)
+        big = np.int64(2**62)
+        for i in range(len(xa)):
+            a = np.stack([xa[i], ya[i]], axis=1).astype(np.int64)
+            b = np.stack([xb[i], yb[i]], axis=1).astype(np.int64)
+            n, m = len(a), len(b)
+            if abs(n - m) > band:
+                out[i] = -1
+                continue
+            prev = np.full(m + 1, big)
+            # sentinel: the (1, 1) cell combines its cost with 0, which both
+            # the sum and the max leave as the cost itself
+            prev[0] = 0
+            for r in range(1, n + 1):
+                cur = np.full(m + 1, big)
+                lo, hi = max(1, r - band), min(m, r + band)
+                # Chebyshev step cost against row r of a
+                seg = np.maximum(
+                    np.abs(b[lo - 1:hi, 0] - a[r - 1, 0]),
+                    np.abs(b[lo - 1:hi, 1] - a[r - 1, 1]),
+                )
+                for c in range(lo, hi + 1):
+                    best = min(prev[c], prev[c - 1], cur[c - 1])
+                    cur[c] = combine(seg[c - lo], best)
+                prev = cur
+            out[i] = int(prev[m])
+        return pd.Series(out)
+
+    a = seqs.select(
+        F.col("_u").alias("user_a"),
+        F.col("_xs").alias("_xa"), F.col("_ys").alias("_ya"),
+    )
+    b = seqs.select(
+        F.col("_u").alias("user_b"),
+        F.col("_xs").alias("_xb"), F.col("_ys").alias("_yb"),
+    )
+    return (
+        pairs.join(a, "user_a").join(b, "user_b")
+        .select(
+            "user_a", "user_b",
+            F.size("_xa").cast("long").alias("len_a"),
+            F.size("_xb").cast("long").alias("len_b"),
+            _align("_xa", "_ya", "_xb", "_yb").alias(out_col),
+        )
+    )
+
+
 def dtw_pairs(
     df: DataFrame,
     res: int,
@@ -668,81 +769,9 @@ def dtw_pairs(
     length difference (|len_a − len_b| > band), mirroring the standard
     banded-DTW domain restriction.
     """
-    from pyspark.sql.functions import pandas_udf
-
-    from pbf2json_spark import cells as _cells
-
-    x, y = _cells.xy_cols(F.col(lat_col), F.col(lon_col), res)
-    w = Window.partitionBy("_u").orderBy("_ts")
-    seqd = df.select(
-        F.col(user_col).alias("_u"), F.col(ts_col).alias("_ts"),
-        x.alias("_x"), y.alias("_y"),
-    ).select(
-        "_u", "_ts", "_x", "_y",
-        F.lag("_x").over(w).alias("_px"), F.lag("_y").over(w).alias("_py"),
-    ).filter(
-        F.col("_px").isNull()
-        | (F.col("_x") != F.col("_px")) | (F.col("_y") != F.col("_py"))
-    )
-    seqs = seqd.groupBy("_u").agg(
-        F.slice(
-            F.array_sort(F.collect_list(F.struct("_ts", "_x", "_y"))),
-            1, max_len,
-        ).alias("_seq")
-    ).select(
-        "_u",
-        F.col("_seq._x").alias("_xs"), F.col("_seq._y").alias("_ys"),
-    )
-    pairs = cell_jaccard(
-        df, res, user_col=user_col, lat_col=lat_col, lon_col=lon_col,
-        min_inter=min_inter, max_df=max_df,
-    ).select("user_a", "user_b")
-
-    @pandas_udf("long")
-    def _dtw(xa: pd.Series, ya: pd.Series, xb: pd.Series, yb: pd.Series
-             ) -> pd.Series:
-        out = np.empty(len(xa), dtype=np.int64)
-        big = np.int64(2**62)
-        for i in range(len(xa)):
-            a = np.stack([xa[i], ya[i]], axis=1).astype(np.int64)
-            b = np.stack([xb[i], yb[i]], axis=1).astype(np.int64)
-            n, m = len(a), len(b)
-            if abs(n - m) > band:
-                out[i] = -1
-                continue
-            prev = np.full(m + 1, big)
-            prev[0] = 0
-            for r in range(1, n + 1):
-                cur = np.full(m + 1, big)
-                lo, hi = max(1, r - band), min(m, r + band)
-                # Chebyshev step cost against row r of a
-                seg = np.maximum(
-                    np.abs(b[lo - 1:hi, 0] - a[r - 1, 0]),
-                    np.abs(b[lo - 1:hi, 1] - a[r - 1, 1]),
-                )
-                for c in range(lo, hi + 1):
-                    best = min(prev[c], prev[c - 1], cur[c - 1])
-                    cur[c] = seg[c - lo] + best
-                prev = cur
-            out[i] = int(prev[m])
-        return pd.Series(out)
-
-    a = seqs.select(
-        F.col("_u").alias("user_a"),
-        F.col("_xs").alias("_xa"), F.col("_ys").alias("_ya"),
-    )
-    b = seqs.select(
-        F.col("_u").alias("user_b"),
-        F.col("_xs").alias("_xb"), F.col("_ys").alias("_yb"),
-    )
-    return (
-        pairs.join(a, "user_a").join(b, "user_b")
-        .select(
-            "user_a", "user_b",
-            F.size("_xa").cast("long").alias("len_a"),
-            F.size("_xb").cast("long").alias("len_b"),
-            _dtw("_xa", "_ya", "_xb", "_yb").alias("dtw"),
-        )
+    return _banded_pairs(
+        df, res, operator.add, "dtw", user_col, ts_col, lat_col, lon_col,
+        max_len, band, min_inter, max_df,
     )
 
 
@@ -823,92 +852,17 @@ def frechet_pairs(
     these two ever diverge by more than d while moving the same way" —
     route-equivalence QA that DTW's sum smears out.
 
-    Same scale shape as dtw_pairs (same sequence pipeline + cell_jaccard
-    candidate prescreen — never all-pairs; sequences cross the shuffle as
-    ≤ max_len int arrays): the DP recurrence swaps sum for max —
-    cur[c] = max(cost(r,c), min(prev[c], prev[c-1], cur[c-1])) — over the
-    same Sakoe-Chiba band, integer Chebyshev cell cost, so the result is
-    engine/partition-exact. Sequential DP ⇒ no SQL oracle (the
-    dtw_pairs precedent); pytest proves it against a brute full-matrix
-    reference plus the metric laws (identity 0, symmetry, ≥ per-step
-    lower bound).
+    Runs dtw_pairs' banded kernel with the step combine swapped from sum
+    to max — cur[c] = max(cost(r,c), min(prev[c], prev[c-1], cur[c-1])).
+    Sequential DP ⇒ no SQL oracle; pytest proves it against a brute
+    full-matrix reference plus the metric laws (identity 0, symmetry,
+    ≥ per-step lower bound).
 
     Output: (user_a, user_b, len_a, len_b, frechet) with user_a < user_b;
     frechet = banded discrete Fréchet (LONG, Chebyshev cell units), or
     -1 when the band cannot align the length difference.
     """
-    from pyspark.sql.functions import pandas_udf
-
-    from pbf2json_spark import cells as _cells
-
-    x, y = _cells.xy_cols(F.col(lat_col), F.col(lon_col), res)
-    w = Window.partitionBy("_u").orderBy("_ts")
-    seqd = df.select(
-        F.col(user_col).alias("_u"), F.col(ts_col).alias("_ts"),
-        x.alias("_x"), y.alias("_y"),
-    ).select(
-        "_u", "_ts", "_x", "_y",
-        F.lag("_x").over(w).alias("_px"), F.lag("_y").over(w).alias("_py"),
-    ).filter(
-        F.col("_px").isNull()
-        | (F.col("_x") != F.col("_px")) | (F.col("_y") != F.col("_py"))
-    )
-    seqs = seqd.groupBy("_u").agg(
-        F.slice(
-            F.array_sort(F.collect_list(F.struct("_ts", "_x", "_y"))),
-            1, max_len,
-        ).alias("_seq")
-    ).select(
-        "_u",
-        F.col("_seq._x").alias("_xs"), F.col("_seq._y").alias("_ys"),
-    )
-    pairs = cell_jaccard(
-        df, res, user_col=user_col, lat_col=lat_col, lon_col=lon_col,
-        min_inter=min_inter, max_df=max_df,
-    ).select("user_a", "user_b")
-
-    @pandas_udf("long")
-    def _frechet(xa: pd.Series, ya: pd.Series, xb: pd.Series, yb: pd.Series
-                 ) -> pd.Series:
-        out = np.empty(len(xa), dtype=np.int64)
-        big = np.int64(2**62)
-        for i in range(len(xa)):
-            a = np.stack([xa[i], ya[i]], axis=1).astype(np.int64)
-            b = np.stack([xb[i], yb[i]], axis=1).astype(np.int64)
-            n, m = len(a), len(b)
-            if abs(n - m) > band:
-                out[i] = -1
-                continue
-            prev = np.full(m + 1, big)
-            prev[0] = 0  # sentinel: max(cost, 0-min) at (1,1) = cost(1,1)
-            for r in range(1, n + 1):
-                cur = np.full(m + 1, big)
-                lo, hi = max(1, r - band), min(m, r + band)
-                seg = np.maximum(
-                    np.abs(b[lo - 1:hi, 0] - a[r - 1, 0]),
-                    np.abs(b[lo - 1:hi, 1] - a[r - 1, 1]),
-                )
-                for c in range(lo, hi + 1):
-                    best = min(prev[c], prev[c - 1], cur[c - 1])
-                    cur[c] = max(seg[c - lo], best)
-                prev = cur
-            out[i] = int(prev[m])
-        return pd.Series(out)
-
-    a = seqs.select(
-        F.col("_u").alias("user_a"),
-        F.col("_xs").alias("_xa"), F.col("_ys").alias("_ya"),
-    )
-    b = seqs.select(
-        F.col("_u").alias("user_b"),
-        F.col("_xs").alias("_xb"), F.col("_ys").alias("_yb"),
-    )
-    return (
-        pairs.join(a, "user_a").join(b, "user_b")
-        .select(
-            "user_a", "user_b",
-            F.size("_xa").cast("long").alias("len_a"),
-            F.size("_xb").cast("long").alias("len_b"),
-            _frechet("_xa", "_ya", "_xb", "_yb").alias("frechet"),
-        )
+    return _banded_pairs(
+        df, res, max, "frechet", user_col, ts_col, lat_col, lon_col,
+        max_len, band, min_inter, max_df,
     )

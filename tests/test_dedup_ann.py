@@ -94,6 +94,13 @@ def test_dedup_groups_connected_components(spark):
     )
     got = {r["id"]: r["rep"] for r in dedup.dedup_groups(pairs).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+    # a 30-node path: 29 hops from node 0 to node 29, deeper than any fixed
+    # round cap of one-hop label propagation
+    chain = spark.createDataFrame(
+        [(i, i + 1, 1.0) for i in range(29)], "a long, b long, jaccard double"
+    )
+    got = {r["id"]: r["rep"] for r in dedup.dedup_groups(chain).collect()}
+    assert got == {i: 0 for i in range(30)}
 
 
 def py_simhash(text):

@@ -58,6 +58,41 @@ def test_pagerank_iteration_count_matters(spark):
     assert r1 != r3
 
 
+def test_operators_leave_no_cache_entry(spark):
+    # frames an operator reads more than once are pinned with a lazy
+    # localCheckpoint, which the ContextCleaner frees; a persist() would
+    # leave a CacheManager entry behind every call
+    from pbf2json_spark import dedup
+
+    edges = _edges_df(spark, [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1), (4, 2)])
+    seeds = spark.createDataFrame([(1,)], "node long")
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c d e f g h"), (3, "x y z w")],
+        "id long, text string",
+    )
+    points = spark.createDataFrame(
+        [(1, 10.0, 20.0), (2, 10.001, 20.0), (3, 10.0, 20.001), (4, 50.0, 50.0)],
+        "point_id long, lat double, lon double",
+    )
+    runs = {
+        "pagerank_int": lambda: graph.pagerank_int(edges, 3),
+        "trustrank_int": lambda: graph.trustrank_int(edges, seeds, 3),
+        "personalized_pagerank_int": lambda: graph.personalized_pagerank_int(
+            edges, seeds, 3
+        ),
+        "hits_int": lambda: graph.hits_int(edges, 2),
+        "resource_allocation": lambda: graph.resource_allocation(edges),
+        "cocitation": lambda: graph.cocitation(edges),
+        "containment_pairs": lambda: dedup.containment_pairs(docs, "id"),
+        "dbscan": lambda: spatial.dbscan(points, eps_deg=0.01, min_pts=2),
+    }
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    for name, run in runs.items():
+        run().collect()
+        assert cache.isEmpty(), name
+
+
 def test_degree_stats(spark):
     edges = [(1, 2), (2, 1), (1, 3), (3, 4), (1, 2)]  # dup edge collapses
     got = {
