@@ -40,8 +40,6 @@ def cosine_topk(
     points: DataFrame,
     queries: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     query_id: str = "query_id",
 ) -> DataFrame:
     """Exact top-k by cosine for each query. Queries are broadcast — correct
@@ -49,34 +47,34 @@ def cosine_topk(
     q = F.broadcast(
         queries.select(
             F.col(query_id),
-            F.col(vec_col).cast("array<double>").alias("_qv"),
+            F.col("embedding").cast("array<double>").alias("_qv"),
         )
     )
     p = points.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("_pv")
+        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("_pv")
     )
     scored = p.crossJoin(q).withColumn("cos", cosine(F.col("_pv"), F.col("_qv")))
     ranked = scored.withColumn(
         "rank",
         F.row_number().over(
-            Window.partitionBy(query_id).orderBy(F.desc("cos"), F.col(id_col))
+            Window.partitionBy(query_id).orderBy(F.desc("cos"), F.col("vec_id"))
         ),
     ).filter(F.col("rank") <= k)
-    return ranked.select(query_id, id_col, "cos", "rank")
+    return ranked.select(query_id, "vec_id", "cos", "rank")
 
 
-def _hyperplanes(dim: int, bits: int, table: int, seed: int) -> list[list[float]]:
-    rng = np.random.default_rng(seed + 1009 * table)
+def _hyperplanes(dim: int, bits: int, table: int) -> list[list[float]]:
+    rng = np.random.default_rng(7 + 1009 * table)
     return rng.standard_normal((bits, dim)).tolist()
 
 
-def _signatures_udf(dim: int, bits: int, n_tables: int, seed: int):
+def _signatures_udf(dim: int, bits: int, n_tables: int):
     """One Arrow-batched pandas UDF computing ALL tables' sign signatures
     per vector: a single (batch × dim) @ (dim × bits·tables) numpy matmul,
     bit-packed per table. Orders of magnitude less codegen than unrolled
     Column dot products (the previous shape) and no per-row Python."""
     planes = np.concatenate(
-        [np.asarray(_hyperplanes(dim, bits, t, seed)).T for t in range(n_tables)],
+        [np.asarray(_hyperplanes(dim, bits, t)).T for t in range(n_tables)],
         axis=1,
     )  # (dim, bits*n_tables)
     weights = (1 << np.arange(bits, dtype=np.int64))
@@ -100,15 +98,12 @@ def lsh_cosine_topk(
     dim: int,
     bits: int = 10,
     n_tables: int = 8,
-    seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     query_id: str = "query_id",
     probes: int = 0,
 ) -> DataFrame:
     """Approximate top-k: one signature pass (numpy matmul over Arrow
     batches), bucket equi-join on (table, signature), exact cosine re-rank.
-    Deterministic hyperplanes from `seed`.
+    Deterministic hyperplanes (fixed seed).
 
     `probes` > 0 enables MULTI-PROBE (Lv et al. 2007): each query also
     probes the buckets at Hamming distance 1 on its first `probes` sign
@@ -118,18 +113,18 @@ def lsh_cosine_topk(
     query-bucket list grows ×(probes+1))."""
     if not 0 <= probes <= bits:
         raise ValueError("probes must be in [0, bits]")
-    sig = _signatures_udf(dim, bits, n_tables, seed)
+    sig = _signatures_udf(dim, bits, n_tables)
     p = points.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("_pv")
+        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("_pv")
     )
     q = queries.select(
-        F.col(query_id), F.col(vec_col).cast("array<double>").alias("_qv")
+        F.col(query_id), F.col("embedding").cast("array<double>").alias("_qv")
     )
     # ids-only through the ×n_tables explode and the bucket join — the
     # embedding vectors never ride the fan-out; they are hash-joined back
     # onto the DEDUPLICATED candidate set (mirrors minhash_lsh_pairs'
     # shuffle discipline, dedup.py).
-    pb = p.select(id_col, F.posexplode(sig(F.col("_pv"))).alias("_t", "_b"))
+    pb = p.select("vec_id", F.posexplode(sig(F.col("_pv"))).alias("_t", "_b"))
     qsig = q.select(query_id, F.posexplode(sig(F.col("_qv"))).alias("_t", "_b"))
     if probes:
         flips = F.array(
@@ -142,18 +137,18 @@ def lsh_cosine_topk(
     qb = F.broadcast(qsig)
     cands = (
         pb.join(qb, ["_t", "_b"])
-        .select(query_id, id_col)
-        .dropDuplicates([query_id, id_col])
-        .join(p, id_col)
+        .select(query_id, "vec_id")
+        .dropDuplicates([query_id, "vec_id"])
+        .join(p, "vec_id")
         .join(F.broadcast(q), query_id)
     )
     ranked = cands.withColumn("cos", cosine(F.col("_pv"), F.col("_qv"))).withColumn(
         "rank",
         F.row_number().over(
-            Window.partitionBy(query_id).orderBy(F.desc("cos"), F.col(id_col))
+            Window.partitionBy(query_id).orderBy(F.desc("cos"), F.col("vec_id"))
         ),
     ).filter(F.col("rank") <= k)
-    return ranked.select(query_id, id_col, "cos", "rank")
+    return ranked.select(query_id, "vec_id", "cos", "rank")
 
 
 def ivf_cosine_topk(
@@ -162,10 +157,6 @@ def ivf_cosine_topk(
     k: int,
     n_centroids: int = 64,
     n_probe: int = 8,
-    train_sample: int = 4096,
-    seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     query_id: str = "query_id",
 ) -> DataFrame:
     """IVF-flat approximate top-k: partition vectors into `n_centroids`
@@ -178,17 +169,17 @@ def ivf_cosine_topk(
     the per-cell point lists are exactly the inverted lists of a real IVF
     index. Recall rises with n_probe (n_probe == n_centroids ⇒ exact)."""
     p = points.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("_pv")
+        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("_pv")
     )
     q = queries.select(
-        F.col(query_id), F.col(vec_col).cast("array<double>").alias("_qv")
+        F.col(query_id), F.col("embedding").cast("array<double>").alias("_qv")
     )
 
     # --- train: bounded sample → numpy mini k-means (deterministic) -------
     # orderBy().limit() plans as TakeOrdered (per-partition top-n + merge,
     # no full sort) and is deterministic across partition layouts — a bare
     # limit() is not (it grabs whatever partitions answer first).
-    sample_rows = p.orderBy(id_col).limit(train_sample).collect()
+    sample_rows = p.orderBy("vec_id").limit(4096).collect()
     if not sample_rows:
         raise ValueError(
             "ivf_cosine_topk: points frame is empty — nothing to train the "
@@ -196,7 +187,7 @@ def ivf_cosine_topk(
         )
     sample = np.asarray([r["_pv"] for r in sample_rows], dtype=np.float64)
     sample /= np.maximum(np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(7)
     k_eff = min(n_centroids, len(sample))
     cents = sample[rng.choice(len(sample), size=k_eff, replace=False)]
     for _ in range(10):
@@ -225,35 +216,32 @@ def ivf_cosine_topk(
     qb = F.broadcast(
         q.withColumn("_c", F.explode(probe_udf(F.col("_qv"))))
     )
-    cands = pb.join(qb, "_c").select(query_id, id_col, "_pv", "_qv")
+    cands = pb.join(qb, "_c").select(query_id, "vec_id", "_pv", "_qv")
     ranked = (
         cands.withColumn("cos", cosine(F.col("_pv"), F.col("_qv")))
         .withColumn(
             "rank",
             F.row_number().over(
-                Window.partitionBy(query_id).orderBy(F.desc("cos"), F.col(id_col))
+                Window.partitionBy(query_id).orderBy(F.desc("cos"), F.col("vec_id"))
             ),
         )
         .filter(F.col("rank") <= k)
     )
-    return ranked.select(query_id, id_col, "cos", "rank")
+    return ranked.select(query_id, "vec_id", "cos", "rank")
 
 
-def embedding_near_dup_pairs_exact(
-    points: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def embedding_near_dup_pairs_exact(points: DataFrame, threshold: float) -> DataFrame:
     """Brute-force near-dup pairs (a<b, cosine ≥ threshold) — the exactness
     baseline for embedding_near_dup_pairs. Quadratic by construction: run
     it only on bounded corpora (tests, the capped driver query, recall
     audits of the LSH path); the LSH variant is the scale path."""
     a = points.select(
-        F.col(id_col).alias("a"), F.col(vec_col).cast("array<double>").alias("_va")
+        F.col("vec_id").alias("a"),
+        F.col("embedding").cast("array<double>").alias("_va"),
     )
     b = points.select(
-        F.col(id_col).alias("b"), F.col(vec_col).cast("array<double>").alias("_vb")
+        F.col("vec_id").alias("b"),
+        F.col("embedding").cast("array<double>").alias("_vb"),
     )
     return (
         a.join(b, F.col("a") < F.col("b"))
@@ -262,13 +250,7 @@ def embedding_near_dup_pairs_exact(
     )
 
 
-def semantic_dedup(
-    points: DataFrame,
-    centroids,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def semantic_dedup(points: DataFrame, centroids, threshold: float) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the embedding space, then prune
     near-duplicates WITHIN each cluster — candidate generation is an
@@ -289,30 +271,30 @@ def semantic_dedup(
     """
     from pbf2json_spark import cluster as _cluster
 
-    assigned = _cluster.kmeans_assign(
-        points, centroids, id_col=id_col, vec_col=vec_col
-    ).select(F.col(id_col), "cluster")
+    assigned = _cluster.kmeans_assign(points, centroids).select(
+        F.col("vec_id"), "cluster"
+    )
     v = points.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
+        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("_v")
     )
     # av feeds BOTH self-join sides and `assigned` the final anti-join —
     # pin them or the Arrow assignment UDF + scan run three times
-    av = assigned.join(v, id_col).localCheckpoint(eager=False)
-    assigned = av.select(F.col(id_col), "cluster")
+    av = assigned.join(v, "vec_id").localCheckpoint(eager=False)
+    assigned = av.select(F.col("vec_id"), "cluster")
     a = av.select(
-        F.col(id_col).alias("a"), "cluster", F.col("_v").alias("_va")
+        F.col("vec_id").alias("a"), "cluster", F.col("_v").alias("_va")
     )
     b = av.select(
-        F.col(id_col).alias("b"), "cluster", F.col("_v").alias("_vb")
+        F.col("vec_id").alias("b"), "cluster", F.col("_v").alias("_vb")
     )
     dup_ids = (
         a.join(b, "cluster")
         .filter(F.col("a") < F.col("b"))
         .filter(cosine(F.col("_va"), F.col("_vb")) >= threshold)
-        .select(F.col("b").alias(id_col))
+        .select(F.col("b").alias("vec_id"))
         .distinct()
     )
-    return assigned.join(dup_ids, id_col, "left_anti")
+    return assigned.join(dup_ids, "vec_id", "left_anti")
 
 
 def embedding_near_dup_pairs(
@@ -321,15 +303,13 @@ def embedding_near_dup_pairs(
     dim: int,
     bits: int = 12,
     n_tables: int = 6,
-    seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Pairs (a<b) with cosine ≥ threshold, LSH-bucketed self-join + exact
     verify (no false positives)."""
-    sig = _signatures_udf(dim, bits, n_tables, seed)
+    sig = _signatures_udf(dim, bits, n_tables)
     p = points.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v")
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").cast("array<double>").alias("_v"),
     )
     # ids-only banded self-join: 8-byte ids cross the ×n_tables explode and
     # the candidate shuffle; the full vectors are joined back onto the
@@ -361,9 +341,6 @@ def pq_train(
     ksub: int = 16,
     n_iter: int = 10,
     train_sample: int = 4096,
-    seed: int = 11,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> np.ndarray:
     """Product-quantization codebooks: split the (unit-normalized) vector
     into `m` contiguous subspaces and k-means each to `ksub` centroids —
@@ -378,8 +355,8 @@ def pq_train(
     Returns (m, ksub, d//m) float64 — d must divide evenly by m.
     """
     sample_rows = points.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
-    ).orderBy(id_col).limit(train_sample).collect()
+        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("_v")
+    ).orderBy("vec_id").limit(train_sample).collect()
     if not sample_rows:
         raise ValueError("pq_train: points frame is empty")
     mat = np.asarray([r["_v"] for r in sample_rows], dtype=np.float64)
@@ -388,7 +365,7 @@ def pq_train(
     if d % m:
         raise ValueError(f"pq_train: dim {d} not divisible by m={m}")
     dsub = d // m
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(11)
     books = np.empty((m, ksub, dsub), dtype=np.float64)
     for s in range(m):
         sub = mat[:, s * dsub:(s + 1) * dsub]
@@ -407,16 +384,11 @@ def pq_train(
     return books
 
 
-def pq_encode(
-    points: DataFrame,
-    codebooks: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_encode(points: DataFrame, codebooks: np.ndarray) -> DataFrame:
     """Encode each vector to `m` small codes (nearest sub-centroid per
     subspace) — one Arrow-batched numpy pass; the codes array (m ints,
     m bytes in a real uint8 layout) is all that an ADC scorer needs.
-    Output: (id_col, codes array<int>)."""
+    Output: (vec_id, codes array<int>)."""
     books = codebooks
 
     @F.pandas_udf("array<int>")
@@ -432,7 +404,7 @@ def pq_encode(
         return pd.Series(list(out))
 
     return points.select(
-        F.col(id_col), enc(F.col(vec_col).cast("array<double>")).alias("codes")
+        F.col("vec_id"), enc(F.col("embedding").cast("array<double>")).alias("codes")
     )
 
 
@@ -441,8 +413,6 @@ def pq_topk(
     queries: DataFrame,
     codebooks: np.ndarray,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     query_id: str = "query_id",
 ) -> DataFrame:
     """Asymmetric-distance (ADC) approximate top-k over PQ codes: per
@@ -459,12 +429,12 @@ def pq_topk(
     probe to bound the candidate set first. The final top-k is the
     standard per-query ranking window over (query, id, score).
 
-    Output: (query_id, id_col, adc_score, rank) — rank ≤ k, ties by id.
+    Output: (query_id, vec_id, adc_score, rank) — rank ≤ k, ties by id.
     """
-    codes = pq_encode(points, codebooks, id_col=id_col, vec_col=vec_col)
+    codes = pq_encode(points, codebooks)
     books = codebooks
     qrows = queries.select(
-        F.col(query_id), F.col(vec_col).cast("array<double>").alias("_qv")
+        F.col(query_id), F.col("embedding").cast("array<double>").alias("_qv")
     ).collect()
     if not qrows:
         raise ValueError("pq_topk: queries frame is empty")
@@ -488,7 +458,7 @@ def pq_topk(
         return pd.Series(list(scores))
 
     scored = codes.select(
-        F.col(id_col), F.posexplode(adc(F.col("codes"))).alias("_qi", "adc_score")
+        F.col("vec_id"), F.posexplode(adc(F.col("codes"))).alias("_qi", "adc_score")
     )
     qmap = codes.sparkSession.createDataFrame(
         list(enumerate(qids)), f"_qi int, {query_id} long"
@@ -499,12 +469,12 @@ def pq_topk(
             "rank",
             F.row_number().over(
                 Window.partitionBy(query_id)
-                .orderBy(F.desc("adc_score"), F.col(id_col))
+                .orderBy(F.desc("adc_score"), F.col("vec_id"))
             ),
         )
         .filter(F.col("rank") <= k)
     )
-    return ranked.select(query_id, id_col, "adc_score", "rank")
+    return ranked.select(query_id, "vec_id", "adc_score", "rank")
 
 
 def mmr_select(
@@ -512,9 +482,6 @@ def mmr_select(
     k: int,
     lam: float = 0.7,
     group_cols: list[str] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    score_col: str = "score",
     cap: int = 512,
 ) -> DataFrame:
     """Diversity-aware top-k per group by greedy Maximal Marginal
@@ -541,10 +508,10 @@ def mmr_select(
 
     gs = list(group_cols or [])
     w = Window.partitionBy(*[F.col(c) for c in gs] or [F.lit(1)]).orderBy(
-        F.col(score_col).desc(), F.col(id_col).asc()
+        F.col("score").desc(), F.col("vec_id").asc()
     )
     capped = (
-        df.select(*gs, id_col, score_col, vec_col)
+        df.select(*gs, "vec_id", "score", "embedding")
         .withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= cap)
         .drop("_rk")
@@ -552,7 +519,7 @@ def mmr_select(
     schema = _T.StructType(
         [f for f in df.select(*gs).schema.fields]
         + [
-            df.schema[id_col],
+            df.schema["vec_id"],
             _T.StructField("score", _T.DoubleType()),
             _T.StructField("mmr_value", _T.DoubleType()),
             _T.StructField("pick_rank", _T.LongType()),
@@ -561,9 +528,9 @@ def mmr_select(
 
     def _greedy(pdf: pd.DataFrame) -> pd.DataFrame:
         keys = list(pdf.iloc[0][gs]) if gs else []
-        ids = pdf[id_col].to_numpy()
-        scores = pdf[score_col].to_numpy(dtype=np.float64)
-        mat = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+        ids = pdf["vec_id"].to_numpy()
+        scores = pdf["score"].to_numpy(dtype=np.float64)
+        mat = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
         nrm = np.linalg.norm(mat, axis=1)
         nrm[nrm == 0] = 1.0
         mat = mat / nrm[:, None]
@@ -583,7 +550,9 @@ def mmr_select(
                          float(val[best]), r + 1])
             sims = mat @ mat[best]
             max_sim = np.maximum(max_sim, sims)
-        return pd.DataFrame(rows, columns=[*gs, id_col, "score", "mmr_value", "pick_rank"])
+        return pd.DataFrame(
+            rows, columns=[*gs, "vec_id", "score", "mmr_value", "pick_rank"]
+        )
 
     if gs:
         return capped.groupBy(*gs).applyInPandas(_greedy, schema)
@@ -595,9 +564,7 @@ def mmr_select(
 # --- scalar quantization (SQ8) ---------------------------------------------------
 
 
-def sq_train(
-    df: DataFrame, vec_col: str = "embedding"
-) -> tuple[list[float], list[float]]:
+def sq_train(df: DataFrame) -> tuple[list[float], list[float]]:
     """Per-dimension global (min, max) bounds for 8-bit scalar
     quantization — ONE posexplode + ONE map-side-combinable (dim) groupBy;
     the result is dim-sized metadata (the bounded driver-collect idiom of
@@ -605,7 +572,9 @@ def sq_train(
     workhorse (vs PQ's 32x/lossier, LSH's bit sketches) — per-dim uniform
     grids, no codebook training pass."""
     rows = (
-        df.select(F.posexplode(F.col(vec_col).cast("array<double>")).alias("d", "v"))
+        df.select(
+            F.posexplode(F.col("embedding").cast("array<double>")).alias("d", "v")
+        )
         .groupBy("d")
         .agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
         .orderBy("d")
@@ -624,7 +593,6 @@ def sq_encode(
     df: DataFrame,
     mins: list[float],
     maxs: list[float],
-    vec_col: str = "embedding",
     out_col: str = "codes",
 ) -> DataFrame:
     """8-bit codes per dimension: code_d = clamp(floor((v - mn_d) /
@@ -635,7 +603,7 @@ def sq_encode(
     codes bit-for-bit — the DuckDB oracle recomputes them exactly."""
     mn, mx = _sq_arrays(mins, maxs)
     codes = F.expr(
-        f"transform({vec_col}, (v, i) -> "
+        "transform(embedding, (v, i) -> "
         "CAST(least(255, greatest(0, "
         "CASE WHEN element_at(_sq_mx, i + 1) = element_at(_sq_mn, i + 1) THEN 0 "
         "ELSE floor((CAST(v AS DOUBLE) - element_at(_sq_mn, i + 1)) "
@@ -656,8 +624,6 @@ def sq_topk(
     k: int,
     mins: list[float],
     maxs: list[float],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     query_id: str = "query_id",
 ) -> DataFrame:
     """Top-k by asymmetric distance computation over SQ8 codes: points
@@ -668,13 +634,13 @@ def sq_topk(
     1-byte codes, not floats — the memory-bandwidth win that makes SQ the
     default first stage before exact rescoring at fleet scale.
 
-    Output: (query_id, id_col, code_sum, adc_score, rank). code_sum is an
+    Output: (query_id, vec_id, code_sum, adc_score, rank). code_sum is an
     integer pin on the encode path for exact oracles; rank comparisons
     are the portable surface (float adc_score ties are broken by id, the
     cosine_topk precedent).
     """
     mn, mx = _sq_arrays(mins, maxs)
-    enc = sq_encode(points, mins, maxs, vec_col=vec_col, out_col="_codes")
+    enc = sq_encode(points, mins, maxs, out_col="_codes")
     deq = F.expr(
         "transform(_codes, (c, i) -> element_at(_sq_mn, i + 1) "
         "+ (CAST(c AS DOUBLE) + CAST(0.5 AS DOUBLE)) "
@@ -686,7 +652,7 @@ def sq_topk(
         .withColumn("_sq_mx", mx)
         .withColumn("_deq", deq)
         .select(
-            F.col(id_col),
+            F.col("vec_id"),
             "_codes",
             "_deq",
             F.aggregate("_codes", F.lit(0).cast("long"), lambda a, c: a + c).alias(
@@ -696,25 +662,20 @@ def sq_topk(
     )
     q = F.broadcast(
         queries.select(
-            F.col(query_id), F.col(vec_col).cast("array<double>").alias("_qv")
+            F.col(query_id), F.col("embedding").cast("array<double>").alias("_qv")
         )
     )
     scored = p.crossJoin(q).withColumn("adc_score", _dot(F.col("_deq"), F.col("_qv")))
     ranked = scored.withColumn(
         "rank",
         F.row_number().over(
-            Window.partitionBy(query_id).orderBy(F.desc("adc_score"), F.col(id_col))
+            Window.partitionBy(query_id).orderBy(F.desc("adc_score"), F.col("vec_id"))
         ),
     ).filter(F.col("rank") <= k)
-    return ranked.select(query_id, id_col, "code_sum", "adc_score", "rank")
+    return ranked.select(query_id, "vec_id", "code_sum", "adc_score", "rank")
 
 
-def kcenter_select(
-    df: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kcenter_select(df: DataFrame, k: int) -> DataFrame:
     """Greedy k-center / farthest-point coreset: repeatedly pick the point
     FARTHEST from everything picked so far (max over points of min
     squared distance to the picked set). The geometric-coverage
@@ -744,14 +705,14 @@ def kcenter_select(
     if k < 1:
         raise ValueError("k must be >= 1")
     base = df.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
+        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("_v")
     ).localCheckpoint()
-    first = base.orderBy(id_col).limit(1).collect()
+    first = base.orderBy("vec_id").limit(1).collect()
     if not first:
         return base.sparkSession.createDataFrame(
-            [], f"pick_rank long, {id_col} long, dist double"
+            [], "pick_rank long, vec_id long, dist double"
         )
-    picks = [(1, first[0][id_col], -1.0)]
+    picks = [(1, first[0]["vec_id"], -1.0)]
     cur = base.withColumn("_mind", F.lit(float("inf")))
     pv = first[0]["_v"]
 
@@ -767,22 +728,22 @@ def kcenter_select(
         cur = cur.withColumn("_mind", F.least(F.col("_mind"), _d2(pv)))
         cur = cur.localCheckpoint()
         far = (
-            cur.filter(~F.col(id_col).isin([p[1] for p in picks]))
-            .orderBy(F.desc("_mind"), F.col(id_col))
+            cur.filter(~F.col("vec_id").isin([p[1] for p in picks]))
+            .orderBy(F.desc("_mind"), F.col("vec_id"))
             .limit(1)
             .collect()
         )
         if not far:
             break
-        picks.append((r, far[0][id_col], float(far[0]["_mind"])))
+        picks.append((r, far[0]["vec_id"], float(far[0]["_mind"])))
         pv = far[0]["_v"]
     return base.sparkSession.createDataFrame(
-        picks, f"pick_rank long, {id_col} long, dist double"
+        picks, "pick_rank long, vec_id long, dist double"
     )
 
 
 def pca_train(
-    df: DataFrame, k: int, vec_col: str = "embedding"
+    df: DataFrame, k: int
 ) -> tuple[list[float], list[list[float]], list[float]]:
     """Distributed PCA training over an embedding column: each Arrow
     batch contributes the sufficient statistics (n, Σx, Σxxᵀ) via
@@ -803,7 +764,7 @@ def pca_train(
     explained_variance[k])."""
     import pyspark.sql.types as _T
 
-    d_probe = df.select(F.size(F.col(vec_col)).alias("d")).first()
+    d_probe = df.select(F.size(F.col("embedding")).alias("d")).first()
     if d_probe is None:
         raise ValueError("pca_train: empty frame")
     dim = int(d_probe["d"])
@@ -830,7 +791,7 @@ def pca_train(
             )
 
     parts = (
-        df.select(F.col(vec_col).cast("array<double>"))
+        df.select(F.col("embedding").cast("array<double>"))
         .mapInPandas(_moments, schema)
         .collect()
     )
@@ -860,8 +821,6 @@ def pca_project(
     df: DataFrame,
     mean: list[float],
     components: list[list[float]],
-    vec_col: str = "embedding",
-    out_col: str = "pca",
 ) -> DataFrame:
     """Project vectors onto trained components — pure Column: per
     component one zip_with/aggregate fold against LITERAL (mean,
@@ -869,7 +828,7 @@ def pca_project(
     the sq_encode discipline)."""
     mu = F.array(*[F.lit(float(x)) for x in mean])
     centered = F.zip_with(
-        F.col(vec_col).cast("array<double>"), mu, lambda a, b: a - b
+        F.col("embedding").cast("array<double>"), mu, lambda a, b: a - b
     )
     dots = []
     for comp in components:
@@ -881,17 +840,10 @@ def pca_project(
                 lambda acc, x: acc + x,
             )
         )
-    return df.withColumn(out_col, F.array(*dots))
+    return df.withColumn("pca", F.array(*dots))
 
 
-def mutual_topk(
-    a: DataFrame,
-    b: DataFrame,
-    k: int = 4,
-    id_a: str = "a_id",
-    id_b: str = "b_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def mutual_topk(a: DataFrame, b: DataFrame, k: int = 4) -> DataFrame:
     """Mutual-nearest-neighbor mining with the ratio margin (Artetxe &
     Schwenk 2019): a pair (x ∈ A, y ∈ B) is emitted iff y is x's top-1
     AND x is y's top-1, scored by cos(x,y) divided by the mean of both
@@ -911,31 +863,31 @@ def mutual_topk(
     Output: (a_id, b_id, cos, margin) — one row per mutual pair.
     """
     fa = cosine_topk(
-        b.select(F.col(id_b).alias("vec_id"), vec_col),
-        a.select(F.col(id_a).alias("query_id"), vec_col),
+        b.select(F.col("b_id").alias("vec_id"), "embedding"),
+        a.select(F.col("a_id").alias("query_id"), "embedding"),
         k=k,
     ).select(
-        F.col("query_id").alias(id_a), F.col("vec_id").alias(id_b),
+        F.col("query_id").alias("a_id"), F.col("vec_id").alias("b_id"),
         "cos", "rank",
     )
     fb = cosine_topk(
-        a.select(F.col(id_a).alias("vec_id"), vec_col),
-        b.select(F.col(id_b).alias("query_id"), vec_col),
+        a.select(F.col("a_id").alias("vec_id"), "embedding"),
+        b.select(F.col("b_id").alias("query_id"), "embedding"),
         k=k,
     ).select(
-        F.col("vec_id").alias(id_a), F.col("query_id").alias(id_b),
+        F.col("vec_id").alias("a_id"), F.col("query_id").alias("b_id"),
         F.col("cos").alias("cos_b"), F.col("rank").alias("rank_b"),
     )
-    avg_a = fa.groupBy(id_a).agg(F.avg("cos").alias("_avg_a"))
-    avg_b = fb.groupBy(id_b).agg(F.avg("cos_b").alias("_avg_b"))
+    avg_a = fa.groupBy("a_id").agg(F.avg("cos").alias("_avg_a"))
+    avg_b = fb.groupBy("b_id").agg(F.avg("cos_b").alias("_avg_b"))
     top_a = fa.filter(F.col("rank") == 1)
     top_b = fb.filter(F.col("rank_b") == 1)
-    mutual = top_a.join(top_b, [id_a, id_b])
+    mutual = top_a.join(top_b, ["a_id", "b_id"])
     return (
-        mutual.join(avg_a, id_a)
-        .join(avg_b, id_b)
+        mutual.join(avg_a, "a_id")
+        .join(avg_b, "b_id")
         .select(
-            id_a, id_b, "cos",
+            "a_id", "b_id", "cos",
             (F.col("cos") / ((F.col("_avg_a") + F.col("_avg_b")) / 2.0)).alias(
                 "margin"
             ),
@@ -943,13 +895,7 @@ def mutual_topk(
     )
 
 
-def knn_label_consensus(
-    df: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def knn_label_consensus(df: DataFrame, k: int = 5) -> DataFrame:
     """kNN label-consensus noise detection ("confident learning lite"):
     each labeled point is checked against the MAJORITY label of its k
     nearest neighbors in embedding space — a point whose neighborhood
@@ -973,14 +919,14 @@ def knn_label_consensus(
     Output: (id, label, consensus_label, n_agree, n_neighbors, flagged).
     """
     pts = df.select(
-        F.col(id_col).alias("_qid"),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
-        F.col(label_col).alias("_qlab"),
+        F.col("vec_id").alias("_qid"),
+        F.col("embedding").cast("array<double>").alias("_qv"),
+        F.col("label").alias("_qlab"),
     )
     p = df.select(
-        F.col(id_col).alias("_pid"),
-        F.col(vec_col).cast("array<double>").alias("_pv"),
-        F.col(label_col).alias("_plab"),
+        F.col("vec_id").alias("_pid"),
+        F.col("embedding").cast("array<double>").alias("_pv"),
+        F.col("label").alias("_plab"),
     )
     scored = (
         p.crossJoin(F.broadcast(pts))
@@ -1006,8 +952,8 @@ def knn_label_consensus(
         ).alias("n_agree"),
     )
     return best.select(
-        F.col("_qid").alias(id_col),
-        F.col("_qlab").alias(label_col),
+        F.col("_qid").alias("vec_id"),
+        F.col("_qlab").alias("label"),
         F.col("_b.lab").alias("consensus_label"),
         F.col("n_agree").cast("long").alias("n_agree"),
         F.col("n_neighbors").cast("long").alias("n_neighbors"),

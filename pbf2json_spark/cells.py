@@ -276,9 +276,7 @@ def geohash_bounds(gh: str) -> tuple[float, float, float, float]:
     )
 
 
-def compact_cover(
-    cover: "DataFrame", res: int, min_res: int = 0, cell_col: str = "cell"
-) -> "DataFrame":
+def compact_cover(cover: "DataFrame", res: int, min_res: int = 0) -> "DataFrame":
     """H3-compact-style cover minimization: wherever all 4 sibling cells of
     a parent are present, replace them by the parent, recursively up to
     min_res. The minimal multi-resolution representation of a region —
@@ -301,7 +299,7 @@ def compact_cover(
     if not 0 <= min_res <= res:
         raise ValueError("require 0 <= min_res <= res")
     out = None
-    cur = cover.select(F.col(cell_col).alias("cell")).distinct()
+    cur = cover.select(F.col("cell")).distinct()
     for r in range(res, min_res, -1):
         parent = cell_parent_col(F.col("cell"), r, r - 1)
         counts = cur.groupBy(parent.alias("parent")).agg(

@@ -53,21 +53,15 @@ def _assign_udf(cents: np.ndarray):
     return assign
 
 
-def kmeans_fit(
-    df: DataFrame,
-    k: int,
-    n_iter: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
+def kmeans_fit(df: DataFrame, k: int, n_iter: int = 10) -> np.ndarray:
     """Full-data distributed Lloyd's. Init = the k lowest-id vectors
     (TakeOrdered — deterministic across partitionings, unlike a bare
     limit). Returns the k×d float64 centroid matrix (unit-normalized).
     Empty clusters keep their previous centroid (no re-seeding
     randomness)."""
     p = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").cast("array<double>").alias("_v"),
     )
     seeds = p.orderBy("_id").limit(k).collect()
     if len(seeds) < k:
@@ -101,18 +95,13 @@ def kmeans_fit(
     return cents
 
 
-def kmeans_assign(
-    df: DataFrame,
-    centroids: "np.ndarray | list",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_assign(df: DataFrame, centroids: "np.ndarray | list") -> DataFrame:
     """Assign every vector to its max-cosine centroid. Pure scan stage:
     broadcast matrix in the UDF closure, one matmul per Arrow batch.
     Output: input columns + cluster:int."""
     return df.withColumn(
         "cluster", _assign_udf(np.asarray(centroids))(
-            F.col(vec_col).cast("array<double>")
+            F.col("embedding").cast("array<double>")
         )
     )
 

@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+BM25_K1, BM25_B = 1.2, 0.75  # Okapi BM25 term-frequency saturation and length norm
+
 
 def _words(text_col: str) -> Column:
     t = F.col(text_col)
@@ -44,23 +46,19 @@ def ngrams_col(words: Column, n: int) -> Column:
     return out
 
 
-def top_ngrams(
-    df: DataFrame, n: int = 2, k: int = 100, text_col: str = "text"
-) -> DataFrame:
+def top_ngrams(df: DataFrame, n: int = 2, k: int = 100) -> DataFrame:
     """Corpus-wide top-k n-grams by occurrence count; ties broken by the
     gram itself (deterministic on any partitioning).
 
     Output: (gram, occurrences), exactly k rows (fewer if the corpus has
     fewer distinct grams)."""
-    grams = df.select(F.explode(ngrams_col(_words(text_col), n)).alias("gram"))
+    grams = df.select(F.explode(ngrams_col(_words("text"), n)).alias("gram"))
     counts = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("occurrences"))
     return counts.orderBy(F.col("occurrences").desc(), F.col("gram").asc()).limit(k)
 
 
 def inverted_index(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_df: int = 1,
     max_df: int | None = None,
     n: int = 1,
@@ -75,8 +73,8 @@ def inverted_index(
     """
     pairs = (
         df.select(
-            F.col(id_col),
-            F.explode(ngrams_col(_words(text_col), n)).alias("token"),
+            F.col("doc_id"),
+            F.explode(ngrams_col(_words("text"), n)).alias("token"),
         )
         .distinct()
     )
@@ -97,22 +95,14 @@ def inverted_index(
         F.concat_ws(
             ",",
             F.transform(
-                F.sort_array(F.collect_list(F.col(id_col))),
+                F.sort_array(F.collect_list(F.col("doc_id"))),
                 lambda x: x.cast("string"),
             ),
         ).alias("postings"),
     )
 
 
-def bm25_rank(
-    df: DataFrame,
-    terms: list[str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bm25_rank(df: DataFrame, terms: list[str], k: int = 10) -> DataFrame:
     """BM25 relevance ranking with a RATIONAL idf (no logarithm):
     idf(t) = (N - df_t + 0.5) / (df_t + 0.5) — the odds inside the
     classic Robertson idf, left un-logged. The ranking it induces per
@@ -142,7 +132,7 @@ def bm25_rank(
     qs = sorted(set(terms))
     if any(not t or " " in t for t in qs):
         raise ValueError("terms must be non-empty single tokens")
-    words = _words(text_col)
+    words = _words("text")
 
     def _tf(term: str) -> Column:
         # NB: the lambda must be unary — F.filter treats a 2-arg lambda as
@@ -151,7 +141,7 @@ def bm25_rank(
         return F.size(F.filter(words, lambda x: x == F.lit(term)))
 
     scored = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(words).alias("dl"),
         *[_tf(t).alias(f"tf_{i}") for i, t in enumerate(qs)],
     )
@@ -172,10 +162,12 @@ def bm25_rank(
         idf = (F.col("n_docs").cast("double") - dfreq + F.lit(0.5)) / (
             dfreq + F.lit(0.5)
         )
-        denom = tf + F.lit(k1) * (
-            F.lit(1.0) - F.lit(b) + F.lit(b) * (F.col("dl").cast("double") / avgdl)
+        denom = tf + F.lit(BM25_K1) * (
+            F.lit(1.0)
+            - F.lit(BM25_B)
+            + F.lit(BM25_B) * (F.col("dl").cast("double") / avgdl)
         )
-        s = idf * (tf * F.lit(k1 + 1.0) / denom)
+        s = idf * (tf * F.lit(BM25_K1 + 1.0) / denom)
         score = s if score is None else score + s
     matched = None
     for i in range(len(qs)):
@@ -184,18 +176,13 @@ def bm25_rank(
     return (
         j.withColumn("score", score)
         .filter(matched)
-        .select(id_col, "score", "dl")
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
+        .select("doc_id", "score", "dl")
+        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(k)
     )
 
 
-def search_all_terms(
-    df: DataFrame,
-    terms: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def search_all_terms(df: DataFrame, terms: list[str]) -> DataFrame:
     """Conjunctive keyword search: documents containing ALL `terms` as
     whitespace tokens (repeated query terms collapse).
 
@@ -206,12 +193,12 @@ def search_all_terms(
     because it is an independent derivation.)"""
     if not terms:
         raise ValueError("terms must be non-empty")
-    words = _words(text_col)
+    words = _words("text")
     cond = None
     for t in sorted(set(terms)):
         c = F.array_contains(words, t)
         cond = c if cond is None else cond & c
-    return df.filter(cond).select(id_col)
+    return df.filter(cond).select("doc_id")
 
 
 def tfidf_keywords(
@@ -219,8 +206,6 @@ def tfidf_keywords(
     k: int = 5,
     min_df: int = 1,
     max_df_frac: float = 1.0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-document top-k keywords by tf-idf — the unsupervised keyword /
     topic-tag extractor of a training-data pipeline (metadata enrichment,
@@ -257,8 +242,8 @@ def tfidf_keywords(
     from pyspark.sql import Window
 
     toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(_words(text_col)).alias("term"),
+        F.col("doc_id"),
+        F.explode(_words("text")).alias("term"),
     )
     tf = toks.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).alias("tf")
@@ -307,8 +292,6 @@ def token_lift(
     min_pair_count: int = 2,
     min_df: int = 1,
     max_df_frac: float = 1.0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Token co-occurrence association ("lift") — which word pairs appear
     in the same document far more often than independence predicts. The
@@ -336,8 +319,8 @@ def token_lift(
     pair_count >= min_pair_count.
     """
     presence = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(_words(text_col))).alias("term"),
+        F.col("doc_id"),
+        F.explode(F.array_distinct(_words("text"))).alias("term"),
     )
     n_docs = df.count()  # one row per document (id_col unique upstream)
     dfreq = presence.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -372,8 +355,6 @@ def bigram_lm_score(
     train: DataFrame,
     score: DataFrame,
     min_count: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Bigram-LM fluency scoring — the CCNet/Gopher "perplexity filter"
     re-expressed portably: train bigram/context counts on a reference
@@ -404,7 +385,7 @@ def bigram_lm_score(
     lm_score_e6); docs under 2 words score (0, 0, 0).
     """
     def big(df):
-        w = _words(text_col)
+        w = _words("text")
         # zip_with over the two shifted slices (the ngrams_col shape);
         # sequence() is unusable here — sequence(1, 0) DESCENDS in Spark
         length = F.greatest(F.size(w) - 1, F.lit(0))
@@ -414,7 +395,7 @@ def bigram_lm_score(
             lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
         )
         return (
-            df.select(F.col(id_col).alias("doc_id"), pair.alias("_ps"))
+            df.select(F.col("doc_id"), pair.alias("_ps"))
             .select("doc_id", F.explode("_ps").alias("_p"))
             .select("doc_id", "_p.w1", "_p.w2")
         )
@@ -445,7 +426,7 @@ def bigram_lm_score(
     )
     zero = F.lit(0).cast("long")
     return (
-        score.select(F.col(id_col).alias("doc_id"))
+        score.select(F.col("doc_id"))
         .join(scored, "doc_id", "left")
         .select(
             "doc_id",
@@ -456,9 +437,7 @@ def bigram_lm_score(
     )
 
 
-def bpe_pair_counts(
-    df: DataFrame, k: int = 50, text_col: str = "text"
-) -> DataFrame:
+def bpe_pair_counts(df: DataFrame, k: int = 50) -> DataFrame:
     """First BPE merge iteration — corpus-wide counts of adjacent symbol
     (character) pairs inside whitespace-delimited words, top-k by
     frequency. This is the inner loop of tokenizer training (Sennrich
@@ -478,7 +457,7 @@ def bpe_pair_counts(
 
     Output: (a, b, pair_count), ≤ k rows.
     """
-    w = F.explode(_words(text_col)).alias("w")
+    w = F.explode(_words("text")).alias("w")
     words = df.select(w).filter(F.length("w") >= 2)
     pair = F.transform(
         F.sequence(F.lit(1), F.length("w") - 1),
@@ -498,10 +477,6 @@ def align_segments(
     pairs: DataFrame,
     docs: DataFrame,
     words_per_seg: int = 12,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    id_a: str = "id_a",
-    id_b: str = "id_b",
 ) -> DataFrame:
     """Positional segment alignment for document pairs — stage 2 of the
     bitext-mining pipeline after weburl.align_translations: chunk both
@@ -523,8 +498,8 @@ def align_segments(
     trailing unmatched segments don't pair).
     """
     w = words_per_seg
-    words = _words(text_col)
-    d = docs.select(F.col(id_col).alias("_id"), words.alias("_w")).filter(
+    words = _words("text")
+    d = docs.select(F.col("doc_id").alias("_id"), words.alias("_w")).filter(
         F.size("_w") > 0
     )
     n_chunks = F.floor((F.size("_w") + (w - 1)) / F.lit(w)).cast("int")
@@ -536,19 +511,19 @@ def align_segments(
         "_id", F.posexplode(chunks).alias("seg_idx", "_toks")
     )
     a = seg.select(
-        F.col("_id").alias(id_a), F.col("seg_idx"),
+        F.col("_id").alias("id_a"), F.col("seg_idx"),
         F.col("_toks").alias("_ta"),
     )
     b = seg.select(
-        F.col("_id").alias(id_b), F.col("seg_idx"),
+        F.col("_id").alias("id_b"), F.col("seg_idx"),
         F.col("_toks").alias("_tb"),
     )
     return (
-        pairs.select(id_a, id_b)
-        .join(a, id_a)
-        .join(b, [id_b, "seg_idx"])
+        pairs.select("id_a", "id_b")
+        .join(a, "id_a")
+        .join(b, ["id_b", "seg_idx"])
         .select(
-            id_a, id_b,
+            "id_a", "id_b",
             F.col("seg_idx").cast("long").alias("seg_idx"),
             F.size("_ta").cast("long").alias("n_tok_a"),
             F.size("_tb").cast("long").alias("n_tok_b"),
@@ -557,14 +532,7 @@ def align_segments(
     )
 
 
-def term_geo_lift(
-    df: DataFrame,
-    res: int,
-    min_cell_count: int = 2,
-    text_col: str = "text",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
+def term_geo_lift(df: DataFrame, res: int, min_cell_count: int = 2) -> DataFrame:
     """Regional term affinity — which words are LOCAL to a grid cell
     (place names, regional dialect, local events) vs uniformly global?
     The geo×text statistic behind toponym mining and regional corpus
@@ -592,10 +560,10 @@ def term_geo_lift(
     """
     from . import cells as _cells
 
-    xg, yg = _cells.xy_cols(F.col(lat_col), F.col(lon_col), res)
+    xg, yg = _cells.xy_cols(F.col("lat"), F.col("lon"), res)
     cell = (xg * (1 << res) + yg).cast("long")
     ct = (
-        df.select(cell.alias("cell"), F.explode(_words(text_col)).alias("term"))
+        df.select(cell.alias("cell"), F.explode(_words("text")).alias("term"))
         .groupBy("cell", "term")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -617,12 +585,7 @@ def term_geo_lift(
     )
 
 
-def vocab_growth(
-    docs: DataFrame,
-    bucket_docs: int,
-    doc_id: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def vocab_growth(docs: DataFrame, bucket_docs: int) -> DataFrame:
     """Heaps-law vocabulary growth curve: scanning the corpus in doc_id
     order, how many NEW token types appear per bucket of `bucket_docs`
     documents, against cumulative token volume — the curve whose flattening
@@ -649,9 +612,9 @@ def vocab_growth(
     if bucket_docs <= 0:
         raise ValueError("bucket_docs > 0")
     base = docs.select(
-        F.expr(f"{doc_id} div {bucket_docs}").alias("bucket"),
-        F.col(doc_id).alias("_id"),
-        _words(text_col).alias("_ws"),
+        F.expr(f"doc_id div {bucket_docs}").alias("bucket"),
+        F.col("doc_id").alias("_id"),
+        _words("text").alias("_ws"),
     )
     per_bucket = base.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -682,12 +645,7 @@ def vocab_growth(
     )
 
 
-def ngram_novelty(
-    docs: DataFrame,
-    n: int = 2,
-    doc_id: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def ngram_novelty(docs: DataFrame, n: int = 2) -> DataFrame:
     """Per-document n-gram novelty: of a doc's DISTINCT n-grams, the
     share first seen in THIS doc (first occurrence = min doc_id over the
     corpus — a pure aggregate, order-independent at any parallelism) —
@@ -710,8 +668,8 @@ def ngram_novelty(
     Output: (doc_id, n_gram_types, novel_types, novelty_e6).
     """
     base = docs.select(
-        F.col(doc_id).alias("_id"),
-        ngrams_col(_words(text_col), n).alias("_gs"),
+        F.col("doc_id").alias("_id"),
+        ngrams_col(_words("text"), n).alias("_gs"),
     )
     posts = base.select(
         "_id", F.explode("_gs").alias("_g")
@@ -725,11 +683,11 @@ def ngram_novelty(
         .agg(F.count(F.lit(1)).alias("novel_types"))
     )
     return (
-        docs.select(F.col(doc_id).alias("_id"))
+        docs.select(F.col("doc_id").alias("_id"))
         .join(types, "_id", "left")
         .join(novel, "_id", "left")
         .select(
-            F.col("_id").alias(doc_id),
+            F.col("_id").alias("doc_id"),
             F.coalesce("n_gram_types", F.lit(0)).cast("long")
             .alias("n_gram_types"),
             F.coalesce("novel_types", F.lit(0)).cast("long")
@@ -742,19 +700,13 @@ def ngram_novelty(
     )
 
 
-def rrf_fuse(
-    rankings: list[DataFrame],
-    id_col: str = "doc_id",
-    score_col: str = "score",
-    k_const: int = 60,
-    top_k: int = 25,
-) -> DataFrame:
+def rrf_fuse(rankings: list[DataFrame], top_k: int = 25) -> DataFrame:
     """Reciprocal-rank fusion of ranked candidate lists — the standard
     hybrid-search combiner (BM25 ⊕ dense cosine ⊕ freshness): each input
     ranking contributes 1/(k + rank) per document, summed across
     rankers, re-ranked by the fused score. In e6 fixed point,
 
-        rrf_e6 = Σ_r 1e6 div (k_const + rank_r(doc))
+        rrf_e6 = Σ_r 1e6 div (60 + rank_r(doc))
 
     with rank from 1 by (score DESC, id ASC) — a truncating integer div
     per ranker BEFORE the sum, so the fusion is bit-identical on any
@@ -768,32 +720,32 @@ def rrf_fuse(
     a scale hazard). One union of (id, term) pairs + one combinable sum
     + TakeOrdered(top_k). Never touches raw documents.
 
-    Output: (id_col, n_rankers, rrf_e6) — top_k rows, fused order.
+    Output: (doc_id, n_rankers, rrf_e6) — top_k rows, fused order.
     """
     from pyspark.sql.window import Window
 
     parts = []
     for r in rankings:
-        w = Window.orderBy(F.col(score_col).desc(), F.col(id_col).asc())
+        w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
         parts.append(
             r.select(
-                F.col(id_col),
+                F.col("doc_id"),
                 F.row_number().over(w).alias("_rank"),
             ).select(
-                id_col,
-                F.expr(f"CAST(1000000 div ({k_const} + _rank) AS BIGINT)")
+                "doc_id",
+                F.expr("CAST(1000000 div (60 + _rank) AS BIGINT)")
                 .alias("_term"),
             )
         )
     u = parts[0]
     for p in parts[1:]:
         u = u.unionByName(p)
-    fused = u.groupBy(id_col).agg(
+    fused = u.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_rankers"),
         F.sum("_term").alias("rrf_e6"),
     )
     return (
-        fused.orderBy(F.col("rrf_e6").desc(), F.col(id_col).asc())
+        fused.orderBy(F.col("rrf_e6").desc(), F.col("doc_id").asc())
         .limit(top_k)
     )
 
@@ -814,7 +766,6 @@ _BPE_WORD_CAP = 128
 def bpe_encode(
     df: DataFrame,
     merges: list[tuple[str, str]],
-    text_col: str = "text",
     top_k: int = 50,
 ) -> DataFrame:
     """Apply a FIXED BPE merge table and count the resulting subword
@@ -865,7 +816,7 @@ def bpe_encode(
         F.lit(R), F.lit(""),
     )
     toks = (
-        df.select(F.explode(_words(text_col)).alias("_w"))
+        df.select(F.explode(_words("text")).alias("_w"))
         .select(F.explode(F.split(unbracketed, " ")).alias("token"))
         .filter(F.col("token") != "")
     )
@@ -873,13 +824,7 @@ def bpe_encode(
     return counts.orderBy(F.col("cnt").desc(), F.col("token").asc()).limit(top_k)
 
 
-def kwic(
-    df: DataFrame,
-    term: str,
-    width: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def kwic(df: DataFrame, term: str, width: int = 3) -> DataFrame:
     """Keyword-in-context concordance: every occurrence of `term` as a
     whitespace token, with up to `width` tokens of context either side —
     the corpus-inspection primitive behind "show me how this term is
@@ -894,18 +839,18 @@ def kwic(
     rows are one per occurrence. For a selective term this is a
     zero-shuffle scan, same envelope as term search.
 
-    Output: (id_col, pos, context) — pos is the 1-based token index.
+    Output: (doc_id, pos, context) — pos is the 1-based token index.
     """
     if not term or " " in term:
         raise ValueError("term must be a non-empty single token")
     toks = df.select(
-        F.col(id_col), _words(text_col).alias("_ws")
+        F.col("doc_id"), _words("text").alias("_ws")
     ).select(
-        id_col, "_ws",
+        "doc_id", "_ws",
         F.posexplode("_ws").alias("_i0", "_w"),
     ).filter(F.col("_w") == term)
     return toks.select(
-        id_col,
+        "doc_id",
         (F.col("_i0") + 1).cast("long").alias("pos"),
         F.array_join(
             F.slice(
@@ -921,12 +866,7 @@ def kwic(
     )
 
 
-def bpe_train(
-    df: DataFrame,
-    n_merges: int,
-    text_col: str = "text",
-    checkpoint_every: int = 8,
-) -> DataFrame:
+def bpe_train(df: DataFrame, n_merges: int) -> DataFrame:
     """Train a BPE merge table ON the corpus — the missing third of the
     tokenizer lifecycle (bpe_pair_counts = one iteration's statistics,
     bpe_encode = applying a FIXED table; this is the loop that produces
@@ -943,7 +883,7 @@ def bpe_train(
     Words are bracketed symbol strings (bpe_encode's \\x01sym\\x02
     representation), so applying a merge is ONE non-overlapping
     left-to-right replace — identical to canonical greedy merge-all.
-    localCheckpoint every `checkpoint_every` rounds bounds the replace
+    localCheckpoint every 8 rounds bounds the replace
     lineage; each round's cost is vocab-scale, never corpus-scale.
 
     Sequential-by-nature (merge r+1's statistics depend on merge r), so
@@ -965,7 +905,7 @@ def bpe_train(
         "",
     )
     vocab = (
-        df.select(F.explode(_words(text_col)).alias("_w"))
+        df.select(F.explode(_words("text")).alias("_w"))
         .filter(F.length("_w") > 0)
         .groupBy("_w")
         .agg(F.count(F.lit(1)).alias("_cnt"))
@@ -1007,22 +947,14 @@ def bpe_train(
                 F.col("_s"), F.lit(f"{L}{a}{R}{L}{b}{R}"), F.lit(f"{L}{a}{b}{R}")
             ),
         )
-        if (step + 1) % checkpoint_every == 0 and step + 1 < n_merges:
+        if (step + 1) % 8 == 0 and step + 1 < n_merges:
             vocab = vocab.localCheckpoint()
     return spark.createDataFrame(
         merges, "step long, a string, b string, pair_count long"
     )
 
 
-def ranking_eval(
-    results: DataFrame,
-    judgments: DataFrame,
-    k: int = 10,
-    query_id: str = "query_id",
-    doc_id: str = "doc_id",
-    rank_col: str = "rank",
-    rel_col: str = "rel",
-) -> DataFrame:
+def ranking_eval(results: DataFrame, judgments: DataFrame, k: int = 10) -> DataFrame:
     """Per-query retrieval quality: MRR, hits@k, nDCG@k — the evaluation
     harness for the bm25_rank / rrf_fuse / ANN family (a ranker without
     an eval loop is untestable at corpus scale). One left join of
@@ -1044,18 +976,18 @@ def ranking_eval(
     """
     j = F.broadcast(
         judgments.select(
-            F.col(query_id), F.col(doc_id), F.col(rel_col).cast("long").alias("_rel")
+            F.col("query_id"), F.col("doc_id"), F.col("rel").cast("long").alias("_rel")
         )
     )
-    r = results.select(query_id, doc_id, F.col(rank_col).cast("long").alias("_rk"))
-    joined = r.join(j, [query_id, doc_id], "left").withColumn(
+    r = results.select("query_id", "doc_id", F.col("rank").cast("long").alias("_rk"))
+    joined = r.join(j, ["query_id", "doc_id"], "left").withColumn(
         "_rel", F.coalesce(F.col("_rel"), F.lit(0).cast("long"))
     )
     topk = joined.filter(F.col("_rk") <= k)
     gain = (F.pow(F.lit(2.0), F.col("_rel").cast("double")) - 1.0) / F.log2(
         F.col("_rk").cast("double") + 1.0
     )
-    per_q = topk.groupBy(query_id).agg(
+    per_q = topk.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("n_judged"),
         F.sum((F.col("_rel") > 0).cast("long")).alias("n_rel_topk"),
         F.min(F.when(F.col("_rel") > 0, F.col("_rk"))).alias("first_rel_rank"),
@@ -1064,10 +996,10 @@ def ranking_eval(
     )
     # ideal DCG from the query's judged relevances, best-first
     ideal = (
-        j.groupBy(query_id)
+        j.groupBy("query_id")
         .agg(F.sort_array(F.collect_list("_rel"), asc=False).alias("_rels"))
         .select(
-            query_id,
+            "query_id",
             F.aggregate(
                 F.zip_with(
                     F.slice("_rels", 1, k),
@@ -1082,8 +1014,8 @@ def ranking_eval(
             ).alias("_idcg"),
         )
     )
-    out = per_q.join(ideal, query_id, "left").select(
-        query_id,
+    out = per_q.join(ideal, "query_id", "left").select(
+        "query_id",
         "n_judged",
         "n_rel_topk",
         "first_rel_rank",
@@ -1100,12 +1032,7 @@ def ranking_eval(
     return out
 
 
-def term_dispersion(
-    df: DataFrame,
-    part_col: str,
-    text_col: str = "text",
-    min_freq: int = 10,
-) -> DataFrame:
+def term_dispersion(df: DataFrame, part_col: str, min_freq: int = 10) -> DataFrame:
     """Gries' DP term dispersion: how evenly a term spreads over corpus
     parts (dumps, sources, languages) — DP = ½·Σᵢ|vᵢ − sᵢ| where vᵢ is
     the term's frequency share in part i and sᵢ the part's token share.
@@ -1129,7 +1056,7 @@ def term_dispersion(
     Output: (term, f, dp_num, dp_den, dp_e6, dp).
     """
     tok = df.select(
-        F.col(part_col).alias("_p"), F.explode(_words(text_col)).alias("_w")
+        F.col(part_col).alias("_p"), F.explode(_words("text")).alias("_w")
     )
     tc = tok.groupBy("_p", "_w").agg(F.count(F.lit(1)).alias("_f"))
     parts = tok.groupBy("_p").agg(F.count(F.lit(1)).alias("_t"))
@@ -1166,12 +1093,7 @@ def term_dispersion(
     return out
 
 
-def text_tiles(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    block: int = 20,
-) -> DataFrame:
+def text_tiles(df: DataFrame, block: int = 20) -> DataFrame:
     """TextTiling-style topic segmentation (Hearst 1997, integerized):
     split each document into fixed ``block``-token blocks, score every
     gap between adjacent blocks by lexical overlap, and mark topic
@@ -1200,9 +1122,9 @@ def text_tiles(
     — gap g sits between blocks g and g+1; docs with < 2 blocks emit
     nothing.
     """
-    d, t = F.col(id_col), F.col(text_col)
+    d, t = F.col("doc_id"), F.col("text")
     toks = df.select(
-        d.alias("_id"), F.posexplode(_words(text_col)).alias("_pos", "_w")
+        d.alias("_id"), F.posexplode(_words("text")).alias("_pos", "_w")
     )
     bc = (
         toks.select("_id", F.expr(f"_pos div {block}").alias("_b"), "_w")
@@ -1246,7 +1168,6 @@ def cooccurrence_lift(
     df: DataFrame,
     id_col: str,
     window: int = 3,
-    text_col: str = "text",
     min_pair: int = 5,
 ) -> DataFrame:
     """Windowed co-occurrence association (the word2vec-era statistic):
@@ -1279,7 +1200,7 @@ def cooccurrence_lift(
     """
     toks = df.select(
         F.col(id_col).alias("_doc"),
-        F.posexplode(_words(text_col)).alias("_pos", "_w"),
+        F.posexplode(_words("text")).alias("_pos", "_w"),
     )
     totals = toks.groupBy("_w").agg(F.count(F.lit(1)).alias("_c"))
     t_pos = toks.count()
@@ -1320,11 +1241,7 @@ def cooccurrence_lift(
     )
 
 
-def vocab_coverage(
-    docs: DataFrame,
-    ks: list[int],
-    text_col: str = "text",
-) -> DataFrame:
+def vocab_coverage(docs: DataFrame, ks: list[int]) -> DataFrame:
     """Top-k type coverage curve (tokenizer-vocabulary budgeting): for each
     k in `ks`, what share of all token OCCURRENCES is covered by the k most
     frequent types — the number that decides a tokenizer's vocab size and
@@ -1351,7 +1268,7 @@ def vocab_coverage(
     if not ks or any(k <= 0 for k in ks):
         raise ValueError("ks must be positive")
     counts = (
-        docs.select(F.explode(_words(text_col)).alias("_tok"))
+        docs.select(F.explode(_words("text")).alias("_tok"))
         .groupBy("_tok")
         .agg(F.count(F.lit(1)).alias("_c"))
     )
@@ -1402,11 +1319,7 @@ def vocab_coverage(
     )
 
 
-def good_turing_mass(
-    docs: DataFrame,
-    text_col: str = "text",
-    max_r: int = 5,
-) -> DataFrame:
+def good_turing_mass(docs: DataFrame, max_r: int = 5) -> DataFrame:
     """Good-Turing frequency-of-frequencies surface: N_r (how many types
     occur exactly r times, r = 1..max_r) plus the Turing unseen-mass
     estimate p0 = N_1 / N — the share of the true distribution held by
@@ -1423,7 +1336,7 @@ def good_turing_mass(
     if max_r <= 0:
         raise ValueError("max_r > 0")
     counts = (
-        docs.select(F.explode(_words(text_col)).alias("_tok"))
+        docs.select(F.explode(_words("text")).alias("_tok"))
         .groupBy("_tok")
         .agg(F.count(F.lit(1)).alias("_c"))
     )

@@ -37,14 +37,7 @@ def _doc_grams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     )
 
 
-def contamination_pairs(
-    train: DataFrame,
-    bench: DataFrame,
-    n: int = 13,
-    train_id: str = "doc_id",
-    bench_id: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def contamination_pairs(train: DataFrame, bench: DataFrame, n: int = 13) -> DataFrame:
     """All (train_id, bench_id, n_shared) pairs where a training document
     shares >=1 distinct word n-gram with a benchmark document, with the
     count of distinct shared grams.
@@ -53,9 +46,9 @@ def contamination_pairs(
     combinable groupBy of the (rare) hits — see the module docstring for
     why this never shuffles training text.
     """
-    tg = _doc_grams(train, train_id, text_col, n)
+    tg = _doc_grams(train, "doc_id", "text", n)
     bg = F.broadcast(
-        _doc_grams(bench, bench_id, text_col, n).withColumnRenamed("_id", "_bid")
+        _doc_grams(bench, "doc_id", "text", n).withColumnRenamed("_id", "_bid")
     )
     return (
         tg.join(bg, "gram")

@@ -172,21 +172,19 @@ def ngram_jaccard_pairs(
 _MINHASH_P = 2147483647  # 2^31-1 (Mersenne prime)
 
 
-def minhash_coeffs(num_perm: int, seed: int = 7) -> list[tuple[int, int]]:
+def minhash_coeffs(num_perm: int) -> list[tuple[int, int]]:
     """Deterministic (a, b) permutation coefficients, a ∈ [1, p), b ∈ [0, p);
     shared by the Spark column builder and the DuckDB oracle generator."""
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(7)
     return [
         (rng.randrange(1, _MINHASH_P), rng.randrange(0, _MINHASH_P))
         for _ in range(num_perm)
     ]
 
 
-def minhash_signature_portable(
-    shingles: Column, num_perm: int, seed: int = 7
-) -> Column:
+def minhash_signature_portable(shingles: Column, num_perm: int) -> Column:
     """Portable minhash: 32-bit md5-derived shingle hash, permutations
     (a·h + b) mod 2^31-1. Every intermediate stays < 2^63 (a < 2^31,
     h < 2^32), so plain 64-bit integer arithmetic is exact and identical
@@ -205,7 +203,7 @@ def minhash_signature_portable(
                     hs, lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(_MINHASH_P)
                 )
             )
-            for a, b in minhash_coeffs(num_perm, seed)
+            for a, b in minhash_coeffs(num_perm)
         ]
     )
 
@@ -375,11 +373,7 @@ def simhash_pairs(
     )
 
 
-def incremental_new_docs(
-    corpus_fps: DataFrame,
-    new_docs: DataFrame,
-    fp_col: str | list[str] = "fp",
-) -> DataFrame:
+def incremental_new_docs(corpus_fps: DataFrame, new_docs: DataFrame) -> DataFrame:
     """Incremental-ingest dedup: rows of `new_docs` whose content
     fingerprint does not already exist in the corpus — the O(delta) step
     that keeps a 10^12-document corpus from being re-deduplicated per
@@ -390,7 +384,7 @@ def incremental_new_docs(
     Feed it a 128-bit fingerprint (full md5, or the fp64/fp64b pair from
     textops.fingerprint — pass both names) — a lone 64-bit fp silently
     drops ~27k genuinely-new documents per 10^12 at birthday rates."""
-    cols = [fp_col] if isinstance(fp_col, str) else list(fp_col)
+    cols = ["fp"] if isinstance("fp", str) else list("fp")
     return new_docs.join(
         corpus_fps.select(*cols).distinct(), cols, "left_anti"
     )
@@ -399,7 +393,6 @@ def incremental_new_docs(
 def containment_pairs(
     df: DataFrame,
     id_col: str,
-    text_col: str = "text",
     n: int = 3,
     threshold_e6: int = 800_000,
     prefix_filter: bool = True,
@@ -430,7 +423,7 @@ def containment_pairs(
     # once per branch (measured 6x on the bench corpus)
     sh = df.select(
         F.col(id_col).alias("_id"),
-        word_shingles(F.col(text_col), n).alias("_sh"),
+        word_shingles(F.col("text"), n).alias("_sh"),
     ).withColumn("_size", F.size("_sh")).filter(F.col("_size") > 0)
     sh = sh.localCheckpoint(eager=False)
 
@@ -478,22 +471,17 @@ def containment_pairs(
     )
 
 
-def edit_near_dup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-    max_dist: int = 3,
-    title_len: int = 24,
-    bucket: int = 8,
-) -> DataFrame:
+TITLE_LEN = 24  # chars of normalized text in the title key of both edit passes
+
+
+def edit_near_dup(df: DataFrame, max_dist: int = 3, bucket: int = 8) -> DataFrame:
     """Edit-distance near-duplicate pairs over normalized title prefixes
     — the character-level complement to the token-set families (Jaccard
     shingles see reorderings, MinHash/SimHash see global similarity;
     Levenshtein sees TYPOS: one-off scrape variants, OCR noise,
     templated titles differing by a serial number).
 
-    Title = the first `title_len` chars of the text lowercased and
+    Title = the first TITLE_LEN chars of the text lowercased and
     stripped to [a-z0-9 ] — the ASCII normalization sidesteps
     engine-specific Unicode case folding so Spark's `levenshtein` and
     DuckDB's `levenshtein` (both classic char-DP) agree bit-for-bit.
@@ -507,22 +495,22 @@ def edit_near_dup(
     exactly one bucket — no dedup exchange.
 
     Shape at 10^12 docs: never all-pairs. The frame collapses to
-    (id, lang, title, len) — titles are ≤ title_len bytes, so the
+    (id, lang, title, len) — titles are ≤ TITLE_LEN bytes, so the
     shuffle payload is ids + short strings; the candidate join is a
     bucketed equi-join on (lang, bucket); Spark's levenshtein takes the
     threshold arg for early-exit DP. Hot blocks (one lang + one length
     dominating) salt like any hot equi-key. Quadratic cost is confined
-    WITHIN a block; `bucket`/`title_len` bound the block width.
+    WITHIN a block; `bucket`/TITLE_LEN bound the block width.
 
     Output: (a, b, len_a, len_b, dist), a < b, dist ≤ max_dist.
     """
     if bucket < max_dist + 1:
         raise ValueError("bucket must be >= max_dist + 1 for exact recall")
     t = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(lang_col).alias("_lang"),
+        F.col("doc_id").alias("_id"),
+        F.col("lang").alias("_lang"),
         F.regexp_replace(
-            F.lower(F.substring(F.col(text_col), 1, title_len)),
+            F.lower(F.substring(F.col("text"), 1, TITLE_LEN)),
             "[^a-z0-9 ]", "",
         ).alias("_title"),
     ).withColumn("_len", F.length("_title").cast("long")).withColumn(
@@ -567,11 +555,8 @@ def edit_near_dup(
 
 def sorted_neighborhood_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     window: int = 4,
     max_dist: int = 3,
-    title_len: int = 24,
 ) -> DataFrame:
     """Sorted-neighborhood (SNM) near-duplicate candidates: sort all
     normalized title keys once, compare each row against its next
@@ -593,7 +578,7 @@ def sorted_neighborhood_pairs(
       3. bucket totals (≤ 37 rows, metadata-scale collect) prefix-summed
          on the driver and broadcast back as base offsets,
     then candidates meet in one integer equi-join: the left side explodes
-    to rn+1 .. rn+window (payload = id + ≤ title_len-byte key), never an
+    to rn+1 .. rn+window (payload = id + ≤ TITLE_LEN-byte key), never an
     all-pairs theta join. Spark's and DuckDB's `levenshtein` are both the
     classic character DP on the ASCII-normalized key — bit-equal.
 
@@ -601,9 +586,9 @@ def sorted_neighborhood_pairs(
     id_b in (key, id) order and 1 ≤ gap ≤ window.
     """
     t = df.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         F.regexp_replace(
-            F.lower(F.substring(F.coalesce(F.col(text_col), F.lit("")), 1, title_len)),
+            F.lower(F.substring(F.coalesce(F.col("text"), F.lit("")), 1, TITLE_LEN)),
             "[^a-z0-9 ]",
             "",
         ).alias("_key"),
@@ -650,8 +635,6 @@ def record_linkage(
     fields: list[tuple[str, str, int, int, int]],
     upper: int,
     lower: int,
-    left_id: str = "id_l",
-    right_id: str = "id_r",
 ) -> DataFrame:
     """Fellegi–Sunter probabilistic record linkage with blocking — the
     entity-resolution complement of the dedup family: instead of "are these
@@ -683,11 +666,11 @@ def record_linkage(
 
     Output: (id_l, id_r, score, decision) — one row per candidate pair.
     """
-    lsel = [F.col(left_id)] + [F.col(c) for c in block_cols]
+    lsel = [F.col("id_l")] + [F.col(c) for c in block_cols]
     lsel += [F.col(lc) for lc, _, _, _, _ in fields]
     l = left.select(*lsel)
     r = right.select(
-        F.col(right_id),
+        F.col("id_r"),
         *[F.col(c) for c in block_cols],
         *[F.col(rc).alias(f"_r_{rc}") for _, rc, _, _, _ in fields],
     )
@@ -704,8 +687,8 @@ def record_linkage(
         score = score + F.when(agree, F.lit(m_w)).otherwise(F.lit(u_w)).cast("long")
 
     return cand.select(
-        F.col(left_id),
-        F.col(right_id),
+        F.col("id_l"),
+        F.col("id_r"),
         score.alias("score"),
         F.when(score >= F.lit(upper), F.lit("match"))
         .when(score <= F.lit(lower), F.lit("non_match"))
@@ -719,8 +702,6 @@ def golden_records(
     id_col: str,
     match_pairs: DataFrame,
     attr_cols: list[str],
-    left_id: str = "id_l",
-    right_id: str = "id_r",
 ) -> DataFrame:
     """Golden-record survivorship — the master-data step AFTER
     record_linkage: matched pairs merge into entity clusters (connected
@@ -744,7 +725,7 @@ def golden_records(
     """
     ids = df.select(F.col(id_col).alias("_id"))
     cc = connected_components(
-        match_pairs.select(F.col(left_id).alias("a"), F.col(right_id).alias("b"))
+        match_pairs.select(F.col("id_l").alias("a"), F.col("id_r").alias("b"))
     )
     labeled = (
         ids.join(cc.withColumnRenamed("id", "_id"), "_id", "left")
@@ -772,8 +753,6 @@ def blocking_quality(
     gold: DataFrame,
     n_left: int,
     n_right: int,
-    id_l: str = "id_l",
-    id_r: str = "id_r",
 ) -> DataFrame:
     """Blocking-strategy evaluation (the record-linkage literature's
     standard triple): a blocking pass (nationkey equi-join, soundex,
@@ -794,9 +773,9 @@ def blocking_quality(
 
     Output: one row (n_cand, n_gold, n_hit, rr_e6, pc_e6, pq_e6).
     """
-    c = candidates.select(id_l, id_r).distinct()
-    g = gold.select(id_l, id_r).distinct()
-    hit = c.join(g, [id_l, id_r], "left_semi")
+    c = candidates.select("id_l", "id_r").distinct()
+    g = gold.select("id_l", "id_r").distinct()
+    hit = c.join(g, ["id_l", "id_r"], "left_semi")
     stats_df = c.agg(F.count(F.lit(1)).alias("n_cand")).crossJoin(
         g.agg(F.count(F.lit(1)).alias("n_gold"))
     ).crossJoin(hit.agg(F.count(F.lit(1)).alias("n_hit")))

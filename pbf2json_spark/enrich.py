@@ -211,7 +211,6 @@ def translate_address(
     transl_geo: DataFrame | None,
     names: Iterable[str] = ("name",),
     loc: tuple[str, str] | None = None,
-    key: str = "id",
     with_counters: bool = False,
 ) -> DataFrame:
     """Apply amenity-name injection + street-name translations to output rows
@@ -277,7 +276,7 @@ def translate_address(
     hnum = F.element_at(F.col("tags"), F.lit("addr:housenumber"))
     has_address = street.isNotNull() & hnum.isNotNull()
 
-    out = out.withColumn("_rk", F.col(key))
+    out = out.withColumn("_rk", F.col("id"))
     addressed = out.filter(has_address).select(
         "_rk",
         "tags",
@@ -459,15 +458,16 @@ def _merge_one_name(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def _merge_one_name_cc(pdf: pd.DataFrame, slack: float = STREET_HIT_DISTANCE) -> pd.DataFrame:
+def _merge_one_name_cc(pdf: pd.DataFrame) -> pd.DataFrame:
     """Near-linear fallback for pathological hot names (a worldwide 'Main
     Street' at 100× scale turns the reference's O(n²) greedy scan into a
     single-task quadratic straggler).
 
     Components = connected components of the pairwise
-    bbox-intersects-with-slack graph, via union-find over a shared grid:
-    each bbox expanded by slack/2 is assigned to every grid cell it covers
-    and boxes sharing a cell are unioned. Two boxes that intersect (with
+    bbox-intersects-with-slack graph (slack = STREET_HIT_DISTANCE), via
+    union-find over a shared grid: each bbox expanded by slack/2 is
+    assigned to every grid cell it covers and boxes sharing a cell are
+    unioned. Two boxes that intersect (with
     slack) share the cell containing a common point, so a true component is
     NEVER split; boxes closer than ~2 cell widths may be over-merged, and
     greedy's growing-bbox absorption can differ near component boundaries —
@@ -483,10 +483,10 @@ def _merge_one_name_cc(pdf: pd.DataFrame, slack: float = STREET_HIT_DISTANCE) ->
     lon0 = np.array([b["lon"] for b in pdf["bbox_min"]], dtype=np.float64)
     lat1 = np.array([b["lat"] for b in pdf["bbox_max"]], dtype=np.float64)
     lon1 = np.array([b["lon"] for b in pdf["bbox_max"]], dtype=np.float64)
-    h = slack / 2.0
+    h = STREET_HIT_DISTANCE / 2.0
     # cell width: median box extent (≥ slack) keeps cells-per-box ~O(1)
     g = max(
-        slack,
+        STREET_HIT_DISTANCE,
         float(np.median(lat1 - lat0)),
         float(np.median(lon1 - lon0)),
     )

@@ -290,7 +290,7 @@ def dp_keep_mask(lat: np.ndarray, lon: np.ndarray, eps: float) -> np.ndarray:
     return keep
 
 
-def ring_validity(df, id_col: str = "polygon_id", ring_col: str = "ring"):
+def ring_validity(df):
     """Geometric QA for polygon rings (array<struct<lat,lon>>, duplicated
     closing point — the repo's ring convention): closure, winding
     orientation, and EXACT proper-self-intersection detection — the screen
@@ -322,7 +322,7 @@ def ring_validity(df, id_col: str = "polygon_id", ring_col: str = "ring"):
     """
     from pyspark.sql import functions as F
 
-    ring = F.col(ring_col)
+    ring = F.col("ring")
     n = F.greatest(F.size(ring) - 1, F.lit(0))
     a = F.slice(ring, 1, n)
     b = F.slice(ring, 2, n)
@@ -332,7 +332,7 @@ def ring_validity(df, id_col: str = "polygon_id", ring_col: str = "ring"):
     signed2 = F.aggregate(terms, F.lit(0.0), lambda acc, t: acc + t)
     first, last = F.element_at(ring, 1), F.element_at(ring, -1)
     base = df.select(
-        F.col(id_col).alias("polygon_id"),
+        F.col("polygon_id"),
         F.size(ring).cast("long").alias("n_points"),
         (
             (F.size(ring) >= 2)

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 1_000_000_000  # nano-ranks
+DAMPING_PCT = 85  # PageRank damping d, in percent
+MAX_ROUNDS = 40  # cap on Borůvka merge, pointer-jumping and bow-tie BFS rounds
 
 
 def _nodes(e: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
@@ -49,8 +51,6 @@ def _propagate_int(
     e: DataFrame,
     teleport: DataFrame,
     n_iter: int,
-    damping_pct: int,
-    checkpoint_every: int,
     rank_col: str,
 ) -> DataFrame:
     """The integer PageRank recurrence over edges `e` (src, dst) and the
@@ -64,16 +64,14 @@ def _propagate_int(
     flags, pinned with a lazy localCheckpoint: every round reuses that
     layout, and no CacheManager entry outlives the call. Each round is one
     hash join + one combinable sum + one left join back to the flags;
-    ranks are checkpointed every `checkpoint_every` rounds.
+    ranks are checkpointed every 3 rounds; d = DAMPING_PCT.
 
     Output: (node, <rank_col>:long).
     """
-    if not 0 < damping_pct < 100:
-        raise ValueError("damping_pct in (0, 100)")
     teleport = teleport.localCheckpoint(eager=False)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
     ed = e.join(deg, "src").repartition("src").localCheckpoint(eager=False)
-    base = (100 - damping_pct) * SCALE // 100
+    base = (100 - DAMPING_PCT) * SCALE // 100
     ranks = teleport.select(
         "node", (F.col("_s") * SCALE).cast("long").alias(rank_col)
     )
@@ -90,23 +88,16 @@ def _propagate_int(
                 "node",
                 (
                     F.col("_s") * F.lit(base)
-                    + F.expr(f"{damping_pct} * coalesce(_in, 0L) div 100")
+                    + F.expr(f"{DAMPING_PCT} * coalesce(_in, 0L) div 100")
                 ).cast("long").alias(rank_col),
             )
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
+        if (i + 1) % 3 == 0 and i + 1 < n_iter:
             ranks = ranks.localCheckpoint()
     return ranks
 
 
-def pagerank_int(
-    edges: DataFrame,
-    n_iter: int,
-    damping_pct: int = 85,
-    src: str = "src",
-    dst: str = "dst",
-    checkpoint_every: int = 3,
-) -> DataFrame:
+def pagerank_int(edges: DataFrame, n_iter: int) -> DataFrame:
     """Integer-scaled PageRank, `n_iter` synchronous iterations.
 
     rank⁰ = SCALE for every node (nodes = distinct src ∪ dst);
@@ -122,20 +113,16 @@ def pagerank_int(
 
     Output: (node, rank_e9:long).
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = edges.select(F.col("src"), F.col("dst"))
     teleport = _nodes(e).select("node", F.lit(1).alias("_s"))
-    return _propagate_int(
-        e, teleport, n_iter, damping_pct, checkpoint_every, "rank_e9"
-    )
+    return _propagate_int(e, teleport, n_iter, "rank_e9")
 
 
-def degree_stats(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def degree_stats(edges: DataFrame) -> DataFrame:
     """Per-node in/out degree and reciprocal-link count — the crawl-graph
     health profile. Three map-side-combinable aggregates + one semi-join
     (reciprocity = edge whose reverse exists), all on the node id."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
+    e = edges.select(F.col("src"), F.col("dst")).distinct()
     out_d = e.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("out_deg")
     )
@@ -165,12 +152,7 @@ def degree_stats(
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    a: str = "a",
-    b: str = "b",
-    max_iters: int = 40,
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iters: int = 40) -> DataFrame:
     """Connected components with POINTER DOUBLING: each round propagates
     the min label one hop AND then shortcuts rep → rep's rep, so a
     diameter-d component converges in O(log d) rounds instead of the O(d)
@@ -180,8 +162,8 @@ def connected_components(
     lineage; stops early when a round changes nothing.
     """
     e = (
-        edges.select(F.col(a).alias("x"), F.col(b).alias("y"))
-        .unionByName(edges.select(F.col(b).alias("x"), F.col(a).alias("y")))
+        edges.select(F.col("a").alias("x"), F.col("b").alias("y"))
+        .unionByName(edges.select(F.col("b").alias("x"), F.col("a").alias("y")))
         .distinct()
         # e is probed EVERY round — pin it so the upstream pipeline
         # (often a full scan + join chain) runs once, not once per round
@@ -225,7 +207,7 @@ def connected_components(
     return labels.select(F.col("x").alias("id"), "rep")
 
 
-def triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def triangles(edges: DataFrame) -> DataFrame:
     """Enumerate every triangle of the UNDIRECTED graph underlying
     (src, dst) — the primitive under clustering coefficients, community
     seeding, and link-spam detection (farms are triangle-dense).
@@ -247,7 +229,7 @@ def triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame
     node id — a pure function of the edge multiset (self-loops dropped,
     parallel/reverse duplicates collapse).
     """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).filter(
+    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v")).filter(
         F.col("u") != F.col("v")
     )
     und = e.select(
@@ -287,7 +269,7 @@ def triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame
     )
 
 
-def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """Per-node triangle count and local clustering coefficient over the
     undirected graph of (src, dst).
 
@@ -301,7 +283,7 @@ def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
 
     Output: (node, deg, n_tri, cc_e6), one row per node of the graph.
     """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).filter(
+    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v")).filter(
         F.col("u") != F.col("v")
     )
     und = e.select(
@@ -313,7 +295,7 @@ def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
-    tri = triangles(edges, src=src, dst=dst)
+    tri = triangles(edges)
     per_node = (
         tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
         .groupBy("node")
@@ -333,13 +315,7 @@ def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     )
 
 
-def hits_int(
-    edges: DataFrame,
-    n_iter: int,
-    src: str = "src",
-    dst: str = "dst",
-    checkpoint_every: int = 2,
-) -> DataFrame:
+def hits_int(edges: DataFrame, n_iter: int) -> DataFrame:
     """Integer-scaled HITS (Kleinberg hubs & authorities), `n_iter`
     synchronous rounds — the complement of PageRank for link analysis:
     hubs are pages that POINT AT good content (directories, link lists),
@@ -365,7 +341,7 @@ def hits_int(
 
     Output: (node, auth_e9, hub_e9) over nodes = distinct src ∪ dst.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = edges.select(F.col("src"), F.col("dst"))
     e = e.localCheckpoint(eager=False)
     nodes = _nodes(e).localCheckpoint(eager=False)
 
@@ -401,7 +377,7 @@ def hits_int(
             .withColumnRenamed("src", "node")
         )
         hub = norm(raw_h, "hub_e9")
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
+        if (i + 1) % 2 == 0 and i + 1 < n_iter:
             auth = auth.localCheckpoint()
             hub = hub.localCheckpoint()
     return nodes.join(auth, "node", "left").join(hub, "node", "left").select(
@@ -411,12 +387,7 @@ def hits_int(
     )
 
 
-def resource_allocation(
-    edges: DataFrame,
-    max_deg: int = 64,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def resource_allocation(edges: DataFrame, max_deg: int = 64) -> DataFrame:
     """Link prediction by common neighbors + the Resource-Allocation
     index (Zhou, Lü & Zhang 2009) over the UNDIRECTED simple graph under
     `edges`: for every non-adjacent pair (a, c) with at least one common
@@ -441,7 +412,7 @@ def resource_allocation(
     """
     und = (
         edges.select(
-            F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
+            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
@@ -478,13 +449,7 @@ def resource_allocation(
     )
 
 
-def kcore(
-    edges: DataFrame,
-    k: int,
-    src: str = "src",
-    dst: str = "dst",
-    max_iters: int = 60,
-) -> DataFrame:
+def kcore(edges: DataFrame, k: int) -> DataFrame:
     """k-core decomposition membership: iteratively peel every node whose
     degree in the REMAINING undirected simple graph is < k until a
     fixpoint — the surviving subgraph is the k-core (Seidman 1983), the
@@ -502,7 +467,7 @@ def kcore(
     edge payload is 16 bytes). localCheckpoint per round bounds lineage;
     the loop exits as soon as a round deletes nothing. Rounds are
     O(peel depth); real web graphs peel in a few dozen rounds, but a
-    path graph peels end-inward in O(n/2) — `max_iters` is the guard,
+    path graph peels end-inward in O(n/2) — a 60-round cap is the guard,
     and the fixpoint test (count unchanged) makes early exit exact.
 
     Output: (node, core_deg) for k-core members, core_deg = degree
@@ -510,7 +475,7 @@ def kcore(
     """
     und = (
         edges.select(
-            F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
+            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
@@ -519,7 +484,7 @@ def kcore(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint(eager=True)
     n_prev = sym.count()
-    for _ in range(max_iters):
+    for _ in range(60):
         deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select("a")
         nxt = (
@@ -540,12 +505,7 @@ def kcore(
     )
 
 
-def cocitation(
-    edges: DataFrame,
-    max_out_deg: int = 64,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def cocitation(edges: DataFrame, max_out_deg: int = 64) -> DataFrame:
     """Co-citation similarity (Small 1973): two pages are similar when
     the same sources link to both. For every pair (a, b) cited by ≥1
     common source, the common-citer count and the Jaccard of their
@@ -568,7 +528,7 @@ def cocitation(
     Output: (node_a, node_b, common, in_a, in_b, cocite_e6) with
     node_a < node_b.
     """
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).filter(
+    e = edges.select(F.col("src").alias("s"), F.col("dst").alias("d")).filter(
         F.col("s") != F.col("d")
     ).distinct()
     outdeg = e.groupBy("s").agg(F.count(F.lit(1)).alias("od"))
@@ -598,16 +558,7 @@ def cocitation(
     )
 
 
-def trustrank_int(
-    edges: DataFrame,
-    seeds: DataFrame,
-    n_iter: int,
-    damping_pct: int = 85,
-    src: str = "src",
-    dst: str = "dst",
-    seed_col: str = "node",
-    checkpoint_every: int = 3,
-) -> DataFrame:
+def trustrank_int(edges: DataFrame, seeds: DataFrame, n_iter: int) -> DataFrame:
     """Integer-scaled TrustRank (Gyöngyi, Garcia-Molina & Pedersen 2004):
     PageRank with the teleport mass restricted to a curated SEED set —
     trust flows out from known-good pages, so link-farm islands that
@@ -623,21 +574,12 @@ def trustrank_int(
 
     Output: (node, trust_e9:long) — 0 for pages unreachable from seeds.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    teleport = _seed_flags(_nodes(e), seeds.select(F.col(seed_col).alias("node")))
-    return _propagate_int(
-        e, teleport, n_iter, damping_pct, checkpoint_every, "trust_e9"
-    )
+    e = edges.select(F.col("src"), F.col("dst"))
+    teleport = _seed_flags(_nodes(e), seeds.select(F.col("node")))
+    return _propagate_int(e, teleport, n_iter, "trust_e9")
 
 
-def host_graph(
-    edges: DataFrame,
-    node_host: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    node_col: str = "node",
-    host_col: str = "host",
-) -> DataFrame:
+def host_graph(edges: DataFrame, node_host: DataFrame) -> DataFrame:
     """Host-graph coarsening: collapse the page-level link graph to the
     host level — every web-graph pipeline's first aggregation (host
     PageRank, spam neighborhoods, crawl politeness all run on it).
@@ -652,20 +594,20 @@ def host_graph(
 
     Output: (from_host, to_host, n_links, n_src_pages), from ≠ to.
     """
-    m = node_host.select(F.col(node_col).alias("_n"), F.col(host_col))
+    m = node_host.select(F.col("node").alias("_n"), F.col("host"))
     j = (
-        edges.select(src, dst)
-        .join(m.select(F.col("_n").alias(src),
-                       F.col(host_col).alias("from_host")), src)
-        .join(m.select(F.col("_n").alias(dst),
-                       F.col(host_col).alias("to_host")), dst)
+        edges.select("src", "dst")
+        .join(m.select(F.col("_n").alias("src"),
+                       F.col("host").alias("from_host")), "src")
+        .join(m.select(F.col("_n").alias("dst"),
+                       F.col("host").alias("to_host")), "dst")
         .filter(F.col("from_host") != F.col("to_host"))
     )
     links = j.groupBy("from_host", "to_host").agg(
         F.count(F.lit(1)).alias("n_links")
     )
     srcs = (
-        j.select("from_host", "to_host", F.col(src).alias("_s"))
+        j.select("from_host", "to_host", F.col("src").alias("_s"))
         .distinct()
         .groupBy("from_host", "to_host")
         .agg(F.count(F.lit(1)).alias("n_src_pages"))
@@ -673,12 +615,7 @@ def host_graph(
     return links.join(srcs, ["from_host", "to_host"])
 
 
-def label_propagation(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    rounds: int = 2,
-) -> DataFrame:
+def label_propagation(edges: DataFrame, rounds: int = 2) -> DataFrame:
     """Synchronous label-propagation communities (LPA) over the
     UNDIRECTED graph underlying (src, dst) — the cheap community pass a
     web corpus runs between connected components (too coarse: one giant
@@ -704,10 +641,10 @@ def label_propagation(
     Returns (id, label) after `rounds` rounds.
     """
     e = (
-        edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
+        edges.select(F.col("src").alias("x"), F.col("dst").alias("y"))
         .filter(F.col("x") != F.col("y"))
         .unionByName(
-            edges.select(F.col(dst).alias("x"), F.col(src).alias("y"))
+            edges.select(F.col("dst").alias("x"), F.col("src").alias("y"))
             .filter(F.col("x") != F.col("y"))
         )
         .distinct()
@@ -738,14 +675,7 @@ def label_propagation(
     return labels
 
 
-def modularity(
-    edges: DataFrame,
-    labels: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    id_col: str = "id",
-    label_col: str = "label",
-) -> DataFrame:
+def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """Newman modularity of a community labeling — the quality score
     that turns label_propagation from "some labels" into a measurable
     clustering (compare labelings, stop iterating when Q plateaus, flag
@@ -773,41 +703,41 @@ def modularity(
     Output: (label, n_nodes, m_in, d_tot, q_e9), one row per community.
     """
     e = (
-        edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
-        .filter(F.col(src) != F.col(dst))
+        edges.select(F.col("src").alias("x"), F.col("dst").alias("y"))
+        .filter(F.col("src") != F.col("dst"))
         .select(
             F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b")
         )
         .distinct()
         .localCheckpoint(eager=False)
     )
-    lab = labels.select(F.col(id_col).alias("_id"), F.col(label_col))
-    la = lab.select(F.col("_id").alias("a"), F.col(label_col).alias("_la"))
-    lb = lab.select(F.col("_id").alias("b"), F.col(label_col).alias("_lb"))
+    lab = labels.select(F.col("id").alias("_id"), F.col("label"))
+    la = lab.select(F.col("_id").alias("a"), F.col("label").alias("_la"))
+    lb = lab.select(F.col("_id").alias("b"), F.col("label").alias("_lb"))
     tagged = e.join(la, "a").join(lb, "b")
     m = tagged.count()
     if m == 0:
         raise ValueError("no labeled edges")
     m_in = (
         tagged.filter(F.col("_la") == F.col("_lb"))
-        .groupBy(F.col("_la").alias(label_col))
+        .groupBy(F.col("_la").alias("label"))
         .agg(F.count(F.lit(1)).alias("m_in"))
     )
     deg = (
-        tagged.select(F.col("a").alias("_id"), F.col("_la").alias(label_col))
+        tagged.select(F.col("a").alias("_id"), F.col("_la").alias("label"))
         .unionByName(
-            tagged.select(F.col("b").alias("_id"), F.col("_lb").alias(label_col))
+            tagged.select(F.col("b").alias("_id"), F.col("_lb").alias("label"))
         )
-        .groupBy("_id", label_col)
+        .groupBy("_id", "label")
         .agg(F.count(F.lit(1)).alias("_d"))
     )
-    per_label = deg.groupBy(label_col).agg(
+    per_label = deg.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_nodes"), F.sum("_d").alias("d_tot")
     )
     return (
-        per_label.join(m_in, label_col, "left")
+        per_label.join(m_in, "label", "left")
         .select(
-            label_col,
+            "label",
             "n_nodes",
             F.coalesce("m_in", F.lit(0)).cast("long").alias("m_in"),
             "d_tot",
@@ -821,11 +751,7 @@ def modularity(
     )
 
 
-def assortativity(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def assortativity(edges: DataFrame) -> DataFrame:
     """Degree assortativity of the undirected simple graph — the one-row
     mixing statistic behind "do popular pages link to popular pages"
     (assortative, r > 0: social/citation shape) vs "hubs link to leaves"
@@ -856,8 +782,8 @@ def assortativity(
     precision.
     """
     e = (
-        edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
-        .filter(F.col(src) != F.col(dst))
+        edges.select(F.col("src").alias("x"), F.col("dst").alias("y"))
+        .filter(F.col("src") != F.col("dst"))
         .select(
             F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b")
         )
@@ -899,13 +825,7 @@ def assortativity(
     )
 
 
-def bfs_hops(
-    edges: DataFrame,
-    seeds: DataFrame,
-    max_hops: int,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int) -> DataFrame:
     """Multi-source BFS: minimum hop distance from ANY seed node to every
     node reachable within `max_hops` — the crawl-frontier / seed-distance
     primitive (how far is each page from the trusted seed set; which
@@ -937,7 +857,7 @@ def bfs_hops(
     ).distinct().localCheckpoint(eager=True)
     frontier = visited.select("node")
     e = edges.select(
-        F.col(src).cast("long").alias("_s"), F.col(dst).cast("long").alias("_d")
+        F.col("src").cast("long").alias("_s"), F.col("dst").cast("long").alias("_d")
     )
     for r in range(1, max_hops + 1):
         nxt = (
@@ -959,10 +879,6 @@ def personalized_pagerank_int(
     edges: DataFrame,
     seeds: DataFrame,
     n_iter: int,
-    damping_pct: int = 85,
-    src: str = "src",
-    dst: str = "dst",
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Integer-scaled PERSONALIZED PageRank: the teleport mass returns to
     the seed set instead of spreading uniformly — the topic-/trust-
@@ -985,22 +901,14 @@ def personalized_pagerank_int(
 
     Output: (node, rank_e9:long).
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = edges.select(F.col("src"), F.col("dst"))
     teleport = _seed_flags(
         _nodes(e), seeds.select(F.col("node").cast("long").alias("node"))
     )
-    return _propagate_int(
-        e, teleport, n_iter, damping_pct, checkpoint_every, "rank_e9"
-    )
+    return _propagate_int(e, teleport, n_iter, "rank_e9")
 
 
-def ktruss(
-    edges: DataFrame,
-    k: int,
-    src: str = "src",
-    dst: str = "dst",
-    max_iters: int = 30,
-) -> DataFrame:
+def ktruss(edges: DataFrame, k: int) -> DataFrame:
     """k-truss decomposition membership: iteratively delete every edge
     whose triangle SUPPORT (number of triangles containing it) in the
     remaining simple undirected graph is < k-2, until a fixpoint — the
@@ -1023,14 +931,14 @@ def ktruss(
     groupBy, and the filter is an inner join back on the edge key.
     localCheckpoint per round; exits when a round deletes nothing.
     Round count is bounded by the peel depth (small for web graphs);
-    `max_iters` guards the adversarial case.
+    a 30-round cap guards the adversarial case.
 
     Output: (a, b, support) for surviving edges, a < b, support >= k-2
     counted within the k-truss subgraph.
     """
     e = (
         edges.select(
-            F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
+            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
@@ -1038,7 +946,7 @@ def ktruss(
     )
     n_prev = e.count()
     out = None
-    for _ in range(max_iters):
+    for _ in range(30):
         e1 = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
         e2 = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
         e3 = e.select(F.col("a").alias("x"), F.col("b").alias("z"))
@@ -1076,13 +984,7 @@ def ktruss(
     return out.select("a", "b", "support")
 
 
-def boruvka_mst(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
-    max_rounds: int = 40,
-) -> DataFrame:
+def boruvka_mst(edges: DataFrame) -> DataFrame:
     """Minimum spanning forest via distributed Borůvka — the O(log n)-
     round MST algorithm that parallelizes (Kruskal's union-find is
     inherently sequential): every round, EVERY component picks its
@@ -1113,9 +1015,9 @@ def boruvka_mst(
     """
     e = (
         edges.select(
-            F.least(src, dst).alias("a"),
-            F.greatest(src, dst).alias("b"),
-            F.col(weight).cast("long").alias("w"),
+            F.least("src", "dst").alias("a"),
+            F.greatest("src", "dst").alias("b"),
+            F.col("w").cast("long").alias("w"),
         )
         .filter(F.col("a") != F.col("b"))
         .groupBy("a", "b")
@@ -1128,7 +1030,7 @@ def boruvka_mst(
         .localCheckpoint(eager=True)
     )
     mst = None
-    for _ in range(max_rounds):
+    for _ in range(MAX_ROUNDS):
         ca = comp.select(F.col("node").alias("a"), F.col("comp").alias("_ca"))
         cb = comp.select(F.col("node").alias("b"), F.col("comp").alias("_cb"))
         live = (
@@ -1178,7 +1080,7 @@ def boruvka_mst(
             .localCheckpoint(eager=True)
         )
         # pointer jumping to roots
-        for _ in range(max_rounds):
+        for _ in range(MAX_ROUNDS):
             g = par.select(F.col("c").alias("_pc"), F.col("p").alias("_pp"))
             nxt = (
                 par.join(g, par["p"] == g["_pc"], "left")
@@ -1208,9 +1110,6 @@ def hyperanf(
     edges: DataFrame,
     rounds: int = 3,
     p: int = 4,
-    src: str = "src",
-    dst: str = "dst",
-    seed: int = 0,
     sample_mod: int = 1,
 ) -> DataFrame:
     """HyperANF (Boldi–Vigna 2011): the neighborhood function N(u, r) —
@@ -1238,10 +1137,10 @@ def hyperanf(
     """
     from pbf2json_spark.sketch import hll_build, hll_estimate
 
-    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+    e = edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d"))
     nodes = _nodes(e, "_s", "_d")
     cur = hll_build(
-        nodes.withColumn("_k", F.col("node")), "_k", ["node"], p=p, seed=seed
+        nodes.withColumn("_k", F.col("node")), "_k", ["node"], p=p
     ).localCheckpoint(eager=True)
 
     def snapshot(c: DataFrame, r: int) -> DataFrame:
@@ -1268,9 +1167,7 @@ def hyperanf(
     return out
 
 
-def dyad_census(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def dyad_census(edges: DataFrame) -> DataFrame:
     """Holland–Leinhardt dyad census of a directed graph: every node
     pair is Mutual (both directions), Asymmetric (one), or Null — the
     base rates behind reciprocity ("do pages link back?"), the first
@@ -1286,7 +1183,7 @@ def dyad_census(
     reciprocity_e6).
     """
     e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
@@ -1322,13 +1219,7 @@ def dyad_census(
     )
 
 
-def scan_clusters(
-    edges: DataFrame,
-    eps_e3: int = 600,
-    mu: int = 3,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def scan_clusters(edges: DataFrame, eps_e3: int = 600, mu: int = 3) -> DataFrame:
     """SCAN structural graph clustering (Xu et al. 2007): communities
     from STRUCTURAL similarity σ(u,v) = |N[u] ∩ N[v]| / √(|N[u]|·|N[v]|)
     over closed neighborhoods — unlike modularity methods it also
@@ -1356,7 +1247,7 @@ def scan_clusters(
     """
     e = (
         edges.select(
-            F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
+            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
@@ -1449,12 +1340,7 @@ def scan_clusters(
     return out
 
 
-def bowtie(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 40,
-) -> DataFrame:
+def bowtie(edges: DataFrame) -> DataFrame:
     """Broder bow-tie decomposition of a directed graph (the classic
     "Graph structure in the Web"): a strongly-connected CORE, the IN
     set that reaches it, the OUT set it reaches, and the weakly-
@@ -1476,7 +1362,7 @@ def bowtie(
 
     Output: (node, role ∈ {core, in, out, tendril, disconnected}).
     """
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).filter(
+    e = edges.select(F.col("src").alias("s"), F.col("dst").alias("d")).filter(
         F.col("s") != F.col("d")
     ).distinct().localCheckpoint(eager=True)
     deg = (
@@ -1502,7 +1388,7 @@ def bowtie(
             .localCheckpoint(eager=True)
         )
         frontier = visited
-        for _ in range(max_rounds):
+        for _ in range(MAX_ROUNDS):
             nxt = (
                 adj.join(frontier.withColumnRenamed("n", "frm"), "frm")
                 .select(F.col("to").alias("n"))
@@ -1617,9 +1503,7 @@ def triad_type_map() -> dict[int, str]:
     return out
 
 
-def triad_census(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def triad_census(edges: DataFrame) -> DataFrame:
     """Full 16-type directed triad census (Holland-Leinhardt MAN
     classification, igraph's exemplar conventions) — the structural
     signature of a directed web/social graph: hierarchy shows as 030T
@@ -1644,7 +1528,7 @@ def triad_census(
     triad type with its exact count (16 rows, zeros included).
     """
     spark = edges.sparkSession
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).filter(
+    e = edges.select(F.col("src").alias("s"), F.col("dst").alias("d")).filter(
         F.col("s") != F.col("d")
     ).distinct().localCheckpoint(eager=True)
     # dyad state per unordered pair: bit1 = min->max, bit2 = max->min
@@ -1757,14 +1641,7 @@ def triad_census(
     return out.select("triad", fix_expr.cast("long").alias("count"))
 
 
-def attribute_assortativity(
-    edges: DataFrame,
-    attrs: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    node_col: str = "node",
-    attr_col: str = "attr",
-) -> DataFrame:
+def attribute_assortativity(edges: DataFrame, attrs: DataFrame) -> DataFrame:
     """Newman's attribute (categorical) assortativity — homophily of a
     directed edge set over a node attribute (language links to itself?
     TLDs interlink?): r = (Σe_ii − Σa_i·b_i) / (1 − Σa_i·b_i) over the
@@ -1789,9 +1666,9 @@ def attribute_assortativity(
 
     Output: one row (n_edges, same_attr, r_num, r_den, r).
     """
-    a = attrs.select(F.col(node_col).alias("_n"), F.col(attr_col).alias("_at"))
+    a = attrs.select(F.col("node").alias("_n"), F.col("attr").alias("_at"))
     e2 = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+        edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
         .join(a.withColumnRenamed("_n", "s").withColumnRenamed("_at", "_as"), "s")
         .join(a.withColumnRenamed("_n", "d").withColumnRenamed("_at", "_ad"), "d")
     )

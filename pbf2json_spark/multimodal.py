@@ -44,11 +44,11 @@ MEDIA_SCHEMA = T.StructType(
 )
 
 
-def generate_media(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
+def generate_media(spark: SparkSession, n: int) -> DataFrame:
     """Deterministic media table: real PNGs (grayscale or RGB), real WAVs,
     and FAKE-container videos, all derived from the row id — distributed,
     reproducible on any partitioning."""
-    base = spark.range(n).withColumn("_seed", F.lit(seed))
+    base = spark.range(n).withColumn("_seed", F.lit(42))
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:

@@ -42,11 +42,12 @@ HOT_CENTERS = [
 LANGS = [("en", 55), ("fi", 15), ("sv", 10), ("de", 8), ("fr", 6), ("ja", 4), ("zz", 2)]
 
 GEO_RE = r"lat=(-?\d+\.\d{6}); lon=(-?\d+\.\d{6})"
+_U_MOD = 1_000_003  # modulus of the hash-derived uniforms
 
 
-def _u(h: Column, salt: int, mod: int = 1_000_003) -> Column:
+def _u(h: Column, salt: int) -> Column:
     """Deterministic uniform in [0,1) derived from a hash column."""
-    return (F.pmod(F.xxhash64(h, F.lit(salt)), F.lit(mod)) / F.lit(float(mod)))
+    return (F.pmod(F.xxhash64(h, F.lit(salt)), F.lit(_U_MOD)) / F.lit(float(_U_MOD)))
 
 
 # Integer weights summing to 100 turn each weighted pick into an index: a
@@ -171,9 +172,7 @@ _TAG_RE = r"<[^>]*>"
 _ENTITIES = [("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "'"), ("&amp;", "&")]
 
 
-def extract_text(
-    pages: DataFrame, html_col: str = "html", out_col: str = "text_extracted"
-) -> DataFrame:
+def extract_text(pages: DataFrame) -> DataFrame:
     """HTML → text extraction, pure JVM (stays in WholeStageCodegen).
 
     Closes the input_hint per-row invariant literally: "byte-identical
@@ -183,13 +182,13 @@ def extract_text(
     on any executor, any partitioning, any cluster size. Round-trips the
     generator: extract_text(generate_pages(...).html) == text, byte-equal
     (tests/test_webscale.py)."""
-    s = F.decode(F.col(html_col), "utf-8")
+    s = F.decode(F.col("html"), "utf-8")
     s = F.regexp_replace(s, _SCRIPT_RE, "")
     s = F.regexp_replace(s, _STYLE_RE, "")
     s = F.regexp_replace(s, _TAG_RE, "")
     for ent, ch in _ENTITIES:
         s = F.replace(s, F.lit(ent), F.lit(ch))
-    return pages.withColumn(out_col, s)
+    return pages.withColumn("text_extracted", s)
 
 
 # --- geocode -------------------------------------------------------------------
@@ -225,22 +224,13 @@ def _geocode_udf(text: pd.Series) -> pd.DataFrame:
     )
 
 
-def geocode_arrow(pages: DataFrame, text_col: str = "text") -> DataFrame:
+def geocode_arrow(pages: DataFrame) -> DataFrame:
     """Arrow-batched pandas-UDF geocode (input_hint-mandated variant)."""
-    g = _geocode_udf(F.col(text_col))
+    g = _geocode_udf(F.col("text"))
     return pages.withColumn("lat", g["lat"]).withColumn("lon", g["lon"])
 
 
-def toponym_resolve(
-    mentions: DataFrame,
-    gazetteer: DataFrame,
-    doc_col: str = "doc_id",
-    name_col: str = "name",
-    id_col: str = "place_id",
-    lat_col: str = "lat_e6",
-    lon_col: str = "lon_e6",
-    pop_col: str = "population",
-) -> DataFrame:
+def toponym_resolve(mentions: DataFrame, gazetteer: DataFrame) -> DataFrame:
     """Gazetteer toponym disambiguation — the second stage of geoparsing
     (after `geocode`'s literal lat/lon extraction): every (doc, place-name)
     mention is resolved to ONE gazetteer entry even when the name is
@@ -280,53 +270,53 @@ def toponym_resolve(
     Output: one row per distinct (doc, name): doc, name, place_id, lat_e6,
     lon_e6, method ('unique' | 'coherence' | 'prior').
     """
-    d, nm = F.col(doc_col), F.col(name_col)
+    d, nm = F.col("doc_id"), F.col("name")
 
     # name → candidate count (metadata-scale census on the dim itself)
-    ncand = gazetteer.groupBy(name_col).agg(F.count(F.lit(1)).alias("_ncand"))
-    gaz = gazetteer.join(F.broadcast(ncand), name_col)
+    ncand = gazetteer.groupBy("name").agg(F.count(F.lit(1)).alias("_ncand"))
+    gaz = gazetteer.join(F.broadcast(ncand), "name")
 
-    men = mentions.select(doc_col, name_col).distinct()
-    cand = men.join(F.broadcast(gaz), name_col)
+    men = mentions.select("doc_id", "name").distinct()
+    cand = men.join(F.broadcast(gaz), "name")
 
     # per-doc anchor: exact rational mean of unambiguous mention coords
     anchors = (
         cand.filter(F.col("_ncand") == 1)
-        .groupBy(doc_col)
+        .groupBy("doc_id")
         .agg(
-            F.sum(F.col(lat_col)).alias("_alat"),
-            F.sum(F.col(lon_col)).alias("_alon"),
+            F.sum(F.col("lat_e6")).alias("_alat"),
+            F.sum(F.col("lon_e6")).alias("_alon"),
             F.count(F.lit(1)).alias("_an"),
         )
     )
-    c = cand.join(anchors, doc_col, "left")
+    c = cand.join(anchors, "doc_id", "left")
 
     # |lat*n - sum| + |lon*n - sum|, scaled-by-n exact integer L1; docs
     # with no anchor rank all candidates at distance 0 (prior decides)
     dist = F.when(
         F.col("_an").isNotNull(),
-        F.abs(F.col(lat_col) * F.col("_an") - F.col("_alat"))
-        + F.abs(F.col(lon_col) * F.col("_an") - F.col("_alon")),
+        F.abs(F.col("lat_e6") * F.col("_an") - F.col("_alat"))
+        + F.abs(F.col("lon_e6") * F.col("_an") - F.col("_alon")),
     ).otherwise(F.lit(0)).cast("long")
 
     pick = F.struct(
         dist.alias("d"),
-        (-F.col(pop_col).cast("long")).alias("negpop"),
-        F.col(id_col).cast("long").alias("pid"),
-        F.col(lat_col).cast("long").alias("plat"),
-        F.col(lon_col).cast("long").alias("plon"),
+        (-F.col("population").cast("long")).alias("negpop"),
+        F.col("place_id").cast("long").alias("pid"),
+        F.col("lat_e6").cast("long").alias("plat"),
+        F.col("lon_e6").cast("long").alias("plon"),
         F.col("_ncand").alias("nc"),
         F.col("_an").alias("an"),
     )
     best = (
-        c.groupBy(doc_col, name_col)
+        c.groupBy("doc_id", "name")
         .agg(F.min(pick).alias("_b"))
         .select(
             d,
             nm,
-            F.col("_b.pid").alias(id_col),
-            F.col("_b.plat").alias(lat_col),
-            F.col("_b.plon").alias(lon_col),
+            F.col("_b.pid").alias("place_id"),
+            F.col("_b.plat").alias("lat_e6"),
+            F.col("_b.plon").alias("lon_e6"),
             F.when(F.col("_b.nc") == 1, F.lit("unique"))
             .when(F.col("_b.an").isNotNull(), F.lit("coherence"))
             .otherwise(F.lit("prior"))

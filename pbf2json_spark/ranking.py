@@ -45,15 +45,7 @@ def top_k_per_group(
     )
 
 
-def rank_biased_overlap(
-    a: DataFrame,
-    b: DataFrame,
-    depth: int = 20,
-    p_e3: int = 900,
-    key_col: str = "qid",
-    item_col: str = "item",
-    rank_col: str = "rank",
-) -> DataFrame:
+def rank_biased_overlap(a: DataFrame, b: DataFrame, depth: int = 20) -> DataFrame:
     """Rank-biased overlap (Webber et al. 2010) between two rankings per
     key, truncated at ``depth``: RBO@d = (1−p)·Σ_{k=1..d} p^{k−1}·|A_k ∩
     B_k|/k — the top-weighted "did the ranking change" metric (two crawl
@@ -71,10 +63,10 @@ def rank_biased_overlap(
     Output: (key, n_depths, overlap_sum, rbo) — overlap_sum = Σ|A_k∩B_k|
     (the integer certificate), rbo the fixed-tree double in [0, 1].
     """
-    pa = a.select(F.col(key_col).alias("k"), F.col(item_col).alias("it"),
-                  F.col(rank_col).cast("long").alias("ra"))
-    pb = b.select(F.col(key_col).alias("k"), F.col(item_col).alias("it"),
-                  F.col(rank_col).cast("long").alias("rb"))
+    pa = a.select(F.col("qid").alias("k"), F.col("item").alias("it"),
+                  F.col("rank").cast("long").alias("ra"))
+    pb = b.select(F.col("qid").alias("k"), F.col("item").alias("it"),
+                  F.col("rank").cast("long").alias("rb"))
     m = pa.join(pb, ["k", "it"]).filter(
         (F.col("ra") <= depth) & (F.col("rb") <= depth)
     )
@@ -89,7 +81,7 @@ def rank_biased_overlap(
     # order — a float SUM over depth rows would accumulate in partition
     # order and break bit-exactness; the explicit fixed-order expression
     # is engine-identical (the est_raw discipline)
-    pf = p_e3 / 1000.0
+    pf = 0.9
     # weights quantized to integer PICOUNITS: rbo_e12 = Σ w_d · ov_d is a
     # pure BIGINT (a 20-term float chain differed across engines in the
     # last ulp — measured; integer weights remove the question entirely,
@@ -114,7 +106,7 @@ def rank_biased_overlap(
         rbo_expr = term if rbo_expr is None else rbo_expr + term
     per_key = per_key.withColumn("_rbo", rbo_expr.cast("long"))
     out = keys.join(per_key, "k", "left").select(
-        F.col(key_col) if key_col == "k" else F.col("k").alias(key_col),
+        F.col("k").alias("qid"),
         F.coalesce("n_depths", F.lit(0)).cast("long").alias("n_depths"),
         F.coalesce("overlap_sum", F.lit(0)).cast("long").alias("overlap_sum"),
         F.coalesce("_rbo", F.lit(0).cast("long")).alias("rbo_e12"),

@@ -42,16 +42,7 @@ def _grid_v(lat: Column, res: int) -> Column:
     return (lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(1 << res))
 
 
-def rasterize_boxes(
-    df: DataFrame,
-    res: int,
-    weight_col: str = "weight",
-    lat_min: str = "lat_min",
-    lon_min: str = "lon_min",
-    lat_max: str = "lat_max",
-    lon_max: str = "lon_max",
-    per_box: bool = False,
-) -> DataFrame:
+def rasterize_boxes(df: DataFrame, res: int, per_box: bool = False) -> DataFrame:
     """Burn weighted boxes onto the res-grid with partial-area credit.
 
     Per overlapped tile: cover_e12 = weight · ⌊ox·1e6⌋ · ⌊oy·1e6⌋ where
@@ -63,8 +54,8 @@ def rasterize_boxes(
     (the join-back form for zonal statistics).
     """
     n = 1 << res
-    u0, u1 = _grid_u(F.col(lon_min), res), _grid_u(F.col(lon_max), res)
-    v0, v1 = _grid_v(F.col(lat_min), res), _grid_v(F.col(lat_max), res)
+    u0, u1 = _grid_u(F.col("lon_min"), res), _grid_u(F.col("lon_max"), res)
+    v0, v1 = _grid_v(F.col("lat_min"), res), _grid_v(F.col("lat_max"), res)
     # clamp to the world grid, then enumerate the integer tile range
     u0c = F.greatest(F.lit(0.0), F.least(F.lit(float(n)), u0))
     u1c = F.greatest(F.lit(0.0), F.least(F.lit(float(n)), u1))
@@ -92,7 +83,7 @@ def rasterize_boxes(
         - F.greatest(F.col("_v0"), F.col("_y").cast("double")),
     )
     cover = (
-        F.col(weight_col).cast("long")
+        F.col("weight").cast("long")
         * F.floor(ox * E6).cast("long")
         * F.floor(oy * E6).cast("long")
     )
@@ -109,15 +100,7 @@ def rasterize_boxes(
     )
 
 
-def rasterize_boxes_sql(
-    source_sql: str,
-    res: int,
-    weight_col: str = "weight",
-    lat_min: str = "lat_min",
-    lon_min: str = "lon_min",
-    lat_max: str = "lat_max",
-    lon_max: str = "lon_max",
-) -> str:
+def rasterize_boxes_sql(source_sql: str, res: int) -> str:
     """DuckDB mirror of rasterize_boxes (aggregated form): same clamp /
     floor / overlap expression tree, same e6 quantization, same cell-id
     bit layout — per-tile sums are bit-exact."""
@@ -132,14 +115,14 @@ def rasterize_boxes_sql(
     # The Spark side computes the whole tree in DOUBLE; e-notation pins
     # the oracle to the identical IEEE-754 expression tree.
     nf = f"{float(n)!r}e0"
-    u0 = f"greatest(0.0e0, least({nf}, ({lon_min} + 180.0e0) / 360.0e0 * {nf}))"
-    u1 = f"greatest(0.0e0, least({nf}, ({lon_max} + 180.0e0) / 360.0e0 * {nf}))"
-    v0 = f"greatest(0.0e0, least({nf}, ({lat_min} + 90.0e0) / 180.0e0 * {nf}))"
-    v1 = f"greatest(0.0e0, least({nf}, ({lat_max} + 90.0e0) / 180.0e0 * {nf}))"
+    u0 = f"greatest(0.0e0, least({nf}, (lon_min + 180.0e0) / 360.0e0 * {nf}))"
+    u1 = f"greatest(0.0e0, least({nf}, (lon_max + 180.0e0) / 360.0e0 * {nf}))"
+    v0 = f"greatest(0.0e0, least({nf}, (lat_min + 90.0e0) / 180.0e0 * {nf}))"
+    v1 = f"greatest(0.0e0, least({nf}, (lat_max + 90.0e0) / 180.0e0 * {nf}))"
     return f"""
 WITH src AS ({source_sql}),
 b AS (
-  SELECT CAST({weight_col} AS BIGINT) AS w,
+  SELECT CAST(weight AS BIGINT) AS w,
          {u0} AS u0, {u1} AS u1, {v0} AS v0, {v1} AS v1,
          CAST(least(CAST({n - 1} AS DOUBLE), floor({u0})) AS BIGINT) AS x0,
          CAST(least(CAST({n - 1} AS DOUBLE), floor({u1})) AS BIGINT) AS x1,
@@ -177,14 +160,7 @@ def _sql_spread(v: str) -> str:
     return e
 
 
-def line_cells(
-    df: DataFrame,
-    res: int,
-    lat0_col: str = "lat0",
-    lon0_col: str = "lon0",
-    lat1_col: str = "lat1",
-    lon1_col: str = "lon1",
-) -> DataFrame:
+def line_cells(df: DataFrame, res: int) -> DataFrame:
     """Cells crossed by the segment between two points' cell CENTERS — the
     column-walk supercover: for every x column the segment enters, the
     contiguous row span the segment covers there. The coverage primitive
@@ -208,8 +184,8 @@ def line_cells(
     cells within one segment distinct by construction (column walk emits
     each (column, row) once).
     """
-    x0, y0 = cells.xy_cols(F.col(lat0_col), F.col(lon0_col), res)
-    x1, y1 = cells.xy_cols(F.col(lat1_col), F.col(lon1_col), res)
+    x0, y0 = cells.xy_cols(F.col("lat0"), F.col("lon0"), res)
+    x1, y1 = cells.xy_cols(F.col("lat1"), F.col("lon1"), res)
     d = (
         df.withColumn("_gx0", x0).withColumn("_gy0", y0)
         .withColumn("_gx1", x1).withColumn("_gy1", y1)
@@ -272,7 +248,6 @@ def distance_transform(
     queries: DataFrame,
     max_d: int,
     res: int,
-    cell_col: str = "cell",
 ) -> DataFrame:
     """Capped Chebyshev distance transform on the cell grid: for every
     query cell, the grid distance to the nearest seed cell (roads, POIs,
@@ -296,7 +271,7 @@ def distance_transform(
     """
     if max_d < 0:
         raise ValueError("max_d must be >= 0")
-    s = seeds.select(F.col(cell_col).alias("cell")).distinct()
+    s = seeds.select(F.col("cell")).distinct()
     return _distance_transform_impl(s, queries, max_d, res)
 
 
@@ -363,8 +338,6 @@ def cost_distance(
     seeds: DataFrame,
     res: int,
     max_cost: int,
-    cell_col: str = "cell",
-    cost_col: str = "cost",
 ) -> DataFrame:
     """Weighted cost-distance raster (travel-time / isochrone layer):
     the accumulated least cost to reach each grid cell from the nearest
@@ -400,17 +373,17 @@ def cost_distance(
     if max_cost < 0:
         raise ValueError("max_cost must be >= 0")
     n = 1 << res
-    cx, cy = _dt_xy(F.col(cell_col))
+    cx, cy = _dt_xy(F.col("cell"))
     grid = (
         cost_cells.select(
-            cx.alias("x"), cy.alias("y"), F.col(cost_col).cast("long").alias("c"),
-            F.col(cell_col).alias("cell"),
+            cx.alias("x"), cy.alias("y"), F.col("cost").cast("long").alias("c"),
+            F.col("cell"),
         )
         .groupBy("x", "y", "cell")
         .agg(F.min("c").alias("c"))
         .localCheckpoint(eager=True)
     )
-    sx, sy = _dt_xy(F.col(cell_col))
+    sx, sy = _dt_xy(F.col("cell"))
     labels = (
         seeds.select(sx.alias("x"), sy.alias("y"))
         .distinct()
@@ -459,7 +432,7 @@ def cost_distance(
     # their cell id from (x, y) via the grid table where present, else
     # from the seed frame itself
     seed_cells = seeds.select(
-        sx.alias("x"), sy.alias("y"), F.col(cell_col).alias("cell")
+        sx.alias("x"), sy.alias("y"), F.col("cell")
     ).distinct()
     withcell = (
         labels.join(grid.select("x", "y", "cell"), ["x", "y"], "left")

@@ -130,7 +130,6 @@ def resolve_relations(
     relations: DataFrame,
     fmt_ways: DataFrame,
     nodes: DataFrame,
-    max_levels: int = 64,
 ) -> DataFrame:
     """Resolve ALL relations. Inputs: prepared (trimmed) relations, the
     output of denorm.format_ways, prepared nodes. Output rows mirror
@@ -160,8 +159,8 @@ def resolve_relations(
     rel_ids = {a for a, _ in edges} | {r["sub"] for r in rows if r["sub_is_rel"]}
     levels = _strata(rel_ids, edges)
     n_levels = (max(levels.values()) + 1) if levels else 1
-    if n_levels > max_levels:
-        raise ValueError(f"relation nesting depth {n_levels} exceeds {max_levels}")
+    if n_levels > 64:
+        raise ValueError(f"relation nesting depth {n_levels} exceeds 64")
 
     if levels:
         levels_df = F.broadcast(

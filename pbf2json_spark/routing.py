@@ -30,10 +30,6 @@ def shortest_paths(
     edges: DataFrame,
     sources: DataFrame,
     n_rounds: int,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
-    node: str = "node",
     checkpoint_every: int = 3,
     early_stop: bool = True,
 ) -> DataFrame:
@@ -50,12 +46,12 @@ def shortest_paths(
     negative-cycle check).
     """
     e = edges.select(
-        F.col(src).alias("src"),
-        F.col(dst).alias("dst"),
-        F.col(weight).cast("long").alias("w"),
+        F.col("src"),
+        F.col("dst"),
+        F.col("w").cast("long").alias("w"),
     ).repartition("src").persist()
     dist = sources.select(
-        F.col(node).alias("node"), F.lit(0).cast("long").alias("dist")
+        F.col("node"), F.lit(0).cast("long").alias("dist")
     ).distinct()
     for i in range(n_rounds):
         relaxed = (

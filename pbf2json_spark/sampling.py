@@ -61,9 +61,6 @@ def stratified_sample(
 def resample_mixture(
     df: DataFrame,
     weights: dict[str, float],
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-    seed: int = 0,
     default_weight: float = 1.0,
 ) -> DataFrame:
     """Deterministic mixture resampling — the "mix webtext 60%, wiki x2,
@@ -94,7 +91,7 @@ def resample_mixture(
     base_e, thr_e = None, None
     for value, w in weights.items():
         b, t = _parts(w)
-        cond = F.col(stratum_col) == value
+        cond = F.col("lang") == value
         base_e = (
             F.when(cond, b) if base_e is None else base_e.when(cond, b)
         )
@@ -103,7 +100,7 @@ def resample_mixture(
     thr_c = thr_e.otherwise(dt) if thr_e is not None else F.lit(dt)
     copies = (
         base_c.cast("int")
-        + (_u32(F.col(id_col), seed) < thr_c).cast("int")
+        + (_u32(F.col("doc_id"), 0) < thr_c).cast("int")
     )
     return (
         df.withColumn("_copies", copies)
@@ -120,8 +117,6 @@ def weighted_sample(
     k: int,
     weight_col: str,
     stratum_col: str = "lang",
-    id_col: str = "doc_id",
-    seed: int = 0,
 ) -> DataFrame:
     """Weighted Bernoulli sampling with expected size k per stratum —
     "pick ~k docs per language, longer docs proportionally more likely",
@@ -157,28 +152,20 @@ def weighted_sample(
     )
     return (
         df.join(F.broadcast(totals), stratum_col)
-        .filter(_u32(F.col(id_col), seed) < thr)
+        .filter(_u32(F.col("doc_id"), 0) < thr)
         .withColumn("w_used", w)
         .drop("_sum_w")
     )
 
 
-def spatial_thin(
-    df: DataFrame,
-    res: int,
-    k: int,
-    id_col: str = "doc_id",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    seed: int = 0,
-) -> DataFrame:
+def spatial_thin(df: DataFrame, res: int, k: int) -> DataFrame:
     """Spatial thinning: keep at most `k` rows per grid cell, chosen by
     the deterministic md5-u32 rank (ties broken by id) — the density
     equalizer for map rendering and geo-balanced training sets: a city
     with 10^6 POIs and a desert with 3 both contribute ≤ k, and the
     survivors are a uniform random-looking but reproducible subsample.
 
-    Mechanism: rank rows within each cell by (u32(id:seed), id) and keep
+    Mechanism: rank rows within each cell by (u32(id:0), id) and keep
     rank ≤ k. Unlike the threshold samplers above this IS a per-cell
     window — an exact quota cannot be a pure filter — but the window
     partitions on the cell key: ONE shuffle of (id, cell, u32) slim
@@ -191,12 +178,12 @@ def spatial_thin(
     """
     from . import cells as _cells
 
-    x, y = _cells.xy_cols(F.col(lat_col), F.col(lon_col), res)
+    x, y = _cells.xy_cols(F.col("lat"), F.col("lon"), res)
     cell = (x * (1 << res) + y).cast("long")
     withc = df.withColumn("cell", cell).withColumn(
-        "_u", _u32(F.col(id_col), seed)
+        "_u", _u32(F.col("doc_id"), 0)
     )
-    w = Window.partitionBy("cell").orderBy(F.col("_u"), F.col(id_col))
+    w = Window.partitionBy("cell").orderBy(F.col("_u"), F.col("doc_id"))
     return (
         withc.withColumn("thin_rank", F.row_number().over(w))
         .filter(F.col("thin_rank") <= k)
@@ -208,13 +195,11 @@ def train_val_test_split(
     df: DataFrame,
     id_col: str = "doc_id",
     weights: tuple[float, float, float] = (0.8, 0.1, 0.1),
-    seed: int = 0,
-    out: str = "split",
 ) -> DataFrame:
     """Deterministic three-way corpus split — the train/val/test
     assignment every pretraining pipeline needs, as a pure row-local
     scan filter (zero shuffle, partition-independent, reproducible across
-    reruns AND engines): u32 = md5(id ':' seed); split by two integer
+    reruns AND engines): u32 = md5(id ':' 0); split by two integer
     thresholds t1 = floor(w_train·2^32), t2 = t1 + floor(w_val·2^32).
 
     Keying on the document ID (not position) means re-shards, re-sorts,
@@ -223,31 +208,23 @@ def train_val_test_split(
     Exactly one label per row (total CASE); expected proportions follow
     the weights, exact proportions are binomial around them.
 
-    Output: input + `out` ∈ {'train','val','test'}.
+    Output: input + `split` ∈ {'train','val','test'}.
     """
     w1, w2, w3 = weights
     if min(w1, w2, w3) < 0 or abs(w1 + w2 + w3 - 1.0) > 1e-9:
         raise ValueError("weights must be non-negative and sum to 1")
     t1 = int(w1 * _U32_SPAN)
     t2 = t1 + int(w2 * _U32_SPAN)
-    h = _u32(F.col(id_col), seed)
+    h = _u32(F.col(id_col), 0)
     return df.withColumn(
-        out,
+        "split",
         F.when(h < t1, F.lit("train"))
         .when(h < t2, F.lit("val"))
         .otherwise(F.lit("test")),
     )
 
 
-def negative_pairs(
-    df: DataFrame,
-    k: int,
-    id_col: str = "doc_id",
-    group_col: str | None = None,
-    seed: int = 0,
-    margin: int = 4,
-    n_buckets: int = 64,
-) -> DataFrame:
+def negative_pairs(df: DataFrame, k: int, group_col: str | None = None) -> DataFrame:
     """Deterministic contrastive negative sampling: for every anchor row,
     up to `k` pseudo-random OTHER rows (optionally required to come from
     a different `group_col` — the anchor's dedup cluster / positive set).
@@ -258,13 +235,13 @@ def negative_pairs(
 
     Shape at 10^12 rows: sampling by index needs a bijection id → [0, N).
     A single global row_number is a one-partition sort — instead the
-    index is the two-phase BUCKET-OFFSET form: bucket = id mod B, rank
+    index is the two-phase BUCKET-OFFSET form: bucket = id mod B (B = 64), rank
     within bucket (ordered by id, a B-way parallel window), plus the
     bucket's cumulative offset from a B-row driver-side census (bounded
     metadata collect). Any bijection serves sampling; this one is
     engine-reproducible. Candidates = hash(anchor, slot) mod N → index
     equi-join; self/same-group candidates are filtered and the first k
-    surviving slots kept (margin extra slots absorb the filtered ones —
+    surviving slots kept (4 extra slots absorb the filtered ones —
     an anchor can emit < k pairs when unlucky; deterministic either way).
 
     Output: (anchor id, neg id, slot long — 1-based surviving order).
@@ -274,9 +251,10 @@ def negative_pairs(
     if k < 1:
         raise ValueError("k must be >= 1")
     gs = [group_col] if group_col else []
-    base = df.select(F.col(id_col), *[F.col(c) for c in gs])
+    base = df.select(F.col("doc_id"), *[F.col(c) for c in gs])
+    bucket = F.col("doc_id") % 64
     buckets = (
-        base.groupBy((F.col(id_col) % n_buckets).alias("_b"))
+        base.groupBy(bucket.alias("_b"))
         .agg(F.count(F.lit(1)).alias("_c"))
         .orderBy("_b")
         .collect()
@@ -290,28 +268,27 @@ def negative_pairs(
     off_map = F.create_map(
         *[F.lit(x) for b, o in sorted(offsets.items()) for x in (b, o)]
     )
-    w = Window.partitionBy(F.col(id_col) % n_buckets).orderBy(id_col)
+    w = Window.partitionBy(bucket).orderBy("doc_id")
     indexed = base.withColumn(
         "_idx",
-        off_map[F.col(id_col) % n_buckets] + F.row_number().over(w) - 1,
+        off_map[bucket] + F.row_number().over(w) - 1,
     )
-    m = k + margin
+    m = k + 4
     cand = indexed.select(
-        F.col(id_col).alias("_a"),
+        F.col("doc_id").alias("_a"),
         *[F.col(c).alias(f"_ag_{c}") for c in gs],
         F.explode(F.array(*[F.lit(j) for j in range(m)])).alias("_j"),
     ).withColumn(
         "_cidx",
         kmv_hash(
-            F.concat(F.col("_a").cast("string"), F.lit(":"), F.col("_j").cast("string")),
-            seed,
+            F.concat(F.col("_a").cast("string"), F.lit(":"), F.col("_j").cast("string"))
         )
         % n_total,
     )
     joined = cand.join(
         indexed.select(
             F.col("_idx").alias("_cidx"),
-            F.col(id_col).alias("_neg"),
+            F.col("doc_id").alias("_neg"),
             *[F.col(c).alias(f"_ng_{c}") for c in gs],
         ),
         "_cidx",
@@ -326,7 +303,7 @@ def negative_pairs(
         valid.withColumn("slot", F.row_number().over(ws))
         .filter(F.col("slot") <= k)
         .select(
-            F.col("_a").alias(id_col),
+            F.col("_a").alias("doc_id"),
             F.col("_neg").alias("neg_id"),
             F.col("slot").cast("long").alias("slot"),
         )
@@ -338,7 +315,6 @@ def ipf_weights(
     row_col: str,
     col_col: str,
     rounds: int = 3,
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """Iterative proportional fitting (raking) to UNIFORM margins: the
     dataset-mixture balancing step of a corpus release — reweight the
@@ -348,12 +324,12 @@ def ipf_weights(
     survey-statistics rake, Deming & Stephan 1940).
 
     ALL-INTEGER discipline: weights live as scaled integers (start at
-    ``scale``), each half-round rescales by the target/current margin
+    10⁶), each half-round rescales by the target/current margin
     ratio via exact floor-division (the double-mod floor idiom) —
     deterministic, order-free (margins are INTEGER sums), bit-exact in
     any engine, and convergent to the float fixpoint within ~1e-6
     relative (quantization only stops improving below the grain of
-    ``scale``, which is far past any practical raking tolerance).
+    10⁶, which is far past any practical raking tolerance).
     Fixed ``rounds`` (not a fixpoint test) keeps the unrolled oracle
     exact.
 
@@ -363,7 +339,7 @@ def ipf_weights(
     join ON THE CELL TABLE, never touching the base rows again; apply
     the final weights back with one broadcast join keyed (row, col).
 
-    Targets: uniform — target_row = total·scale div n_rows (etc.) in the
+    Targets: uniform — target_row = total·10⁶ div n_rows (etc.) in the
     same scaled units. (Arbitrary target vectors would be a dict
     argument compiled to a literal CASE; uniform is the common corpus-
     balancing case and keeps the gate surface closed-form.)
@@ -376,7 +352,7 @@ def ipf_weights(
     cells = (
         df.groupBy(row_col, col_col)
         .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn("w", F.lit(scale).cast("long"))
+        .withColumn("w", F.lit(1_000_000).cast("long"))
         .localCheckpoint(eager=True)
     )
 
@@ -411,9 +387,6 @@ def tempered_negatives(
     items: DataFrame,
     queries: DataFrame,
     k: int,
-    item_col: str = "item",
-    freq_col: str = "f",
-    query_col: str = "qid",
     seed: int = 0,
 ) -> DataFrame:
     """Popularity-tempered negative sampling — the word2vec unigram^0.75
@@ -439,10 +412,10 @@ def tempered_negatives(
     margin idiom).
     """
     w = F.floor(
-        F.sqrt(F.col(freq_col).cast("double")
-               * F.sqrt(F.col(freq_col).cast("double"))) * F.lit(64.0)
+        F.sqrt(F.col("f").cast("double")
+               * F.sqrt(F.col("f").cast("double"))) * F.lit(64.0)
     ).cast("long")
-    cat = items.select(F.col(item_col).alias("_it"), w.alias("_w")).filter(
+    cat = items.select(F.col("item").alias("_it"), w.alias("_w")).filter(
         F.col("_w") > 0
     )
     wnd = Window.partitionBy(F.lit(1)).orderBy("_it")
@@ -457,12 +430,12 @@ def tempered_negatives(
     total = cat.agg(F.sum("_w")).collect()[0][0] or 0
     if total == 0:
         return queries.select(
-            F.col(query_col).alias("query"),
+            F.col("qid").alias("query"),
             F.lit(0).cast("long").alias("slot"),
             F.lit(None).cast("string").alias("item"),
         ).limit(0)
     slots = queries.select(
-        F.col(query_col).alias("query"),
+        F.col("qid").alias("query"),
         F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("slot"),
     )
     u = F.conv(
@@ -490,9 +463,7 @@ def tempered_negatives(
 def temperature_downsample(
     df: DataFrame,
     group_col: str,
-    id_col: str = "doc_id",
     alpha_q: int = 2,
-    seed: int = 0,
 ) -> DataFrame:
     """Temperature-scaled source rebalancing (the multilingual-sampling /
     data-mixing classic: raw proportions overtrain the head source,
@@ -537,5 +508,5 @@ def temperature_downsample(
     )
     out = df.join(F.broadcast(thr), g == F.col("__tg"))
     return out.filter(
-        _u32(F.col(id_col), seed) < F.col("__thr")
+        _u32(F.col("doc_id"), 0) < F.col("__thr")
     ).drop("__tg", "__thr")

@@ -153,7 +153,6 @@ def kmv_build(
     key_col: str,
     group_cols: list[str] | None = None,
     k: int = 64,
-    seed: int = 0,
 ) -> DataFrame:
     """Build the per-group KMV sketch: the k smallest distinct key hashes.
 
@@ -165,7 +164,7 @@ def kmv_build(
 
     gs = list(group_cols or [])
     base = df.select(
-        *[F.col(c) for c in gs], kmv_hash(F.col(key_col), seed).alias("h")
+        *[F.col(c) for c in gs], kmv_hash(F.col(key_col)).alias("h")
     ).distinct()
     if gs:
         return top_k_per_group(base, gs, [F.col("h").asc()], k)
@@ -205,17 +204,17 @@ def kmv_estimate(
 # --- Bloom filter (portable, mergeable) ----------------------------------------
 
 
-def bloom_positions(key: Column, m_bits: int, k: int, seed: int = 0) -> Column:
+def bloom_positions(key: Column, m_bits: int, k: int) -> Column:
     """The k bit positions of `key` in an m_bits Bloom filter as an
     array<long> — double hashing (Kirsch–Mitzenmacher: pos_i = (h1 +
     i·h2) mod m), both hashes from the portable 60-bit md5 idiom
-    (kmv_hash seeds `seed` and `seed+1`), so any engine that can md5
+    (kmv_hash seeds 0 and 1), so any engine that can md5
     computes the identical positions."""
     if not 1 <= k <= 7:
         # h1 + (k-1)*h2 with 60-bit hashes: k <= 7 keeps the sum < 2^63
         # (no int64 overflow in EITHER engine); larger k wants re-seeding
         raise ValueError("k must be in [1, 7]")
-    h1, h2 = kmv_hash(key, seed), kmv_hash(key, seed + 1)
+    h1, h2 = kmv_hash(key, 0), kmv_hash(key, 1)
     return F.array(
         *[((h1 + F.lit(i) * h2) % m_bits).alias(f"p{i}") for i in range(k)]
     )
@@ -227,7 +226,6 @@ def bloom_build(
     group_cols: list[str] | None = None,
     m_bits: int = 1 << 16,
     k: int = 4,
-    seed: int = 0,
 ) -> DataFrame:
     """Per-group Bloom filter as (word_idx, word) rows: bit b lives in
     64-bit word b div 64 at bit b mod 64, OR-merged with one
@@ -248,7 +246,7 @@ def bloom_build(
     gs = list(group_cols or [])
     pos = df.select(
         *[F.col(c) for c in gs],
-        F.explode(bloom_positions(F.col(key_col), m_bits, k, seed)).alias("_b"),
+        F.explode(bloom_positions(F.col(key_col), m_bits, k)).alias("_b"),
     )
     words = pos.select(
         *gs,
@@ -265,7 +263,6 @@ def bloom_probe(
     group_cols: list[str] | None = None,
     m_bits: int = 1 << 16,
     k: int = 4,
-    seed: int = 0,
 ) -> DataFrame:
     """Probe keys against a bloom_build output: `maybe_present` is true
     iff ALL k bits are set. One explode + one equi-join on (group,
@@ -276,7 +273,7 @@ def bloom_probe(
     pos = df.select(
         *[F.col(c) for c in gs],
         F.col(key_col).alias("_key"),
-        F.posexplode(bloom_positions(F.col(key_col), m_bits, k, seed)).alias(
+        F.posexplode(bloom_positions(F.col(key_col), m_bits, k)).alias(
             "_j", "_b"
         ),
     ).select(
@@ -334,7 +331,6 @@ def hll_build(
     key_col: str,
     group_cols: list[str] | None = None,
     p: int = 8,
-    seed: int = 0,
 ) -> DataFrame:
     """Per-group HyperLogLog sketch as (reg_idx, r) rows — r = max rank
     seen in that register. The fixed-size distinct-count summary at
@@ -355,7 +351,7 @@ def hll_build(
     if not 4 <= p <= 16:
         raise ValueError("p must be in [4, 16]")
     gs = list(group_cols or [])
-    idx, rank = hll_rank_cols(F.col(key_col), p, seed)
+    idx, rank = hll_rank_cols(F.col(key_col), p, 0)
     return (
         df.select(*[F.col(c) for c in gs], idx, rank)
         .groupBy(*gs, "reg_idx")
@@ -410,7 +406,6 @@ def hll_rolling(
     bucket_col: str,
     window: int,
     p: int = 8,
-    seed: int = 0,
 ) -> DataFrame:
     """Trailing-window distinct estimate per time bucket — the DAU/WAU
     metric computed the way a 10^12-row corpus must: build ONE register
@@ -432,7 +427,7 @@ def hll_rolling(
     """
     if window < 1:
         raise ValueError("window must be >= 1")
-    daily = hll_build(df, key_col, [bucket_col], p=p, seed=seed)
+    daily = hll_build(df, key_col, [bucket_col], p=p)
     targets = daily.select(
         F.explode(
             F.sequence(F.col(bucket_col), F.col(bucket_col) + (window - 1))
@@ -453,7 +448,6 @@ def kmv_intersect(
     sketch_a: DataFrame,
     sketch_b: DataFrame,
     k: int,
-    group_cols: list[str] | None = None,
 ) -> DataFrame:
     """Set-operation estimates from two KMV sketches — the theta-sketch
     composition (Dasgupta et al.): thin the UNION of both hash sets back
@@ -473,36 +467,24 @@ def kmv_intersect(
     hashes the sketches saw EVERYTHING — counts are exact, θ plays no
     role (the kmv_estimate n<k branch).
 
-    Output: group_cols + (n_union, theta, n_common long,
-    est_union, est_intersect, jaccard_est double).
+    Output: (n_union, theta, n_common long, est_union, est_intersect,
+    jaccard_est double).
     """
-    gs = list(group_cols or [])
-    a = sketch_a.select(*gs, F.col("h").alias("_ha")).distinct()
-    b = sketch_b.select(*gs, F.col("h").alias("_hb")).distinct()
-    u = a.select(*gs, F.col("_ha").alias("h")).unionByName(
-        b.select(*gs, F.col("_hb").alias("h"))
+    a = sketch_a.select(F.col("h").alias("_ha")).distinct()
+    b = sketch_b.select(F.col("h").alias("_hb")).distinct()
+    u = a.select(F.col("_ha").alias("h")).unionByName(
+        b.select(F.col("_hb").alias("h"))
     ).distinct()
-    from .ranking import top_k_per_group
-    from pyspark.sql.window import Window as _W
-
-    if gs:
-        uk = top_k_per_group(u, gs, [F.col("h").asc()], k)
-    else:
-        uk = (
-            u.orderBy("h").limit(k)
-            .withColumn("rank_in_group", F.row_number().over(_W.orderBy("h")))
-        )
+    uk = u.orderBy("h").limit(k)
     both = (
-        uk.join(a.withColumnRenamed("_ha", "h"), [*gs, "h"], "left_semi")
-        .join(b.withColumnRenamed("_hb", "h"), [*gs, "h"], "left_semi")
+        uk.join(a.withColumnRenamed("_ha", "h"), ["h"], "left_semi")
+        .join(b.withColumnRenamed("_hb", "h"), ["h"], "left_semi")
     )
-    stats_u = uk.groupBy(*gs).agg(
-        F.count(F.lit(1)).alias("n_union"), F.max("h").alias("theta")
+    stats_u = uk.agg(F.count(F.lit(1)).alias("n_union"), F.max("h").alias("theta"))
+    stats_c = both.agg(F.count(F.lit(1)).alias("n_common"))
+    j = stats_u.crossJoin(stats_c).withColumn(
+        "n_common", F.coalesce(F.col("n_common"), F.lit(0))
     )
-    stats_c = both.groupBy(*gs).agg(F.count(F.lit(1)).alias("n_common"))
-    j = (
-        stats_u.join(stats_c, gs) if gs else stats_u.crossJoin(stats_c)
-    ).withColumn("n_common", F.coalesce(F.col("n_common"), F.lit(0)))
     est_union = F.when(
         F.col("n_union") < k, F.col("n_union").cast("double")
     ).otherwise(
@@ -514,7 +496,7 @@ def kmv_intersect(
         F.col("n_union").cast("double"), F.lit(float(k))
     )
     return j.select(
-        *gs, "n_union", "theta", "n_common", "est_union",
+        "n_union", "theta", "n_common", "est_union",
         (frac * F.col("est_union")).alias("est_intersect"),
         frac.alias("jaccard_est"),
     )

@@ -48,13 +48,7 @@ def _tokens(text_col: str) -> F.Column:
     return F.filter(F.split(norm, " "), lambda x: x != F.lit(""))
 
 
-def duplicated_span_dedup(
-    df: DataFrame,
-    k: int = 8,
-    min_count: int = 2,
-    id_col: str = "id",
-    text_col: str = "text",
-) -> DataFrame:
+def duplicated_span_dedup(df: DataFrame, k: int = 8, min_count: int = 2) -> DataFrame:
     """Remove every maximal token span covered by k-grams that occur
     ``>= min_count`` times corpus-wide (occurrences within one document
     count too — a page that repeats its own boilerplate gets trimmed).
@@ -67,7 +61,7 @@ def duplicated_span_dedup(
     if k < 1:
         raise ValueError("k must be >= 1")
     docs = df.select(
-        F.col(id_col).alias("id"), _tokens(text_col).alias("toks")
+        F.col("id"), _tokens("text").alias("toks")
     ).withColumn("n_tokens", F.size("toks").cast("long"))
 
     # k-gram start positions, hashed. pos is 0-based; a start at p covers
@@ -158,22 +152,16 @@ def duplicated_span_dedup(
     )
 
 
-def duplicated_span_dedup_sql(
-    source_sql: str,
-    k: int = 8,
-    min_count: int = 2,
-    id_col: str = "id",
-    text_col: str = "text",
-) -> str:
+def duplicated_span_dedup_sql(source_sql: str, k: int = 8, min_count: int = 2) -> str:
     """DuckDB mirror of duplicated_span_dedup — same tokenization, same
     md5 window keys, same island arithmetic; clean_text matches
-    byte-for-byte. `source_sql` is a query producing (id_col, text_col)."""
+    byte-for-byte. `source_sql` is a query producing (id, text)."""
     return f"""
 WITH src AS ({source_sql}),
 docs AS (
-  SELECT {id_col} AS id,
+  SELECT id AS id,
          list_filter(
-           string_split(regexp_replace(trim({text_col}), '\\s+', ' ', 'g'), ' '),
+           string_split(regexp_replace(trim(text), '\\s+', ' ', 'g'), ' '),
            x -> x <> '') AS toks
   FROM src
 ),

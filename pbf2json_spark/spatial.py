@@ -88,7 +88,7 @@ def _cover_udf(
     return pd.Series(out)
 
 
-def pick_polygon_res(polygons: DataFrame, max_cover: int = 64) -> int:
+def pick_polygon_res(polygons: DataFrame) -> int:
     """Resolution where a typical polygon bbox is covered by few cells: cell
     edge ≈ the 90th-percentile bbox extent. Driver-side stats-only pass."""
     stats = polygons.select(
@@ -182,8 +182,6 @@ def point_in_polygon_join(
     points: DataFrame,
     polygons: DataFrame,
     res: int | None = None,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
 ) -> DataFrame:
     """points ⋈ polygons with cell prefilter + exact ray-cast verify.
 
@@ -220,12 +218,12 @@ def point_in_polygon_join(
         F.when(~F.col("_full"), F.col("ring")).alias("ring"),
         "cell",
     ))
-    pts = points.withColumn("_cell", cells.cell_col(F.col(lat_col), F.col(lon_col), res))
+    pts = points.withColumn("_cell", cells.cell_col(F.col("lat"), F.col("lon"), res))
     cand = pts.join(build, pts["_cell"] == build["cell"], "inner")
     # Or short-circuits in codegen: interior rows never touch the cast
     verified = cand.filter(
         F.col("ring").isNull()
-        | _pip_verify_col(F.col(lat_col), F.col(lon_col), F.col("ring"))
+        | _pip_verify_col(F.col("lat"), F.col("lon"), F.col("ring"))
     )
     return verified.drop("_cell", "cell", "ring")
 
@@ -469,15 +467,13 @@ def tile_aggregate(
     df: DataFrame,
     res: int,
     aggs: list[Column] | None = None,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
 ) -> DataFrame:
     """Vector→raster: assign rows to tiles (cells at `res`, pure JVM bit
     math) and aggregate per tile. Default agg: count."""
     if aggs is None:
         aggs = [F.count(F.lit(1)).alias("n")]
     return (
-        df.withColumn("tile", cells.cell_col(F.col(lat_col), F.col(lon_col), res))
+        df.withColumn("tile", cells.cell_col(F.col("lat"), F.col("lon"), res))
         .groupBy("tile")
         .agg(*aggs)
     )
@@ -670,13 +666,7 @@ def within_distance_join(
     )
 
 
-def tile_pyramid(
-    df: DataFrame,
-    res: int,
-    min_res: int = 1,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
+def tile_pyramid(df: DataFrame, res: int, min_res: int = 1) -> DataFrame:
     """Counts per tile at EVERY resolution min_res..res — the full tile
     pyramid a slippy-map / heat-map service serves, in two exchanges
     regardless of how many levels are asked for.
@@ -696,7 +686,7 @@ def tile_pyramid(
     """
     if not 1 <= min_res <= res:
         raise ValueError("require 1 <= min_res <= res")
-    qk = cells.quadkey_col(F.col(lat_col), F.col(lon_col), res)
+    qk = cells.quadkey_col(F.col("lat"), F.col("lon"), res)
     base = df.select(qk.alias("qk")).groupBy("qk").agg(F.count(F.lit(1)).alias("n"))
     return (
         base.select(
@@ -922,12 +912,8 @@ def spatial_anti_join(
     ).select(point_id, "lat", "lon")
 
 
-def simplify_polylines(
-    df: DataFrame,
-    eps_deg: float,
-    line_col: str = "line",
-) -> DataFrame:
-    """Douglas-Peucker polyline simplification: replaces `line_col`
+def simplify_polylines(df: DataFrame, eps_deg: float) -> DataFrame:
+    """Douglas-Peucker polyline simplification: replaces `line`
     (array<struct<lat:double,lon:double>>) with the subsequence of vertices
     whose removal would deviate the line by more than `eps_deg`
     (point-to-segment, planar degrees). Endpoints always survive.
@@ -959,7 +945,7 @@ def simplify_polylines(
             out.append([p for p, k in zip(line, keepm) if k])
         return pd.Series(out)
 
-    return df.withColumn(line_col, simp(F.col(line_col)))
+    return df.withColumn("line", simp(F.col("line")))
 
 
 # dense-cell count up to which hotspot_clusters finds components with a
@@ -971,8 +957,6 @@ def hotspot_clusters(
     points: DataFrame,
     res: int,
     min_pts: int,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
     max_iters: int = 20,
 ) -> DataFrame:
     """Grid-density clustering (DBSCAN-lite hotspot detection): cells at
@@ -1003,7 +987,7 @@ def hotspot_clusters(
     from pbf2json_spark import graph
 
     n = 1 << res
-    x, y = cells.xy_cols(F.col(lat_col), F.col(lon_col), res)
+    x, y = cells.xy_cols(F.col("lat"), F.col("lon"), res)
     dense = (
         points.select(x.alias("cx"), y.alias("cy"))
         .groupBy("cx", "cy")
@@ -1086,19 +1070,14 @@ def hotspot_clusters(
     )
 
 
-def focal_sum(
-    tiles: DataFrame,
-    res: int,
-    k: int = 1,
-    value_col: str = "n",
-) -> DataFrame:
+def focal_sum(tiles: DataFrame, res: int, k: int = 1) -> DataFrame:
     """Focal (k-ring window) smoothing over an AGGREGATED tile frame: each
-    cell's smoothed value = sum of `value_col` over the (2k+1)² Chebyshev
+    cell's smoothed value = sum of `n` over the (2k+1)² Chebyshev
     neighborhood — the heat-map blur / density-surface pass. Longitude
     wraps, latitude clamps (out-of-range rows drop, matching the grid).
 
-    Input: (cx, cy, value_col) — one row per NON-EMPTY tile (the output of
-    tile_aggregate/hotspot counting). Output: (cx, cy, <value_col>_focal)
+    Input: (cx, cy, n) — one row per NON-EMPTY tile (the output of
+    tile_aggregate/hotspot counting). Output: (cx, cy, n_focal)
     for every cell that RECEIVES mass (a cell with an empty neighborhood
     emits nothing — sparse in, sparse out).
 
@@ -1113,7 +1092,7 @@ def focal_sum(
     n = 1 << res
     offs = [(dx, dy) for dx in range(-k, k + 1) for dy in range(-k, k + 1)]
     scattered = tiles.select(
-        F.col(value_col),
+        F.col("n"),
         F.explode(
             F.array(*[
                 F.struct(
@@ -1126,22 +1105,14 @@ def focal_sum(
     ).select(
         F.col("o.tx").alias("cx"),
         F.col("o.ty").alias("cy"),
-        F.col(value_col),
+        F.col("n"),
     ).filter((F.col("cy") >= 0) & (F.col("cy") <= n - 1))
     return scattered.groupBy("cx", "cy").agg(
-        F.sum(value_col).alias(f"{value_col}_focal")
+        F.sum("n").alias("n_focal")
     )
 
 
-def areal_interpolate(
-    src: DataFrame,
-    dst: DataFrame,
-    res: int,
-    src_id: str = "s_id",
-    dst_id: str = "d_id",
-    value_col: str = "value",
-    quant: int = 10_000,
-) -> DataFrame:
+def areal_interpolate(src: DataFrame, dst: DataFrame, res: int) -> DataFrame:
     """Areal interpolation — transfer an extensive attribute (population,
     byte counts, page counts) from one box layer to another, weighting
     each source's contribution by how much of it the target covers. The
@@ -1149,16 +1120,16 @@ def areal_interpolate(
     blocks → H3 tiles, admin areas → ad-hoc study zones).
 
     Exactness discipline: coordinates are quantized to an integer grid at
-    `quant` units/degree (floor — unambiguous in every engine, unlike
+    10⁴ units/degree (floor — unambiguous in every engine, unlike
     round's half-mode zoo), so areas and overlaps are int64 and the
     per-pair weight is one multiply + one truncating div:
 
         w_e6     = (inter_area_u · 1e6) div src_area_u      (0 ≤ w ≤ 1e6)
         contrib  = (value · w_e6) div 1e6
 
-    Overflow budget at quant=1e4: max area 3.6e6·1.8e6 = 6.5e12 u², so
+    Overflow budget at 1e4 units/degree: max area 3.6e6·1.8e6 = 6.5e12 u², so
     inter·1e6 ≤ 6.5e18 < 2^63; |value| must stay ≤ 9.2e12 (caller scales).
-    Degenerate sources (quantized area 0 — thinner than 1/quant°) are
+    Degenerate sources (quantized area 0 — thinner than 1e-4°) are
     dropped, and a sliver overlap can quantize to w=0; both engines agree
     on every such edge because the quantization IS the definition.
 
@@ -1173,34 +1144,34 @@ def areal_interpolate(
     contributing source — (dst_id, n_src, inter_u2, value_out).
     """
     pairs = bbox_intersect_join(
-        src.select(src_id, "lat0", "lat1", "lon0", "lon1"),
+        src.select("s_id", "lat0", "lat1", "lon0", "lon1"),
         dst,
         res,
-        left_id=src_id,
-        right_id=dst_id,
+        left_id="s_id",
+        right_id="d_id",
     )
 
     def u(c):
-        return F.floor(F.col(c) * F.lit(float(quant))).cast("long")
+        return F.floor(F.col(c) * F.lit(10_000.0)).cast("long")
 
     iw = F.least(u("l_lon1"), u("r_lon1")) - F.greatest(u("l_lon0"), u("r_lon0"))
     ih = F.least(u("l_lat1"), u("r_lat1")) - F.greatest(u("l_lat0"), u("r_lat0"))
     sw = u("l_lon1") - u("l_lon0")
     sh = u("l_lat1") - u("l_lat0")
     g = pairs.select(
-        src_id,
-        dst_id,
+        "s_id",
+        "d_id",
         (F.greatest(iw, F.lit(0)) * F.greatest(ih, F.lit(0))).alias("_inter_u2"),
         (sw * sh).alias("_src_u2"),
     ).filter(F.col("_src_u2") > 0)
-    vals = src.select(src_id, F.col(value_col).cast("long").alias("_val"))
-    g = g.join(vals, src_id)
+    vals = src.select("s_id", F.col("value").cast("long").alias("_val"))
+    g = g.join(vals, "s_id")
     w_e6 = F.expr("(_inter_u2 * 1000000) div _src_u2")
     contrib = F.expr("(_val * _w_e6) div 1000000")
     return (
         g.withColumn("_w_e6", w_e6)
         .withColumn("_contrib", contrib)
-        .groupBy(dst_id)
+        .groupBy("d_id")
         .agg(
             F.count(F.lit(1)).alias("n_src"),
             F.sum("_inter_u2").alias("inter_u2"),
@@ -1366,12 +1337,7 @@ def _queen_global(
     )
 
 
-def local_moran(
-    points: DataFrame,
-    res: int,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
+def local_moran(points: DataFrame, res: int) -> DataFrame:
     """Local Moran's I (LISA, Anselin 1995) over grid-cell point counts —
     per-cell spatial autocorrelation: is this cell's density similar to
     its neighbors' (hotspot/coldspot, lisa > 0) or a spatial outlier
@@ -1401,7 +1367,7 @@ def local_moran(
     Output: (cx, cy, x, k_nbrs, nbr_sum, lisa_e0) one row per occupied
     cell.
     """
-    counts = _cell_counts(points, res, lat_col, lon_col)
+    counts = _cell_counts(points, res, "lat", "lon")
     totals = _totals(counts)
     j = _queen_sums(counts).select(
         "cx", "cy", "x",
@@ -1418,12 +1384,7 @@ def local_moran(
     )
 
 
-def global_moran(
-    points: DataFrame,
-    res: int,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
+def global_moran(points: DataFrame, res: int) -> DataFrame:
     """Global Moran's I over grid-cell point counts — the one-number
     spatial-autocorrelation statistic local_moran's per-cell rows sum
     into: is the density surface clustered (I→+1), random (I≈0 — more
@@ -1450,7 +1411,7 @@ def global_moran(
     var_e0 = den div N² (the count variance, for context).
     """
     agg = _queen_global(
-        points, res, lat_col, lon_col,
+        points, res, "lat", "lon",
         "CAST(_n * x - _s AS DECIMAL(38,0)) * "
         "CAST(_n * nb - k * _s AS DECIMAL(38,0))",
     )
@@ -1466,13 +1427,7 @@ def global_moran(
     )
 
 
-def dilate_cover(
-    cover: DataFrame,
-    res: int,
-    radius: int = 1,
-    cx_col: str = "cx",
-    cy_col: str = "cy",
-) -> DataFrame:
+def dilate_cover(cover: DataFrame, res: int, radius: int = 1) -> DataFrame:
     """Grid-cover dilation — the raster buffer: expand a cell cover by
     `radius` rings of the res-grid (Chebyshev disk, longitude wraps via
     pmod, latitude clamps at the poles — the disk_col conventions).
@@ -1489,31 +1444,24 @@ def dilate_cover(
     offs = F.sequence(F.lit(-radius), F.lit(radius))
     return (
         cover.select(
-            F.explode(offs).alias("_dx"), F.col(cx_col), F.col(cy_col)
+            F.explode(offs).alias("_dx"), F.col("cx"), F.col("cy")
         )
         .select(
-            F.pmod(F.col(cx_col) + F.col("_dx"), F.lit(n)).alias("cx"),
+            F.pmod(F.col("cx") + F.col("_dx"), F.lit(n)).alias("cx"),
             F.explode(offs).alias("_dy"),
-            F.col(cy_col),
+            F.col("cy"),
         )
         .select(
             "cx",
             F.greatest(
-                F.lit(0), F.least(F.lit(n - 1), F.col(cy_col) + F.col("_dy"))
+                F.lit(0), F.least(F.lit(n - 1), F.col("cy") + F.col("_dy"))
             ).alias("cy"),
         )
         .distinct()
     )
 
 
-def idw_interpolate(
-    samples: DataFrame,
-    res: int,
-    radius: int = 2,
-    value_col: str = "value",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
+def idw_interpolate(samples: DataFrame, res: int, radius: int = 2) -> DataFrame:
     """Inverse-distance-weighted grid interpolation — the raster
     estimator: every grid cell within `radius` rings of a sample gets
     the weighted mean of nearby sample values, weight = SCALE div
@@ -1537,7 +1485,7 @@ def idw_interpolate(
     """
     n = 1 << res
     scale = 1_000_000
-    x, y = cells.xy_cols(F.col(lat_col), F.col(lon_col), res)
+    x, y = cells.xy_cols(F.col("lat"), F.col("lon"), res)
     offs = [
         (dx, dy, scale // (1 + dx * dx + dy * dy))
         for dx in range(-radius, radius + 1)
@@ -1551,7 +1499,7 @@ def idw_interpolate(
     return (
         samples.select(
             x.alias("_sx"), y.alias("_sy"),
-            F.col(value_col).cast("long").alias("_v"),
+            F.col("value").cast("long").alias("_v"),
             F.explode(scatter).alias("_o"),
         )
         .select(
@@ -1570,11 +1518,7 @@ def idw_interpolate(
     )
 
 
-def focal_gradient(
-    tiles: DataFrame,
-    res: int,
-    value_col: str = "n",
-) -> DataFrame:
+def focal_gradient(tiles: DataFrame, res: int) -> DataFrame:
     """Central-difference gradient over an AGGREGATED grid — the
     slope/edge-detection pass on a density surface (hotspot boundaries,
     coastline-like transitions in a crawl-coverage raster): for every
@@ -1595,10 +1539,10 @@ def focal_gradient(
     groupBy sums the signed contributions. No self-join against the
     grid, no window. Integer values stay integers.
 
-    Output: (cx, cy, <value_col>, gx, gy, g2) — input cells only.
+    Output: (cx, cy, n, gx, gy, g2) — input cells only.
     """
     n = 1 << res
-    v = F.col(value_col).cast("long")
+    v = F.col("n").cast("long")
     # contributions to target (tx, ty): (dx, dy, gx_coef, gy_coef, self)
     offs = [
         (0, 0, 0, 0, 1),
@@ -1630,23 +1574,18 @@ def focal_gradient(
             F.sum(F.col("o.cgx") * F.col("_v")).alias("gx"),
             F.sum(F.col("o.cgy") * F.col("_v")).alias("gy"),
             F.max(F.col("o.slf")).alias("_p"),
-            F.sum(F.col("o.slf") * F.col("_v")).alias(value_col),
+            F.sum(F.col("o.slf") * F.col("_v")).alias("n"),
         )
         .filter(F.col("_p") == 1)
         .drop("_p")
     )
     return out.select(
-        "cx", "cy", value_col, "gx", "gy",
+        "cx", "cy", "n", "gx", "gy",
         (F.col("gx") * F.col("gx") + F.col("gy") * F.col("gy")).alias("g2"),
     )
 
 
-def geary_c(
-    points: DataFrame,
-    res: int,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
+def geary_c(points: DataFrame, res: int) -> DataFrame:
     """Global Geary's C over grid-cell point counts — the PAIRWISE
     spatial-autocorrelation statistic completing the ESDA family next to
     Moran's I (local_moran / global_moran): C < 1 clustered, C ≈ 1
@@ -1674,7 +1613,7 @@ def geary_c(
     Output: (n_cells, s_total, w_pairs, geary_e6).
     """
     agg = _queen_global(
-        points, res, lat_col, lon_col,
+        points, res, "lat", "lon",
         "CAST(k * x * x - 2 * x * nb + nbsq AS DECIMAL(38,0))",
     )
     return agg.select(
@@ -1688,13 +1627,7 @@ def geary_c(
     )
 
 
-def ripley_pairs(
-    points: DataFrame,
-    res: int,
-    max_r: int = 3,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
+def ripley_pairs(points: DataFrame, res: int, max_r: int = 3) -> DataFrame:
     """Ripley's-K style multi-scale pair counting over grid cells: for
     every integer radius r ≤ max_r, the number of ORDERED point pairs
     (i ≠ j) whose cells are within Chebyshev distance r —
@@ -1723,7 +1656,7 @@ def ripley_pairs(
     from pyspark.sql.window import Window
 
     n = 1 << res
-    x, y = cells.xy_cols(F.col(lat_col), F.col(lon_col), res)
+    x, y = cells.xy_cols(F.col("lat"), F.col("lon"), res)
     counts = (
         points.select(x.alias("cx"), y.alias("cy"))
         .groupBy("cx", "cy")
@@ -1780,12 +1713,7 @@ def ripley_pairs(
     )
 
 
-def gi_star(
-    points: DataFrame,
-    res: int,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
+def gi_star(points: DataFrame, res: int) -> DataFrame:
     """Getis–Ord Gi* hot/cold-spot scores over grid-cell point counts —
     the LOCAL hotspot statistic completing the ESDA family next to
     local/global Moran and Geary's C: where Moran's I_i flags cells that
@@ -1817,7 +1745,7 @@ def gi_star(
     Output: (cx, cy, x, w_i, t_i, gi_sign, gi2_e6), one row per occupied
     cell.
     """
-    counts = _cell_counts(points, res, lat_col, lon_col)
+    counts = _cell_counts(points, res, "lat", "lon")
     totals = _totals(counts)
     j = _queen_sums(counts).select(
         "cx", "cy", "x",
@@ -1833,14 +1761,7 @@ def gi_star(
     )
 
 
-def knox_pairs(
-    events: DataFrame,
-    res: int,
-    tau_us: int,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    ts_col: str = "ts_us",
-) -> DataFrame:
+def knox_pairs(events: DataFrame, res: int, tau_us: int) -> DataFrame:
     """Knox space–time interaction statistic: do events that are close
     in SPACE also happen close in TIME (epidemic bursts, coordinated
     posting, geo-synchronized crawl traps)? Counts ordered pairs i ≠ j
@@ -1871,11 +1792,11 @@ def knox_pairs(
     knox_lift_e6).
     """
     n = 1 << res
-    x, y = cells.xy_cols(F.col(lat_col), F.col(lon_col), res)
+    x, y = cells.xy_cols(F.col("lat"), F.col("lon"), res)
     g = (
         events.select(
             x.alias("cx"), y.alias("cy"),
-            F.col(ts_col).cast("long").alias("t"),
+            F.col("ts_us").cast("long").alias("t"),
         )
         .groupBy("cx", "cy", "t")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -1957,13 +1878,7 @@ def knox_pairs(
     )
 
 
-def quadtree_bins(
-    points: DataFrame,
-    max_res: int,
-    threshold: int,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
+def quadtree_bins(points: DataFrame, max_res: int, threshold: int) -> DataFrame:
     """Adaptive quadtree binning: split any cell holding more than
     `threshold` points into its 4 children, recursively, until `max_res`
     — the variable-resolution aggregation every density map wants (one
@@ -1987,7 +1902,7 @@ def quadtree_bins(
     """
     if max_res < 1:
         raise ValueError("max_res >= 1")
-    x, y = cells.xy_cols(F.col(lat_col), F.col(lon_col), max_res)
+    x, y = cells.xy_cols(F.col("lat"), F.col("lon"), max_res)
     levels: dict[int, DataFrame] = {}
     # every level is referenced by TWO union branches (its own leaf test
     # and its children's parent test) — pin each aggregated frame so the
@@ -2049,13 +1964,7 @@ def quadtree_bins(
     return out
 
 
-def colocation_lift(
-    events: DataFrame,
-    res: int,
-    type_col: str = "etype",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
+def colocation_lift(events: DataFrame, res: int, type_col: str = "etype") -> DataFrame:
     """Cross-type co-location lift: for every ORDERED type pair (A, B),
     how much more often is an A within one cell (queen neighborhood,
     self cell included) of a B than independence predicts — the
@@ -2085,7 +1994,7 @@ def colocation_lift(
     self-pairs excluded exactly).
     """
     n = 1 << res
-    x, y = cells.xy_cols(F.col(lat_col), F.col(lon_col), res)
+    x, y = cells.xy_cols(F.col("lat"), F.col("lon"), res)
     g = (
         events.select(F.col(type_col).alias("t"), x.alias("cx"), y.alias("cy"))
         .groupBy("t", "cx", "cy")
@@ -2152,14 +2061,7 @@ def colocation_lift(
     )
 
 
-def emerging_hotspots(
-    events: DataFrame,
-    res: int,
-    bucket_us: int,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    ts_col: str = "ts_us",
-) -> DataFrame:
+def emerging_hotspots(events: DataFrame, res: int, bucket_us: int) -> DataFrame:
     """Emerging-hotspot analysis — the space-TIME composite every
     monitoring stack ends at: slice events into time buckets, score each
     cell's local clustering per slice with Getis-Ord Gi* (gi_star's
@@ -2185,10 +2087,10 @@ def emerging_hotspots(
     Output: (cx, cy, n_buckets, s_stat, var18, mk2_e6).
     """
     bucket = F.expr(
-        f"(CAST({ts_col} AS BIGINT) - pmod({ts_col}, "
+        f"(CAST(ts_us AS BIGINT) - pmod(ts_us, "
         f"{int(bucket_us)})) div {int(bucket_us)}"
     )
-    g = _cell_counts(events, res, lat_col, lon_col, b=bucket)
+    g = _cell_counts(events, res, "lat", "lon", b=bucket)
     g = g.localCheckpoint(eager=False)
     totals = _totals(g, "b")
     gi = (
@@ -2227,11 +2129,7 @@ def map_match(
     radius_deg: float,
     res: int = 10,
     cand_k: int = 3,
-    switch_shared_e12: int = 10_000,
     switch_jump_e12: int = 1_000_000_000,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    seg_id: str = "seg_id",
 ) -> DataFrame:
     """HMM map-matching: snap each user's ping sequence to the most
     likely SEGMENT SEQUENCE, not the per-ping nearest segment — the
@@ -2241,7 +2139,7 @@ def map_match(
 
     Costs are integers end to end, so the optimum (and its tie-breaks)
     is engine/partition-exact: emission = floor(dist2_deg · 1e12) to the
-    candidate segment; transition = 0 (same segment), `switch_shared_e12`
+    candidate segment; transition = 0 (same segment), 10⁴
     (segments sharing an endpoint — a turn at a junction), else
     `switch_jump_e12` (a teleport, strongly discouraged). Ties prefer
     the smaller predecessor seg_id, then the smaller final seg_id.
@@ -2263,13 +2161,13 @@ def map_match(
     Output: (user_id, ts, seg_id, emis_e12) — one row per matched ping.
     """
     pts = points.select(
-        F.col(user_col).alias("user_id"), F.col(ts_col).alias("ts"),
+        F.col("user_id"), F.col("ts"),
         F.col("lat").alias("_plat"), F.col("lon").alias("_plon"),
     )
     px, py = cells.xy_cols(F.col("_plat"), F.col("_plon"), res)
     pts = pts.select("*", px.alias("cx"), py.alias("cy"))
     seg = segments.select(
-        F.col(seg_id),
+        F.col("seg_id"),
         F.col("alat"), F.col("alon"), F.col("blat"), F.col("blon"),
         (F.least("alat", "blat") - radius_deg).alias("lat0"),
         (F.greatest("alat", "blat") + radius_deg).alias("lat1"),
@@ -2291,7 +2189,7 @@ def map_match(
     ) * (F.col("_plat") - qy_)
     cand = j.select(
         "user_id", "ts",
-        F.col(f"s_{seg_id}").alias("_sid"),
+        F.col("s_seg_id").alias("_sid"),
         F.floor(dist2 * F.lit(1e12)).cast("long").alias("_emis"),
         F.col("s_alat").alias("_aa"), F.col("s_alon").alias("_ab"),
         F.col("s_blat").alias("_ba"), F.col("s_blon").alias("_bb"),
@@ -2301,7 +2199,7 @@ def map_match(
         "*", F.row_number().over(wk).alias("_rk")
     ).filter(F.col("_rk") <= cand_k)
 
-    sh, jp = int(switch_shared_e12), int(switch_jump_e12)
+    sh, jp = 10_000, int(switch_jump_e12)
 
     def _viterbi(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["ts", "_sid"])
@@ -2377,12 +2275,7 @@ _HULL_SCHEMA = T.StructType([
 ])
 
 
-def convex_hull(
-    points: DataFrame,
-    entity_col: str = "entity_id",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
+def convex_hull(points: DataFrame, entity_col: str = "entity_id") -> DataFrame:
     """Per-entity convex hull (Andrew's monotone chain) + DOUBLED shoelace
     area — the footprint extractor ("the region this user/device/fleet
     actually covers", the polygon a scatter of POI points implies).
@@ -2446,7 +2339,7 @@ def convex_hull(
 
     p = points.select(
         F.col(entity_col).alias("_e"),
-        F.col(lat_col).alias("_lat"), F.col(lon_col).alias("_lon"),
+        F.col("lat").alias("_lat"), F.col("lon").alias("_lon"),
     )
     return p.groupBy("_e").applyInPandas(_hull, _HULL_SCHEMA)
 
@@ -2551,12 +2444,7 @@ def dbscan(
 # --- polygon containment hierarchy ----------------------------------------------
 
 
-def polygon_nesting(
-    polys: DataFrame,
-    polygon_id: str = "polygon_id",
-    ring_col: str = "ring",
-    res: int = 4,
-) -> DataFrame:
+def polygon_nesting(polys: DataFrame, res: int = 4) -> DataFrame:
     """Containment hierarchy over simple closed rings (admin nesting:
     city ⊂ region ⊂ country): every (child, parent) pair where child's
     ring lies strictly inside parent's, plus the DIRECT parent (the
@@ -2582,7 +2470,7 @@ def polygon_nesting(
     ring_validity). Direct parents are one window over the surviving
     pairs. Output: (child, parent, parent_area2, is_direct).
     """
-    ring = F.col(ring_col)
+    ring = F.col("ring")
     lats = F.transform(ring, lambda p: p["lat"])
     lons = F.transform(ring, lambda p: p["lon"])
     n = F.greatest(F.size(ring) - 1, F.lit(0))
@@ -2594,7 +2482,7 @@ def polygon_nesting(
         lambda acc, t: acc + t,
     )
     base = polys.select(
-        F.col(polygon_id).alias("_pid"),
+        F.col("polygon_id").alias("_pid"),
         ring.alias("_ring"),
         F.array_min(lats).alias("lat0"),
         F.array_max(lats).alias("lat1"),
@@ -2686,8 +2574,6 @@ def k_anonymity_cells(
     k: int,
     res_levels: list[int],
     id_col: str = "id",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
 ) -> DataFrame:
     """Adaptive location generalization: for every point, the FINEST cell
     resolution at which its cell holds >= k points, plus that cell and its
@@ -2720,12 +2606,12 @@ def k_anonymity_cells(
     levels = sorted(set(res_levels))
     if not levels:
         raise ValueError("need at least one resolution level")
-    pts = df.select(F.col(id_col), F.col(lat_col), F.col(lon_col))
+    pts = df.select(F.col(id_col), F.col("lat"), F.col("lon"))
     rc = F.array(
         *[
             F.struct(
                 F.lit(r).alias("res"),
-                cells.cell_col(F.col(lat_col), F.col(lon_col), r).alias("cell"),
+                cells.cell_col(F.col("lat"), F.col("lon"), r).alias("cell"),
             )
             for r in levels
         ]
@@ -2753,17 +2639,11 @@ def poi_conflate(
     right: DataFrame,
     res: int,
     max_dist_e6: int,
-    max_lev: int = 2,
-    id_l: str = "id_l",
-    id_r: str = "id_r",
-    name_col: str = "name",
-    lat_col: str = "lat_e6",
-    lon_col: str = "lon_e6",
 ) -> DataFrame:
     """POI conflation — merge two place datasets (an OSM extract vs a
     business directory, two crawl-derived gazetteers) by MUTUAL BEST
     fuzzy match: candidates must fall in the same-or-adjacent grid cell
-    (blocking — never all-pairs), agree on name within ``max_lev`` edits
+    (blocking — never all-pairs), agree on name within 2 edits
     and position within ``max_dist_e6`` (planar L1 microdegrees), and
     each side must be the other's best candidate under the total order
     (L1 distance, levenshtein, id_l, id_r) — mutuality kills the
@@ -2784,15 +2664,15 @@ def poi_conflate(
     def prep(df, idc, suffix):
         return df.select(
             F.col(idc),
-            F.col(name_col).alias(f"name_{suffix}"),
-            F.col(lat_col).alias(f"lat_{suffix}"),
-            F.col(lon_col).alias(f"lon_{suffix}"),
-            F.floor(F.col(lat_col) / cell).cast("long").alias(f"cy_{suffix}"),
-            F.floor(F.col(lon_col) / cell).cast("long").alias(f"cx_{suffix}"),
+            F.col("name").alias(f"name_{suffix}"),
+            F.col("lat_e6").alias(f"lat_{suffix}"),
+            F.col("lon_e6").alias(f"lon_{suffix}"),
+            F.floor(F.col("lat_e6") / cell).cast("long").alias(f"cy_{suffix}"),
+            F.floor(F.col("lon_e6") / cell).cast("long").alias(f"cx_{suffix}"),
         )
 
-    l = prep(left, id_l, "l")
-    r = prep(right, id_r, "r")
+    l = prep(left, "id_l", "l")
+    r = prep(right, "id_r", "r")
     offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
     l9 = l.select(
         "*",
@@ -2816,36 +2696,26 @@ def poi_conflate(
         )
         .withColumn("lev", F.levenshtein("name_l", "name_r").cast("long"))
         .filter(
-            (F.col("dist_e6") <= max_dist_e6) & (F.col("lev") <= max_lev)
+            (F.col("dist_e6") <= max_dist_e6) & (F.col("lev") <= 2)
         )
-        .select(id_l, id_r, "name_l", "name_r", "dist_e6", "lev")
+        .select("id_l", "id_r", "name_l", "name_r", "dist_e6", "lev")
     )
-    key = F.struct("dist_e6", "lev", F.col(id_l), F.col(id_r))
+    key = F.struct("dist_e6", "lev", F.col("id_l"), F.col("id_r"))
     best_l = (
-        cand.groupBy(id_l)
+        cand.groupBy("id_l")
         .agg(F.min(key).alias("_b"))
-        .select(id_l, F.col(f"_b.{id_r}").alias(id_r))
+        .select("id_l", F.col("_b.id_r").alias("id_r"))
     )
     best_r = (
-        cand.groupBy(id_r)
+        cand.groupBy("id_r")
         .agg(F.min(key).alias("_b"))
-        .select(F.col(f"_b.{id_l}").alias(id_l), id_r)
+        .select(F.col("_b.id_l").alias("id_l"), "id_r")
     )
-    mutual = best_l.join(best_r, [id_l, id_r])
-    return cand.join(mutual, [id_l, id_r])
+    mutual = best_l.join(best_r, ["id_l", "id_r"])
+    return cand.join(mutual, ["id_l", "id_r"])
 
 
-def address_interpolate(
-    ways: DataFrame,
-    step: int = 2,
-    id_col: str = "way_id",
-    a_num: str = "num_a",
-    b_num: str = "num_b",
-    a_lat: str = "lat_a_e6",
-    a_lon: str = "lon_a_e6",
-    b_lat: str = "lat_b_e6",
-    b_lon: str = "lon_b_e6",
-) -> DataFrame:
+def address_interpolate(ways: DataFrame, step: int = 2) -> DataFrame:
     """OSM-style address-range interpolation (`addr:interpolation`):
     a way whose endpoints carry house numbers A and B generates the
     intermediate address points — number n at the proportional position
@@ -2868,8 +2738,8 @@ def address_interpolate(
 
     Output: (way_id, housenumber, lat_e6, lon_e6).
     """
-    lo = F.least(F.col(a_num), F.col(b_num))
-    hi = F.greatest(F.col(a_num), F.col(b_num))
+    lo = F.least(F.col("num_a"), F.col("num_b"))
+    hi = F.greatest(F.col("num_a"), F.col("num_b"))
     # generated numbers anchor on lo's parity grid: lo+step, lo+2·step, …
     # strictly inside (lo, hi)
     w = ways.withColumn("_lo", lo).withColumn("_hi", hi).filter(
@@ -2879,17 +2749,18 @@ def address_interpolate(
         F.col("_lo") + F.lit(step), F.col("_hi") - 1, F.lit(step)
     )
     e = w.select(
-        F.col(id_col),
-        F.col(a_num), F.col(b_num),
-        F.col(a_lat), F.col(a_lon), F.col(b_lat), F.col(b_lon),
+        F.col("way_id"),
+        F.col("num_a"), F.col("num_b"),
+        F.col("lat_a_e6"), F.col("lon_a_e6"), F.col("lat_b_e6"), F.col("lon_b_e6"),
         "_lo", "_hi",
         F.explode(nums).alias("housenumber"),
     )
     # orient the segment so interpolation runs lo → hi
-    lat_lo = F.when(F.col(a_num) <= F.col(b_num), F.col(a_lat)).otherwise(F.col(b_lat))
-    lon_lo = F.when(F.col(a_num) <= F.col(b_num), F.col(a_lon)).otherwise(F.col(b_lon))
-    lat_hi = F.when(F.col(a_num) <= F.col(b_num), F.col(b_lat)).otherwise(F.col(a_lat))
-    lon_hi = F.when(F.col(a_num) <= F.col(b_num), F.col(b_lon)).otherwise(F.col(a_lon))
+    fwd = F.col("num_a") <= F.col("num_b")
+    lat_lo = F.when(fwd, F.col("lat_a_e6")).otherwise(F.col("lat_b_e6"))
+    lon_lo = F.when(fwd, F.col("lon_a_e6")).otherwise(F.col("lon_b_e6"))
+    lat_hi = F.when(fwd, F.col("lat_b_e6")).otherwise(F.col("lat_a_e6"))
+    lon_hi = F.when(fwd, F.col("lon_b_e6")).otherwise(F.col("lon_a_e6"))
     span = F.col("_hi") - F.col("_lo")
     off = F.col("housenumber") - F.col("_lo")
 
@@ -2899,7 +2770,7 @@ def address_interpolate(
         return c_lo + (adj / span).cast("long")
 
     return e.select(
-        F.col(id_col),
+        F.col("way_id"),
         F.col("housenumber").cast("long").alias("housenumber"),
         interp(lat_lo, lat_hi).alias("lat_e6"),
         interp(lon_lo, lon_hi).alias("lon_e6"),

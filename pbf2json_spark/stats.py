@@ -747,11 +747,9 @@ def trimmed_stats(
     df: DataFrame,
     value_col: str,
     group_cols: list[str] | None = None,
-    lo: float = 0.1,
-    hi: float = 0.9,
 ) -> DataFrame:
     """Per-group trimmed robust statistics: mean/extremes of the values
-    strictly INSIDE the [lo, hi] quantile band — the outlier-immune
+    strictly INSIDE the [0.1, 0.9] quantile band — the outlier-immune
     center a mean-of-everything gets wrong on heavy-tailed web data (one
     1 GB page, one thousand empty ones) and a median alone under-uses.
 
@@ -772,13 +770,11 @@ def trimmed_stats(
     Output: group_cols + (q_lo, q_hi double, n_kept, sum_kept long,
     trimmed_mean double).
     """
-    if not 0.0 <= lo < hi <= 1.0:
-        raise ValueError("need 0 <= lo < hi <= 1")
     gs = list(group_cols or [])
     v = F.col(value_col)
     bounds = df.groupBy(*gs).agg(
-        F.expr(f"percentile({value_col}, {lo!r})").alias("q_lo"),
-        F.expr(f"percentile({value_col}, {hi!r})").alias("q_hi"),
+        F.expr(f"percentile({value_col}, 0.1)").alias("q_lo"),
+        F.expr(f"percentile({value_col}, 0.9)").alias("q_hi"),
     )
     joined = (
         df.join(F.broadcast(bounds), gs)
@@ -938,8 +934,6 @@ def bootstrap_ci(
     value_col: str,
     id_col: str,
     reps: int = 40,
-    alpha: float = 0.05,
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """Deterministic POISSON bootstrap (Chamandy et al.'s resampling for
     massive data): a confidence interval for the per-group mean computed
@@ -952,7 +946,7 @@ def bootstrap_ci(
 
     Determinism: w = inverse-CDF ladder over u32 = md5(id ':' rep) —
     re-run / re-partition / cross-engine identical (no RNG state). The
-    replicate statistic is the SCALED INTEGER mean ``(Σ w·x · scale) div
+    replicate statistic is the SCALED INTEGER mean ``(Σ w·x · 10⁶) div
     Σ w`` (exact integer division, never a float sum), replicates sort by
     (stat, rep) and the CI bounds are the ceil(α·R)-th and
     ceil((1−α)·R)-th order statistics — every gate-surface column BIGINT.
@@ -964,7 +958,7 @@ def bootstrap_ci(
     the exchange; the per-group collect_list holds ≤ reps structs.
 
     Output: group_cols + n, total, mean_scaled, ci_lo, ci_hi (all
-    BIGINT, mean×scale floored), n_reps.
+    BIGINT, mean×10⁶ floored), n_reps.
     """
     gs = [F.col(c) for c in group_cols]
     x = F.col(value_col).cast("long")
@@ -985,7 +979,7 @@ def bootstrap_ci(
             F.sum("_w").alias("_rn"),
         )
         .filter(F.col("_rn") > 0)
-        .withColumn("_num", F.col("_rsum") * F.lit(scale))
+        .withColumn("_num", F.col("_rsum") * F.lit(1_000_000))
         .withColumn(
             "_adj", F.col("_num") - ((F.col("_num") % F.col("_rn") + F.col("_rn")) % F.col("_rn"))
         )
@@ -1001,15 +995,16 @@ def bootstrap_ci(
         ).alias("_arr")
     )
     r_cnt = F.size("_arr")
-    lo_i = F.greatest(F.lit(1), F.ceil(F.lit(alpha) * r_cnt)).cast("int")
-    hi_i = F.least(r_cnt, F.ceil(F.lit(1.0 - alpha) * r_cnt)).cast("int")
+    lo_i = F.greatest(F.lit(1), F.ceil(F.lit(0.05) * r_cnt)).cast("int")
+    hi_i = F.least(r_cnt, F.ceil(F.lit(0.95) * r_cnt)).cast("int")
+    total_e6 = F.col("total") * F.lit(1_000_000)
     out = base.join(reps_agg, group_cols).select(
         *group_cols,
         "n",
         "total",
         (
-            F.col("total") * F.lit(scale)
-            - (((F.col("total") * F.lit(scale)) % F.col("n") + F.col("n")) % F.col("n"))
+            total_e6
+            - ((total_e6 % F.col("n") + F.col("n")) % F.col("n"))
         ).alias("_tm"),
         F.element_at("_arr", lo_i)["m"].alias("ci_lo"),
         F.element_at("_arr", hi_i)["m"].alias("ci_hi"),
@@ -1314,7 +1309,6 @@ def kaplan_meier(
     duration_col: str,
     event_col: str,
     group_cols: list[str] | None = None,
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """Kaplan-Meier survival estimator with right censoring — content
     lifetime analysis for the crawl world: "what fraction of pages
@@ -1380,7 +1374,7 @@ def kaplan_meier(
     )
     # fold: acc = struct(s, rows array); each step appends its row
     zero = F.struct(
-        F.lit(scale).cast("long").alias("s"),
+        F.lit(1_000_000).cast("long").alias("s"),
         F.array().cast(
             "array<struct<t:bigint,n_risk:bigint,n_event:bigint,surv_e6:bigint>>"
         ).alias("rows"),
@@ -1426,7 +1420,6 @@ def bh_fdr(
     df: DataFrame,
     p_e6_col: str,
     q_e6: int = 50_000,
-    group_cols: list[str] | None = None,
 ) -> DataFrame:
     """Benjamini-Hochberg FDR control over e6-quantized p-values — the
     multiple-testing gate the spatial-statistics family needs: Gi* /
@@ -1445,39 +1438,25 @@ def bh_fdr(
     Output: df columns + (bh_rank, m_tests, rejected) — bh_rank the
     tie-block max rank used in the test.
     """
-    gs = list(group_cols or [])
     p = F.col(p_e6_col)
-    hist = df.groupBy(*gs, p_e6_col).agg(F.count(F.lit(1)).alias("_cnt"))
-    w = (
-        Window.partitionBy(*[F.col(c) for c in gs]).orderBy(p_e6_col)
-        if gs
-        else Window.partitionBy(F.lit(1)).orderBy(p_e6_col)
-    )
-    ranked = hist.withColumn("_cum", F.sum("_cnt").over(w))
-    totals = df.groupBy(*gs).agg(F.count(F.lit(1)).alias("_m")) if gs else (
-        df.agg(F.count(F.lit(1)).alias("_m"))
-    )
-    r = (
-        ranked.join(totals, gs) if gs else ranked.crossJoin(totals)
-    )
+    hist = df.groupBy(p_e6_col).agg(F.count(F.lit(1)).alias("_cnt"))
+    whole = Window.partitionBy(F.lit(1))
+    ranked = hist.withColumn("_cum", F.sum("_cnt").over(whole.orderBy(p_e6_col)))
+    totals = df.agg(F.count(F.lit(1)).alias("_m"))
+    r = ranked.crossJoin(totals)
     # candidate: p_(k)·m <= k·q (k = tie-block max rank = _cum)
     r = r.withColumn(
         "_ok", p * F.col("_m") <= F.col("_cum") * F.lit(q_e6)
     )
-    wk = (
-        Window.partitionBy(*[F.col(c) for c in gs])
-        if gs
-        else Window.partitionBy(F.lit(1))
-    )
     kstar = r.withColumn(
         "_kstar",
         F.max(F.when(F.col("_ok"), F.col("_cum")).otherwise(F.lit(0))).over(
-            wk.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+            whole.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         ),
     ).select(
-        *gs, p_e6_col,
+        p_e6_col,
         F.col("_cum").alias("bh_rank"),
         F.col("_m").alias("m_tests"),
         (F.col("_cum") <= F.col("_kstar")).alias("rejected"),
     )
-    return df.join(kstar, gs + [p_e6_col])
+    return df.join(kstar, p_e6_col)

@@ -94,7 +94,6 @@ def sessionize(
     key: str = "user_id",
     ts: str = "ts",
     gap: str = "30 minutes",
-    aggs: list | None = None,
 ) -> DataFrame:
     """Gap-based sessions per key: events closer than `gap` merge into one
     session. Built on F.session_window — the NATIVE operator that runs
@@ -103,20 +102,17 @@ def sessionize(
     the live pipeline share this exact plan.
 
     Output: key, session_start, session_end (last event + gap, Spark's
-    convention), n_events (+ caller aggs). One shuffle on (key); session
+    convention), n_events. One shuffle on (key); session
     merging is Spark's built-in state machine, not a Python UDF.
     """
-    aggs = aggs or []
     g = events.groupBy(
         F.session_window(F.col(ts), gap).alias("sw"), F.col(key)
-    ).agg(F.count(F.lit(1)).alias("n_events"), *aggs)
-    extra = [c for c in g.columns if c not in ("sw", key, "n_events")]
+    ).agg(F.count(F.lit(1)).alias("n_events"))
     return g.select(
         F.col(key),
         F.col("sw.start").alias("session_start"),
         F.col("sw.end").alias("session_end"),
         "n_events",
-        *extra,
     )
 
 
@@ -135,10 +131,6 @@ def _ntz_epoch_secs(c: Column) -> Column:
 
 def resample_ffill(
     df: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    value: str = "value",
-    id_col: str = "event_id",
     step: int = 3600,
     max_buckets: int = 100_000,
 ) -> DataFrame:
@@ -151,7 +143,7 @@ def resample_ffill(
       * bucket = floor(epoch_secs(ts) / step) — tz-free NTZ wall-clock
         epoch, so the grid is engine- and zone-portable.
       * the bucket's observation is the LAST event in it (max ts, ties
-        broken by max id_col — a total order, so both engines pick the
+        broken by max event_id — a total order, so both engines pick the
         same row); its `value` passes through untouched (no float
         arithmetic → parquet-exact).
       * the grid spans min(bucket)..max(bucket) inclusive; empty buckets
@@ -163,20 +155,20 @@ def resample_ffill(
     fill — no self-join, no range theta join. Keys are independent, so
     skew is bounded by a single key's span, not the table size.
 
-    Output: key, bucket (BIGINT grid index), bucket_start (epoch secs),
+    Output: user_id, bucket (BIGINT grid index), bucket_start (epoch secs),
     value, filled (boolean).
     """
-    b = F.floor(_ntz_epoch_secs(F.col(ts)) / F.lit(step)).cast("long")
+    b = F.floor(_ntz_epoch_secs(F.col("ts")) / F.lit(step)).cast("long")
     obs = (
-        df.select(F.col(key), b.alias("bucket"), F.col(ts), F.col(id_col),
-                  F.col(value))
-        .groupBy(key, "bucket")
-        .agg(F.max_by(value, F.struct(ts, id_col)).alias("_v"))
+        df.select(F.col("user_id"), b.alias("bucket"), F.col("ts"), F.col("event_id"),
+                  F.col("value"))
+        .groupBy("user_id", "bucket")
+        .agg(F.max_by("value", F.struct("ts", "event_id")).alias("_v"))
     )
     # obs feeds the guard action, the grid span AND the final join —
     # checkpoint so the (key,bucket) aggregation runs once, not three times
     obs = obs.localCheckpoint(eager=False)
-    span = obs.groupBy(key).agg(
+    span = obs.groupBy("user_id").agg(
         F.min("bucket").alias("_lo"), F.max("bucket").alias("_hi")
     )
     # loud guard, never a silent cap: a span/step blowup is a config error
@@ -191,33 +183,27 @@ def resample_ffill(
             f"(max_buckets={max_buckets}); widen step or raise the limit"
         )
     grid = span.select(
-        F.col(key),
+        F.col("user_id"),
         F.explode(F.sequence("_lo", "_hi")).alias("bucket"),
     )
     w = (
-        Window.partitionBy(key)
+        Window.partitionBy("user_id")
         .orderBy("bucket")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        grid.join(obs, [key, "bucket"], "left")
+        grid.join(obs, ["user_id", "bucket"], "left")
         .select(
-            F.col(key),
+            F.col("user_id"),
             F.col("bucket"),
             (F.col("bucket") * step).alias("bucket_start"),
-            F.last("_v", ignorenulls=True).over(w).alias(value),
+            F.last("_v", ignorenulls=True).over(w).alias("value"),
             F.col("_v").isNull().alias("filled"),
         )
     )
 
 
-def funnel(
-    df: DataFrame,
-    stages: list[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts_us",
-    type_col: str = "event_type",
-) -> DataFrame:
+def funnel(df: DataFrame, stages: list[str]) -> DataFrame:
     """Ordered funnel analysis: for each user, the earliest time they
     completed stage k AT OR AFTER their earliest completion of stage k-1
     (the standard product-analytics funnel — view -> click -> purchase).
@@ -232,43 +218,37 @@ def funnel(
     shuffles is len(stages), not events. Degenerate users (bots with 10^6
     events) cost only their own partial aggs.
 
-    Output: (user_col, t1..tk BIGINT epoch-like stage times, NULL once
+    Output: (user_id, t1..tk BIGINT epoch-like stage times, NULL once
     the funnel is abandoned, stage_reached) — one row per user who
     completed stage 1.
     """
-    u, t = F.col(user_col), F.col(ts_col)
+    u, t = F.col("user_id"), F.col("ts_us")
     out = (
-        df.filter(F.col(type_col) == stages[0])
-        .groupBy(user_col)
+        df.filter(F.col("event_type") == stages[0])
+        .groupBy("user_id")
         .agg(F.min(t).alias("t1"))
     )
     for i, s in enumerate(stages[1:], start=2):
         prev = f"t{i - 1}"
         nxt = (
-            df.filter(F.col(type_col) == s)
-            .select(u.alias(user_col), t.alias("_ts"))
-            .join(out.select(user_col, prev), user_col)
+            df.filter(F.col("event_type") == s)
+            .select(u.alias("user_id"), t.alias("_ts"))
+            .join(out.select("user_id", prev), "user_id")
             .filter(F.col("_ts") >= F.col(prev))
-            .groupBy(user_col)
+            .groupBy("user_id")
             .agg(F.min("_ts").alias(f"t{i}"))
         )
-        out = out.join(nxt, user_col, "left")
+        out = out.join(nxt, "user_id", "left")
     reached = functools.reduce(
         lambda acc, i: acc + F.when(F.col(f"t{i}").isNotNull(), 1).otherwise(0),
         range(2, len(stages) + 1),
         F.lit(1),
     )
-    return out.select(user_col, *[f"t{i}" for i in range(1, len(stages) + 1)],
+    return out.select("user_id", *[f"t{i}" for i in range(1, len(stages) + 1)],
                       reached.cast("int").alias("stage_reached"))
 
 
-def interval_overlap_join(
-    left: DataFrame,
-    right: DataFrame,
-    chunk: int,
-    left_id: str = "a_id",
-    right_id: str = "b_id",
-) -> DataFrame:
+def interval_overlap_join(left: DataFrame, right: DataFrame, chunk: int) -> DataFrame:
     """All (left, right) interval pairs that overlap (closed intervals,
     integer endpoints: a.s <= b.e AND b.s <= a.e) with the overlap span —
     the 1-D temporal analog of bbox_intersect_join (event-in-session
@@ -285,8 +265,8 @@ def interval_overlap_join(
     row is ~len/chunk + 1, hot chunks are bounded by concurrency, not
     corpus size.
 
-    Expects columns (left_id, s, e) / (right_id, s, e), s <= e, BIGINT.
-    Output: (left_id, right_id, ov_s, ov_e, ov_len = ov_e - ov_s).
+    Expects columns (a_id, s, e) / (b_id, s, e), s <= e, BIGINT.
+    Output: (a_id, b_id, ov_s, ov_e, ov_len = ov_e - ov_s).
     """
     def cover(df: DataFrame, idc: str, p: str) -> DataFrame:
         g = df.select(
@@ -301,7 +281,7 @@ def interval_overlap_join(
         )
         return g
 
-    a, b = cover(left, left_id, "a_"), cover(right, right_id, "b_")
+    a, b = cover(left, "a_id", "a_"), cover(right, "b_id", "b_")
     j = a.join(b, "ck")
     start = F.greatest("a_s", "b_s")
     end = F.least("a_e", "b_e")
@@ -309,8 +289,8 @@ def interval_overlap_join(
     return (
         j.filter(report & (start <= end))
         .select(
-            F.col("a_id").alias(left_id),
-            F.col("b_id").alias(right_id),
+            F.col("a_id"),
+            F.col("b_id"),
             start.alias("ov_s"),
             end.alias("ov_e"),
             (end - start).alias("ov_len"),
@@ -322,8 +302,6 @@ def decayed_counts(
     df: DataFrame,
     bucket_us: int,
     half_life_buckets: int = 20,
-    key_col: str = "key",
-    ts_us_col: str = "ts_us",
 ) -> DataFrame:
     """Exponentially-decayed activity counts per (key, time bucket) — the
     trending-detection primitive: score(key, b) weights the key's events
@@ -345,45 +323,39 @@ def decayed_counts(
     trick as focal smoothing, in time instead of space; no window
     function, no per-key sort.
 
-    Output: (key_col, bucket, dec) for every bucket some contributing
+    Output: (key, bucket, dec) for every bucket some contributing
     event exists in the key's trailing window (score-0 buckets with no
     history are not materialized).
     """
     h = half_life_buckets
     per = (
         df.select(
-            F.col(key_col),
-            F.floor(F.col(ts_us_col) / F.lit(bucket_us)).cast("long").alias("_b"),
+            F.col("key"),
+            F.floor(F.col("ts_us") / F.lit(bucket_us)).cast("long").alias("_b"),
         )
-        .groupBy(key_col, "_b")
+        .groupBy("key", "_b")
         .agg(F.count(F.lit(1)).alias("_n"))
     )
     scatter = per.select(
-        key_col,
+        "key",
         F.col("_n"),
         F.col("_b").alias("_src"),
         F.explode(F.sequence(F.col("_b"), F.col("_b") + (h - 1))).alias("bucket"),
     )
     return (
         scatter.select(
-            key_col,
+            "key",
             "bucket",
             F.expr(
                 f"shiftleft(_n, {h - 1} - CAST(bucket - _src AS INT))"
             ).alias("_w"),
         )
-        .groupBy(key_col, "bucket")
+        .groupBy("key", "bucket")
         .agg(F.sum("_w").alias("dec"))
     )
 
 
-def markov_transitions(
-    df: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts_us",
-    type_col: str = "event_type",
-    tiebreak_col: str | None = None,
-) -> DataFrame:
+def markov_transitions(df: DataFrame, tiebreak_col: str | None = None) -> DataFrame:
     """First-order Markov transition matrix over per-key event sequences
     — the behavioral model behind next-action prediction, bot detection
     (impossible transition mass), and session simulation: count every
@@ -402,14 +374,14 @@ def markov_transitions(
 
     Output: (from_type, to_type, n, p_e6).
     """
-    order = [F.col(ts_col)] + (
+    order = [F.col("ts_us")] + (
         [F.col(tiebreak_col)] if tiebreak_col is not None else []
     )
-    w = Window.partitionBy(key_col).orderBy(*order)
+    w = Window.partitionBy("user_id").orderBy(*order)
     pairs = (
         df.select(
-            F.lag(type_col).over(w).alias("from_type"),
-            F.col(type_col).alias("to_type"),
+            F.lag("event_type").over(w).alias("from_type"),
+            F.col("event_type").alias("to_type"),
         )
         .filter(F.col("from_type").isNotNull())
         .groupBy("from_type", "to_type")
@@ -422,12 +394,7 @@ def markov_transitions(
     )
 
 
-def cohort_retention(
-    df: DataFrame,
-    bucket_us: int,
-    key_col: str = "user_id",
-    ts_us_col: str = "ts_us",
-) -> DataFrame:
+def cohort_retention(df: DataFrame, bucket_us: int) -> DataFrame:
     """Cohort retention matrix — the canonical product-analytics rollup:
     users are grouped by the time bucket of their FIRST activity (the
     cohort), and for each (cohort, offset) cell we count how many of
@@ -448,8 +415,8 @@ def cohort_retention(
     """
     active = (
         df.select(
-            F.col(key_col).alias("_u"),
-            F.floor(F.col(ts_us_col) / F.lit(bucket_us)).cast("long").alias("_b"),
+            F.col("user_id").alias("_u"),
+            F.floor(F.col("ts_us") / F.lit(bucket_us)).cast("long").alias("_b"),
         )
         .distinct()
     )
@@ -466,11 +433,7 @@ def cohort_retention(
     )
 
 
-def type_diversity(
-    df: DataFrame,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-) -> DataFrame:
+def type_diversity(df: DataFrame) -> DataFrame:
     """Per-key behavioral diversity via Gini impurity over the key's
     event-type distribution — the bot/spam signal next to Markov
     transition mass: a key doing one thing scores 0, a key spread evenly
@@ -486,18 +449,18 @@ def type_diversity(
     Shape at 10^12 events: two map-side-combinable groupBys — (key,
     type) counts, then per-key moments. No window, no distinct, no join.
 
-    Output: (key_col, n_events, n_types, gini_e6).
+    Output: (user_id, n_events, n_types, gini_e6).
     """
-    c = df.groupBy(key_col, type_col).agg(F.count(F.lit(1)).alias("_n"))
+    c = df.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("_n"))
     return (
-        c.groupBy(key_col)
+        c.groupBy("user_id")
         .agg(
             F.sum("_n").alias("n_events"),
             F.count(F.lit(1)).alias("n_types"),
             F.sum(F.expr("_n * _n")).alias("_ss"),
         )
         .select(
-            key_col,
+            "user_id",
             "n_events",
             "n_types",
             F.expr(
@@ -513,8 +476,6 @@ def burst_detect(
     bucket_us: int,
     window_buckets: int = 8,
     min_count: int = 2,
-    type_col: str = "event_type",
-    ts_us_col: str = "ts_us",
 ) -> DataFrame:
     """Burst detection per event type: score each (type, bucket) count
     against the type's trailing `window_buckets` buckets —
@@ -534,31 +495,31 @@ def burst_detect(
     aggregated frame. Types are cardinality-bounded; a degenerate
     single-type stream still windows over buckets-not-events.
 
-    Output: (type_col, bucket, n, trail_sum, burst_e6) for buckets with
+    Output: (event_type, bucket, n, trail_sum, burst_e6) for buckets with
     n >= min_count; trail_sum = events in [bucket−W, bucket−1].
     """
     w = window_buckets
     per = (
         df.select(
-            F.col(type_col),
-            F.floor(F.col(ts_us_col) / F.lit(bucket_us)).cast("long").alias("bucket"),
+            F.col("event_type"),
+            F.floor(F.col("ts_us") / F.lit(bucket_us)).cast("long").alias("bucket"),
         )
-        .groupBy(type_col, "bucket")
+        .groupBy("event_type", "bucket")
         .agg(F.count(F.lit(1)).alias("n"))
     )
     trail = (
-        Window.partitionBy(type_col)
+        Window.partitionBy("event_type")
         .orderBy("bucket")
         .rangeBetween(-w, -1)
     )
     return (
         per.select(
-            type_col, "bucket", "n",
+            "event_type", "bucket", "n",
             F.coalesce(F.sum("n").over(trail), F.lit(0).cast("long")).alias("trail_sum"),
         )
         .filter(F.col("n") >= min_count)
         .select(
-            type_col, "bucket", "n", "trail_sum",
+            "event_type", "bucket", "n", "trail_sum",
             F.expr(
                 f"n * {w} * 1000000 div greatest(trail_sum, 1)"
             ).cast("long").alias("burst_e6"),
@@ -566,12 +527,7 @@ def burst_detect(
     )
 
 
-def periodicity(
-    df: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts_us",
-    tiebreak_col: str | None = None,
-) -> DataFrame:
+def periodicity(df: DataFrame, tiebreak_col: str | None = None) -> DataFrame:
     """Per-key inter-arrival periodicity — the classic bot signal next to
     type_diversity and Markov transition mass: humans arrive with messy
     gaps, schedulers arrive on a clock. For each key, the dominant
@@ -589,31 +545,31 @@ def periodicity(
     groupBys over (key, gap) — gap cardinality per key is bounded by the
     key's event count, and the second agg is key-grain. No collect.
 
-    Output: (key_col, n_gaps, top_gap, top_n, share_e6); keys with a
+    Output: (user_id, n_gaps, top_gap, top_n, share_e6); keys with a
     single event (no gaps) are absent.
     """
-    order = [F.col(ts_col)] + (
+    order = [F.col("ts_us")] + (
         [F.col(tiebreak_col)] if tiebreak_col is not None else []
     )
-    w = Window.partitionBy(key_col).orderBy(*order)
+    w = Window.partitionBy("user_id").orderBy(*order)
     gaps = (
         df.select(
-            F.col(key_col),
-            (F.col(ts_col) - F.lag(ts_col).over(w)).alias("_gap"),
+            F.col("user_id"),
+            (F.col("ts_us") - F.lag("ts_us").over(w)).alias("_gap"),
         )
         .filter(F.col("_gap").isNotNull())
-        .groupBy(key_col, "_gap")
+        .groupBy("user_id", "_gap")
         .agg(F.count(F.lit(1)).alias("_n"))
     )
     return (
-        gaps.groupBy(key_col)
+        gaps.groupBy("user_id")
         .agg(
             F.sum("_n").alias("n_gaps"),
             F.max(F.struct(F.col("_n").alias("n"),
                            (-F.col("_gap")).alias("ng"))).alias("_w"),
         )
         .select(
-            key_col,
+            "user_id",
             "n_gaps",
             (-F.col("_w.ng")).alias("top_gap"),
             F.col("_w.n").alias("top_n"),
@@ -622,13 +578,7 @@ def periodicity(
     )
 
 
-def cusum_changepoint(
-    df: DataFrame,
-    bucket_us: int,
-    key_col: str = "event_type",
-    ts_us_col: str = "ts_us",
-    min_buckets: int = 4,
-) -> DataFrame:
+def cusum_changepoint(df: DataFrame, bucket_us: int, min_buckets: int = 4) -> DataFrame:
     """Single change-point detection per key via the integer CUSUM
     statistic over bucketed counts — "did this type's rate shift, and
     when?": for the key's ordered buckets b_1..b_n with counts c_i and
@@ -655,36 +605,36 @@ def cusum_changepoint(
     max-struct per key. Keys with fewer than `min_buckets` range buckets
     are dropped (no meaningful split).
 
-    Output: (key_col, n_buckets, total, split_bucket, d_max, cusum_e6)
+    Output: (event_type, n_buckets, total, split_bucket, d_max, cusum_e6)
     where split_bucket = the absolute bucket index of the LAST bucket of
     the left segment at the maximizing split.
     """
     per = (
         df.select(
-            F.col(key_col),
-            F.floor(F.col(ts_us_col) / F.lit(bucket_us)).cast("long").alias("_b"),
+            F.col("event_type"),
+            F.floor(F.col("ts_us") / F.lit(bucket_us)).cast("long").alias("_b"),
         )
-        .groupBy(key_col, "_b")
+        .groupBy("event_type", "_b")
         .agg(F.count(F.lit(1)).alias("_c"))
     )
-    rng = per.groupBy(key_col).agg(
+    rng = per.groupBy("event_type").agg(
         F.min("_b").alias("_b0"), F.max("_b").alias("_b1")
     )
     dense = (
         rng.select(
-            key_col,
+            "event_type",
             "_b0",
             F.explode(F.sequence(F.col("_b0"), F.col("_b1"))).alias("_b"),
         )
-        .join(per, [key_col, "_b"], "left")
+        .join(per, ["event_type", "_b"], "left")
         .select(
-            key_col, "_b0", "_b",
+            "event_type", "_b0", "_b",
             F.coalesce("_c", F.lit(0).cast("long")).alias("_c"),
         )
     )
-    w = Window.partitionBy(key_col).orderBy("_b")
+    w = Window.partitionBy("event_type").orderBy("_b")
     stats = dense.select(
-        key_col,
+        "event_type",
         (F.col("_b") - F.col("_b0") + 1).alias("_k"),
         F.col("_b"),
         F.sum("_c").over(
@@ -700,12 +650,12 @@ def cusum_changepoint(
     cand = stats.filter(
         (F.col("_k") < F.col("_n")) & (F.col("_n") >= min_buckets)
     ).select(
-        key_col, "_n", "_sn", "_b",
+        "event_type", "_n", "_sn", "_b",
         F.expr("abs(_n * _sk - _k * _sn)").alias("_d"),
         F.col("_k"),
     )
     return (
-        cand.groupBy(key_col)
+        cand.groupBy("event_type")
         .agg(
             F.max("_n").alias("n_buckets"),
             F.max("_sn").alias("total"),
@@ -713,7 +663,7 @@ def cusum_changepoint(
                            (-F.col("_b")).alias("nb"))).alias("_w"),
         )
         .select(
-            key_col,
+            "event_type",
             "n_buckets",
             "total",
             (-F.col("_w.nb")).alias("split_bucket"),
@@ -726,11 +676,7 @@ def cusum_changepoint(
     )
 
 
-def activity_profile(
-    df: DataFrame,
-    key_col: str = "event_type",
-    ts_us_col: str = "ts_us",
-) -> DataFrame:
+def activity_profile(df: DataFrame) -> DataFrame:
     """Hour-of-week activity profile per key — the crawl-scheduling /
     anomaly baseline: for each (key, day-of-week, hour-of-day) slot, the
     event count and its e6 share of the key's total. Day/hour come from
@@ -742,31 +688,26 @@ def activity_profile(
     the profile matrix is |keys|·168 — plus a broadcast-scale key-total
     join. No window.
 
-    Output: (key_col, dow, hour, n, share_e6).
+    Output: (event_type, dow, hour, n, share_e6).
     """
-    ts = F.col(ts_us_col)
-    days = F.expr(f"{ts_us_col} div 86400000000")
+    ts = F.col("ts_us")
+    days = F.expr("ts_us div 86400000000")
     slot = df.select(
-        F.col(key_col),
+        F.col("event_type"),
         F.pmod(days + 4, F.lit(7)).cast("int").alias("dow"),
-        F.expr(f"({ts_us_col} div 3600000000) % 24").cast("int").alias("hour"),
+        F.expr("(ts_us div 3600000000) % 24").cast("int").alias("hour"),
     )
-    n = slot.groupBy(key_col, "dow", "hour").agg(
+    n = slot.groupBy("event_type", "dow", "hour").agg(
         F.count(F.lit(1)).alias("n")
     )
-    tot = n.groupBy(key_col).agg(F.sum("n").alias("_tot"))
-    return n.join(F.broadcast(tot), key_col).select(
-        key_col, "dow", "hour", "n",
+    tot = n.groupBy("event_type").agg(F.sum("n").alias("_tot"))
+    return n.join(F.broadcast(tot), "event_type").select(
+        "event_type", "dow", "hour", "n",
         F.expr("n * 1000000 div _tot").alias("share_e6"),
     )
 
 
-def rolling_active_users(
-    df: DataFrame,
-    window_days: int = 7,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def rolling_active_users(df: DataFrame, window_days: int = 7) -> DataFrame:
     """EXACT rolling distinct actives (the DAU/WAU/MAU family): for every
     epoch day D in the data's range, the number of distinct users active
     on at least one of the `window_days` days ending at D. No sketches,
@@ -797,8 +738,8 @@ def rolling_active_users(
     # land on k−ε for an exact-midnight k·86400 and bucket a day early
     presence = (
         df.select(
-            F.col(user_col).alias("_u"),
-            _ntz_epoch_secs(F.col(ts_col)).alias("_secs"),
+            F.col("user_id").alias("_u"),
+            _ntz_epoch_secs(F.col("ts")).alias("_secs"),
         )
         .select("_u", F.expr("_secs div 86400").alias("_d"))
         .distinct()
@@ -823,20 +764,18 @@ def seasonal_naive_eval(
     series_col: str,
     day_col: str,
     value_col: str,
-    season: int = 7,
-    holdout: int = 14,
 ) -> DataFrame:
     """Forecast backtest against the SEASONAL-NAIVE baseline with MASE
     (Hyndman & Koehler's scale-free error) — the honesty check every
     traffic/trend forecast needs: a model is only useful if it beats
-    "same value as `season` periods ago", and MASE expresses the test
+    "same value as 7 periods ago", and MASE expresses the test
     error in units of that baseline's in-sample error (MASE < 1 beats
     it, scale-free across series of wildly different volume — the web
     corpus case).
 
-    The last `holdout` day-indices (global cutoff from the max day) are
-    the test window; forecast(t) = value(t − season). GAP-CORRECT by
-    construction: the lag is an EQUI-JOIN on (series, day − season),
+    The last 14 day-indices (global cutoff from the max day) are
+    the test window; forecast(t) = value(t − 7). GAP-CORRECT by
+    construction: the lag is an EQUI-JOIN on (series, day − 7),
     never a row-offset window — a missing day simply contributes no
     term, where lag(row) would silently misalign every series with
     holes (the windowed_events class of bug, avoided by design).
@@ -855,10 +794,10 @@ def seasonal_naive_eval(
         F.col(value_col).cast("long").alias("v"),
     )
     cutoff = s.agg(F.max("d").alias("m")).select(
-        (F.col("m") - F.lit(holdout) + 1).alias("cut")
+        (F.col("m") - F.lit(14) + 1).alias("cut")
     )
     lagged = s.select(
-        F.col("k"), (F.col("d") + F.lit(season)).alias("d"), F.col("v").alias("f")
+        F.col("k"), (F.col("d") + F.lit(7)).alias("d"), F.col("v").alias("f")
     )
     j = s.join(lagged, ["k", "d"]).crossJoin(F.broadcast(cutoff))
     test = j.filter(F.col("d") >= F.col("cut"))
@@ -1041,14 +980,11 @@ def holt_smooth(
     series_col: str,
     day_col: str,
     value_col: str,
-    alpha_e3: int = 300,
-    beta_e3: int = 100,
-    horizon: int = 7,
 ) -> DataFrame:
     """Holt double-exponential smoothing (level + trend), EXACT-INTEGER:
     the workhorse short-range forecaster for per-host / per-topic daily
     volumes — one smoothed level and trend per series, extrapolated
-    ``horizon`` steps. α/β are e3 fixed-point rationals and every
+    7 steps. α = 300 and β = 100 are e3 fixed-point rationals and every
     recurrence step is floor-division arithmetic on e3-scaled BIGINTs:
 
         l' = (α·v·1000 + (1000−α)·(l + b)) div 1000
@@ -1066,7 +1002,7 @@ def holt_smooth(
     convention; resample first for strict calendar smoothing).
 
     Output: (series, n, level_e3, trend_e3, forecast_e3 = level +
-    horizon·trend).
+    7·trend).
     """
     s = df.select(
         F.col(series_col).alias("k"),
@@ -1076,8 +1012,8 @@ def holt_smooth(
     arr = s.groupBy("k").agg(
         F.sort_array(F.collect_list(F.struct("d", "v"))).alias("_a")
     )
-    a, b1000 = alpha_e3, 1000 - alpha_e3
-    g, g1000 = beta_e3, 1000 - beta_e3
+    a, b1000 = 300, 700
+    g, g1000 = 100, 900
 
     # exact int64 floor-div(num, 1000): subtract the sign-normalized
     # remainder, then divide the now-exact multiple — round() snaps the
@@ -1114,7 +1050,7 @@ def holt_smooth(
         "n",
         F.col("_st.l").alias("level_e3"),
         F.col("_st.b").alias("trend_e3"),
-        (F.col("_st.l") + F.lit(horizon) * F.col("_st.b")).alias("forecast_e3"),
+        (F.col("_st.l") + F.lit(7) * F.col("_st.b")).alias("forecast_e3"),
     )
 
 

@@ -43,10 +43,10 @@ def lang_score(text: Column, lang: str) -> Column:
     return score / F.greatest(F.length(text), F.lit(1))
 
 
-def detect_language(df: DataFrame, text_col: str = "text") -> DataFrame:
+def detect_language(df: DataFrame) -> DataFrame:
     """Adds lang_pred + lang_conf via argmax over marker scores; 'und' when
     nothing scores."""
-    t = F.col(text_col)
+    t = F.col("text")
     scored = F.array(
         *[
             F.struct(lang_score(t, code).alias("score"), F.lit(code).alias("code"))
@@ -59,10 +59,10 @@ def detect_language(df: DataFrame, text_col: str = "text") -> DataFrame:
     ).withColumn("lang_conf", best["score"])
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_features(df: DataFrame) -> DataFrame:
     """Length / punctuation / stopword / repetition features + a combined
     quality score in [0,1] (heuristics in the C4/Gopher-rules tradition)."""
-    t = F.col(text_col)
+    t = F.col("text")
     n_chars = F.length(t)
     words = F.split(F.trim(t), r"\s+")
     n_words = F.when(F.length(F.trim(t)) == 0, F.lit(0)).otherwise(F.size(words))
@@ -92,9 +92,9 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
+def token_count(df: DataFrame) -> DataFrame:
     """Whitespace tokens + BPE-ish regex tokens (TOKEN_RE)."""
-    t = F.col(text_col)
+    t = F.col("text")
     ws = F.when(F.length(F.trim(t)) == 0, F.lit(0)).otherwise(
         F.size(F.split(F.trim(t), r"\s+"))
     )
@@ -104,9 +104,7 @@ def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def repetition_features(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def repetition_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Gopher-style repetition signals (Rae et al. 2021 §A1.1, adapted to
     word granularity since the corpus has no line structure): per document
 
@@ -131,7 +129,7 @@ def repetition_features(
     # can never silently disagree on token boundaries
     from pbf2json_spark.corpus import _words, ngrams_col
 
-    base = df.select(F.col(id_col).alias("_id"), _words(text_col).alias("_ws"))
+    base = df.select(F.col(id_col).alias("_id"), _words("text").alias("_ws"))
 
     wc = (
         base.select("_id", F.explode("_ws").alias("w"))
@@ -174,7 +172,7 @@ def repetition_features(
     )
 
 
-def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Deterministic 64-bit document fingerprint (content hash) + a
     normalized variant that ignores whitespace runs and case — the cheap
     near-dup key (rolling-hash-class fingerprinting).
@@ -190,7 +188,7 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
         engines (Spark md5 == DuckDB md5 on the same UTF-8 bytes), so the
         fingerprint is portable and oracle-checkable value-for-value.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     norm = F.lower(F.regexp_replace(F.trim(t), r"\s+", " "))
     return (
         df.withColumn("fp64", F.xxhash64(t))
@@ -240,13 +238,7 @@ def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("text_redacted", out).withColumn("n_redactions", n)
 
 
-def chunk_documents(
-    df: DataFrame,
-    chunk_size: int,
-    overlap: int = 0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def chunk_documents(df: DataFrame, chunk_size: int, overlap: int = 0) -> DataFrame:
     """Split each document's tokens into overlapping fixed-size chunks —
     the RAG / context-window preparation step (chunk_size tokens per
     chunk, consecutive chunks sharing `overlap` tokens).
@@ -270,7 +262,7 @@ def chunk_documents(
     if not 0 <= overlap < chunk_size:
         raise ValueError("require 0 <= overlap < chunk_size")
     stride = chunk_size - overlap
-    w = _words(text_col)
+    w = _words("text")
     nw = F.size(w)
     # smallest i with i*stride + chunk_size >= nw, plus one: 1 chunk for
     # short docs, ceil((nw - chunk_size)/stride) + 1 otherwise
@@ -288,7 +280,7 @@ def chunk_documents(
     start = F.col("_i").cast("long") * stride
     piece = F.slice(F.col("_w"), (start + 1).cast("int"), chunk_size)
     return exploded.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("_i").cast("long").alias("chunk_id"),
         start.alias("token_start"),
         F.least(start + chunk_size, F.size("_w").cast("long")).alias("token_end"),
@@ -296,19 +288,13 @@ def chunk_documents(
     )
 
 
-def remove_boilerplate_lines(
-    df: DataFrame,
-    min_docs: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n",
-) -> DataFrame:
+def remove_boilerplate_lines(df: DataFrame, min_docs: int) -> DataFrame:
     """Corpus-level line deduplication (the C4 / CCNet / RefinedWeb
     boilerplate pass): a line occurring in >= min_docs DISTINCT documents
     (cookie banners, nav bars, footers) is removed from every document;
     documents keep their surviving lines in original order.
 
-    Output: (id_col, text_clean, n_kept:long, n_dropped:long) — documents
+    Output: (doc_id, text_clean, n_kept:long, n_dropped:long) — documents
     whose every line is boilerplate still appear, with text_clean = '' and
     n_kept = 0 (the curation pipeline decides whether to drop empties; an
     operator that silently loses rows is a footgun).
@@ -324,42 +310,42 @@ def remove_boilerplate_lines(
     carries fingerprints only.
     """
     lines = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), sep)).alias("_pos", "_line"),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("_pos", "_line"),
     )
     fp = F.md5(F.col("_line").cast("binary")).alias("_fp")
     boiler = (
-        lines.select(F.col(id_col), fp)
+        lines.select(F.col("doc_id"), fp)
         .distinct()
         .groupBy("_fp")
         .agg(F.count(F.lit(1)).alias("_df"))
         .filter(F.col("_df") >= min_docs)
         .select("_fp")
     )
-    kept = lines.select(F.col(id_col), "_pos", "_line", fp).join(
+    kept = lines.select(F.col("doc_id"), "_pos", "_line", fp).join(
         boiler, "_fp", "left_anti"
     )
     n_lines = df.select(
-        F.col(id_col),
-        F.size(F.split(F.col(text_col), sep)).cast("long").alias("_n_total"),
+        F.col("doc_id"),
+        F.size(F.split(F.col("text"), "\n")).cast("long").alias("_n_total"),
     )
     rebuilt = (
-        kept.groupBy(id_col)
+        kept.groupBy("doc_id")
         .agg(
             F.array_sort(F.collect_list(F.struct("_pos", "_line"))).alias("_ls"),
         )
         .select(
-            F.col(id_col),
-            F.array_join(F.transform("_ls", lambda s: s["_line"]), sep).alias(
+            F.col("doc_id"),
+            F.array_join(F.transform("_ls", lambda s: s["_line"]), "\n").alias(
                 "text_clean"
             ),
             F.size("_ls").cast("long").alias("n_kept"),
         )
     )
     return (
-        n_lines.join(rebuilt, id_col, "left")
+        n_lines.join(rebuilt, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.coalesce("text_clean", F.lit("")).alias("text_clean"),
             F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
             (F.col("_n_total") - F.coalesce("n_kept", F.lit(0))).alias("n_dropped"),
@@ -367,7 +353,7 @@ def remove_boilerplate_lines(
     )
 
 
-def script_mix(df: DataFrame, text_col: str = "text") -> DataFrame:
+def script_mix(df: DataFrame) -> DataFrame:
     """Unicode script-mix profile — the homoglyph/spoofing and
     wrong-language-injection signal a web corpus runs at scan time:
     count characters in four script classes (Latin letters, digits,
@@ -385,7 +371,7 @@ def script_mix(df: DataFrame, text_col: str = "text") -> DataFrame:
     Output: (input columns minus text) + (n_latin, n_digit, n_cyr,
     n_cjk, n_marks, mix_e6).
     """
-    t = F.col(text_col)
+    t = F.col("text")
 
     def cnt(cls: str) -> Column:
         return (
@@ -393,7 +379,7 @@ def script_mix(df: DataFrame, text_col: str = "text") -> DataFrame:
         ).cast("long")
 
     out = df.select(
-        *[c for c in df.columns if c != text_col],
+        *[c for c in df.columns if c != "text"],
         cnt("[A-Za-z]").alias("n_latin"),
         cnt("[0-9]").alias("n_digit"),
         cnt("[Ѐ-ӿ]").alias("n_cyr"),
@@ -422,11 +408,7 @@ BENFORD_E6 = (301030, 176091, 124939, 96910, 79181, 66947, 57992, 51153,
               45757)
 
 
-def benford_profile(
-    df: DataFrame,
-    group_cols: list[str],
-    text_col: str = "text",
-) -> DataFrame:
+def benford_profile(df: DataFrame, group_cols: list[str]) -> DataFrame:
     """Benford first-digit anomaly score per group — the fabricated-data
     screen applied to web corpora: numeric tokens scraped from organic
     text (populations, prices, view counts) follow Benford's law; a host
@@ -451,7 +433,7 @@ def benford_profile(
     toks = df.select(
         *group_cols,
         F.explode(
-            F.expr(f"regexp_extract_all({text_col}, '[1-9][0-9]*', 0)")
+            F.expr("regexp_extract_all(text, '[1-9][0-9]*', 0)")
         ).alias("_tok"),
     ).select(*group_cols, F.substring("_tok", 1, 1).alias("_d"))
     oc = toks.groupBy(*group_cols, "_d").agg(
@@ -486,12 +468,7 @@ def benford_profile(
     )
 
 
-def blocklist_screen(
-    df: DataFrame,
-    terms: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def blocklist_screen(df: DataFrame, terms: list[str]) -> DataFrame:
     """Multi-term dictionary screen: per-document hit counts for every
     term in a broadcast blocklist (slurs/PII keywords/contamination
     canaries — the curation gate every corpus release runs). The
@@ -510,7 +487,7 @@ def blocklist_screen(
 
     Fits dictionaries up to ~10^4 terms (regex size is the bound); a
     larger lexicon wants the inverted-index route (corpus.term_search)
-    instead. Output: (id_col, term, n_hits) — docs without hits absent.
+    instead. Output: (doc_id, term, n_hits) — docs without hits absent.
     """
     import re as _re
 
@@ -519,20 +496,17 @@ def blocklist_screen(
     ordered = sorted({t.lower() for t in terms}, key=lambda t: (-len(t), t))
     pat = r"\b(" + "|".join(_re.escape(t) for t in ordered) + r")\b"
     hits = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(pat), 0)
+            F.regexp_extract_all(F.lower(F.col("text")), F.lit(pat), 0)
         ).alias("term"),
     )
-    return hits.groupBy(id_col, "term").agg(
+    return hits.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).alias("n_hits")
     )
 
 
-def blocklist_screen_sql(
-    terms: list[str], table: str = "documents",
-    text_col: str = "text", id_col: str = "doc_id",
-) -> str:
+def blocklist_screen_sql(terms: list[str]) -> str:
     """DuckDB mirror of blocklist_screen — same longest-first alternation,
     same lower()/boundary semantics (RE2 leftmost-longest == Java
     first-alternative under the longest-first ordering)."""
@@ -544,10 +518,10 @@ def blocklist_screen_sql(
     # quotes need escaping
     pat_sql = pat.replace("'", "''")
     return (
-        f"WITH h AS (SELECT {id_col}, unnest(regexp_extract_all("
-        f"lower({text_col}), '{pat_sql}')) AS term FROM {table}) "
-        f"SELECT {id_col}, term, CAST(count(*) AS BIGINT) AS n_hits "
-        f"FROM h GROUP BY {id_col}, term"
+        f"WITH h AS (SELECT doc_id, unnest(regexp_extract_all("
+        f"lower(text), '{pat_sql}')) AS term FROM documents) "
+        f"SELECT doc_id, term, CAST(count(*) AS BIGINT) AS n_hits "
+        f"FROM h GROUP BY doc_id, term"
     )
 
 
@@ -556,27 +530,21 @@ def blocklist_screen_sql(
 # base^(window-1-j) % mod for the rolling polynomial — LITERAL constants
 # shared with the SQL oracle (base 257, mod 2^31-1, window 8)
 CDC_MOD = 2_147_483_647
+CDC_WINDOW = 8
 
 
 def _cdc_pows(base: int, window: int, mod: int) -> list[int]:
     return [pow(base, window - 1 - j, mod) for j in range(window)]
 
 
-CDC_POW = _cdc_pows(257, 8, CDC_MOD)
+CDC_POW = _cdc_pows(257, CDC_WINDOW, CDC_MOD)
 
 
-def cdc_chunks(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 8,
-    mask: int = 63,
-    target: int = 17,
-) -> DataFrame:
+def cdc_chunks(df: DataFrame) -> DataFrame:
     """Content-defined chunking — the storage-dedup / incremental-sync
     primitive (LBFS, rsync, FastCDC): cut points are chosen by the
-    CONTENT (a rolling polynomial hash over a ``window``-char sliding
-    window hits ``target`` under ``mask``), so inserting one byte shifts
+    CONTENT (a rolling polynomial hash over a CDC_WINDOW-char sliding
+    window is 17 mod 64), so inserting one byte shifts
     only the chunk it lands in — fixed-size blocks would shift every
     boundary after the edit. Chunk fingerprints then feed exact/near-dup
     matching across document versions (the crawl-recrawl delta problem).
@@ -590,33 +558,29 @@ def cdc_chunks(
     list_* lambdas over the same integers — bit-exact, including the
     md5 chunk fingerprint (substr is char-based in both engines).
 
-    Expected chunk length = mask+1 chars (geometric); the final partial
-    chunk always ends at len(text). Docs shorter than ``window`` become
+    Expected chunk length = 64 chars (geometric); the final partial
+    chunk always ends at len(text). Docs shorter than CDC_WINDOW become
     a single chunk; empty/NULL texts emit nothing.
 
     Output: (id, chunk_start, chunk_end [1-based inclusive], chunk_len,
     chunk_md5).
     """
-    if window != 8:
-        pows = _cdc_pows(257, window, CDC_MOD)
-    else:
-        pows = CDC_POW
-    t, d = F.col(text_col), F.col(id_col)
+    t, d = F.col("text"), F.col("doc_id")
     ln = F.length(t)
 
     def win_hash(i):
         s = None
-        for j, p in enumerate(pows):
+        for j, p in enumerate(CDC_POW):
             term = F.ascii(F.substring(t, i + F.lit(j), 1)).cast("long") * F.lit(p)
             s = term if s is None else s + term
         return s % F.lit(CDC_MOD)
 
     positions = F.when(
-        ln >= window, F.sequence(F.lit(1), ln - window + 1)
+        ln >= CDC_WINDOW, F.sequence(F.lit(1), ln - CDC_WINDOW + 1)
     ).otherwise(F.array().cast("array<int>"))
     cuts = F.transform(
-        F.filter(positions, lambda i: win_hash(i) % (mask + 1) == target),
-        lambda i: (i + window - 1).cast("long"),
+        F.filter(positions, lambda i: win_hash(i) % 64 == 17),
+        lambda i: (i + CDC_WINDOW - 1).cast("long"),
     )
     # each derived array is materialized as its own projection column —
     # referencing the raw expression repeatedly would duplicate the whole
@@ -709,7 +673,7 @@ def soundex_sql(expr: str) -> str:
 # --- readability (Flesch / Flesch-Kincaid) -----------------------------------------
 
 
-def readability(df: DataFrame, text_col: str = "text") -> DataFrame:
+def readability(df: DataFrame) -> DataFrame:
     """Flesch-Kincaid readability surface — the classic text-complexity
     quality signal (a pre-LLM heuristic still run by every corpus
     pipeline: too-low grade = boilerplate lists, too-high = OCR noise /
@@ -739,7 +703,7 @@ def readability(df: DataFrame, text_col: str = "text") -> DataFrame:
     Output: df columns + n_words, n_sents, n_syll, fk_grade_e3,
     flesch_e3.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     has = t.isNotNull() & (F.length(F.trim(t)) > 0)
     w = F.when(has, F.size(F.split(F.trim(t), r"\s+"))).cast("long")
     s = F.when(has, F.greatest(F.regexp_count(t, F.lit(r"[.!?]+")), F.lit(1))).cast("long")
@@ -763,9 +727,9 @@ def readability(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out
 
 
-def readability_sql(table: str = "documents", text_col: str = "text") -> str:
+def readability_sql() -> str:
     """DuckDB mirror of `readability` (composable oracle fragment)."""
-    t = text_col
+    t = "text"
     has = f"({t} IS NOT NULL AND length(trim({t})) > 0)"
     w = (f"CASE WHEN {has} THEN len(string_split_regex(trim({t}), '\\s+')) END")
     s = (f"CASE WHEN {has} THEN greatest(len(regexp_extract_all({t}, "
@@ -775,7 +739,7 @@ def readability_sql(table: str = "documents", text_col: str = "text") -> str:
     return (
         f"WITH r0 AS (SELECT *, CAST({w} AS BIGINT) AS n_words, "
         f"CAST({s} AS BIGINT) AS n_sents, CAST({y} AS BIGINT) AS n_syll "
-        f"FROM {table}), "
+        f"FROM documents), "
         "r1 AS (SELECT *, n_words * 1000 // n_sents AS wps, "
         "n_syll * 1000 // n_words AS spw FROM r0) "
         "SELECT * EXCLUDE (wps, spw), "
@@ -794,7 +758,7 @@ def readability_sql(table: str = "documents", text_col: str = "text") -> str:
 MOJIBAKE_MARKERS = ["Ã", "â€", "Â", "�", "ï»¿"]
 
 
-def mojibake_screen(df: DataFrame, text_col: str = "text") -> DataFrame:
+def mojibake_screen(df: DataFrame) -> DataFrame:
     """Encoding-artifact screen — the data-cleaning gate for crawled
     text: double-encoded UTF-8 (the classic 'Ã©' for 'é'), replacement
     characters, leaked BOMs. Pure Column length-replace counting (the
@@ -803,7 +767,7 @@ def mojibake_screen(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     Output: df columns + mojibake_hits (BIGINT), mojibake_flag.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     total = None
     for m in MOJIBAKE_MARKERS:
         c = (
@@ -829,13 +793,7 @@ def mojibake_sql(text_expr: str = "text") -> str:
     return "(" + " + ".join(parts) + ")"
 
 
-def winnow_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    w: int = 4,
-) -> DataFrame:
+def winnow_fingerprints(df: DataFrame, k: int = 8, w: int = 4) -> DataFrame:
     """Winnowing document fingerprints (Schleimer-Wilkerson-Aiken 2003,
     the MOSS algorithm): hash every k-gram, slide a window of w hashes,
     select the RIGHTMOST minimal hash per window, keep the distinct
@@ -862,7 +820,7 @@ def winnow_fingerprints(
     if k < 1 or w < 1:
         raise ValueError("k >= 1 and w >= 1")
     pows = _cdc_pows(257, k, CDC_MOD)
-    t, d = F.col(text_col), F.col(id_col)
+    t, d = F.col("text"), F.col("doc_id")
     ln = F.length(t)
 
     def gram_hash(i):

@@ -34,13 +34,7 @@ def _step_dist(lat: str, lon: str, plat: Column, plon: Column) -> Column:
     return F.sqrt(dla * dla + dlo * dlo)
 
 
-def travel_stats(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
+def travel_stats(df: DataFrame) -> DataFrame:
     """Per-user trajectory summary: point count, total path length
     (planar degrees, integer-scaled sum), and the longest single step.
 
@@ -48,17 +42,17 @@ def travel_stats(
     Rows must have unique (user, ts) for a deterministic order (ties are
     broken by nothing — assert upstream or pre-dedupe).
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col)
-    plat, plon = F.lag(lat_col).over(w), F.lag(lon_col).over(w)
-    step = _step_dist(lat_col, lon_col, plat, plon)
+    w = Window.partitionBy("user_id").orderBy("ts")
+    plat, plon = F.lag("lat").over(w), F.lag("lon").over(w)
+    step = _step_dist("lat", "lon", plat, plon)
     stepped = df.select(
-        F.col(user_col),
+        F.col("user_id"),
         F.when(plat.isNull(), F.lit(0).cast("long"))
         .otherwise(F.floor(step * _SCALE).cast("long"))
         .alias("_step_e9"),
         F.when(plat.isNull(), F.lit(0.0)).otherwise(step).alias("_step"),
     )
-    return stepped.groupBy(user_col).agg(
+    return stepped.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_points"),
         F.sum("_step_e9").alias("total_dist_e9"),
         F.max("_step").alias("max_step_deg"),
@@ -69,10 +63,6 @@ def stay_points(
     df: DataFrame,
     dist_thresh_deg: float,
     min_points: int = 2,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
 ) -> DataFrame:
     """Dwell detection: maximal runs of consecutive points (per user, in
     time order) where every step moves <= dist_thresh_deg; runs with
@@ -90,39 +80,35 @@ def stay_points(
     (lag + cumsum over the user window), then one groupBy per (user, run).
     Same single-exchange shape as temporal.sessionize.
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col)
-    plat, plon = F.lag(lat_col).over(w), F.lag(lon_col).over(w)
-    step = _step_dist(lat_col, lon_col, plat, plon)
+    w = Window.partitionBy("user_id").orderBy("ts")
+    plat, plon = F.lag("lat").over(w), F.lag("lon").over(w)
+    step = _step_dist("lat", "lon", plat, plon)
     new_run = F.when(
         plat.isNull() | (step > F.lit(dist_thresh_deg)), F.lit(1)
     ).otherwise(F.lit(0))
     runs = df.select(
-        F.col(user_col),
-        F.col(ts_col),
-        F.col(lat_col),
-        F.col(lon_col),
+        F.col("user_id"),
+        F.col("ts"),
+        F.col("lat"),
+        F.col("lon"),
         (F.sum(new_run).over(w) - 1).cast("long").alias("stay_id"),
     )
     return (
-        runs.groupBy(user_col, "stay_id")
+        runs.groupBy("user_id", "stay_id")
         .agg(
             F.count(F.lit(1)).alias("n_points"),
-            F.min(ts_col).alias("ts_start"),
-            F.max(ts_col).alias("ts_end"),
-            F.min(lat_col).alias("lat_min"),
-            F.max(lat_col).alias("lat_max"),
-            F.min(lon_col).alias("lon_min"),
-            F.max(lon_col).alias("lon_max"),
+            F.min("ts").alias("ts_start"),
+            F.max("ts").alias("ts_end"),
+            F.min("lat").alias("lat_min"),
+            F.max("lat").alias("lat_max"),
+            F.min("lon").alias("lon_min"),
+            F.max("lon").alias("lon_max"),
         )
         .filter(F.col("n_points") >= min_points)
     )
 
 
-def od_flows(
-    stays: DataFrame,
-    res: int,
-    user_col: str = "user_id",
-) -> DataFrame:
+def od_flows(stays: DataFrame, res: int) -> DataFrame:
     """Origin-destination matrix from stay_points output: consecutive
     stays of a user (in ts_start order) form a trip; trips aggregate to
     flows between the grid cells (at `res`) of the stays' bbox midpoints.
@@ -142,8 +128,8 @@ def od_flows(
     mid_lat = (F.col("lat_min") + F.col("lat_max")) / F.lit(2.0)
     mid_lon = (F.col("lon_min") + F.col("lon_max")) / F.lit(2.0)
     x, y = cells.xy_cols(mid_lat, mid_lon, res)
-    s = stays.select(F.col(user_col), F.col("ts_start"), x.alias("x"), y.alias("y"))
-    w = Window.partitionBy(user_col).orderBy("ts_start")
+    s = stays.select(F.col("user_id"), F.col("ts_start"), x.alias("x"), y.alias("y"))
+    w = Window.partitionBy("user_id").orderBy("ts_start")
     t = s.select(
         F.lag("x").over(w).alias("from_x"),
         F.lag("y").over(w).alias("from_y"),
@@ -155,12 +141,7 @@ def od_flows(
     )
 
 
-def geofence_transitions(
-    points: DataFrame,
-    fences: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def geofence_transitions(points: DataFrame, fences: DataFrame) -> DataFrame:
     """Geofence enter/exit detection — the event-generating half of a
     geofencing product ("alert when a device enters the depot"): given
     per-user pings and a set of rectangular fences (fence_id, lat_min,
@@ -176,28 +157,28 @@ def geofence_transitions(
     spatial.pip_join's cell cover and feed the survivors here. Pings
     never self-join.
 
-    Precondition: (user_col, ts_col) is unique (collapse duplicate
+    Precondition: (user_id, ts) is unique (collapse duplicate
     timestamps first, as _traj_events does) — otherwise the lag order,
     hence the transition sequence, is undefined in ANY engine.
 
-    Output: user_col, fence_id, ts, event ('enter' | 'exit').
+    Output: user_id, fence_id, ts, event ('enter' | 'exit').
     """
     inside = (
         F.col("lat").between(F.col("lat_min"), F.col("lat_max"))
         & F.col("lon").between(F.col("lon_min"), F.col("lon_max"))
     )
     flagged = points.crossJoin(F.broadcast(fences)).select(
-        F.col(user_col), F.col("fence_id"), F.col(ts_col), inside.alias("_in")
+        F.col("user_id"), F.col("fence_id"), F.col("ts"), inside.alias("_in")
     )
-    w = Window.partitionBy(user_col, "fence_id").orderBy(ts_col)
+    w = Window.partitionBy("user_id", "fence_id").orderBy("ts")
     prev = F.coalesce(F.lag("_in").over(w), F.lit(False))
     return (
         flagged.withColumn("_prev", prev)
         .filter(F.col("_in") != F.col("_prev"))
         .select(
-            F.col(user_col),
+            F.col("user_id"),
             F.col("fence_id"),
-            F.col(ts_col),
+            F.col("ts"),
             F.when(F.col("_in"), F.lit("enter")).otherwise(F.lit("exit")).alias("event"),
         )
     )
@@ -207,10 +188,6 @@ def co_location(
     df: DataFrame,
     res: int,
     bucket_us: int,
-    user_col: str = "user_id",
-    ts_us_col: str = "ts_us",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
     max_group: int = 64,
 ) -> DataFrame:
     """Co-location (contact-graph) pairs: users observed in the SAME grid
@@ -242,12 +219,12 @@ def co_location(
     """
     from pbf2json_spark import cells as _cells
 
-    x, y = _cells.xy_cols(F.col(lat_col), F.col(lon_col), res)
+    x, y = _cells.xy_cols(F.col("lat"), F.col("lon"), res)
     pts = df.select(
-        F.col(user_col).alias("u"),
+        F.col("user_id").alias("u"),
         x.alias("cx"),
         y.alias("cy"),
-        F.floor(F.col(ts_us_col) / F.lit(bucket_us)).cast("long").alias("bucket"),
+        F.floor(F.col("ts_us") / F.lit(bucket_us)).cast("long").alias("bucket"),
     ).distinct()
     key = ["cx", "cy", "bucket"]
     small = (
@@ -267,12 +244,7 @@ def co_location(
     )
 
 
-def radius_of_gyration(
-    df: DataFrame,
-    user_col: str = "user_id",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
+def radius_of_gyration(df: DataFrame) -> DataFrame:
     """Radius of gyration (squared) per user — the classic mobility
     dispersion metric (Gonzalez et al., "Understanding individual human
     mobility patterns"): mean squared distance of a user's pings from
@@ -293,20 +265,20 @@ def radius_of_gyration(
     Shape at 10^12 pings: ONE map-side-combinable groupBy carrying five
     integer partials per user. No window, no self-join.
 
-    Output: (user_col, n_points, rog2_e12) — squared dispersion in
+    Output: (user_id, n_points, rog2_e12) — squared dispersion in
     squared micro-degrees (1e-12 deg²).
     """
-    xi = F.floor(F.col(lat_col) * F.lit(1.0e6)).cast("long")
-    yi = F.floor(F.col(lon_col) * F.lit(1.0e6)).cast("long")
+    xi = F.floor(F.col("lat") * F.lit(1.0e6)).cast("long")
+    yi = F.floor(F.col("lon") * F.lit(1.0e6)).cast("long")
     agg = (
         df.select(
-            F.col(user_col),
+            F.col("user_id"),
             xi.alias("_x"),
             yi.alias("_y"),
             (xi * xi).cast("decimal(38,0)").alias("_xx"),
             (yi * yi).cast("decimal(38,0)").alias("_yy"),
         )
-        .groupBy(user_col)
+        .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_points"),
             F.sum("_x").alias("_sx"),
@@ -316,7 +288,7 @@ def radius_of_gyration(
         )
     )
     return agg.select(
-        user_col,
+        "user_id",
         "n_points",
         F.expr(
             "CAST(((n_points * _sxx - CAST(_sx AS DECIMAL(38,0)) * _sx) + "
@@ -326,14 +298,7 @@ def radius_of_gyration(
     )
 
 
-def cell_dwell(
-    df: DataFrame,
-    res: int,
-    user_col: str = "user_id",
-    ts_us_col: str = "ts_us",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
+def cell_dwell(df: DataFrame, res: int) -> DataFrame:
     """Per-cell dwell time: the time between consecutive pings of a user
     is attributed to the grid cell of the EARLIER ping (the standard
     last-known-position convention), then aggregated per cell — where do
@@ -350,10 +315,10 @@ def cell_dwell(
     """
     from pbf2json_spark import cells as _cells
 
-    x, y = _cells.xy_cols(F.col(lat_col), F.col(lon_col), res)
+    x, y = _cells.xy_cols(F.col("lat"), F.col("lon"), res)
     pts = df.select(
-        F.col(user_col).alias("_u"),
-        F.col(ts_us_col).alias("_ts"),
+        F.col("user_id").alias("_u"),
+        F.col("ts_us").alias("_ts"),
         x.alias("cx"),
         y.alias("cy"),
     )
@@ -372,14 +337,7 @@ def cell_dwell(
     )
 
 
-def cell_transitions(
-    traj: DataFrame,
-    res: int,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
+def cell_transitions(traj: DataFrame, res: int) -> DataFrame:
     """Cell-transition graph — the spatial twin of
     temporal.markov_transitions: count every consecutive movement
     between DIFFERENT grid cells across all users, row-normalized per
@@ -398,11 +356,11 @@ def cell_transitions(
     """
     from . import cells as _cells
 
-    x, y = _cells.xy_cols(F.col(lat_col), F.col(lon_col), res)
-    w = Window.partitionBy(key_col).orderBy(ts_col)
+    x, y = _cells.xy_cols(F.col("lat"), F.col("lon"), res)
+    w = Window.partitionBy("user_id").orderBy("ts")
     steps = (
         traj.select(
-            F.col(key_col), F.col(ts_col), x.alias("cx"), y.alias("cy")
+            F.col("user_id"), F.col("ts"), x.alias("cx"), y.alias("cy")
         )
         .select(
             F.lag("cx").over(w).alias("from_cx"),
@@ -429,9 +387,6 @@ def cell_transitions(
 def cell_jaccard(
     df: DataFrame,
     res: int,
-    user_col: str = "user_id",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
     min_inter: int = 1,
     max_df: int | None = None,
 ) -> DataFrame:
@@ -464,9 +419,9 @@ def cell_jaccard(
 
     from pyspark.sql.window import Window
 
-    x, y = _cells.xy_cols(F.col(lat_col), F.col(lon_col), res)
+    x, y = _cells.xy_cols(F.col("lat"), F.col("lon"), res)
     pts = df.select(
-        F.col(user_col).alias("u"), x.alias("cx"), y.alias("cy")
+        F.col("user_id").alias("u"), x.alias("cx"), y.alias("cy")
     ).distinct()
     if max_df is not None:
         # window-count thin instead of agg + semi-join: one exchange on
@@ -506,14 +461,7 @@ def cell_jaccard(
     )
 
 
-def gravity_flows(
-    flows: DataFrame,
-    from_x: str = "from_x",
-    from_y: str = "from_y",
-    to_x: str = "to_x",
-    to_y: str = "to_y",
-    n_col: str = "n_trips",
-) -> DataFrame:
+def gravity_flows(flows: DataFrame) -> DataFrame:
     """Gravity-model screen over an OD flow matrix (od_flows /
     cell_transitions output): the expected flow between two cells is
     proportional to origin outflow × destination inflow, damped by
@@ -535,9 +483,9 @@ def gravity_flows(
     expected_e6, lift_e6).
     """
     f = flows.select(
-        F.col(from_x).alias("fx"), F.col(from_y).alias("fy"),
-        F.col(to_x).alias("tx"), F.col(to_y).alias("ty"),
-        F.col(n_col).cast("long").alias("n"),
+        F.col("from_x").alias("fx"), F.col("from_y").alias("fy"),
+        F.col("to_x").alias("tx"), F.col("to_y").alias("ty"),
+        F.col("n_trips").cast("long").alias("n"),
     )
     out_m = f.groupBy("fx", "fy").agg(F.sum("n").alias("outflow"))
     in_m = f.groupBy("tx", "ty").agg(F.sum("n").alias("inflow"))
@@ -556,8 +504,8 @@ def gravity_flows(
         )
     )
     return j.select(
-        F.col("fx").alias(from_x), F.col("fy").alias(from_y),
-        F.col("tx").alias(to_x), F.col("ty").alias(to_y),
+        F.col("fx").alias("from_x"), F.col("fy").alias("from_y"),
+        F.col("tx").alias("to_x"), F.col("ty").alias("to_y"),
         "n", "d_cheb", "outflow", "inflow",
         F.expr(
             f"CAST(CAST(outflow AS {d38}) * inflow * 1000000 "
@@ -586,13 +534,7 @@ _HEADING_CASE = (
 )
 
 
-def heading_mix(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
+def heading_mix(df: DataFrame) -> DataFrame:
     """Per-user movement-direction profile: each consecutive step
     classifies into one of 8 compass octants (or 'O' for a stationary
     repeat), and the output counts steps per (user, heading) — the
@@ -615,20 +557,20 @@ def heading_mix(
     nothing (no step exists). Rows need unique (user, ts) upstream for a
     deterministic lag order, as with every trajectory operator here.
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col)
-    plat, plon = F.lag(lat_col).over(w), F.lag(lon_col).over(w)
+    w = Window.partitionBy("user_id").orderBy("ts")
+    plat, plon = F.lag("lat").over(w), F.lag("lon").over(w)
     stepped = df.select(
-        F.col(user_col),
-        (F.col(lat_col) - plat).alias("_dla"),
-        (F.col(lon_col) - plon).alias("_dlo"),
+        F.col("user_id"),
+        (F.col("lat") - plat).alias("_dla"),
+        (F.col("lon") - plon).alias("_dlo"),
     ).filter(F.col("_dla").isNotNull())
     return (
         stepped.select(
-            user_col,
+            "user_id",
             F.expr(_HEADING_CASE.format(dla="_dla", dlo="_dlo"))
             .alias("heading"),
         )
-        .groupBy(user_col, "heading")
+        .groupBy("user_id", "heading")
         .agg(F.count(F.lit(1)).alias("n_steps"))
     )
 
@@ -638,28 +580,23 @@ def _banded_pairs(
     res: int,
     combine,
     out_col: str,
-    user_col: str,
-    ts_col: str,
-    lat_col: str,
-    lon_col: str,
-    max_len: int,
     band: int,
-    min_inter: int,
     max_df: int | None,
 ) -> DataFrame:
     """The banded sequence-alignment DP behind dtw_pairs and frechet_pairs:
     per-user cell sequences, cell_jaccard candidate pairs, and per pair the
     Sakoe-Chiba recurrence cur[c] = combine(cost(r, c), min(prev[c],
     prev[c-1], cur[c-1])) over integer Chebyshev cell cost, emitted as
-    `out_col` (-1 when the band cannot align the lengths)."""
+    `out_col` (-1 when the band cannot align the lengths). Sequences
+    keep their first 64 cells."""
     from pyspark.sql.functions import pandas_udf
 
     from pbf2json_spark import cells as _cells
 
-    x, y = _cells.xy_cols(F.col(lat_col), F.col(lon_col), res)
+    x, y = _cells.xy_cols(F.col("lat"), F.col("lon"), res)
     w = Window.partitionBy("_u").orderBy("_ts")
     seqd = df.select(
-        F.col(user_col).alias("_u"), F.col(ts_col).alias("_ts"),
+        F.col("user_id").alias("_u"), F.col("ts").alias("_ts"),
         x.alias("_x"), y.alias("_y"),
     ).select(
         "_u", "_ts", "_x", "_y",
@@ -671,16 +608,13 @@ def _banded_pairs(
     seqs = seqd.groupBy("_u").agg(
         F.slice(
             F.array_sort(F.collect_list(F.struct("_ts", "_x", "_y"))),
-            1, max_len,
+            1, 64,
         ).alias("_seq")
     ).select(
         "_u",
         F.col("_seq._x").alias("_xs"), F.col("_seq._y").alias("_ys"),
     )
-    pairs = cell_jaccard(
-        df, res, user_col=user_col, lat_col=lat_col, lon_col=lon_col,
-        min_inter=min_inter, max_df=max_df,
-    ).select("user_a", "user_b")
+    pairs = cell_jaccard(df, res, max_df=max_df).select("user_a", "user_b")
 
     @pandas_udf("long")
     def _align(xa: pd.Series, ya: pd.Series, xb: pd.Series, yb: pd.Series
@@ -735,13 +669,7 @@ def _banded_pairs(
 def dtw_pairs(
     df: DataFrame,
     res: int,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    max_len: int = 64,
     band: int = 8,
-    min_inter: int = 1,
     max_df: int | None = None,
 ) -> DataFrame:
     """Banded Dynamic Time Warping distance between candidate trajectory
@@ -754,13 +682,13 @@ def dtw_pairs(
 
     Pipeline: (1) per-user cell sequence at `res` — time-ordered, with
     consecutive repeats collapsed (dwell contributes once), truncated to
-    the FIRST `max_len` cells (deterministic, documented cap); (2)
+    the FIRST 64 cells (deterministic, documented cap); (2)
     candidate pairs from `cell_jaccard` (shared-cell inverted index,
     `max_df` hot-cell guard — never all-pairs); (3) per pair, the
     Sakoe-Chiba banded DTW over integer cell coords with Chebyshev step
     cost — all-integer DP, so the result is engine/partition-exact. Cost
-    per pair ≤ max_len·(2·band+1) cells, a bounded kernel; sequences
-    cross the shuffle as ≤ max_len-int arrays, never raw pings. No SQL
+    per pair ≤ 64·(2·band+1) cells, a bounded kernel; sequences
+    cross the shuffle as ≤ 64-int arrays, never raw pings. No SQL
     oracle (iterative DP is not relational) — correctness is pytest vs a
     brute-force full-matrix DP.
 
@@ -769,19 +697,10 @@ def dtw_pairs(
     length difference (|len_a − len_b| > band), mirroring the standard
     banded-DTW domain restriction.
     """
-    return _banded_pairs(
-        df, res, operator.add, "dtw", user_col, ts_col, lat_col, lon_col,
-        max_len, band, min_inter, max_df,
-    )
+    return _banded_pairs(df, res, operator.add, "dtw", band, max_df)
 
 
-def hausdorff_pairs(
-    traj: DataFrame,
-    pairs: DataFrame,
-    user_col: str = "user_id",
-    a_col: str = "a",
-    b_col: str = "b",
-) -> DataFrame:
+def hausdorff_pairs(traj: DataFrame, pairs: DataFrame) -> DataFrame:
     """Discrete Hausdorff distance between trajectories (or any point
     sets): H(A,B) = max(h(A,B), h(B,A)), h(A,B) = max over p∈A of
     min over q∈B of squared degree distance — the shape-similarity
@@ -801,10 +720,10 @@ def hausdorff_pairs(
     asymmetric screens ("A is covered by B").
     """
     t = traj.select(
-        F.col(user_col).alias("_u"), F.col("lat").alias("_la"),
+        F.col("user_id").alias("_u"), F.col("lat").alias("_la"),
         F.col("lon").alias("_lo"),
     )
-    p = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
+    p = pairs.select(F.col("a"), F.col("b"))
 
     def directed(src: str, dst: str, name: str) -> DataFrame:
         pts = (
@@ -834,13 +753,7 @@ def hausdorff_pairs(
 def frechet_pairs(
     df: DataFrame,
     res: int,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    max_len: int = 64,
     band: int = 8,
-    min_inter: int = 1,
     max_df: int | None = None,
 ) -> DataFrame:
     """Banded discrete Fréchet distance between candidate trajectory
@@ -862,7 +775,4 @@ def frechet_pairs(
     frechet = banded discrete Fréchet (LONG, Chebyshev cell units), or
     -1 when the band cannot align the length difference.
     """
-    return _banded_pairs(
-        df, res, max, "frechet", user_col, ts_col, lat_col, lon_col,
-        max_len, band, min_inter, max_df,
-    )
+    return _banded_pairs(df, res, max, "frechet", band, max_df)

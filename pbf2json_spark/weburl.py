@@ -87,15 +87,13 @@ def host_of(url: Column) -> Column:
     return url_parts(url)["host"]
 
 
-def with_norm_url(df: DataFrame, url_col: str = "url") -> DataFrame:
-    return df.withColumn("norm_url", normalize_url(F.col(url_col))).withColumn(
-        "host", host_of(F.col(url_col))
+def with_norm_url(df: DataFrame) -> DataFrame:
+    return df.withColumn("norm_url", normalize_url(F.col("url"))).withColumn(
+        "host", host_of(F.col("url"))
     )
 
 
-def latest_per_url(
-    df: DataFrame, url_col: str = "url", ts_col: str = "warc_ts"
-) -> DataFrame:
+def latest_per_url(df: DataFrame) -> DataFrame:
     """Crawl dedup: one row per canonical URL — the latest capture wins,
     ties broken by the lexicographically greatest raw URL (deterministic on
     any partitioning). Output: (norm_url, url, warc_ts).
@@ -108,18 +106,18 @@ def latest_per_url(
     partial+final SortAggregate — same exchange volume, sort is per-task;
     max_by plans identically (verified), so there is no cheaper arg-max.
     """
-    n = with_norm_url(df, url_col)
+    n = with_norm_url(df)
     best = n.groupBy("norm_url").agg(
-        F.max(F.struct(F.col(ts_col), F.col(url_col))).alias("b")
+        F.max(F.struct(F.col("warc_ts"), F.col("url"))).alias("b")
     )
     return best.select(
         "norm_url",
-        F.col(f"b.{url_col}").alias(url_col),
-        F.col(f"b.{ts_col}").alias(ts_col),
+        F.col("b.url").alias("url"),
+        F.col("b.warc_ts").alias("warc_ts"),
     )
 
 
-def host_stats(df: DataFrame, url_col: str = "url", ts_col: str = "warc_ts") -> DataFrame:
+def host_stats(df: DataFrame) -> DataFrame:
     """Per-host crawl stats: captures, distinct canonical URLs, last-seen.
 
     approx(distinct) is deliberately NOT used: the oracle compares values
@@ -127,25 +125,20 @@ def host_stats(df: DataFrame, url_col: str = "url", ts_col: str = "warc_ts") -> 
     norm_url) pairs — tiny relative to page bodies. A 100 TB caller who
     can tolerate ±2% should swap in approx_count_distinct.
     """
-    n = with_norm_url(df, url_col)
+    n = with_norm_url(df)
     return n.groupBy("host").agg(
         F.count(F.lit(1)).alias("captures"),
         F.countDistinct("norm_url").alias("distinct_urls"),
-        F.max(F.col(ts_col)).alias("last_seen"),
+        F.max(F.col("warc_ts")).alias("last_seen"),
     )
 
 
-def scd2_history(
-    df: DataFrame,
-    key: str = "norm_url",
-    ts_col: str = "warc_ts",
-    fp: str = "fp",
-) -> DataFrame:
+def scd2_history(df: DataFrame) -> DataFrame:
     """Slowly-changing-dimension (type 2) history of a crawl: collapse each
     key's capture sequence into content-version validity intervals. A run
     of consecutive captures with the same fingerprint becomes ONE row:
 
-      (key, fp, valid_from, valid_to, is_current)
+      (norm_url, fp, valid_from, valid_to, is_current)
 
     valid_from = first capture of the run; valid_to = the ts of the NEXT
     content change (NULL on the key's current version, and is_current
@@ -159,22 +152,22 @@ def scd2_history(
     counts (crawl frequency), never a corpus-wide sort. Deterministic:
     ordering is (ts, fp), total when captures are unique per (key, ts).
     """
-    w = Window.partitionBy(key).orderBy(ts_col, fp)
-    slim = df.select(key, ts_col, fp)
+    w = Window.partitionBy("norm_url").orderBy("warc_ts", "fp")
+    slim = df.select("norm_url", "warc_ts", "fp")
     # lag a STRUCT, not the fp itself: a lagged bare fp is NULL both on the
     # first row and when the previous capture's fp is NULL (a failed fetch
     # recorded without content) — the struct is non-null whenever a
     # previous row exists, and eqNullSafe merges NULL-fp runs like the
     # gaps-and-islands idiom does
-    changes = slim.withColumn("_prev", F.lag(F.struct(F.col(fp))).over(w)).filter(
-        F.col("_prev").isNull() | ~F.col(f"_prev.{fp}").eqNullSafe(F.col(fp))
+    changes = slim.withColumn("_prev", F.lag(F.struct(F.col("fp"))).over(w)).filter(
+        F.col("_prev").isNull() | ~F.col("_prev.fp").eqNullSafe(F.col("fp"))
     )
     return (
-        changes.withColumn("valid_to", F.lead(ts_col).over(w))
+        changes.withColumn("valid_to", F.lead("warc_ts").over(w))
         .select(
-            F.col(key),
-            F.col(fp),
-            F.col(ts_col).alias("valid_from"),
+            F.col("norm_url"),
+            F.col("fp"),
+            F.col("warc_ts").alias("valid_from"),
             "valid_to",
             F.col("valid_to").isNull().alias("is_current"),
         )
@@ -243,17 +236,15 @@ def registered_domain(host: Column) -> Column:
     )
 
 
-def domain_stats(
-    df: DataFrame, url_col: str = "url", ts_col: str = "warc_ts"
-) -> DataFrame:
+def domain_stats(df: DataFrame) -> DataFrame:
     """Per-registered-domain crawl profile: page count, distinct hosts,
     first/last capture — host_stats rolled one level up. One map-side-
     combinable groupBy; distinct hosts via a pre-dedup (domain, host)
     pass, never count(distinct) over raw rows."""
     base = df.select(
-        registered_domain(host_of(F.col(url_col))).alias("domain"),
-        host_of(F.col(url_col)).alias("host"),
-        F.col(ts_col),
+        registered_domain(host_of(F.col("url"))).alias("domain"),
+        host_of(F.col("url")).alias("host"),
+        F.col("warc_ts"),
     )
     hosts = (
         base.select("domain", "host")
@@ -263,18 +254,13 @@ def domain_stats(
     )
     pages = base.groupBy("domain").agg(
         F.count(F.lit(1)).alias("n_pages"),
-        F.min(ts_col).alias("first_ts"),
-        F.max(ts_col).alias("last_ts"),
+        F.min("warc_ts").alias("first_ts"),
+        F.max("warc_ts").alias("last_ts"),
     )
     return pages.join(hosts, "domain")
 
 
-def anchor_stats(
-    links: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    anchor_col: str = "anchor",
-) -> DataFrame:
+def anchor_stats(links: DataFrame) -> DataFrame:
     """Anchor-text aggregation over a link graph — per target page, how
     many links point at it, from how many distinct sources, and the most
     common anchor text (web-search's strongest off-page relevance signal;
@@ -294,14 +280,14 @@ def anchor_stats(
     Output: dst, n_links, n_srcs, top_anchor, top_anchor_count.
     """
     by_anchor = links.groupBy(
-        F.col(dst_col).alias("dst"), F.col(anchor_col).alias("anchor")
+        F.col("dst"), F.col("anchor")
     ).agg(F.count(F.lit(1)).alias("cnt"))
     top = by_anchor.groupBy("dst").agg(
         F.sum("cnt").alias("n_links"),
         F.max(F.struct(F.col("cnt"), F.col("anchor"))).alias("_t"),
     )
     srcs = (
-        links.select(F.col(dst_col).alias("dst"), F.col(src_col).alias("src"))
+        links.select(F.col("dst"), F.col("src"))
         .distinct()
         .groupBy("dst")
         .agg(F.count(F.lit(1)).alias("n_srcs"))
@@ -319,9 +305,6 @@ def crawl_schedule(
     frontier: DataFrame,
     per_host_budget: int,
     delay_ms: int,
-    host_col: str = "host",
-    url_col: str = "url",
-    priority_col: str = "priority",
 ) -> DataFrame:
     """Politeness-aware fetch scheduling over a crawl frontier: each host
     gets at most `per_host_budget` URLs this cycle, picked by priority,
@@ -346,9 +329,9 @@ def crawl_schedule(
         raise ValueError("delay_ms must be >= 0")
     capped = ranking.top_k_per_group(
         frontier.select(
-            F.col(url_col).alias("url"),
-            F.col(host_col).alias("host"),
-            F.col(priority_col).alias("priority"),
+            F.col("url"),
+            F.col("host"),
+            F.col("priority"),
         ),
         ["host"],
         [F.col("priority").desc(), F.col("url").asc()],
@@ -431,12 +414,7 @@ def align_translations(
     )
 
 
-def resolve_redirects(
-    redirects: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 20,
-) -> DataFrame:
+def resolve_redirects(redirects: DataFrame, max_rounds: int = 20) -> DataFrame:
     """Redirect-chain resolution: follow a FUNCTIONAL edge set (at most
     one outgoing redirect per source — HTTP 301/canonical-link maps are
     exactly this shape) to each chain's terminal target with hop counts,
@@ -461,8 +439,8 @@ def resolve_redirects(
     source; terminal is the first id reached that has no outgoing edge.
     """
     p = redirects.select(
-        F.col(src).alias("node"),
-        F.col(dst).alias("nxt"),
+        F.col("src").alias("node"),
+        F.col("dst").alias("nxt"),
         F.lit(1).cast("long").alias("hops"),
         F.lit(False).alias("done"),
     ).localCheckpoint(eager=True)
@@ -505,12 +483,7 @@ def resolve_redirects(
     )
 
 
-def robots_filter(
-    pages: DataFrame,
-    rules: DataFrame,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def robots_filter(pages: DataFrame, rules: DataFrame) -> DataFrame:
     """Robots-style URL filtering — the crawl-compliance gate every web
     corpus pipeline runs before ingestion: per page, the longest
     matching path-prefix rule for its host decides allow/disallow
@@ -527,19 +500,19 @@ def robots_filter(
     lexicographic max implements the precedence rule with a string
     tiebreak for full determinism; no window, no sort.
 
-    Output: (id_col, url, matched_prefix (NULL if no rule matched),
+    Output: (doc_id, url, matched_prefix (NULL if no rule matched),
     allowed:boolean).
     """
-    u = F.col(url_col)
+    u = F.col("url")
     host = F.regexp_extract(u, r"^[a-z][a-z0-9+.-]*://([^/?#]+)", 1)
     path = F.regexp_extract(u, r"^[a-z][a-z0-9+.-]*://[^/?#]+(/[^?#]*)", 1)
     base = pages.select(
-        F.col(id_col), u.alias("url"), host.alias("host"), path.alias("_path")
+        F.col("doc_id"), u.alias("url"), host.alias("host"), path.alias("_path")
     )
     j = base.join(F.broadcast(rules), "host").filter(
         F.col("_path").startswith(F.col("prefix"))
     )
-    best = j.groupBy(id_col).agg(
+    best = j.groupBy("doc_id").agg(
         F.max(
             F.struct(
                 F.length("prefix").alias("_l"),
@@ -548,19 +521,15 @@ def robots_filter(
             )
         ).alias("_w")
     )
-    return base.join(best, id_col, "left").select(
-        id_col,
+    return base.join(best, "doc_id", "left").select(
+        "doc_id",
         "url",
         F.col("_w._p").alias("matched_prefix"),
         F.coalesce(F.col("_w._a") == 1, F.lit(True)).alias("allowed"),
     )
 
 
-def url_templates(
-    pages: DataFrame,
-    url_col: str = "url",
-    min_pages: int = 2,
-) -> DataFrame:
+def url_templates(pages: DataFrame, min_pages: int = 2) -> DataFrame:
     """URL template mining — collapse numeric path segments to a `{N}`
     placeholder and aggregate: the crawl-ops view that turns a million
     `/product/12345` URLs into one `/product/{N}` row, exposing infinite
@@ -579,7 +548,7 @@ def url_templates(
     lexicographic min URL (a deterministic exemplar, combinable via
     F.min, never a window).
     """
-    u = F.col(url_col)
+    u = F.col("url")
     host = F.regexp_extract(u, r"^[a-z][a-z0-9+.-]*://([^/?#]+)", 1)
     path = F.regexp_extract(u, r"^[a-z][a-z0-9+.-]*://[^/?#]+([^?#]*)", 1)
     tmpl = F.concat(host, F.regexp_replace(path, r"[0-9]+", "{N}"))
@@ -597,15 +566,10 @@ def url_templates(
     )
 
 
-def apportion_budget(
-    df: DataFrame,
-    budget: int,
-    key_col: str = "host",
-    weight_col: str = "n_pages",
-) -> DataFrame:
+def apportion_budget(df: DataFrame, budget: int) -> DataFrame:
     """Crawl-budget apportionment by the largest-remainder method
     (Hamilton's method): split an integer `budget` of fetch slots across
-    hosts proportionally to `weight_col`, exactly — Σ quota == budget,
+    hosts proportionally to `n_pages`, exactly — Σ quota == budget,
     no fractional slots, no float drift. The politeness-scheduler input
     every crawler computes after host_stats; also the integer answer to
     per-domain sampling quotas in corpus curation.
@@ -623,20 +587,20 @@ def apportion_budget(
     the IVF train sample), and the bonus winners via orderBy().limit()
     — TakeOrderedAndProject, k rows per partition, never a global sort.
 
-    Output: (key_col, weight_col, base_quota, bonus, quota).
+    Output: (host, n_pages, base_quota, bonus, quota).
     """
     tot = df.agg(
-        F.sum(weight_col).cast("decimal(38,0)").alias("_w_tot")
+        F.sum("n_pages").cast("decimal(38,0)").alias("_w_tot")
     )
     shared = df.crossJoin(F.broadcast(tot)).select(
-        F.col(key_col),
-        F.col(weight_col),
+        F.col("host"),
+        F.col("n_pages"),
         F.expr(
-            f"CAST(CAST({budget} AS DECIMAL(38,0)) * {weight_col} "
+            f"CAST(CAST({budget} AS DECIMAL(38,0)) * n_pages "
             "div _w_tot AS BIGINT)"
         ).alias("base_quota"),
         F.expr(
-            f"CAST(CAST({budget} AS DECIMAL(38,0)) * {weight_col} "
+            f"CAST(CAST({budget} AS DECIMAL(38,0)) * n_pages "
             "% _w_tot AS BIGINT)"
         ).alias("_rem"),
     )
@@ -644,15 +608,15 @@ def apportion_budget(
         shared.agg(F.sum("base_quota").alias("s")).collect()[0]["s"] or 0
     )
     winners = (
-        shared.orderBy(F.col("_rem").desc(), F.col(key_col).asc())
+        shared.orderBy(F.col("_rem").desc(), F.col("host").asc())
         .limit(int(n_bonus))
-        .select(F.col(key_col), F.lit(1).alias("bonus"))
+        .select(F.col("host"), F.lit(1).alias("bonus"))
     )
     return (
-        shared.join(winners, key_col, "left")
+        shared.join(winners, "host", "left")
         .select(
-            key_col,
-            weight_col,
+            "host",
+            "n_pages",
             "base_quota",
             F.coalesce("bonus", F.lit(0)).alias("bonus"),
             (F.col("base_quota") + F.coalesce("bonus", F.lit(0)))
@@ -661,11 +625,7 @@ def apportion_budget(
     )
 
 
-def pagination_groups(
-    df: DataFrame,
-    url_col: str = "url",
-    min_pages: int = 3,
-) -> DataFrame:
+def pagination_groups(df: DataFrame, min_pages: int = 3) -> DataFrame:
     """Numeric-pagination detection: URLs whose trailing component is a
     digit run after a separator — `/page/2`, `?p=14`, `thread-7` — group
     by the shared prefix into pagination families, with page-number
@@ -688,8 +648,8 @@ def pagination_groups(
     """
     pat = r"^(.*[/=_-])([0-9]+)$"
     m = df.select(
-        F.regexp_extract(F.col(url_col), pat, 1).alias("family"),
-        F.regexp_extract(F.col(url_col), pat, 2).alias("_num"),
+        F.regexp_extract(F.col("url"), pat, 1).alias("family"),
+        F.regexp_extract(F.col("url"), pat, 2).alias("_num"),
     ).filter(F.col("family") != "")
     g = (
         m.select("family", F.col("_num").cast("long").alias("_p"))
@@ -721,7 +681,7 @@ _RISK_RULES: list[tuple[str, int]] = [
 ]
 
 
-def url_risk_score(df: DataFrame, url_col: str = "url") -> DataFrame:
+def url_risk_score(df: DataFrame) -> DataFrame:
     """Heuristic URL risk screen — the crawl-frontier prefilter that
     flags phishing-shaped URLs before fetch budget is spent: punycode
     (homograph) labels, raw-IP hosts, subdomain stuffing, long digit
@@ -736,7 +696,7 @@ def url_risk_score(df: DataFrame, url_col: str = "url") -> DataFrame:
     model downstream. Output: input columns + one BOOLEAN per rule +
     risk_score_e2 (BIGINT).
     """
-    u = F.col(url_col)
+    u = F.col("url")
     host = host_of(u)
     flags = {
         "punycode": host.rlike(r"(^|\.)xn--"),
@@ -759,12 +719,7 @@ def url_risk_score(df: DataFrame, url_col: str = "url") -> DataFrame:
     return out.withColumn("risk_score_e2", score.cast("long"))
 
 
-def rendezvous_assign(
-    df: DataFrame,
-    key_col: str = "url",
-    n_shards: int = 8,
-    out: str = "shard",
-) -> DataFrame:
+def rendezvous_assign(df: DataFrame, n_shards: int = 8) -> DataFrame:
     """Rendezvous (highest-random-weight) hashing: assign each key to
     argmax over shards of md5(key ':' shard) — the standard stable
     sharding scheme for crawl frontiers and feature stores. Unlike
@@ -780,7 +735,7 @@ def rendezvous_assign(
     (2^-60 events) break to the larger shard id identically in the
     DuckDB oracle's list_max.
 
-    Output: input columns + `out` (winning shard, long) + `out`_score.
+    Output: input columns + `shard` (winning shard, long) + `shard_score`.
     """
     if n_shards < 1:
         raise ValueError("n_shards must be >= 1")
@@ -789,7 +744,7 @@ def rendezvous_assign(
             F.conv(
                 F.substring(
                     F.md5(
-                        F.concat(F.col(key_col), F.lit(f":{i}")).cast("binary")
+                        F.concat(F.col("url"), F.lit(f":{i}")).cast("binary")
                     ),
                     1,
                     15,
@@ -804,12 +759,12 @@ def rendezvous_assign(
         for i in range(n_shards)
     ]
     best = F.array_max(F.array(*scores))
-    return df.withColumn(out, best.getField("shard")).withColumn(
-        f"{out}_score", best.getField("s")
+    return df.withColumn("shard", best.getField("shard")).withColumn(
+        "shard_score", best.getField("s")
     )
 
 
-def idn_decode(df: DataFrame, host_col: str = "host") -> DataFrame:
+def idn_decode(df: DataFrame) -> DataFrame:
     """Punycode/IDN host decoding + homograph screen: xn-- labels decode
     to their unicode form (stdlib IDNA codec — no external deps) and the
     decoded host is checked for MIXED SCRIPTS among the confusable
@@ -865,25 +820,18 @@ def idn_decode(df: DataFrame, host_col: str = "host") -> DataFrame:
             out["mixed_script"].append(len(scripts) > 1)
         return pd.DataFrame(out)
 
-    return df.withColumn("_idn", _decode(F.col(host_col))).select(
+    return df.withColumn("_idn", _decode(F.col("host"))).select(
         "*", "_idn.host_unicode", "_idn.is_idn", "_idn.decode_ok",
         "_idn.mixed_script",
     ).drop("_idn")
 
 
-def cidr_lookup(
-    ips: DataFrame,
-    blocks: DataFrame,
-    ip_col: str = "ip_long",
-    start_col: str = "ip_start",
-    end_col: str = "ip_end",
-    prefix_bits: int = 16,
-) -> DataFrame:
+def cidr_lookup(ips: DataFrame, blocks: DataFrame) -> DataFrame:
     """IP → block range join (GeoIP-style lookup — the web-scale
     geocoding of hosts: every access-log/crawl row gets a country/ASN
     from a range table). A naive BETWEEN theta join is a cross product;
     the scalable shape is PREFIX BUCKETING: every block row is exploded
-    to the /``prefix_bits`` buckets its [start, end] range spans (real
+    to the /16 buckets its [start, end] range spans (real
     GeoIP blocks are narrow — almost always 1 bucket at /16), each IP
     hashes to exactly ONE bucket, and the join becomes a bucket
     EQUI-join + a residual range filter — hash-partitionable, AQE-skew
@@ -896,18 +844,18 @@ def cidr_lookup(
     (inner join — unmatched IPs drop; left-join at the caller if
     needed).
     """
-    shift = 32 - prefix_bits
+    shift = 16  # a /16 bucket is the top 16 of 32 bits
     b = blocks.withColumn(
         "_bkt",
         F.explode(
             F.sequence(
-                F.shiftright(F.col(start_col), shift),
-                F.shiftright(F.col(end_col), shift),
+                F.shiftright(F.col("ip_start"), shift),
+                F.shiftright(F.col("ip_end"), shift),
             )
         ),
     )
-    i = ips.withColumn("_bkt", F.shiftright(F.col(ip_col), shift))
+    i = ips.withColumn("_bkt", F.shiftright(F.col("ip_long"), shift))
     out = i.join(b, "_bkt").filter(
-        (F.col(ip_col) >= F.col(start_col)) & (F.col(ip_col) <= F.col(end_col))
+        (F.col("ip_long") >= F.col("ip_start")) & (F.col("ip_long") <= F.col("ip_end"))
     )
     return out.drop("_bkt")

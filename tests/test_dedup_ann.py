@@ -104,8 +104,6 @@ def test_dedup_groups_connected_components(spark):
 
 
 def py_simhash(text):
-    import struct as _s
-
     words = set(text.lower().strip().split())
     counts = [0] * 64
     for w in words:

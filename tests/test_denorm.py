@@ -5,9 +5,6 @@ Truth table ported from entranceLookup/formatWay/validateUnit
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-import pytest
-
 from pbf2json_spark import denorm
 from pbf2json_spark.model import NODES_SCHEMA, WAYS_SCHEMA
 

@@ -3,9 +3,6 @@ grid-density hotspot clustering — brute-force reference comparisons."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from pbf2json_spark import graph, spatial
 
 

@@ -5,7 +5,8 @@ word, a dict literal that repeats a key keeps only the last value, and a
 top-level name assigned twice keeps only the second value — either way the
 first copy is dead code that still reads as live. So is an import nothing
 uses. This scans the package, the entry module, bench.py, the jobs and the
-tools with ``ast`` (no linter is needed) and fails on all four."""
+tools with ``ast`` (no linter is needed) and fails on all four; unused
+imports fail in the tests as well."""
 
 from __future__ import annotations
 
@@ -22,6 +23,7 @@ SOURCES = (
     + sorted((ROOT / "jobs").glob("*.py"))
     + sorted((ROOT / "tools").glob("*.py"))
 )
+TESTS = sorted((ROOT / "tests").glob("*.py"))
 
 
 def _tree(path: Path) -> ast.Module:
@@ -100,7 +102,7 @@ def test_no_repeated_top_level_assign(path):
     assert repeated_top_level_assigns(_tree(path)) == []
 
 
-@pytest.mark.parametrize("path", SOURCES, ids=lambda p: p.name)
+@pytest.mark.parametrize("path", SOURCES + TESTS, ids=lambda p: p.name)
 def test_no_unused_import(path):
     assert unused_imports(_tree(path)) == []
 

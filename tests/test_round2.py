@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pbf2json_spark import enrich
-from pbf2json_spark.engine import Engine, StreamError
+from pbf2json_spark.engine import StreamError
 
 from tests.test_enrich_engine import build_engine, grid_nodes
 
@@ -369,7 +369,7 @@ def test_snapshot_consistent_rejects_pre_lineage_snapshots(spark, tmp_path):
     mgr.write_stage("b", spark.range(2), mode="overwrite")
     log = mgr._read_log("b")
     log[-1].pop("input_run_ids", None)
-    import json, os
+    import json
 
     with open(mgr._log_path("b"), "w") as f:
         json.dump(log, f)

@@ -6,9 +6,6 @@ from __future__ import annotations
 
 import math
 
-import pytest
-from pyspark.sql import functions as F
-
 from pbf2json_spark import spatial, trajectory
 
 

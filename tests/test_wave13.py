@@ -7,8 +7,6 @@ import hashlib
 import math
 import random
 
-from pyspark.sql import functions as F
-
 from pbf2json_spark import graph, sampling, temporal
 
 SCALE = 1_000_000_000

@@ -7,8 +7,6 @@ import hashlib
 import random
 from collections import Counter
 
-from pyspark.sql import functions as F
-
 from pbf2json_spark import sampling, trajectory
 
 

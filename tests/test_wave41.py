@@ -10,7 +10,6 @@ import math
 import random
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from pbf2json_spark import cells, sketch, trajectory
 

@@ -7,7 +7,6 @@ from __future__ import annotations
 import random
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from pbf2json_spark import cells, raster, sketch
 

@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import functions as F
-
 from pbf2json_spark import textops, weburl
 
 

@@ -8,7 +8,6 @@ import hashlib
 import math
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from pbf2json_spark import corpus, sampling
 

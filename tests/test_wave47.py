@@ -4,7 +4,6 @@ projection laws) and exact calibration bins (vs python reference)."""
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from pbf2json_spark import ann, stats
 

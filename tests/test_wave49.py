@@ -5,7 +5,6 @@ superset law)."""
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from pbf2json_spark import ann
 

@@ -7,8 +7,6 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import functions as F
-
 from pbf2json_spark import dedup, pages
 
 

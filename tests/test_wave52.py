@@ -10,8 +10,6 @@ import hashlib
 import math
 import random
 
-from pyspark.sql import functions as F
-
 from pbf2json_spark import stats
 
 

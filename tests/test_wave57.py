@@ -8,8 +8,6 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import functions as F
-
 from pbf2json_spark import corpus, stats
 
 

@@ -8,7 +8,6 @@ import random
 import re
 
 import duckdb
-from pyspark.sql import functions as F
 
 from pbf2json_spark import stats, textops
 

@@ -6,7 +6,6 @@ from __future__ import annotations
 import itertools
 
 import pytest
-from pyspark.sql import functions as F
 
 from pbf2json_spark import corpus, graph, spatial, weburl
 

@@ -8,8 +8,6 @@ import itertools
 import math
 import random
 
-from pyspark.sql import functions as F
-
 from pbf2json_spark import corpus, spatial, trajectory, weburl
 
 

@@ -6,8 +6,6 @@ from __future__ import annotations
 import math
 import random
 
-from pyspark.sql import functions as F
-
 from pbf2json_spark import corpus, graph, temporal, trajectory
 from pbf2json_spark.graph import SCALE
 

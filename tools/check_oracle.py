@@ -3,11 +3,20 @@ __spark_entry__ query on Spark AND its oracle SQL on DuckDB over the same
 parquet tables, compare row count, schema shape, and exact values
 (column-name-sorted, row-sorted).
 
+Each result line carries a sha256 of the query's normalized Spark rows,
+rows-only queries included, so two sweeps (say before and after a change)
+compare value for value: diff their PASS/ok/FAIL lines with the trailing
+timing dropped (``sed 's/ ([0-9.]*s[a-z ]*)$//'``).
+
+Spark is sized by ``get_spark``'s host default: export SPARK_GRAFT_CPUS
+(e.g. ``$(nproc)``) to run local[n] with 2n shuffle partitions.
+
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import sys
 import time
 
@@ -32,6 +41,11 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
         if df[c].dtype == object:
             df[c] = df[c].astype(str)
     return df.sort_values(list(df.columns)).reset_index(drop=True)
+
+
+def digest(df: pd.DataFrame) -> str:
+    """sha256 of the normalized rows, column names included."""
+    return hashlib.sha256(normalize(df.copy()).to_csv(index=False).encode()).hexdigest()
 
 
 def compare(name: str, a: pd.DataFrame, b: pd.DataFrame) -> list[str]:
@@ -87,7 +101,7 @@ def compare(name: str, a: pd.DataFrame, b: pd.DataFrame) -> list[str]:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark("oracle-check", master="local[32]", shuffle_partitions=64)
+    spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -106,8 +120,9 @@ def main() -> int:
             failed.append(name)
             continue
         t1 = time.time()
+        sha = digest(sdf)
         if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(sdf)} rows, {t1-t0:.1f}s)")
+            print(f"ok   {name}: rows-only, {len(sdf)} rows, sha256 {sha} ({t1-t0:.1f}s)")
             continue
         try:
             odf = con.execute(oracles[name]).df()
@@ -117,12 +132,12 @@ def main() -> int:
             continue
         errs = compare(name, sdf, odf)
         if errs:
-            print(f"FAIL {name} ({len(sdf)} vs {len(odf)} rows):")
+            print(f"FAIL {name} ({len(sdf)} vs {len(odf)} rows), sha256 {sha}:")
             for e in errs[:5]:
                 print(f"     {e}")
             failed.append(name)
         else:
-            print(f"PASS {name}: {len(sdf)} rows match ({t1-t0:.1f}s spark)")
+            print(f"PASS {name}: {len(sdf)} rows match, sha256 {sha} ({t1-t0:.1f}s spark)")
     print(f"\n{len(failed)} failures" + (f": {failed}" if failed else ""))
     return 1 if failed else 0
 
